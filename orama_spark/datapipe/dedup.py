@@ -75,17 +75,6 @@ def exact_duplicates(
     )
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct k-char shingles of the canonical text, JVM-side:
-    transform(sequence(1, len-k+1), i -> substring(text, i, k))."""
-    t = canonical_text(col)
-    n = F.length(t) - F.lit(k - 1)
-    grams = F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
-    return F.when(n >= 1, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def token_shingles(col: Column, n: int = 3) -> Column:
     """Distinct n-token (word) shingles over whitespace tokens.
 

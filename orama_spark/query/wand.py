@@ -89,15 +89,20 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..build.blocks import (
-    BLOCK_SIZE, bm25_for_fl, build_blocks, varint_decode,
+    BLOCK_SIZE, BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, POSTINGS_READ_SCHEMA,
+    avgfl_per_row, bm25_for_fl, bm25_scores, build_blocks, decode_blocks,
+    idf_per_row, run_starts, segment_ids, varint_decode,
 )
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
 
 _SCORED_SCHEMA = "docid long, s double"
+_CHAMPIONS_SCHEMA = "field string, term string, docid long, s double"
 _SURVIVOR_SCHEMA = (
     "field string, term string, first_docid long, clip_start long, clip_end long"
 )
@@ -130,113 +135,132 @@ CHAMPION_BLOCKS = 8
 CHAMPION_POSTINGS_PER_BLOCK = 128
 
 
-def _score_blocks_fn(avgs: dict, n_docs: float, bm25_params, clipped: bool,
-                     with_key: bool = False, top_n: Optional[int] = None,
-                     group_col: Optional[str] = None):
-    """Arrow kernel: block rows -> (orig docid, per-posting BM25 score).
+def _score_postings(batch, avgs: dict, n_docs: float, bm25_params,
+                    clipped: bool):
+    """Block rows of one Arrow batch -> per-posting (row, orig docid,
+    BM25 score).
 
-    Decode (varint internal deltas + orig docids + field lens) and score
-    in one pass; ``df`` comes off the block row (denormalized at build),
-    so no dictionary join is needed. With ``clipped`` the row carries
-    [clip_start, clip_end] internal bounds and only postings inside the
-    clip are emitted — clips from different buckets never overlap, so
-    unioning their decodes never double-counts a posting. ``with_key``
-    additionally emits (field, term) — the champion-list build shape.
+    One segmented varint decode per binary column (blocks.decode_blocks)
+    and one vectorized BM25 over the whole batch; ``df`` comes off the
+    block row (denormalized at build), so no dictionary join is needed.
+    With ``clipped`` the row carries [clip_start, clip_end] internal
+    bounds and only postings inside the clip are kept — clips from
+    different buckets never overlap, so unioning their decodes never
+    double-counts a posting.
 
     A ``wt`` column, when present, multiplies every posting score: the
     reference scores each QUERY-TOKEN OCCURRENCE (index.ts:457-592 loops
     over tokens, so 'spark spark' counts spark twice); the weighted path
     reproduces that without duplicating block rows.
     """
+    post = decode_blocks(batch, internal=clipped)
+    rid = post["rid"]
+    idf = idf_per_row(batch.column("df").to_numpy(zero_copy_only=False), n_docs)
+    avg = avgfl_per_row(batch.column("field"), avgs)
+    fl = post["field_len"].astype(np.float64)
+    s = bm25_scores(idf[rid], fl, post["tfn"].astype(np.float64) / fl,
+                    avg[rid], bm25_params)
+    if "wt" in batch.schema.names:
+        s = s * batch.column("wt").to_numpy(zero_copy_only=False)[rid]
+    docid = post["docid"]
+    if clipped:
+        internal = post["internal"]
+        m = (
+            (internal >= batch.column("clip_start").to_numpy(zero_copy_only=False)[rid])
+            & (internal <= batch.column("clip_end").to_numpy(zero_copy_only=False)[rid])
+        )
+        rid, docid, s = rid[m], docid[m], s[m]
+    return rid, docid, s
+
+
+def _score_blocks_fn(avgs: dict, n_docs: float, bm25_params, clipped: bool):
+    """mapInArrow kernel: block rows -> (orig docid, per-posting BM25
+    score), one output batch per input batch (see _score_postings)."""
 
     def fn(batches):
-        # mapInArrow kernel (r5 VERDICT #6): inputs arrive as Arrow
-        # record batches (binary cells become plain bytes, no pandas
-        # object conversion), per-row results accumulate as numpy
-        # arrays, and each input batch yields ONE output batch — the
-        # per-row pd.DataFrame + pd.concat of the previous form was the
-        # dominant cost of the champions pass. Scoring math unchanged.
-        import pyarrow as pa
-
         for batch in batches:
-            names = batch.schema.names
-            cols = {nm: batch.column(i) for i, nm in enumerate(names)}
-            nrows = batch.num_rows
-            deltas_l = cols["docid_deltas"].to_pylist() if clipped else None
-            first_l = cols["first_docid"].to_pylist() if clipped else None
-            origs_l = cols["orig_docids"].to_pylist()
-            fls_l = cols["field_lens"].to_pylist()
-            tfns_l = cols["tfns"].to_pylist()
-            df_l = cols["df"].to_pylist()
-            field_l = cols["field"].to_pylist()
-            term_l = cols["term"].to_pylist() if with_key else None
-            wt_l = cols["wt"].to_pylist() if "wt" in cols else None
-            clip_s = cols["clip_start"].to_pylist() if clipped else None
-            clip_e = cols["clip_end"].to_pylist() if clipped else None
-            grp_l = cols[group_col].to_pylist() if group_col else None
-            out_docid: list = []
-            out_s: list = []
-            keys: list = []
-            counts: list = []
-            for i in range(nrows):
-                origs = varint_decode(origs_l[i]).astype(np.int64)
-                fls = varint_decode(fls_l[i]).astype(np.float64)
-                raw_t = tfns_l[i] or b""
-                tfns = (
-                    varint_decode(raw_t).astype(np.float64) if raw_t else None
+            _, docid, s = _score_postings(batch, avgs, n_docs, bm25_params, clipped)
+            if len(docid):
+                yield pa.record_batch(
+                    [pa.array(docid), pa.array(s)], names=["docid", "s"]
                 )
-                if clipped:
-                    deltas = varint_decode(deltas_l[i]).astype(np.int64)
-                    internal = first_l[i] + np.concatenate(
-                        ([0], np.cumsum(deltas[1:]))
-                    )
-                    m = (internal >= clip_s[i]) & (internal <= clip_e[i])
-                    origs, fls = origs[m], fls[m]
-                    if tfns is not None:
-                        tfns = tfns[m]
-                if len(origs) == 0:
-                    continue
-                s = bm25_for_fl(
-                    fls, float(df_l[i]), n_docs, avgs[field_l[i]], bm25_params,
-                    tfn=tfns,
-                )
-                if wt_l is not None:
-                    s = s * float(wt_l[i])
-                if top_n is not None and len(s) > top_n:
-                    sel = np.argpartition(-s, top_n)[:top_n]
-                    origs, s = origs[sel], s[sel]
-                out_docid.append(origs)
-                out_s.append(s)
-                counts.append(len(origs))
-                if with_key:
-                    keys.append((field_l[i], term_l[i]))
-                elif group_col is not None:
-                    keys.append(grp_l[i])
-            if not out_docid:
+
+    return fn
+
+
+def _top_per_segment(seg: np.ndarray, s: np.ndarray, docid: np.ndarray,
+                     depth: int) -> np.ndarray:
+    """Indices (ascending) of each segment's first ``depth`` rows by
+    (s desc, docid asc) — the row_number() window over (s desc, docid
+    asc). Only segments longer than ``depth`` are sorted. NaN scores
+    rank first, as Spark orders NaN above every number."""
+    big = np.bincount(seg, minlength=1)[seg] > depth
+    if not big.any():
+        return np.arange(len(seg))
+    rows = np.flatnonzero(big)
+    sr = s[rows]
+    order = rows[np.lexsort((docid[rows], np.where(np.isnan(sr), -np.inf, -sr), seg[rows]))]
+    sg = seg[order]
+    first = np.flatnonzero(np.r_[True, sg[1:] != sg[:-1]])
+    rank = np.arange(len(sg)) - np.repeat(first, np.diff(np.append(first, len(sg))))
+    keep = ~big
+    keep[order[rank < depth]] = True
+    return np.flatnonzero(keep)
+
+
+def _champions_fn(avgs: dict, n_docs: float, bm25_params, depth: int,
+                  per_block: int):
+    """mapInArrow kernel for the champion pass: candidate block rows,
+    grouped by (field, term) within the task -> each term's top
+    ``depth`` postings by (s desc, docid asc), every block first cut to
+    its top ``per_block`` postings. Input rows of one term must be
+    contiguous; output rows come grouped by term.
+
+    Decode, score and rank happen in one pass; the term still open at
+    the end of a batch is carried (already cut to ``depth`` rows — the
+    top rows of a union lie in the union of the parts' top rows) and
+    merged into the next batch."""
+
+    def fn(batches):
+        def emit(keys, g, docid, s):
+            ga = pa.array(g)
+            return pa.record_batch(
+                [pa.array([k[0] for k in keys]).take(ga),
+                 pa.array([k[1] for k in keys]).take(ga),
+                 pa.array(docid), pa.array(s)],
+                names=["field", "term", "docid", "s"],
+            )
+
+        open_key, open_docid, open_s = None, np.zeros(0, np.int64), np.zeros(0)
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            docid_a = pa.array(np.concatenate(out_docid), type=pa.int64())
-            s_a = pa.array(np.concatenate(out_s), type=pa.float64())
-            cnt = np.asarray(counts)
-            if with_key:
-                f_arr = pa.array(
-                    np.repeat(np.array([k[0] for k in keys], dtype=object), cnt)
-                )
-                t_arr = pa.array(
-                    np.repeat(np.array([k[1] for k in keys], dtype=object), cnt)
-                )
-                yield pa.record_batch(
-                    [f_arr, t_arr, docid_a, s_a],
-                    names=["field", "term", "docid", "s"],
-                )
-            elif group_col is not None:
-                g_arr = pa.array(
-                    np.repeat(np.array(keys, dtype=object), cnt)
-                )
-                yield pa.record_batch(
-                    [g_arr, docid_a, s_a], names=[group_col, "docid", "s"]
-                )
-            else:
-                yield pa.record_batch([docid_a, s_a], names=["docid", "s"])
+            rid, docid, s = _score_postings(
+                batch, avgs, n_docs, bm25_params, clipped=False
+            )
+            keep = _top_per_segment(rid, s, docid, per_block)
+            rid, docid, s = rid[keep], docid[keep], s[keep]
+            f_a, t_a = batch.column("field"), batch.column("term")
+            starts = run_starts(f_a, t_a)
+            keys = list(zip(pc.take(f_a, pa.array(starts)).to_pylist(),
+                            pc.take(t_a, pa.array(starts)).to_pylist()))
+            g = segment_ids(starts, batch.num_rows)[rid]
+            if open_key is not None:
+                if open_key != keys[0]:
+                    keys.insert(0, open_key)
+                    g = g + 1
+                g = np.concatenate([np.zeros(len(open_s), np.int64), g])
+                docid = np.concatenate([open_docid, docid])
+                s = np.concatenate([open_s, s])
+            keep = _top_per_segment(g, s, docid, depth)
+            g, docid, s = g[keep], docid[keep], s[keep]
+            last = len(keys) - 1
+            done = g < last
+            if done.any():
+                yield emit(keys, g[done], docid[done], s[done])
+            open_key, open_docid, open_s = keys[last], docid[~done], s[~done]
+        if open_key is not None and len(open_s):
+            yield emit([open_key], np.zeros(len(open_s), np.int64), open_docid, open_s)
 
     return fn
 
@@ -564,9 +588,17 @@ class BlockIndex:
     # ------------------------------------------------------------ build
     @classmethod
     def build(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":
-        """Materialize index_dir/blocks from postings+dictionary+stats.
-        One build-time shuffle: the docmap join + range partition by
-        (field, term, internal) — hot terms split by internal range."""
+        """Materialize index_dir/blocks and index_dir/champions from
+        postings + dictionary + stats.
+
+        Exchanges, in order: the per-doc length aggregate (a hash
+        exchange by (field, docid), then by docid) and its range
+        exchange by (dl, docid), checkpointed once for the docmap; the
+        range exchange by (field, term, internal) that feeds the block
+        encoder — hot terms split by internal range; the range exchange
+        of the champion-candidate blocks by (field, term) that feeds the
+        one-pass champion kernel. The docmap and dictionary joins are
+        broadcasts. Every table is read with its known schema."""
         import json
 
         # every posting shape is supported: blocks carry per-posting tf
@@ -587,8 +619,12 @@ class BlockIndex:
         stamp_path = os.path.join(index_dir, "blocks_build.json")
         if os.path.exists(stamp_path):
             os.remove(stamp_path)
-        postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        dictionary = spark.read.parquet(os.path.join(index_dir, "dictionary"))
+        postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
+            os.path.join(index_dir, "postings")
+        )
+        dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
+            os.path.join(index_dir, "dictionary")
+        )
         blocks = build_blocks(
             postings, dictionary, stats, config.bm25,
             champion_blocks=CHAMPION_BLOCKS,
@@ -598,10 +634,10 @@ class BlockIndex:
         # CHAMPION_POSTINGS_PER_BLOCK POSTINGS by score, decoded + scored
         # now so queries seed θ from a small pushdown scan (instead of a
         # window over ALL block metadata, which at web scale shuffles
-        # ~docfreq/128 rows per term just to pick a handful). Sorted by
-        # (field, term) so the query-time term IN-list prunes via
+        # ~docfreq/128 rows per term just to pick a handful). Written in
+        # (field, term) order so the query-time term IN-list prunes via
         # parquet min/max.
-        blocks_df = spark.read.parquet(os.path.join(index_dir, "blocks"))
+        #
         # The encoder marked candidate blocks per fragment (champ_rk > 0
         # = union of top-by-max_score and first-by-internal, a superset
         # of the blocks holding each term's top postings: blocks.py
@@ -610,32 +646,29 @@ class BlockIndex:
         # posting run: the r4→r5 2M rebuild showed block-level champions
         # swinging θ 6.11→3.72 purely on grid alignment, while the
         # posting-level pool reproduces the tight 6.11 deterministically.
-        # The scan filter pushes down to parquet; decode touches only
-        # ~vocab × 2·CHAMPION_BLOCKS candidate blocks per fragment; the
-        # exact window is partitioned by (field, term) over ≤ a few
-        # thousand scored rows per term — bounded, never global.
-        champ_cand = blocks_df.where(F.col("champ_rk") > 0)
-        avgs = {f_: float(v["avg_field_length"]) for f_, v in stats["fields"].items()}
-        scored = champ_cand.mapInArrow(
-            _score_blocks_fn(avgs, float(stats["docs_count"]), config.bm25,
-                             clipped=False, with_key=True,
-                             top_n=CHAMPION_POSTINGS_PER_BLOCK),
-            "field string, term string, docid long, s double",
+        # The scan filter pushes down to parquet; the candidate blocks
+        # (~vocab × 2·CHAMPION_BLOCKS per fragment) are range-partitioned
+        # by (field, term) — all fragments of a term meet in one task —
+        # and one Arrow kernel decodes, scores and keeps each term's top
+        # rows. The range exchange samples the block scan, so the kernel
+        # runs once.
+        blocks_df = spark.read.schema(BLOCKS_SCHEMA).parquet(
+            os.path.join(index_dir, "blocks")
         )
-        wp = Window.partitionBy("field", "term").orderBy(
-            F.desc("s"), F.asc("docid")
-        )
-        champs = (
-            scored.withColumn("_rk", F.row_number().over(wp))
-            .where(F.col("_rk") <= CHAMPION_BLOCKS * CHAMPION_POSTINGS_PER_BLOCK)
-            .drop("_rk")
-        )
-        (
-            champs.repartitionByRange("field", "term")
+        champ_cand = (
+            blocks_df.where(F.col("champ_rk") > 0)
+            .select("field", "term", "orig_docids", "field_lens", "tfns", "df")
+            .repartitionByRange("field", "term")
             .sortWithinPartitions("field", "term")
-            .write.mode("overwrite")
-            .parquet(os.path.join(index_dir, "champions"))
         )
+        avgs = {f_: float(v["avg_field_length"]) for f_, v in stats["fields"].items()}
+        champs = champ_cand.mapInArrow(
+            _champions_fn(avgs, float(stats["docs_count"]), config.bm25,
+                          depth=CHAMPION_BLOCKS * CHAMPION_POSTINGS_PER_BLOCK,
+                          per_block=CHAMPION_POSTINGS_PER_BLOCK),
+            _CHAMPIONS_SCHEMA,
+        )
+        champs.write.mode("overwrite").parquet(os.path.join(index_dir, "champions"))
         import uuid
 
         with open(stamp_path, "w") as f:
@@ -675,13 +708,18 @@ class BlockIndex:
             stats = json.load(f)
         champ_dir = os.path.join(index_dir, "champions")
         champions = (
-            spark.read.parquet(champ_dir) if os.path.exists(champ_dir) else None
+            spark.read.schema(_CHAMPIONS_SCHEMA).parquet(champ_dir)
+            if os.path.exists(champ_dir) else None
         )
         return cls(
             spark,
             config,
-            blocks=spark.read.parquet(os.path.join(index_dir, "blocks")),
-            dictionary=spark.read.parquet(os.path.join(index_dir, "dictionary")),
+            blocks=spark.read.schema(BLOCKS_SCHEMA).parquet(
+                os.path.join(index_dir, "blocks")
+            ),
+            dictionary=spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
+                os.path.join(index_dir, "dictionary")
+            ),
             stats=stats,
             champions=champions,
         )

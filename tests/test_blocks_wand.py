@@ -1,13 +1,21 @@
-"""Posting-block codec + block-max WAND: codec roundtrip, block bounds,
-and WAND rank-identity vs the plain engine path."""
+"""Posting-block codec + block-max WAND: codec roundtrip, the batch
+encoder and segmented decoder against per-term / per-row references,
+block bounds, champion lists, and WAND rank-identity vs the plain
+engine path."""
+
+import contextlib
+import itertools
 
 import numpy as np
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from orama_spark.build.blocks import (
-    BLOCK_SIZE, bm25_for_fl, varint_decode, varint_encode,
+    BLOCK_SIZE, PA_BLOCKS_SCHEMA, assign_internal_ids, block_encoder,
+    bm25_for_fl, varint_decode, varint_decode_binary, varint_encode,
 )
+from orama_spark.kernel.bm25 import BM25Params
 from orama_spark.build.indexer import IndexBuilder
 from orama_spark.config import IndexConfig
 from orama_spark.kernel import TokenizerConfig
@@ -39,6 +47,202 @@ class TestVarint:
         vals = np.ones(128, dtype=np.uint64)
         assert len(varint_encode(vals)) == 128  # 1 byte per small delta
 
+    def test_segmented_decode_matches_per_row(self):
+        rng = np.random.default_rng(1)
+        streams = [
+            varint_encode(rng.integers(0, 1 << int(rng.integers(1, 63)),
+                                       size=int(rng.integers(0, 40)),
+                                       dtype=np.uint64))
+            for _ in range(200)
+        ]
+        arr = pa.array(streams + [None, b""], type=pa.binary())
+        # a sliced view starts mid-buffer: offsets must be honoured
+        for view in (arr, arr.slice(13, 150)):
+            vals, counts = varint_decode_binary(view)
+            per_row = [
+                varint_decode(b) if b is not None else np.zeros(0, np.uint64)
+                for b in view.to_pylist()
+            ]
+            assert list(counts) == [len(v) for v in per_row]
+            assert vals.tolist() == np.concatenate(per_row).tolist()
+
+
+# --------------------------------------------------------------- encoder
+
+P = BM25Params()
+AVGS = {"body": 17.5, "title": 4.25}
+N_DOCS_SYN = 5000.0
+_IN_SCHEMA = pa.schema([
+    ("field", pa.string()), ("term", pa.string()), ("docid", pa.int64()),
+    ("internal", pa.int64()), ("field_len", pa.int32()), ("df", pa.int64()),
+    ("tfn", pa.int64()),
+])
+
+
+def _synthetic_postings(seed: int = 3) -> pa.Table:
+    """Sorted (field, term, internal) postings over two fields: single-
+    posting terms, terms longer than BLOCK_SIZE, all-ones and
+    non-trivial tfns (including 0)."""
+    rng = np.random.default_rng(seed)
+    sizes = [1, 1, 2, BLOCK_SIZE, BLOCK_SIZE + 1, 300, 7, 1, 3 * BLOCK_SIZE + 5,
+             1, 40, 2 * BLOCK_SIZE]
+    rows = []
+    for field in ("body", "title"):
+        for ti, n in enumerate(sizes):
+            internal = np.sort(rng.choice(4000, size=n, replace=False))
+            kind = ti % 3  # 0: all ones, 1: counts incl. 0, 2: counts >= 1
+            for j, d in enumerate(internal.tolist()):
+                tfn = 1 if kind == 0 else int(rng.integers(0 if kind == 1 else 1, 4))
+                rows.append({
+                    "field": field, "term": f"t{ti:02d}", "docid": int(rng.integers(0, 10**9)),
+                    "internal": d, "field_len": int(rng.integers(1, 60)),
+                    "df": n + ti, "tfn": tfn,
+                })
+    return pa.Table.from_pylist(rows, schema=_IN_SCHEMA)
+
+
+def _reference_encode(tbl: pa.Table, block_size: int = BLOCK_SIZE,
+                      champion_blocks: int = 8) -> pa.Table:
+    """Per-term, per-block reference encoder (the pre-batch form)."""
+    rows = tbl.to_pylist()
+    out = []
+    for (field, term), grp in itertools.groupby(rows, key=lambda r: (r["field"], r["term"])):
+        grp = list(grp)
+        internal = np.array([r["internal"] for r in grp], dtype=np.int64)
+        fls = np.array([r["field_len"] for r in grp], dtype=np.int64)
+        tfns = np.array([r["tfn"] for r in grp], dtype=np.int64)
+        trivial = bool((tfns == 1).all())
+        sc = bm25_for_fl(fls.astype(np.float64), float(grp[0]["df"]), N_DOCS_SYN,
+                         AVGS[field], P, tfn=None if trivial else tfns.astype(np.float64))
+        blocks = []
+        for bi, s in enumerate(range(0, len(grp), block_size)):
+            e = min(s + block_size, len(grp))
+            deltas = np.concatenate(([0], np.diff(internal[s:e])))
+            blocks.append({
+                "field": field, "term": term, "block_id": bi, "n": e - s,
+                "first_docid": int(internal[s]), "last_docid": int(internal[e - 1]),
+                "docid_deltas": varint_encode(deltas.astype(np.uint64)),
+                "orig_docids": varint_encode(np.array([r["docid"] for r in grp[s:e]], dtype=np.uint64)),
+                "field_lens": varint_encode(fls[s:e].astype(np.uint64)),
+                "tfns": b"" if trivial else varint_encode(tfns[s:e].astype(np.uint64)),
+                "max_score": float(sc[s:e].max()), "min_score": float(sc[s:e].min()),
+                "df": grp[0]["df"], "champ_rk": 0,
+            })
+        ranked = sorted(range(len(blocks)),
+                        key=lambda i: (-blocks[i]["max_score"], blocks[i]["first_docid"]))
+        for rk, i in enumerate(ranked[:champion_blocks]):
+            blocks[i]["champ_rk"] = rk + 1
+        for i in range(min(champion_blocks, len(blocks))):
+            if blocks[i]["champ_rk"] == 0:
+                blocks[i]["champ_rk"] = champion_blocks + 1 + i
+        out.extend(blocks)
+    return pa.Table.from_pylist(out, schema=PA_BLOCKS_SCHEMA)
+
+
+def _batches(tbl: pa.Table, size: int) -> list:
+    empty = pa.RecordBatch.from_pylist([], schema=tbl.schema)
+    out = [empty]
+    for b in tbl.to_batches(max_chunksize=size):
+        out += [b, empty]
+    return out
+
+
+class TestEncoder:
+    @pytest.mark.parametrize("chunk", [1, 7, 10_000])
+    def test_matches_per_term_reference(self, chunk):
+        tbl = _synthetic_postings()
+        want = _reference_encode(tbl)
+        enc = block_encoder(AVGS, N_DOCS_SYN, P)
+        got = pa.Table.from_batches(list(enc(iter(_batches(tbl, chunk)))),
+                                    schema=PA_BLOCKS_SCHEMA)
+        assert got.num_rows == want.num_rows
+        assert got.combine_chunks().equals(want.combine_chunks())
+
+    def test_empty_input(self):
+        enc = block_encoder(AVGS, N_DOCS_SYN, P)
+        empty = pa.RecordBatch.from_pylist([], schema=_IN_SCHEMA)
+        assert list(enc(iter([empty, empty]))) == []
+
+
+class TestSegmentedDecodeKernels:
+    """The Arrow scoring kernels decode a whole batch with one segmented
+    varint decode; each mode must equal a per-row varint_decode +
+    bm25_for_fl reference."""
+
+    @pytest.fixture(scope="class")
+    def blocks(self):
+        tbl = _synthetic_postings(seed=5)
+        enc = block_encoder(AVGS, N_DOCS_SYN, P)
+        return pa.Table.from_batches(list(enc(iter(_batches(tbl, 500)))),
+                                     schema=PA_BLOCKS_SCHEMA)
+
+    @staticmethod
+    def _per_row(rows, clipped=False):
+        out = []
+        for r in rows:
+            o = varint_decode(r["orig_docids"]).astype(np.int64)
+            fl = varint_decode(r["field_lens"]).astype(np.float64)
+            t = varint_decode(r["tfns"]).astype(np.float64) if r["tfns"] else None
+            s = bm25_for_fl(fl, float(r["df"]), N_DOCS_SYN, AVGS[r["field"]], P, tfn=t)
+            if "wt" in r:
+                s = s * r["wt"]
+            if clipped:
+                d = varint_decode(r["docid_deltas"]).astype(np.int64)
+                internal = r["first_docid"] + np.concatenate(([0], np.cumsum(d[1:])))
+                m = (internal >= r["clip_start"]) & (internal <= r["clip_end"])
+                o, s = o[m], s[m]
+            out += [(r["field"], r["term"], int(a), float(b)) for a, b in zip(o, s)]
+        return out
+
+    def _run(self, table, clipped):
+        from orama_spark.query.wand import _score_blocks_fn
+
+        fn = _score_blocks_fn(AVGS, N_DOCS_SYN, P, clipped)
+        got = []
+        for ob in fn(iter(table.to_batches(max_chunksize=9))):
+            got += list(zip(ob.column("docid").to_pylist(), ob.column("s").to_pylist()))
+        return got
+
+    def test_unclipped(self, blocks):
+        want = [(d, s) for _, _, d, s in self._per_row(blocks.to_pylist())]
+        assert self._run(blocks, clipped=False) == want
+
+    def test_clipped(self, blocks):
+        first = blocks.column("first_docid").to_numpy()
+        last = blocks.column("last_docid").to_numpy()
+        clipped = blocks.append_column(
+            "clip_start", pa.array(first + (last - first) // 3)
+        ).append_column("clip_end", pa.array(last - (last - first) // 4))
+        want = [(d, s) for _, _, d, s in self._per_row(clipped.to_pylist(), clipped=True)]
+        assert want
+        assert self._run(clipped, clipped=True) == want
+
+    def test_weighted(self, blocks):
+        wt = pa.array((np.arange(blocks.num_rows) % 3 + 1).astype(np.float64))
+        weighted = blocks.append_column("wt", wt)
+        want = [(d, s) for _, _, d, s in self._per_row(weighted.to_pylist())]
+        assert self._run(weighted, clipped=False) == want
+
+    @pytest.mark.parametrize("chunk", [1, 5, 1000])
+    def test_champions_kernel_with_key(self, blocks, chunk):
+        # the keyed (champion) mode: per-term top rows by (s desc,
+        # docid asc), with terms split across input batches
+        from orama_spark.query.wand import _champions_fn
+
+        depth = 150
+        want = []
+        for _, grp in itertools.groupby(
+            self._per_row(blocks.to_pylist()), key=lambda r: r[:2]
+        ):
+            want += sorted(grp, key=lambda r: (-r[3], r[2]))[:depth]
+        fn = _champions_fn(AVGS, N_DOCS_SYN, P, depth=depth, per_block=BLOCK_SIZE)
+        got = []
+        for ob in fn(iter(_batches(blocks, chunk))):
+            got += list(zip(*(ob.column(c).to_pylist()
+                              for c in ("field", "term", "docid", "s"))))
+        assert len(got) == len(want)
+        assert sorted(got) == sorted(want)
+
 
 N_DOCS = 600
 CFG = IndexConfig(
@@ -58,8 +262,27 @@ def indexes(spark, tmp_path_factory):
     df = spark.createDataFrame(rows)
     IndexBuilder(CFG, postings_partitions=3).build(df, out, input_id="w")
     plain = SearchIndex.load(spark, out, CFG)
-    blocks = BlockIndex.build(spark, out, CFG)
+    # many uncoalesced encoder partitions, so hot terms are split across
+    # several encoder fragments (as they are at scale)
+    with _session_conf(spark, {"spark.sql.shuffle.partitions": "16",
+                               "spark.sql.adaptive.coalescePartitions.enabled": "false"}):
+        blocks = BlockIndex.build(spark, out, CFG)
     return plain, blocks
+
+
+@contextlib.contextmanager
+def _session_conf(spark, settings: dict):
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 class TestBlocks:
@@ -68,6 +291,56 @@ class TestBlocks:
         n_postings = plain.postings.count()
         n_in_blocks = blocks.blocks.agg(F.sum("n")).collect()[0][0]
         assert n_in_blocks == n_postings
+
+    def test_internal_ids_are_length_rank(self, indexes):
+        # internal = dense 0-based rank by (total field length, docid)
+        plain, _ = indexes
+        got = {
+            r["docid"]: r["internal"]
+            for r in assign_internal_ids(plain.postings).collect()
+        }
+        dl = (
+            plain.postings.select("field", "docid", "field_len")
+            .dropDuplicates(["field", "docid"]).groupBy("docid")
+            .agg(F.sum("field_len").alias("dl")).collect()
+        )
+        ranked = sorted((r["dl"], r["docid"]) for r in dl)
+        assert got == {d: i for i, (_, d) in enumerate(ranked)}
+
+    def test_champions_match_window_formulation(self, indexes, spark):
+        # one-pass champions == decode + score every candidate block,
+        # then row_number() over (field, term) by (s desc, docid asc)
+        from orama_spark.query.wand import (
+            CHAMPION_BLOCKS, CHAMPION_POSTINGS_PER_BLOCK,
+        )
+
+        _, blocks = indexes
+        # the hot term must be split across >= 2 encoder fragments
+        fragments = (
+            blocks.blocks.where(F.col("block_id") == 0)
+            .groupBy("field", "term").count().agg(F.max("count")).first()[0]
+        )
+        assert fragments >= 2
+        st = blocks.stats
+        rows = []
+        for r in blocks.blocks.where(F.col("champ_rk") > 0).collect():
+            o = varint_decode(bytes(r["orig_docids"])).astype(np.int64)
+            fl = varint_decode(bytes(r["field_lens"])).astype(np.float64)
+            t = (varint_decode(bytes(r["tfns"])).astype(np.float64)
+                 if r["tfns"] else None)
+            s = bm25_for_fl(fl, float(r["df"]), float(st["docs_count"]),
+                            st["fields"][r["field"]]["avg_field_length"],
+                            CFG.bm25, tfn=t)
+            rows += [(r["field"], r["term"], int(a), float(b)) for a, b in zip(o, s)]
+        scored = spark.createDataFrame(rows, "field string, term string, docid long, s double")
+        w = Window.partitionBy("field", "term").orderBy(F.desc("s"), F.asc("docid"))
+        want = {
+            tuple(r) for r in scored.withColumn("_rk", F.row_number().over(w))
+            .where(F.col("_rk") <= CHAMPION_BLOCKS * CHAMPION_POSTINGS_PER_BLOCK)
+            .drop("_rk").collect()
+        }
+        got = {tuple(r) for r in blocks.champions.collect()}
+        assert got == want
 
     def test_block_size_respected(self, indexes):
         _, blocks = indexes

@@ -1,7 +1,12 @@
 """plugin-parsedoc port: the reference package's own test expectations
 (plugin-parsedoc/test/index.test.ts) against the pure-Python parser,
 plus the Spark mapInPandas surface and an engine-level search test
-mirroring the reference's 'it should store the values'."""
+mirroring the reference's 'it should store the values'.
+
+The reference fixtures are rebuilt as the smallest inputs that yield
+what each expectation pins (tests/fixtures/parsedoc/)."""
+
+import os
 
 import pytest
 
@@ -13,11 +18,11 @@ from orama_spark.sources.parsedoc import (
     parse_records_df,
 )
 
-FX = "/root/reference/packages/plugin-parsedoc/test/fixtures"
+FX = os.path.join(os.path.dirname(__file__), "fixtures", "parsedoc")
 
 
 def _rd(name):
-    with open(f"{FX}/{name}") as f:
+    with open(os.path.join(FX, name)) as f:
         return f.read()
 
 
@@ -162,7 +167,7 @@ class TestSparkSurface:
     def test_map_only_explode(self, spark):
         rows = [
             (0, "<h1>Alpha</h1><p>body text one</p>"),
-            (1, _rd("two-paragraphs.html")),
+            (1, "<body><p>First paragraph</p><p>Second paragraph</p></body>"),
             (2, None),
         ]
         df = spark.createDataFrame(rows, "doc_id long, html string")
@@ -178,7 +183,10 @@ class TestSparkSurface:
         assert "Exchange" not in plan, plan
 
     def test_parity_with_pure_python(self, spark):
-        html = _rd("different-containers.html")
+        html = (
+            "<body><div><p>First paragraph</p></div>"
+            "<div><p>Second paragraph</p></div></body>"
+        )
         df = spark.createDataFrame([(7, html)], "doc_id long, html string")
         got = [
             (r["type"], r["content"], r["path"])
