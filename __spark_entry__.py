@@ -14,19 +14,40 @@ where the Python oracle replaces SQL.
 Scores are rounded to 6 decimals on both sides: Spark and DuckDB both
 compute IEEE-754 doubles with the same formula (plain ln(1+x)); rounding
 absorbs summation-order ulps.
+
+Fixture indexes (the entry index and its variants: languages, string[],
+mutated, stream-built, restored, alternative scorers) are declared once
+in ``_AUX`` and reached through ``_aux(spark, sf_dir, name)``. Each is
+cached in ``/dev/shm/orama_spark_entry_<name>/<basename(sf_dir)>`` and
+in one in-process dict, both keyed by a content key: the spec name, the
+resolved ``sf_dir``, the size and mtime of every source parquet file it
+reads, and for a derived spec (``restored``) its parent's key. A dir is
+reused only when its ``_STAMP`` file holds that key; the stamp is
+written after the build and any mutation finish, so a torn build or a
+rewritten fixture at the same path is rebuilt from an empty dir. The key
+does not cover code: after changing a spec or ``IndexBuilder``,
+remove the ``/dev/shm/orama_spark_entry_*`` dirs.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import shutil
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from orama_spark.build.indexer import IndexBuilder
+from orama_spark.build.maintenance import remove_documents, update_documents, upsert_documents
 from orama_spark.config import IndexConfig
 from orama_spark.kernel.tokenizer import Tokenizer, TokenizerConfig
 from orama_spark.query.engine import SearchIndex
+from orama_spark.query.pt15 import PT15Index
+from orama_spark.query.qps import QPSIndex
+from orama_spark.query.wand import BlockIndex
 
 # ------------------------------------------------------------------ setup
 
@@ -132,7 +153,7 @@ PREFIX_COND = "tok.term LIKE qt.qtoken || '%'"
 # batched-search driver query: 3 default-mode queries in one scan
 BATCH_TERMS = ["spark", "merge stream", "sca"]
 
-_INDEX_CACHE: dict[str, SearchIndex] = {}
+# ------------------------------------------------------ fixture indexes
 
 # string[] searchable-field index: tags = [lang, source] per doc —
 # single-token elements exercise the per-element insert semantics
@@ -140,8 +161,12 @@ _INDEX_CACHE: dict[str, SearchIndex] = {}
 TAGS_CONFIG = IndexConfig(
     schema={"tags": "string[]"}, tokenizer=TokenizerConfig.plain(), docid_col="docid"
 )
-_TAGS_CACHE: dict[str, SearchIndex] = {}
 
+# plain-profile `text` index: the incremental-maintenance fixtures and
+# the alternative scorers (PT15, QPS) all index the raw documents text
+TEXT_CONFIG = IndexConfig(
+    schema={"text": "string"}, tokenizer=TokenizerConfig.plain(), docid_col="docid"
+)
 
 # German-splitter index over the lang='de' slice (multi-language
 # tokenizer registry, languages.ts:34-65 — language selects the split
@@ -160,240 +185,23 @@ DE_CONFIG = IndexConfig(
     tokenizer=TokenizerConfig(language="german"),
     docid_col="docid",
 )
-_DE_CACHE: dict[str, SearchIndex] = {}
-
-
-
-def _build_parts(spark: SparkSession) -> int:
-    """Postings/dictionary partition count for the fixture-scale entry
-    indexes: small corpora produce ~1 MB postings files, so every
-    query-time scan pays one task-launch per file — 8 files keeps scans
-    cheap while the build's map side still runs wide (measured: the
-    flt family drops ~25% vs 32 files at sf1.0). Scale-adaptive: large
-    inputs (many scan splits) raise it toward the input's own width.
-    """
-    return max(8, spark.sparkContext.defaultParallelism // 4)
-
-def _get_de_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _DE_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    title_arr = F.array(*[F.lit(w) for w in DE_TITLES])
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("lang") == "de")
-        .select(
-            F.col("doc_id").alias("docid"),
-            "text",
-            F.element_at(
-                title_arr, ((F.col("doc_id") * 3) % 16 + 1).cast("int")
-            ).alias("title"),
-        )
-    )
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_deidx2",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    IndexBuilder(DE_CONFIG, postings_partitions=_build_parts(spark)).build(df, out, input_id=sf_dir)
-    idx = SearchIndex.load(spark, out, DE_CONFIG)
-    _DE_CACHE[sf_dir] = idx
-    return idx
-
-
-# incremental-maintenance index: documents minus every 7th doc, removed
-# AFTER the build through the tombstone/delta path — the driver query
-# then proves remove-adjusted stats/df match a from-scratch oracle over
-# the remaining docs
-_RM_CACHE: dict[str, SearchIndex] = {}
-
-
-def _get_removed_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _RM_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    from orama_spark.build.maintenance import remove_documents
-
-    cfg = IndexConfig(
-        schema={"text": "string"}, tokenizer=TokenizerConfig.plain(), docid_col="docid"
-    )
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(F.col("doc_id").alias("docid"), "text")
-    )
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_rmidx", os.path.basename(os.path.normpath(sf_dir))
-    )
-    import json as _json
-
-    marker = os.path.join(out, "stats.json")
-    if not os.path.exists(marker):
-        IndexBuilder(cfg, postings_partitions=_build_parts(spark)).build(df, out, input_id=sf_dir)
-        remove_documents(
-            spark, out, cfg, df.where(F.col("docid") % 7 == 0).select("docid")
-        )
-    else:
-        # the cache may predate the removal — only reuse post-removal
-        with open(marker) as fh:
-            if _json.load(fh)["docs_count"] == df.count():
-                remove_documents(
-                    spark, out, cfg,
-                    df.where(F.col("docid") % 7 == 0).select("docid"),
-                )
-    idx = SearchIndex.load(spark, out, cfg)
-    _RM_CACHE[sf_dir] = idx
-    return idx
-
 
 # incremental update / upsert (methods/update.ts:8-49,
 # methods/upsert.ts:8-264): mutate a built index, then assert search
 # parity against a from-scratch SQL oracle over the POST-mutation
-# document set — the exact pattern _get_removed_index established.
+# document set — the same pattern as the incremental-remove fixture.
 UPD_PREFIX = "sparkling refreshed prose "
 UPS_PREFIX = "upserted novel payload "
-_UPD_CACHE: dict[tuple, SearchIndex] = {}
-
-
-def _get_mutated_index(spark: SparkSession, sf_dir: str, kind: str) -> SearchIndex:
-    key = (kind, sf_dir)
-    idx = _UPD_CACHE.get(key)
-    if idx is not None:
-        return idx
-    from orama_spark.build.maintenance import update_documents, upsert_documents
-
-    cfg = IndexConfig(
-        schema={"text": "string"}, tokenizer=TokenizerConfig.plain(), docid_col="docid"
-    )
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(F.col("doc_id").alias("docid"), "text")
-    )
-    out = os.path.join(
-        f"/dev/shm/orama_spark_entry_{kind}idx",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    # docs_count is unchanged by update, so the _RM-style count probe
-    # can't tell pre- from post-mutation — use an explicit sentinel
-    # written only after the mutation completed.
-    marker = os.path.join(out, f"_{kind}_done")
-    if not os.path.exists(marker):
-        import shutil as _sh
-
-        _sh.rmtree(out, ignore_errors=True)
-        IndexBuilder(cfg, postings_partitions=_build_parts(spark)).build(df, out, input_id=sf_dir)
-        if kind == "updated":
-            update_documents(
-                spark, out, cfg,
-                df.where(F.col("docid") % 11 == 5).select(
-                    "docid", F.concat(F.lit(UPD_PREFIX), F.col("text")).alias("text")
-                ),
-            )
-        else:
-            changed = df.where(F.col("docid") % 22 == 5).select(
-                "docid", F.concat(F.lit(UPS_PREFIX), F.col("text")).alias("text")
-            )
-            novel = df.where(F.col("docid") % 50 == 7).select(
-                (F.col("docid") + F.lit(500000)).alias("docid"),
-                F.concat(F.lit(UPS_PREFIX), F.col("text")).alias("text"),
-            )
-            upsert_documents(spark, out, cfg, changed.unionByName(novel))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    idx = SearchIndex.load(spark, out, cfg)
-    _UPD_CACHE[key] = idx
-    return idx
-
 
 # allow_duplicates index + block-max WAND: df counts occurrences and
 # tf = occ/field_len (index.ts:113-118); the block path carries
 # per-posting tf numerators, so WAND pruning now covers this posting
 # shape (query/wand.py) — gate it end-to-end at value level.
-_DUP_CACHE: dict[str, object] = {}
-
-
-def _get_dup_blocks(spark: SparkSession, sf_dir: str):
-    bidx = _DUP_CACHE.get(sf_dir)
-    if bidx is not None:
-        return bidx
-    from orama_spark.query.wand import BlockIndex
-
-    cfg = IndexConfig(
-        schema={"text": "string"},
-        tokenizer=TokenizerConfig(allow_duplicates=True),
-        docid_col="docid",
-    )
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(F.col("doc_id").alias("docid"), "text")
-    )
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_dupidx",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    if not os.path.exists(os.path.join(out, "blocks_build.json")):
-        import shutil as _sh
-
-        _sh.rmtree(out, ignore_errors=True)
-        IndexBuilder(cfg, postings_partitions=_build_parts(spark)).build(df, out, input_id=sf_dir)
-        bidx = BlockIndex.build(spark, out, cfg)
-    else:
-        bidx = BlockIndex.load(spark, out, cfg)
-    _DUP_CACHE[sf_dir] = bidx
-    return bidx
-
-
-# alternative scorers (SURVEY §2.10): PT15 + QPS indexes over documents
-_ALT_CACHE: dict[tuple, object] = {}
-
-
-def _get_alt_index(spark: SparkSession, sf_dir: str, kind: str):
-    key = (kind, sf_dir)
-    idx = _ALT_CACHE.get(key)
-    if idx is not None:
-        return idx
-    from orama_spark.query.pt15 import PT15Index
-    from orama_spark.query.qps import QPSIndex
-
-    cfg = IndexConfig(
-        schema={"text": "string"}, tokenizer=TokenizerConfig.plain(), docid_col="docid"
-    )
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(F.col("doc_id").alias("docid"), "text")
-    )
-    out = os.path.join(
-        f"/dev/shm/orama_spark_entry_{kind}",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    cls = PT15Index if kind == "pt15" else QPSIndex
-    marker = os.path.join(out, kind)
-    if not os.path.exists(marker):
-        idx = cls.build(df, out, cfg)
-    else:
-        idx = cls.load(spark, out, cfg)
-    _ALT_CACHE[key] = idx
-    return idx
-
-
-def _get_tags_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _TAGS_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.array(F.col("lang"), F.col("source")).alias("tags"),
-        )
-    )
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_tagsidx",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    IndexBuilder(TAGS_CONFIG, postings_partitions=_build_parts(spark)).build(df, out, input_id=sf_dir)
-    idx = SearchIndex.load(spark, out, TAGS_CONFIG)
-    _TAGS_CACHE[sf_dir] = idx
-    return idx
-
+DUP_CONFIG = IndexConfig(
+    schema={"text": "string"},
+    tokenizer=TokenizerConfig(allow_duplicates=True),
+    docid_col="docid",
+)
 
 # Turkish full-profile index (stopwords + the Snowball Turkish stemmer,
 # kernel/snowball_tr.py — differential-fuzzed vs the reference's
@@ -410,38 +218,6 @@ TR_CONFIG = IndexConfig(
     tokenizer=TokenizerConfig.full_for("turkish"),
     docid_col="docid",
 )
-_TR_CACHE: dict[str, SearchIndex] = {}
-
-
-def _tr_corpus(spark: SparkSession, sf_dir: str):
-    arr = F.array(*[F.lit(w) for w in _TR_FORMS])
-
-    def word(off: int):
-        return F.element_at(
-            arr, ((F.col("doc_id") * 7 + off) % 12 + 1).cast("int")
-        )
-
-    return (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat_ws(" ", word(0), word(3), word(6)).alias("text"),
-        )
-    )
-
-
-def _get_tr_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _TR_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_tridx", os.path.basename(os.path.normpath(sf_dir))
-    )
-    IndexBuilder(TR_CONFIG, postings_partitions=_build_parts(spark)).build(_tr_corpus(spark, sf_dir), out, input_id=sf_dir)
-    idx = SearchIndex.load(spark, out, TR_CONFIG)
-    _TR_CACHE[sf_dir] = idx
-    return idx
-
 
 # Japanese: @orama/tokenizers-japanese wrapper over the ICU-parity
 # dictionary segmenter (kernel/cjk_dict — ICU's own cjdict + the
@@ -461,25 +237,6 @@ JA_CONFIG = IndexConfig(
     tokenizer=TokenizerConfig(language="japanese"),
     docid_col="docid",
 )
-_JA_CACHE: dict[str, SearchIndex] = {}
-
-
-def _ja_corpus(spark: SparkSession, sf_dir: str):
-    arr = F.array(*[F.lit(w) for w in _JA_WORDS])
-
-    def word(off: int):
-        return F.element_at(
-            arr, ((F.col("doc_id") * 5 + off) % 12 + 1).cast("int")
-        )
-
-    return (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(word(0), word(4), word(7)).alias("text"),
-        )
-    )
-
 
 # Mandarin twin: same dictionary backend (mandarin.ts:23 delegates to
 # the same ICU cjdict word break; ja/zh Intl.Segmenter goldens were
@@ -492,126 +249,130 @@ ZH_CONFIG = IndexConfig(
     tokenizer=TokenizerConfig(language="mandarin"),
     docid_col="docid",
 )
-_ZH_CACHE: dict[str, SearchIndex] = {}
 
 
-def _zh_corpus(spark: SparkSession, sf_dir: str):
-    arr = F.array(*[F.lit(w) for w in _ZH_WORDS])
+def _build_parts(spark: SparkSession) -> int:
+    """Postings/dictionary partition count for the fixture-scale entry
+    indexes. The fixture parquet is ONE row group, so the input scan is
+    one task whatever the split config; the docs-stage range shuffle is
+    what fans the corpus out, and this sizes it to the cores (the
+    IndexBuilder's input-partition default would mirror the degenerate scan).
+    Small corpora produce ~1 MB postings files, so every query-time scan
+    pays one task-launch per file — 8 files keeps scans cheap while the
+    build's map side still runs wide (measured: the flt family drops
+    ~25% vs 32 files at sf1.0). Scale-adaptive: large inputs (many scan
+    splits) raise it toward the input's own width.
+    """
+    return max(8, spark.sparkContext.defaultParallelism // 4)
 
-    def word(off: int):
-        return F.element_at(
-            arr, ((F.col("doc_id") * 7 + off) % 12 + 1).cast("int")
-        )
 
+# ---- fixture corpora: documents.parquet reshaped per index
+
+def _doc_rows(spark: SparkSession, sf_dir: str, *cols, where=None) -> DataFrame:
+    """documents.parquet rows (optionally filtered) keyed by `docid`,
+    with the given columns."""
+    df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    if where is not None:
+        df = df.where(where)
+    return df.select(F.col("doc_id").alias("docid"), *cols)
+
+
+def _entry_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every documents column (doc_id renamed docid) plus the synthetic
+    `loc` geopoint: the entry index's input."""
     return (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(
-            F.col("doc_id").alias("docid"),
-            F.concat(word(0), word(2), word(9)).alias("text"),
-        )
-    )
-
-
-def _get_zh_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _ZH_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_zhidx", os.path.basename(os.path.normpath(sf_dir))
-    )
-    IndexBuilder(ZH_CONFIG, postings_partitions=_build_parts(spark)).build(_zh_corpus(spark, sf_dir), out, input_id=sf_dir)
-    idx = SearchIndex.load(spark, out, ZH_CONFIG)
-    _ZH_CACHE[sf_dir] = idx
-    return idx
-
-
-def _get_ja_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _JA_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_jaidx", os.path.basename(os.path.normpath(sf_dir))
-    )
-    IndexBuilder(JA_CONFIG, postings_partitions=_build_parts(spark)).build(_ja_corpus(spark, sf_dir), out, input_id=sf_dir)
-    idx = SearchIndex.load(spark, out, JA_CONFIG)
-    _JA_CACHE[sf_dir] = idx
-    return idx
-
-
-# string[] + incremental remove: 1-element tags (array(lang)) so the
-# removal recurrence telescopes exactly (the reference's >=2-element
-# NaN-poisoning quirk is pinned in test_maintenance instead) and the
-# remaining index equals from-scratch semantics for the SQL oracle.
-_TAGS_RM_CACHE: dict[str, SearchIndex] = {}
-
-
-def _get_tags_removed_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _TAGS_RM_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    from orama_spark.build.maintenance import remove_documents
-
-    df = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select(F.col("doc_id").alias("docid"), F.array(F.col("lang")).alias("tags"))
-    )
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_tagsrm",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    marker = os.path.join(out, "tombstones")
-    if not os.path.exists(marker):
-        IndexBuilder(TAGS_CONFIG, postings_partitions=_build_parts(spark)).build(df, out, input_id=sf_dir)
-        remove_documents(
-            spark, out, TAGS_CONFIG,
-            df.where(F.col("docid") % 9 == 2).select("docid"),
-        )
-    idx = SearchIndex.load(spark, out, TAGS_CONFIG)
-    _TAGS_RM_CACHE[sf_dir] = idx
-    return idx
-
-
-def _get_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
-    idx = _INDEX_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # small-file corpora: keep scan splits small so tokenize/explode
-    # stages parallelize (at production scale files are >=128MB and the
-    # default bin-packing is already right)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
-    df = (
         spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         .withColumn(
             "loc",
-            F.struct(
-                F.expr(_GEO_LAT).alias("lat"), F.expr(_GEO_LON).alias("lon")
-            ),
+            F.struct(F.expr(_GEO_LAT).alias("lat"), F.expr(_GEO_LON).alias("lon")),
         )
         .withColumnRenamed("doc_id", "docid")
     )
-    out = os.path.join(
-        "/dev/shm/orama_spark_entry_idx", os.path.basename(os.path.normpath(sf_dir))
+
+
+def _text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _doc_rows(spark, sf_dir, "text")
+
+
+def _vocab_corpus(spark: SparkSession, sf_dir: str, words: list[str],
+                  mult: int, offsets: tuple[int, ...], sep: str) -> DataFrame:
+    """Synthetic text per doc: the vocabulary words at
+    (doc_id * mult + off) mod len(words) for each offset, joined by
+    `sep` — arithmetic the DuckDB oracle regenerates verbatim."""
+    arr = F.array(*[F.lit(w) for w in words])
+    picks = [
+        F.element_at(arr, ((F.col("doc_id") * mult + off) % len(words) + 1).cast("int"))
+        for off in offsets
+    ]
+    return _doc_rows(spark, sf_dir, F.concat_ws(sep, *picks).alias("text"))
+
+
+# ---- post-build mutations: (spark, out, cfg, corpus) -> None
+
+def _remove_every(mod: int, rem: int):
+    def mutate(spark, out, cfg, df):
+        remove_documents(spark, out, cfg, df.where(F.col("docid") % mod == rem).select("docid"))
+    return mutate
+
+
+def _update(spark, out, cfg, df):
+    update_documents(
+        spark, out, cfg,
+        df.where(F.col("docid") % 11 == 5).select(
+            "docid", F.concat(F.lit(UPD_PREFIX), F.col("text")).alias("text")
+        ),
     )
-    # the fixture parquet is ONE row group, so the input scan is one
-    # task no matter the split config; the docs-stage range shuffle is
-    # what fans the corpus out, and postings_partitions sizes it to the
-    # cores (the input-partition default would mirror the degenerate
-    # scan). At production scale inputs arrive in many files/row groups
-    # and the builder's input-sized default applies unchanged.
-    IndexBuilder(
-        DOC_CONFIG, postings_partitions=_build_parts(spark)
-    ).build(df, out, input_id=sf_dir)
-    idx = SearchIndex.load(spark, out, DOC_CONFIG)
-    _INDEX_CACHE[sf_dir] = idx
-    return idx
 
 
-_STREAMED_CACHE: dict[str, SearchIndex] = {}
+def _upsert(spark, out, cfg, df):
+    changed = df.where(F.col("docid") % 22 == 5).select(
+        "docid", F.concat(F.lit(UPS_PREFIX), F.col("text")).alias("text")
+    )
+    novel = df.where(F.col("docid") % 50 == 7).select(
+        (F.col("docid") + F.lit(500000)).alias("docid"),
+        F.concat(F.lit(UPS_PREFIX), F.col("text")).alias("text"),
+    )
+    upsert_documents(spark, out, cfg, changed.unionByName(novel))
 
 
-def _get_streamed_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
+def _blocks(spark, out, cfg, df):
+    BlockIndex.build(spark, out, cfg)
+
+
+# ---- the registry
+
+class _Aux(NamedTuple):
+    """One fixture index: `build(spark, sf_dir, out, key)` writes it
+    (mutations included) under the empty dir `out`, `load(spark, out)`
+    opens it. `sources` are the sf_dir parquet files the build reads;
+    `parent` names a spec whose index the build reads instead."""
+
+    build: Callable
+    load: Callable
+    sources: tuple[str, ...] = ("documents.parquet",)
+    parent: str | None = None
+
+
+def _indexed(cfg: IndexConfig, corpus: Callable, mutate: Callable | None = None,
+             load: Callable = SearchIndex.load) -> _Aux:
+    """An IndexBuilder build of `corpus`, optionally mutated afterwards."""
+    def build(spark, sf_dir, out, key):
+        df = corpus(spark, sf_dir)
+        IndexBuilder(cfg, postings_partitions=_build_parts(spark)).build(df, out, input_id=key)
+        if mutate is not None:
+            mutate(spark, out, cfg, df)
+    return _Aux(build, lambda spark, out: load(spark, out, cfg))
+
+
+def _scorer(cls) -> _Aux:
+    """An alternative-scorer index (SURVEY §2.10) over the documents text."""
+    return _Aux(
+        lambda spark, sf_dir, out, key: cls.build(_text_docs(spark, sf_dir), out, TEXT_CONFIG),
+        lambda spark, out: cls.load(spark, out, TEXT_CONFIG),
+    )
+
+
+def _build_streamed(spark, sf_dir, out, key):
     """The entry index built through the STREAMING ingestion path
     (SURVEY §2.12, streaming.incremental): the documents table is split
     into three deterministic micro-batch files, replayed as a file
@@ -621,86 +382,194 @@ def _get_streamed_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
     result must equal the batch-built index's answers (the reference's
     insertMultiple semantics), which is exactly what the driver oracle
     asserts."""
-    idx = _STREAMED_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
-    import shutil
-
     from orama_spark.streaming.incremental import StreamingIndexWriter
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join("/dev/shm/orama_spark_entry_streamidx", base)
-    out = os.path.join(root, "index")
-    done = os.path.join(root, "_DONE")
-    if not os.path.exists(done):
-        shutil.rmtree(root, ignore_errors=True)
-        src_dir = os.path.join(root, "source")
-        os.makedirs(src_dir)
-        df = (
-            spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-            .withColumn(
-                "loc",
-                F.struct(
-                    F.expr(_GEO_LAT).alias("lat"), F.expr(_GEO_LON).alias("lon")
-                ),
-            )
-            .withColumnRenamed("doc_id", "docid")
-        )
-        # three micro-batch files, written oldest-first so the file
-        # source replays them in docid-bucket order
-        for b in range(3):
-            tmp = os.path.join(root, f"_tmp{b}")
-            df.where(F.col("docid") % 3 == b).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            shutil.move(
-                os.path.join(tmp, part),
-                os.path.join(src_dir, f"batch-{b}.parquet"),
-            )
-            shutil.rmtree(tmp)
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        q = StreamingIndexWriter(DOC_CONFIG, out).start(
-            stream, os.path.join(root, "checkpoint")
-        )
-        q.awaitTermination()
-        with open(done, "w") as f:
-            f.write("ok")
-    idx = SearchIndex.load(spark, out, DOC_CONFIG)
-    _STREAMED_CACHE[sf_dir] = idx
-    return idx
+    src_dir = os.path.join(out, "source")
+    os.makedirs(src_dir)
+    df = _entry_docs(spark, sf_dir)
+    # three micro-batch files, written oldest-first so the file
+    # source replays them in docid-bucket order
+    for b in range(3):
+        tmp = os.path.join(out, f"_tmp{b}")
+        df.where(F.col("docid") % 3 == b).coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+        shutil.move(os.path.join(tmp, part), os.path.join(src_dir, f"batch-{b}.parquet"))
+        shutil.rmtree(tmp)
+    stream = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src_dir)
+    StreamingIndexWriter(DOC_CONFIG, os.path.join(out, "index")).start(
+        stream, os.path.join(out, "checkpoint")
+    ).awaitTermination()
 
 
-_RESTORED_CACHE: dict[str, SearchIndex] = {}
-
-
-def _get_restored_index(spark: SparkSession, sf_dir: str) -> SearchIndex:
+def _build_restored(spark, sf_dir, out, key):
     """The entry index round-tripped through the reference persistence
     wire format: save_dump (methods/serialization.ts:22-31 shape) ->
     msgpack-hex 'binary' payload (plugin-data-persistence/src/
     index.ts:54-93) -> verbatim restore into a fresh parquet layout.
     Queries over it gate that the dump preserves BM25-exact state."""
-    idx = _RESTORED_CACHE.get(sf_dir)
-    if idx is not None:
-        return idx
     from orama_spark import persistence as _P
 
-    _get_index(spark, sf_dir)  # ensure the source index dir is built
-    base = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join("/dev/shm/orama_spark_entry_idx", base)
-    payload = _P.persist(spark, src, DOC_CONFIG, format="binary")
-    out = os.path.join("/dev/shm/orama_spark_entry_restored", base)
-    _P.restore(spark, payload, out, DOC_CONFIG, format="binary",
-               mode="verbatim")
-    idx = SearchIndex.load(spark, out, DOC_CONFIG)
-    _RESTORED_CACHE[sf_dir] = idx
+    _aux(spark, sf_dir, "idx")
+    payload = _P.persist(spark, _aux_dir("idx", sf_dir), DOC_CONFIG, format="binary")
+    _P.restore(spark, payload, out, DOC_CONFIG, format="binary", mode="verbatim")
+
+
+def _copy_events(spark, sf_dir, out, key):
+    """The events table as the streaming-window query replays it."""
+    src = os.path.join(sf_dir, "events.parquet")
+    os.makedirs(out)
+    # testdata ships events as one file; scaled twins ship a directory
+    # of part files — replay whichever shape. A single file is ONE
+    # parquet row group (one scan task for the whole replay), so
+    # re-chunk it into per-core files while copying — same raw rows,
+    # just a parallel-readable layout.
+    if os.path.isdir(src):
+        for p in sorted(os.listdir(src)):
+            if p.endswith(".parquet"):
+                shutil.copy(os.path.join(src, p), os.path.join(out, p))
+        return
+    import pyarrow.parquet as _pq
+
+    tbl = _pq.read_table(src)
+    k = max(spark.sparkContext.defaultParallelism, 1)
+    step = max((tbl.num_rows + k - 1) // k, 1)
+    for ci, off in enumerate(range(0, tbl.num_rows, step)):
+        _pq.write_table(tbl.slice(off, step), os.path.join(out, f"part-{ci:05d}.parquet"))
+
+
+_AUX: dict[str, _Aux] = {
+    # the entry index: every query family over the documents table
+    "idx": _indexed(DOC_CONFIG, _entry_docs),
+    "tags": _indexed(
+        TAGS_CONFIG,
+        lambda spark, sf_dir: _doc_rows(
+            spark, sf_dir, F.array(F.col("lang"), F.col("source")).alias("tags")
+        ),
+    ),
+    "de": _indexed(
+        DE_CONFIG,
+        lambda spark, sf_dir: _doc_rows(
+            spark, sf_dir, "text",
+            F.element_at(
+                F.array(*[F.lit(w) for w in DE_TITLES]),
+                ((F.col("doc_id") * 3) % 16 + 1).cast("int"),
+            ).alias("title"),
+            where=F.col("lang") == "de",
+        ),
+    ),
+    # incremental remove (tombstones + df deltas + stats recurrence) of
+    # every 7th doc AFTER the build: remove-adjusted stats/df must match
+    # a from-scratch oracle over the remaining docs
+    "removed": _indexed(TEXT_CONFIG, _text_docs, _remove_every(7, 0)),
+    "updated": _indexed(TEXT_CONFIG, _text_docs, _update),
+    "upserted": _indexed(TEXT_CONFIG, _text_docs, _upsert),
+    "dup": _indexed(DUP_CONFIG, _text_docs, _blocks, load=BlockIndex.load),
+    "pt15": _scorer(PT15Index),
+    "qps": _scorer(QPSIndex),
+    "tr": _indexed(
+        TR_CONFIG,
+        lambda spark, sf_dir: _vocab_corpus(spark, sf_dir, _TR_FORMS, 7, (0, 3, 6), " "),
+    ),
+    "ja": _indexed(
+        JA_CONFIG,
+        lambda spark, sf_dir: _vocab_corpus(spark, sf_dir, _JA_WORDS, 5, (0, 4, 7), ""),
+    ),
+    "zh": _indexed(
+        ZH_CONFIG,
+        lambda spark, sf_dir: _vocab_corpus(spark, sf_dir, _ZH_WORDS, 7, (0, 2, 9), ""),
+    ),
+    # string[] + incremental remove: 1-element tags (array(lang)) so the
+    # removal recurrence telescopes exactly (the reference's >=2-element
+    # NaN-poisoning quirk is pinned in test_maintenance instead) and the
+    # remaining index equals from-scratch semantics for the SQL oracle.
+    "tags_removed": _indexed(
+        TAGS_CONFIG,
+        lambda spark, sf_dir: _doc_rows(spark, sf_dir, F.array(F.col("lang")).alias("tags")),
+        _remove_every(9, 2),
+    ),
+    "streamed": _Aux(
+        _build_streamed,
+        lambda spark, out: SearchIndex.load(spark, os.path.join(out, "index"), DOC_CONFIG),
+    ),
+    "restored": _Aux(
+        _build_restored,
+        lambda spark, out: SearchIndex.load(spark, out, DOC_CONFIG),
+        sources=(),
+        parent="idx",
+    ),
+    "events": _Aux(_copy_events, lambda spark, out: out, sources=("events.parquet",)),
+}
+
+# loaded fixtures by content key (_aux_key)
+_AUX_CACHE: dict[str, object] = {}
+
+
+def _aux_dir(name: str, sf_dir: str) -> str:
+    return os.path.join(
+        f"/dev/shm/orama_spark_entry_{name}", os.path.basename(os.path.normpath(sf_dir))
+    )
+
+
+def _file_ids(path: str) -> list:
+    """[name, size, mtime_ns] of a parquet file, or of each part file
+    of a parquet directory."""
+    files = (
+        sorted(os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet"))
+        if os.path.isdir(path)
+        else [path]
+    )
+    return [[os.path.basename(f), (st := os.stat(f)).st_size, st.st_mtime_ns] for f in files]
+
+
+def _aux_key(sf_dir: str, name: str) -> str:
+    """Content key of fixture `name` over `sf_dir`: the spec name, the
+    resolved sf_dir, the size and mtime of every source file, and the
+    parent's key for a derived spec."""
+    spec = _AUX[name]
+    ident = [
+        name,
+        os.path.realpath(sf_dir),
+        [_file_ids(os.path.join(sf_dir, s)) for s in spec.sources],
+        spec.parent and _aux_key(sf_dir, spec.parent),
+    ]
+    return hashlib.sha256(json.dumps(ident).encode()).hexdigest()[:16]
+
+
+def _aux(spark: SparkSession, sf_dir: str, name: str):
+    """Fixture index `name` over `sf_dir`, built at most once per
+    content key: reused from this process, else loaded from its
+    /dev/shm dir when that dir's `_STAMP` holds the key, else rebuilt
+    from an empty dir with the stamp written last."""
+    key = _aux_key(sf_dir, name)
+    idx = _AUX_CACHE.get(key)
+    if idx is not None:
+        return idx
+    spec = _AUX[name]
+    out = _aux_dir(name, sf_dir)
+    stamp = os.path.join(out, "_STAMP")
+    try:
+        with open(stamp) as fh:
+            fresh = fh.read() == key
+    except OSError:
+        fresh = False
+    if not fresh:
+        shutil.rmtree(out, ignore_errors=True)
+        spec.build(spark, sf_dir, out, key)
+        with open(stamp, "w") as fh:
+            fh.write(key)
+    idx = _AUX_CACHE[key] = spec.load(spark, out)
     return idx
+
+
+# bench.py times these fixture builds by name
+def _get_index(spark, sf_dir): return _aux(spark, sf_dir, "idx")
+def _get_tags_index(spark, sf_dir): return _aux(spark, sf_dir, "tags")
+def _get_de_index(spark, sf_dir): return _aux(spark, sf_dir, "de")
+def _get_alt_index(spark, sf_dir, kind): return _aux(spark, sf_dir, kind)
+def _get_removed_index(spark, sf_dir): return _aux(spark, sf_dir, "removed")
+def _get_tr_index(spark, sf_dir): return _aux(spark, sf_dir, "tr")
+def _get_tags_removed_index(spark, sf_dir): return _aux(spark, sf_dir, "tags_removed")
+def _get_streamed_index(spark, sf_dir): return _aux(spark, sf_dir, "streamed")
 
 
 def _r(col: str = "score"):
@@ -768,10 +637,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # --------------------------------------------------------------- queries
 
-def _q_topk(term, **kw):
+def _q_topk(term, aux="idx", **kw):
+    """Top-10 (docid, score) for `term` over fixture index `aux`."""
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        idx = _get_index(spark, sf_dir)
-        sr = idx.search(term=term, limit=kw.pop("limit", 10), **kw)
+        sr = _aux(spark, sf_dir, aux).search(term=term, limit=10, **kw)
         return sr.top_df().select("docid", _r())
     return run
 
@@ -814,11 +683,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # through save_dump -> msgpack-hex payload -> verbatim restore.
     # Any loss anywhere in the wire format (radix structure, tf,
     # field lengths, stats) shifts these scores off the oracle.
-    def persist_roundtrip(spark, sf_dir):
-        idx = _get_restored_index(spark, sf_dir)
-        sr = idx.search(term="spark merge", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["persist_roundtrip"] = persist_roundtrip
+    q["persist_roundtrip"] = _q_topk("spark merge", aux="restored")
     q["flt_multi_or"] = _q_topk("spark merge stream")
     q["flt_and"] = _q_topk("spark merge", threshold=0.0)
 
@@ -830,7 +695,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # filters as semi-join masks (SURVEY §2.6)
     def flt_filter(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(
             term="spark",
             where={"and": [{"lang": {"eq": "en"}}, {"n_chars": {"between": [100, 400]}}]},
@@ -841,34 +706,34 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # filter-only query -> score 0 (search-fulltext.ts:124-127)
     def flt_filter_only(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(where={"n_chars": {"gt": 450}}, limit=100000)
         return sr.scored.select("docid", _r())
     q["flt_filter_only"] = flt_filter_only
 
     # no term, no filter -> all docs score 0 (search-fulltext.ts:128-132)
     def flt_all(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search()
         return sr.scored.select("docid", _r())
     q["flt_all_docs"] = flt_all
 
     # preflight: count only (SURVEY §2.7)
     def flt_count(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="merge")
         return sr.scored.agg(F.count("*").alias("match_count"))
     q["flt_count_preflight"] = flt_count
 
     # facets (SURVEY §2.8)
     def facet_lang(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark", limit=10)
         return idx.facets_df(sr, "lang")
     q["facet_lang"] = facet_lang
 
     def facet_nchars(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark")
         return idx.facets_df(
             sr, "n_chars",
@@ -878,7 +743,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # groupBy with per-group top-k (SURVEY §2.8, groups.ts:46-175)
     def group_source(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark merge")
         return idx.groups_df(sr, ["source"], max_result=2).select(
             "source", "docid", _r(), "group_rank"
@@ -887,7 +752,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # multi-property groupBy with per-property cap (groups.ts:100-106)
     def group_multi(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark merge")
         return idx.groups_df(sr, ["lang", "source"], max_result=2).select(
             "lang", "source", "docid", _r(), "group_rank"
@@ -896,21 +761,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # facet count = #distinct values (facets.ts:115-117)
     def facet_count(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark")
         return idx.facet_count_df(sr, "lang")
     q["facet_count"] = facet_count
 
     # distinctOn (SURVEY §2.7, search.ts:43-99)
     def distinct_source(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark")
         return idx.distinct_df(sr, "source", limit=10).select("docid", _r(), "source")
     q["distinct_source"] = distinct_source
 
     # sortBy property (SURVEY §2.7, sorter.ts:239-283)
     def sort_nchars(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark")
         return idx.sorted_hits_df(sr, "n_chars", "DESC", limit=10).select(
             "docid", "n_chars", _r()
@@ -919,7 +784,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # geosearch (SURVEY §2.6 geo + index.ts:945-1051 distance ranking)
     def geo_radius(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(where={"loc": {"radius": {
             "coordinates": _GEO_CENTER, "value": 3000, "unit": "km"}}}, limit=100)
         return sr.top_df().select(
@@ -928,7 +793,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["flt_geo_radius"] = geo_radius
 
     def geo_polygon(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(where={"loc": {"polygon": {"coordinates": _GEO_POLY}}}, limit=100)
         return sr.top_df().select(
             "docid", F.round(F.col("score") / 1000.0, 6).alias("score_km")
@@ -936,7 +801,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["flt_geo_polygon"] = geo_polygon
 
     def geo_filter_term(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark", where={"loc": {"radius": {
             "coordinates": _GEO_CENTER, "value": 3000, "unit": "km"}}}, limit=10)
         return sr.top_df().select("docid", _r())
@@ -945,31 +810,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # incremental remove (tombstones + df deltas + stats recurrence):
     # search results over the mutated index must equal a from-scratch
     # build over the surviving documents
-    def after_remove(spark, sf_dir):
-        idx = _get_removed_index(spark, sf_dir)
-        sr = idx.search(term="spark merge", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_after_remove"] = after_remove
+    q["flt_after_remove"] = _q_topk("spark merge", aux="removed")
 
     # incremental update / upsert: search results over the mutated index
     # must equal a from-scratch build over the post-mutation documents
-    def after_update(spark, sf_dir):
-        idx = _get_mutated_index(spark, sf_dir, "updated")
-        sr = idx.search(term="sparkling refreshed", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_after_update"] = after_update
+    q["flt_after_update"] = _q_topk("sparkling refreshed", aux="updated")
 
-    def after_upsert(spark, sf_dir):
-        idx = _get_mutated_index(spark, sf_dir, "upserted")
-        sr = idx.search(term="upserted novel", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_after_upsert"] = after_upsert
+    q["flt_after_upsert"] = _q_topk("upserted novel", aux="upserted")
 
     # allow_duplicates BM25 (tf = occ/fl, df = Σocc) served through
     # block-max WAND — the posting shape that used to route to the
     # plain path
     def dup_tf(spark, sf_dir):
-        bidx = _get_dup_blocks(spark, sf_dir)
+        bidx = _aux(spark, sf_dir, "dup")
         return bidx.wand_topk("spark merge", k=10).select(
             "docid", F.round("score", 6).alias("score")
         )
@@ -1045,13 +898,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from orama_spark.datapipe import multimodal as mm
         from orama_spark.datapipe.jpeg import encode_jpeg, encode_jpeg_progressive
 
-        docs = (
-            spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-            .where(F.col("doc_id") % 7 == 0)
-            .select("doc_id")
-            # id-only fan-out: the single-row-group fixture scans as ONE
-            # task; the per-row codec work above it needs all cores
-            .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        _path = os.path.join(sf_dir, "documents.parquet")
+        # id-only fan-out: the single-row-group fixture scans as ONE
+        # task; the per-row codec work above it needs all cores
+        docs = _fan_small(
+            spark,
+            spark.read.parquet(_path).where(F.col("doc_id") % 7 == 0).select("doc_id"),
+            _path, "doc_id",
         )
 
         def gen(batches):
@@ -1176,38 +1029,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # hash. Complete output mode so no window is withheld by the final
     # watermark.
     def stream_events_windowed(spark, sf_dir):
-        import shutil
         import uuid as _uuid
 
         src = os.path.join(sf_dir, "events.parquet")
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sdir = f"/dev/shm/orama_spark_entry_stream/{tag}"
-        marker = os.path.join(sdir, "_COPIED")
-        if not os.path.exists(marker):
-            shutil.rmtree(sdir, ignore_errors=True)
-            os.makedirs(sdir, exist_ok=True)
-            # testdata ships events as one file; scaled twins ship a
-            # directory of part files — replay whichever shape. A single
-            # file is ONE parquet row group (one scan task for the whole
-            # replay), so re-chunk it into per-core files while copying
-            # — same raw rows, just a parallel-readable layout.
-            if os.path.isdir(src):
-                for p in sorted(os.listdir(src)):
-                    if p.endswith(".parquet"):
-                        shutil.copy(os.path.join(src, p), os.path.join(sdir, p))
-            else:
-                import pyarrow.parquet as _pq
-
-                tbl = _pq.read_table(src)
-                k = max(spark.sparkContext.defaultParallelism, 1)
-                step = max((tbl.num_rows + k - 1) // k, 1)
-                for ci, off in enumerate(range(0, tbl.num_rows, step)):
-                    _pq.write_table(
-                        tbl.slice(off, step),
-                        os.path.join(sdir, f"part-{ci:05d}.parquet"),
-                    )
-            with open(marker, "w") as f:
-                f.write("ok")
+        sdir = _aux(spark, sf_dir, "events")
         schema = spark.read.parquet(src).schema
         stream = (
             spark.readStream.schema(schema)
@@ -1248,22 +1073,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the stream-built index must answer exactly like the batch-built
     # one (reference insertMultiple semantics through the streaming
     # ingestion path — bootstrap + 2 incremental folds)
-    def flt_stream_built(spark, sf_dir):
-        idx = _get_streamed_index(spark, sf_dir)
-        sr = idx.search(term="merge", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_stream_built"] = flt_stream_built
+    q["flt_stream_built"] = _q_topk("merge", aux="streamed")
 
     # alternative scorers (SURVEY §2.10)
     def pt15_topk(spark, sf_dir):
-        idx = _get_alt_index(spark, sf_dir, "pt15")
+        idx = _aux(spark, sf_dir, "pt15")
         return idx.search("spark", limit=10).select(
             "docid", F.col("score").cast("double").alias("score")
         )
     q["pt15_topk"] = pt15_topk
 
     def qps_topk(spark, sf_dir):
-        idx = _get_alt_index(spark, sf_dir, "qps")
+        idx = _aux(spark, sf_dir, "qps")
         return idx.search("spark merge", limit=10).select("docid", _r())
     q["qps_topk"] = qps_topk
 
@@ -1271,24 +1092,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def highlight(spark, sf_dir):
         from orama_spark.query.highlight import match_positions_df
 
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         sr = idx.search(term="spark", limit=10)
         return match_positions_df(idx, sr, "spark", properties=["text"])
     q["highlight_positions"] = highlight
 
     # multi-language: German splitter over the lang='de' slice
-    def flt_lang_de(spark, sf_dir):
-        idx = _get_de_index(spark, sf_dir)
-        sr = idx.search(term="merge stream", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_lang_de"] = flt_lang_de
+    q["flt_lang_de"] = _q_topk("merge stream", aux="de")
 
     # locale-collated string sortBy (sorter.ts:166-172 localeCompare):
     # page over the matched set ordered by title under German ICU
     # collation — the page CONTENT gates the order (Äpfel/apfel/Zebra
     # etc. select a different top-10 under binary order)
     def sort_title_de(spark, sf_dir):
-        idx = _get_de_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "de")
         sr = idx.search(term="merge stream")
         return idx.sorted_hits_df(sr, "title", limit=10).select(
             "docid", "title"
@@ -1296,43 +1113,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["sort_title_de"] = sort_title_de
 
     # string[] searchable field (index.ts:260-301 per-element insert)
-    def string_array_search(spark, sf_dir):
-        idx = _get_tags_index(spark, sf_dir)
-        sr = idx.search(term="en src3", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_string_array"] = string_array_search
+    q["flt_string_array"] = _q_topk("en src3", aux="tags")
 
     # Turkish full profile: stopwords + Snowball stemmer over the
     # deterministic 12-form corpus (kernel/snowball_tr.py)
-    def flt_lang_tr(spark, sf_dir):
-        idx = _get_tr_index(spark, sf_dir)
-        sr = idx.search(term="kitaplarımız şehirlerden", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_lang_tr"] = flt_lang_tr
+    q["flt_lang_tr"] = _q_topk("kitaplarımız şehirlerden", aux="tr")
 
     # Japanese: unspaced query — the dictionary segmenter must split
     # 東京図書館 into 東京|図書館 itself (the bigram fallback would
     # produce different tokens and fail the value oracle)
-    def flt_lang_ja(spark, sf_dir):
-        idx = _get_ja_index(spark, sf_dir)
-        sr = idx.search(term="東京図書館", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_lang_ja"] = flt_lang_ja
+    q["flt_lang_ja"] = _q_topk("東京図書館", aux="ja")
 
-    def flt_lang_zh(spark, sf_dir):
-        idx = _get_zh_index(spark, sf_dir)
-        sr = idx.search(term="北京科学", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_lang_zh"] = flt_lang_zh
+    q["flt_lang_zh"] = _q_topk("北京科学", aux="zh")
 
     # string[] incremental maintenance: tombstone/delta-adjusted search
     # over 1-element tag arrays (per-element remove semantics,
     # index.ts:383-405; >=2-element NaN quirk pinned in pytest)
-    def string_array_after_remove(spark, sf_dir):
-        idx = _get_tags_removed_index(spark, sf_dir)
-        sr = idx.search(term="en fr", limit=10)
-        return sr.top_df().select("docid", _r())
-    q["flt_string_array_after_remove"] = string_array_after_remove
+    q["flt_string_array_after_remove"] = _q_topk("en fr", aux="tags_removed")
 
     # vector search: brute-force cosine top-k baseline (SURVEY §2.9)
     def vec_topk(spark, sf_dir):
@@ -1398,7 +1195,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # token counting (text-analysis op, shares the engine tokenizer)
     def token_count(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         return idx.postings.groupBy("docid").agg(
             F.count("*").alias("n_unique_tokens"),
             F.max("field_len").cast("long").alias("field_len"),
@@ -1407,7 +1204,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # document fingerprint: md5 over the sorted unique token set
     def doc_fingerprint(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         return idx.postings.groupBy("docid").agg(
             F.md5(F.concat_ws(" ", F.array_sort(F.collect_set("term")))).alias("fingerprint")
         )
@@ -1436,6 +1233,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         input rounds to a single partition. Heavy hash/codec kernels
         (MinHash, shingles, SimHash, winnowing, JPEG) keep full width:
         their single-thread cost dominates at every fixture scale.
+
+        The input size is the whole file at `path`, a proxy: it is not
+        the bytes left after `df`'s projection and filters, so an
+        id-only or filtered scan is sized as if it read every column.
         """
         try:
             sz = (
@@ -1598,7 +1399,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def hybrid(spark, sf_dir):
         from orama_spark.query.vector import cosine_sim, hybrid_merge
 
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         text_scored = idx.search(term="spark merge").scored
         emb = _emb(spark, sf_dir)
         qv = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
@@ -1870,7 +1671,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (broadcast (qid, qtoken) frame + union-literal pushdown + one
     # per-qid window) — rank/score-identical with per-query search()
     def flt_batch(spark, sf_dir):
-        idx = _get_index(spark, sf_dir)
+        idx = _aux(spark, sf_dir, "idx")
         return idx.search_many(BATCH_TERMS, k=10).select(
             "qid", "docid", F.round("score", 6).alias("score")
         )

@@ -91,13 +91,15 @@ class IndexBuilder:
         docid = cfg.docid_col
         spark = df.sparkSession
         df = cfg.hooks.run_transform("before_insert_multiple", df)
-        fp = _config_fingerprint(cfg, extra=input_id)
         manifest = BuildManifest.load(out_dir)
 
         # Default to the input's own partitioning: a 100 TB source arrives
         # in thousands of splits and keeps them; a tiny table stays at a
         # handful of partitions instead of paying 64-way shuffle overhead.
         n_part = self.postings_partitions or max(1, df.rdd.getNumPartitions())
+        # the output layout is part of the fingerprint: a rebuild with a
+        # different width or docs ordering into the same dir re-runs
+        fp = _config_fingerprint(cfg, extra=json.dumps([input_id, n_part, self.docs_already_sorted]))
 
         # --- stage: docs (the document store, late-materialized at query)
         docs_path = os.path.join(out_dir, "docs")

@@ -61,3 +61,32 @@ def test_corrupt_manifest_tolerated(tmp_path):
     p.write_text("{not json")
     m = BuildManifest.load(str(tmp_path))
     assert m.entries == {}
+
+
+def test_layout_change_rebuilds(spark, tmp_path):
+    """A rebuild into the same dir with a different postings width is
+    not served by the earlier build's stages."""
+    from orama_spark.build.indexer import IndexBuilder
+    from orama_spark.config import IndexConfig
+    from orama_spark.kernel.tokenizer import TokenizerConfig
+
+    cfg = IndexConfig(
+        schema={"text": "string"}, tokenizer=TokenizerConfig.plain(), docid_col="docid"
+    )
+    df = spark.createDataFrame(
+        [(i, f"w{i} w{i % 7} common") for i in range(60)], "docid long, text string"
+    )
+    out = str(tmp_path / "idx")
+
+    def postings_files():
+        d = os.path.join(out, "postings")
+        return len([f for f in os.listdir(d) if f.endswith(".parquet")])
+
+    first = IndexBuilder(cfg, postings_partitions=2).build(df, out, input_id="same")
+    assert not any(r.get("skipped") for r in first.values())
+    assert postings_files() == 2
+    again = IndexBuilder(cfg, postings_partitions=2).build(df, out, input_id="same")
+    assert all(r.get("skipped") for r in again.values())
+    wider = IndexBuilder(cfg, postings_partitions=3).build(df, out, input_id="same")
+    assert not any(r.get("skipped") for r in wider.values())
+    assert postings_files() == 3
