@@ -17,23 +17,22 @@ on the length-ordered internal docid space from build/blocks.py:
             near-complete seed sums and θ is tight. The pool is bounded
             by the QUERY (CHAMPION_BLOCKS × BLOCK_SIZE × #terms ×
             #fields rows), not the corpus, so the unfiltered path
-            computes θ with one bounded collect (the same class as the
-            engine's top-k collects) and re-injects it as a 1-row local
-            broadcast frame; with a keep_ids filter θ stays a fully lazy
-            aggregate so the semi-join runs distributed.
+            fetches it to the driver together with the block metadata;
+            with a keep_ids filter θ stays a fully lazy aggregate so the
+            semi-join runs distributed.
   phase 1   docid-aligned pruning: per internal docid d the score of d
             is bounded by UB(d) = Σ_t ms_t(d), where ms_t(d) is the
             max_score of the unique block of term t covering d (blocks
-            of one term are disjoint internal ranges). A (block, bucket)
-            cell survives iff max_{d∈clip} UB(d) ≥ θ, where clip is the
-            block's intersection with a coarse internal-range bucket.
-            Computed as a bucketed interval sweep: block METADATA (no
-            binary payload) explodes to its buckets — one tiny shuffle —
-            and each bucket runs an exact local event sweep (clipping
-            makes buckets independent — no cross-bucket state).
-            Survivor cells come back as (block key, clip range) and
-            equi-join the block payloads. No candidate-docid broadcast,
-            no nested-loop join, nothing driver-side at all.
+            of one term are disjoint internal ranges). A block survives
+            iff max_{d∈block} UB(d) ≥ θ — an exact interval sweep
+            (_sweep_keep). Under driver_sweep_max_blocks it runs in
+            numpy over the fetched metadata. Otherwise it runs
+            distributed: block METADATA (no binary payload) explodes to
+            coarse internal-range buckets — one tiny shuffle — and each
+            bucket sweeps its clipped (block, bucket) cells locally
+            (clipping makes buckets independent — no cross-bucket
+            state). Survivor cells come back as (block key, clip range)
+            and equi-join the block payloads.
   phase 2   decode ONLY surviving clips (clips never overlap, so no
             dedup shuffle), score inside the same Arrow kernel (df is
             denormalized onto block rows — no dictionary join), exact
@@ -65,16 +64,30 @@ adj = 0 and the clamp is a no-op. A query whose adjusted θ ≤ 0
 disengages pruning (clamped UB ≥ 0 ≥ θ everywhere) — sound, just
 unpruned, and only reachable with negative-idf (hyper-frequent) terms.
 
+Repeated query tokens: the reference scores each query-token
+OCCURRENCE (index.ts loops over tokens), so 'spark spark' weights
+spark's contribution ×2. θ seed, adjustment, sweep bounds and phase-2
+scores all scale by the occurrence count, keeping WAND rank-identical
+with the plain engine path.
+
 Why pruning bites: build/blocks.py assigns internal docids by ascending
 document length, so per-block max scores DECAY along the internal axis
 (BM25 with tf=1/fl is strictly decreasing in fl) and UB(d) falls below
 θ outside a short low-docid prefix — classic document-reordering: the
 permutation never affects results, only how many blocks survive.
 
-Query shape: champions scan (θ, one bounded collect) → metadata scan →
-bucket shuffle → Arrow sweep → payload join → Arrow decode+score →
-docid shuffle → top-k. Every Python stage is an Arrow-batched kernel
-over numpy arrays; the only driver action is the query-bounded θ pool.
+Query shape: one planner (_plan) serves wand_topk, wand_topk_many and
+pruning_stats. A call's cache-missing terms cost ONE Spark job: the
+tagged union of their champion rows and block metadata as one ordered
+top-level LIMIT (champion rows first), read through DataFrame.toArrow()
+— the plan runs as one job, where a LIMIT collect() runs several.
+No session conf is read or written, so concurrent queries on one
+session never see each other's settings. Under driver_sweep_max_blocks
+θ and the sweep run in numpy, and phase 2 is one coalesce(1) Arrow task
+(decode, score, per-doc sum, θ filter, top-k): 2 jobs cold, 1 warm. Over
+the cap the fetched pool seeds θ and the sweep runs distributed:
+metadata scan → bucket shuffle → Arrow sweep → payload join → Arrow
+decode+score → docid shuffle → top-k.
 
 Scope: exact-term queries with threshold=1 and no filters (prefix/fuzzy
 expansion makes per-token upper bounds additive across matched words and
@@ -83,18 +96,19 @@ destroys pruning power; those queries use the plain path).
 
 from __future__ import annotations
 
+import functools
 import os
-import threading
+from collections import Counter
 from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..build.blocks import (
-    BLOCK_SIZE, BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, POSTINGS_READ_SCHEMA,
+    BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, POSTINGS_READ_SCHEMA,
     avgfl_per_row, bm25_for_fl, bm25_scores, build_blocks, decode_blocks,
     idf_per_row, run_starts, segment_ids, varint_decode,
 )
@@ -102,20 +116,18 @@ from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
 
 _SCORED_SCHEMA = "docid long, s double"
+_TOPK_SCHEMA = "qid string, docid long, score double"
 _CHAMPIONS_SCHEMA = "field string, term string, docid long, s double"
 _SURVIVOR_SCHEMA = (
     "field string, term string, first_docid long, clip_start long, clip_end long"
 )
-_KEPT_EMPTY_SCHEMA = (
-    "field string, term string, first_docid long, last_docid long, "
-    "block_id int, n int, docid_deltas binary, orig_docids binary, "
-    "field_lens binary, tfns binary, max_score double, min_score double, "
-    "df long, clip_start long, clip_end long"
-)
+_META_COLS = ["field", "term", "first_docid", "last_docid", "max_score", "min_score"]
+_OVER_CAP = "OVER_CAP"  # metadata cache mark of a single term over the cap
 _EPS = 1e-12  # relative float-jitter allowance on θ comparisons
-# serializes the session-conf toggle around cold metadata fetches (the
-# toggle is session-global; concurrent queries must not see it)
-_COLD_FETCH_LOCK = threading.Lock()
+# distributed sweep granularity: each bucket sees the block metadata
+# overlapping ~1/SWEEP_BUCKETS of the internal docid span
+# (~blocks_per_term / SWEEP_BUCKETS rows per term per bucket)
+SWEEP_BUCKETS = 256
 
 # champion list depth: top CHAMPION_BLOCKS blocks per (field, term) are
 # decoded + scored at BUILD time into index_dir/champions, so the θ seed
@@ -266,24 +278,21 @@ def _champions_fn(avgs: dict, n_docs: float, bm25_params, depth: int,
 
 
 def _fused_topk_fn(avgs: dict, n_docs: float, bm25_params,
-                   survmaps: dict, thetas: dict, wts: dict,
-                   k: Optional[int] = None):
+                   survmaps: dict, thetas: dict, wts: dict, k: int):
     """Arrow kernel for the FUSED driver-sweep phase 2 (r5): decode +
-    score + per-doc aggregate + θ filter in ONE task. The survivor clip
-    map, θ and occurrence weights are driver-side closures, so the
-    whole phase is a single coalesce(1) scan job — no broadcast-join /
-    repartition / groupBy exchanges for AQE to materialize as separate
-    jobs (the r4 scale profile showed ~2.5 s of fixed multi-job driver
-    latency dominating short queries).
+    score + per-doc aggregate + θ filter + top-k in ONE task. The
+    survivor clip map, θ and occurrence weights are driver-side
+    closures, so the whole phase is a single coalesce(1) scan job — no
+    broadcast-join / repartition / groupBy exchanges for AQE to
+    materialize as separate jobs (the r4 scale profile showed ~2.5 s of
+    fixed multi-job driver latency dominating short queries).
 
     ``survmaps``: {qid: {(field, term, first_docid): (clip_s, clip_e)}};
-    ``thetas``: {qid: θ}; ``wts``: {qid: {term: occurrence_weight}}.
-    Single-query callers pass one qid=None entry and get (docid, score);
-    batch callers get (qid, docid, score) with per-qid top-k (by
-    ``k``) emitted in rank order. Each block row is DECODED ONCE even
-    when several queries keep it — only the clip mask and weight differ
-    per query."""
-    batched = not (len(survmaps) == 1 and None in survmaps)
+    ``thetas``: {qid: θ}; ``wts``: {qid: {term: occurrence_weight}} for
+    the queries with a repeated token. Emits (qid, docid, score): each
+    qid's top ``k`` docs at or above θ, by (score desc, docid asc).
+    Each block row is DECODED ONCE even when several queries keep it —
+    only the clip mask and weight differ per query."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc_ids: dict = {q: [] for q in survmaps}
@@ -324,80 +333,71 @@ def _fused_topk_fn(avgs: dict, n_docs: float, bm25_params,
         for q in survmaps:
             if not acc_ids[q]:
                 continue
-            ids = np.concatenate(acc_ids[q])
-            ss = np.concatenate(acc_s[q])
-            uids, inv = np.unique(ids, return_inverse=True)
+            uids, inv = np.unique(np.concatenate(acc_ids[q]), return_inverse=True)
             sums = np.zeros(len(uids))
-            np.add.at(sums, inv, ss)
+            np.add.at(sums, inv, np.concatenate(acc_s[q]))
             theta = thetas[q]
             if theta > 0.0:
                 keep = sums >= theta * (1.0 - _EPS)
                 uids, sums = uids[keep], sums[keep]
-            if len(uids) == 0:
-                continue
-            if batched and k is not None and len(uids) > 0:
-                order = np.lexsort((uids, -sums))[:k]
-                uids, sums = uids[order], sums[order]
-            if batched:
+            order = np.lexsort((uids, -sums))[:k]
+            if len(order):
                 outs.append(pd.DataFrame(
-                    {"qid": np.full(len(uids), q, dtype=object),
-                     "docid": uids, "score": sums}
+                    {"qid": np.full(len(order), q, dtype=object),
+                     "docid": uids[order], "score": sums[order]}
                 ))
-            else:
-                outs.append(pd.DataFrame({"docid": uids, "score": sums}))
         if outs:
             yield pd.concat(outs, ignore_index=True)
 
     return fn
 
 
+def _sweep_keep(start: np.ndarray, end: np.ndarray, ms: np.ndarray,
+                theta: float) -> np.ndarray:
+    """Keep mask of the exact interval sweep, shared by the driver
+    sweep and the per-bucket distributed one: intervals [start, end]
+    with upper bounds ``ms``, disjoint within each term. The running
+    sum of +ms at each start and −ms after each end equals UB(d) at
+    every internal docid d; an interval survives iff some segment it
+    overlaps has UB ≥ θ — decided with a vectorized cumulative count of
+    qualifying segments. θ ≤ 0 means pruning is disengaged (fewer than
+    k seed docs, or negative-idf terms): everything survives."""
+    if theta <= 0.0:
+        return np.ones(len(start), dtype=bool)
+    # clamp at 0: a doc covered by (but not matching) a NEGATIVE-bound
+    # block contributes 0 to its true score, so summing the raw negative
+    # bound would UNDERcount UB and prune true hits (negative bounds
+    # exist because df counts occurrences — idf < 0 when df > N)
+    ms = np.maximum(ms, 0.0)
+    upts, inv = np.unique(np.concatenate([start, end + 1]), return_inverse=True)
+    sums = np.zeros(len(upts))
+    np.add.at(sums, inv, np.concatenate([ms, -ms]))
+    seg_ub = np.cumsum(sums)  # UB on [upts[i], upts[i+1])
+    good = np.concatenate(([0], np.cumsum(seg_ub >= theta * (1.0 - _EPS))))
+    i0 = np.searchsorted(upts, start, side="right") - 1
+    i1 = np.searchsorted(upts, end, side="right") - 1
+    return (good[i1 + 1] - good[i0]) > 0
+
+
 def _sweep_fn(dmin: int, width: int):
-    """Arrow kernel: per-bucket exact interval sweep over block metadata.
+    """mapInPandas kernel: per-bucket exact interval sweep over block
+    metadata.
 
     Runs via repartition(bucket) + mapInPandas (cheaper than
     groupBy().applyInPandas — no per-group plan machinery); rows for one
     bucket always share a partition, and the kernel drains the whole
     partition before grouping so an Arrow batch split can't bisect a
-    bucket. The cross-joined 1-row θ keeps the plan fully lazy; θ <= 0
-    means pruning is disengaged (fewer than k seed docs): every cell
-    survives with its full clip.
-
-    Clipped to the bucket, per-term intervals stay disjoint, so the
-    running sum of +max_score at each open and −max_score after each
-    close equals UB(d) exactly at every internal docid in the bucket.
-    A cell survives iff any segment it overlaps has UB ≥ θ — decided
-    with a vectorized cumulative count of qualifying segments.
+    bucket. The cross-joined 1-row θ keeps the plan fully lazy. Clipped
+    to the bucket, per-term intervals stay disjoint, so _sweep_keep
+    applies unchanged.
     """
 
     def sweep_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        theta = float(pdf["theta"].iat[0])
-        bucket = int(pdf["bucket"].iat[0])
-        bstart = dmin + bucket * width
-        bend = bstart + width - 1
-        first = pdf["first_docid"].values.astype(np.int64)
-        last = pdf["last_docid"].values.astype(np.int64)
-        s = np.maximum(first, bstart)
-        e = np.minimum(last, bend)
-        if theta <= 0.0:
-            keep = np.ones(len(first), dtype=bool)
-        else:
-            thr = theta * (1.0 - _EPS)
-            # clamp at 0: a doc covered by (but not matching) a
-            # NEGATIVE-bound block contributes 0 to its true score, so
-            # summing the raw negative bound would UNDERcount UB and
-            # prune true hits (negative bounds exist because df counts
-            # occurrences — idf < 0 when df > N)
-            ms = np.maximum(pdf["max_score"].values.astype(np.float64), 0.0)
-            pts = np.concatenate([s, e + 1])
-            deltas = np.concatenate([ms, -ms])
-            upts, inv = np.unique(pts, return_inverse=True)
-            sums = np.zeros(len(upts))
-            np.add.at(sums, inv, deltas)
-            seg_ub = np.cumsum(sums)  # UB on [upts[i], upts[i+1])
-            good = np.concatenate(([0], np.cumsum(seg_ub >= thr)))
-            i0 = np.searchsorted(upts, s, side="right") - 1
-            i1 = np.searchsorted(upts, e, side="right") - 1
-            keep = (good[i1 + 1] - good[i0]) > 0
+        bstart = dmin + int(pdf["bucket"].iat[0]) * width
+        s = np.maximum(pdf["first_docid"].to_numpy(np.int64), bstart)
+        e = np.minimum(pdf["last_docid"].to_numpy(np.int64), bstart + width - 1)
+        keep = _sweep_keep(s, e, pdf["max_score"].to_numpy(np.float64),
+                           float(pdf["theta"].iat[0]))
         out = pdf.loc[keep, ["field", "term", "first_docid"]].copy()
         out["clip_start"] = s[keep]
         out["clip_end"] = e[keep]
@@ -416,12 +416,29 @@ def _sweep_fn(dmin: int, width: int):
     return fn
 
 
+def _occurrence_weights(tokens) -> dict:
+    """{term: number of occurrences in the query} (module doc,
+    repeated query tokens)."""
+    return {t: float(n) for t, n in Counter(tokens).items()}
+
+
+def _seed_theta(pool: pd.DataFrame, k: int, wts: dict) -> float:
+    """The k-th best occurrence-weighted partial sum over the champion
+    pool (term, docid, s); 0 — pruning off — with fewer than k docs."""
+    sums = (pool["s"] * pool["term"].map(wts)).groupby(pool["docid"]).sum()
+    return float(sums.nlargest(k).iloc[-1]) if len(sums) >= k else 0.0
+
+
+def _by_term(df: pd.DataFrame, terms) -> dict:
+    """{term: its rows of ``df``} for every term in ``terms``."""
+    groups = dict(tuple(df.groupby("term", sort=False)))
+    return {t: groups.get(t, df.iloc[:0]) for t in terms}
+
+
 class BlockIndex:
     def __init__(self, spark: SparkSession, config: IndexConfig,
                  blocks: DataFrame, dictionary: DataFrame, stats: dict,
-                 champions: Optional[DataFrame] = None,
-                 sweep_buckets: int = 256,
-                 driver_sweep_max_blocks: int = 8192):
+                 champions: DataFrame, driver_sweep_max_blocks: int = 8192):
         self.spark = spark
         self.config = config
         self.blocks = blocks
@@ -430,6 +447,10 @@ class BlockIndex:
         self.champions = champions
         self.driver_sweep_max_blocks = driver_sweep_max_blocks
         self.tokenizer = Tokenizer(config.tokenizer)
+        self._avgs = {
+            f_: float(v["avg_field_length"]) for f_, v in stats["fields"].items()
+        }
+        self._n_docs = float(stats["docs_count"])
         # Driver-side per-term metadata + champion caches (every real
         # WAND serving system keeps posting metadata in the
         # coordinator). Sound because blocks/champions are immutable
@@ -437,153 +458,96 @@ class BlockIndex:
         # load() invalidates on any rebuild/maintenance). Bounded:
         # wholesale-cleared past metadata_cache_max_terms.
         self.metadata_cache_max_terms = 4096
-        self._meta_cache: dict = {}   # term -> list[dict] | "OVER_CAP"
-        self._champ_cache: dict = {}  # term -> pd.DataFrame(term,docid,s)
-        # sweep granularity: each bucket sees the block *metadata*
-        # overlapping ~1/sweep_buckets of the internal docid span; raise
-        # it on a real cluster so per-bucket metadata stays small
-        # (~blocks_per_term / sweep_buckets rows per term per bucket).
-        self.sweep_buckets = sweep_buckets
-
+        self._meta_cache: dict = {}   # term -> pd.DataFrame(_META_COLS) | _OVER_CAP
+        self._champ_cache: dict = {}  # term -> pd.DataFrame(term, docid, s)
 
     # ---------------------------------------------------- driver caches
 
-    _META_KEYS = ("field", "term", "first_docid", "last_docid",
-                  "max_score", "min_score")
+    def _of_terms(self, table: DataFrame, terms) -> DataFrame:
+        """Rows of ``table`` (blocks or champions) for ``terms`` in the
+        searchable fields — a parquet IN pushdown on the sorted term
+        column."""
+        return table.where(
+            F.col("term").isin(list(terms))
+            & F.col("field").isin(self.config.searchable_fields)
+        )
 
-    def _term_data(self, tokens, cap: Optional[int] = None):
-        """ONE driver job fetches BOTH the champion θ-seed rows and the
-        block metadata for the query's cache-missing terms (r4 scale
-        profile: the separate champions job + metadata job made a cold
-        WAND query 3 driver jobs; folding them into a single
-        tagged-union collect makes it 2 cold / 1 warm). Returns
-        (champion pool pd.DataFrame — one copy PER TOKEN OCCURRENCE,
-        matching the reference's per-occurrence scoring — , metadata
-        row list or None when over ``cap``)."""
-        import pandas as _pd
+    def _term_data(self, tokens, cap: int):
+        """The champion pool and block metadata of ``tokens``' terms,
+        from the driver caches; the cache-missing terms cost ONE Spark
+        job. Returns (pool — pd.DataFrame (term, docid, s) of champion
+        postings — , pd.DataFrame of _META_COLS, or None when the terms
+        have more than ``cap`` blocks).
 
-        if len(self._meta_cache) > self.metadata_cache_max_terms:
-            self._meta_cache.clear()
-        if len(self._champ_cache) > self.metadata_cache_max_terms:
-            self._champ_cache.clear()
-        if cap is None:
-            cap = self.driver_sweep_max_blocks
-        utoks = list(dict.fromkeys(tokens))
-        miss_m = [t for t in utoks if t not in self._meta_cache]
-        miss_c = [
-            t for t in utoks if t not in self._champ_cache
-        ] if self.champions is not None else []
+        The fetch is the tagged union of the missing terms' champion and
+        metadata rows, read through toArrow() as ONE top-k: ordered by
+        the tag (champion rows first) and limited to L = cap + 1 +
+        #missing champion terms × #fields × CHAMPION_BLOCKS ×
+        CHAMPION_POSTINGS_PER_BLOCK. No (field, term) has more champion
+        rows than that product, so every champion row comes back, and
+        more than ``cap`` metadata rows come back exactly when the terms
+        have more than ``cap`` blocks."""
+        for cache in (self._meta_cache, self._champ_cache):
+            if len(cache) > self.metadata_cache_max_terms:
+                cache.clear()
+        # work on snapshots: reader threads share the caches, and one of
+        # them may clear a cache between this call's fetch and its reads
+        terms = list(dict.fromkeys(tokens))
+        metas = {t: self._meta_cache.get(t) for t in terms}
+        champs = {t: self._champ_cache.get(t) for t in terms}
+        miss_m = [t for t, v in metas.items() if v is None]
+        miss_c = [t for t, v in champs.items() if v is None]
         if miss_m or miss_c:
-            fields = self.config.searchable_fields
+            limit = cap + 1 + (
+                len(miss_c) * len(self.config.searchable_fields)
+                * CHAMPION_BLOCKS * CHAMPION_POSTINGS_PER_BLOCK
+            )
+            null = lambda t, c: F.lit(None).cast(t).alias(c)
             parts = []
             if miss_m:
-                parts.append(
-                    self.blocks.where(
-                        F.col("term").isin(miss_m) & F.col("field").isin(fields)
-                    )
-                    .select(
-                        F.lit("m").alias("side"), "field", "term",
-                        "first_docid", "last_docid", "max_score", "min_score",
-                        F.lit(None).cast("long").alias("docid"),
-                        F.lit(None).cast("double").alias("s"),
-                    )
-                    .limit(cap + 1)
-                )
+                parts.append(self._of_terms(self.blocks, miss_m).select(
+                    F.lit("m").alias("side"), *_META_COLS,
+                    null("long", "docid"), null("double", "s"),
+                ))
             if miss_c:
-                parts.append(
-                    self.champions.where(
-                        F.col("term").isin(miss_c) & F.col("field").isin(fields)
-                    ).select(
-                        F.lit("c").alias("side"), "field", "term",
-                        F.lit(None).cast("long").alias("first_docid"),
-                        F.lit(None).cast("long").alias("last_docid"),
-                        F.lit(None).cast("double").alias("max_score"),
-                        F.lit(None).cast("double").alias("min_score"),
-                        "docid", "s",
-                    )
-                )
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            # keep the cold fetch to ONE job: a LIMIT collect executes
-            # incrementally (initialNumPartitions, then 4x more) and AQE
-            # additionally materializes the mid-plan limit as its own
-            # stage-job — both toggled off for this single tiny action.
-            # The toggle is session-global, so serialize cold fetches
-            # across threads: without the lock a concurrent query's plan
-            # could compile with AQE off, and interleaved finally blocks
-            # could restore a stale value (r5 ADVICE).
-            conf = self.spark.conf
-            with _COLD_FETCH_LOCK:
-                saved = {
-                    key: conf.get(key, None)
-                    for key in ("spark.sql.limit.initialNumPartitions",
-                                "spark.sql.adaptive.enabled")
-                }
-                try:
-                    conf.set("spark.sql.limit.initialNumPartitions", "100000")
-                    conf.set("spark.sql.adaptive.enabled", "false")
-                    fetched = df.collect()
-                finally:
-                    for key, v in saved.items():
-                        if v is None:
-                            conf.unset(key)
-                        else:
-                            conf.set(key, v)
-            mrows = [r for r in fetched if r["side"] == "m"]
-            crows = [r for r in fetched if r["side"] == "c"]
-            meta_overflow = False
+                parts.append(self._of_terms(self.champions, miss_c).select(
+                    F.lit("c").alias("side"), "field", "term",
+                    null("long", "first_docid"), null("long", "last_docid"),
+                    null("double", "max_score"), null("double", "min_score"),
+                    "docid", "s",
+                ))
+            got = (
+                functools.reduce(DataFrame.unionByName, parts)
+                .orderBy("side").limit(limit).toArrow()
+            )
+            is_m = pc.equal(got.column("side"), "m")
             if miss_m:
-                if len(mrows) > cap:
+                meta = got.filter(is_m).select(_META_COLS).to_pandas()
+                if len(meta) > cap:
                     # the truncated sample cannot be attributed per
                     # term; the whole query goes distributed. A SINGLE
                     # over-cap term IS attributable — remember it so the
-                    # same hot term doesn't re-collect every query.
-                    meta_overflow = True
+                    # same hot term doesn't re-fetch every query.
+                    metas[miss_m[0]] = _OVER_CAP
                     if len(miss_m) == 1:
-                        self._meta_cache[miss_m[0]] = "OVER_CAP"
+                        self._meta_cache[miss_m[0]] = _OVER_CAP
                 else:
-                    by_term: dict = {t: [] for t in miss_m}
-                    for r in mrows:
-                        by_term[r["term"]].append(
-                            {k: r[k] for k in self._META_KEYS}
-                        )
-                    self._meta_cache.update(by_term)
+                    fetched = _by_term(meta, miss_m)
+                    metas.update(fetched)
+                    self._meta_cache.update(fetched)
             if miss_c:
-                cpdf = _pd.DataFrame(
-                    {
-                        "term": [r["term"] for r in crows],
-                        "docid": [r["docid"] for r in crows],
-                        "s": [r["s"] for r in crows],
-                    }
+                fetched = _by_term(
+                    got.filter(pc.invert(is_m))
+                    .select(["term", "docid", "s"]).to_pandas(),
+                    miss_c,
                 )
-                for t in miss_c:
-                    self._champ_cache[t] = cpdf[cpdf["term"] == t]
-        # assemble from caches
-        if self.champions is not None:
-            parts_p = [
-                self._champ_cache[t] for t in tokens if t in self._champ_cache
-            ]
-            pool = (
-                _pd.concat(parts_p, ignore_index=True)
-                if parts_p
-                else _pd.DataFrame({"term": [], "docid": [], "s": []})
-            )
-        else:
-            pool = _pd.DataFrame({"term": [], "docid": [], "s": []})
-        rows: Optional[list] = []
-        if miss_m and meta_overflow:
-            rows = None
-        else:
-            for t in utoks:
-                got = self._meta_cache.get(t)
-                if got == "OVER_CAP":
-                    rows = None
-                    break
-                rows.extend(got or [])
-        if rows is not None and len(rows) > cap:
-            rows = None
-        return pool, rows
+                champs.update(fetched)
+                self._champ_cache.update(fetched)
+        pool = pd.concat(champs.values(), ignore_index=True)
+        if any(v is _OVER_CAP for v in metas.values()):
+            return pool, None
+        rows = pd.concat(metas.values(), ignore_index=True)
+        return pool, (rows if len(rows) <= cap else None)
 
     # ------------------------------------------------------------ build
     @classmethod
@@ -696,140 +660,81 @@ class BlockIndex:
         import json
 
         cls._check_not_stale(index_dir)
-        blocks_dir = os.path.join(index_dir, "blocks")
-        stamp_path = os.path.join(index_dir, "blocks_build.json")
-        if os.path.exists(blocks_dir) and not os.path.exists(stamp_path):
+        missing = [
+            p for p in ("blocks", "champions", "blocks_build.json")
+            if not os.path.exists(os.path.join(index_dir, p))
+        ]
+        if missing:
             raise ValueError(
-                "blocks/ exists without a build stamp (torn or "
-                "pre-stamp BlockIndex.build, or a compact() "
-                "invalidation); re-run BlockIndex.build()"
+                f"{', '.join(missing)} missing (torn, pre-stamp or no "
+                "BlockIndex.build, or a compact() invalidation); re-run "
+                "BlockIndex.build()"
             )
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
-        champ_dir = os.path.join(index_dir, "champions")
-        champions = (
-            spark.read.schema(_CHAMPIONS_SCHEMA).parquet(champ_dir)
-            if os.path.exists(champ_dir) else None
+        read = lambda schema, name: spark.read.schema(schema).parquet(
+            os.path.join(index_dir, name)
         )
         return cls(
             spark,
             config,
-            blocks=spark.read.schema(BLOCKS_SCHEMA).parquet(
-                os.path.join(index_dir, "blocks")
-            ),
-            dictionary=spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
-                os.path.join(index_dir, "dictionary")
-            ),
+            blocks=read(BLOCKS_SCHEMA, "blocks"),
+            dictionary=read(DICTIONARY_READ_SCHEMA, "dictionary"),
             stats=stats,
-            champions=champions,
+            champions=read(_CHAMPIONS_SCHEMA, "champions"),
         )
 
     # ----------------------------------------------------------- search
-    def _score_kernel(self, clipped: bool):
-        avgs = {
-            f_: float(v["avg_field_length"]) for f_, v in self.stats["fields"].items()
+    def _plan(self, tokens, k: int, pool: pd.DataFrame, rows: pd.DataFrame):
+        """Driver-side phases 0/1 of one query — the one planner behind
+        wand_topk, wand_topk_many and pruning_stats. θ is the k-th best
+        occurrence-weighted partial sum over the champion pool, lowered
+        by the weighted negative-min adjustment; the survivors are the
+        metadata rows the exact interval sweep keeps under
+        occurrence-weighted bounds. ``pool`` and ``rows`` may carry
+        other queries' terms (wand_topk_many); only ``tokens``' count.
+        Returns (θ, survivor rows, weights — None unless a token
+        repeats)."""
+        wts = _occurrence_weights(tokens)
+        pool = pool[pool["term"].isin(list(wts))]
+        rows = rows[rows["term"].isin(list(wts))]
+        w = rows["term"].map(wts).to_numpy(np.float64)
+        # Σ over (field, term) of w_t · min(0, min_t) (module doc)
+        adj = (
+            (rows["min_score"].clip(upper=0.0) * w)
+            .groupby([rows["field"], rows["term"]]).min().sum()
+        )
+        theta = _seed_theta(pool, k, wts) + float(adj)
+        keep = _sweep_keep(
+            rows["first_docid"].to_numpy(np.int64),
+            rows["last_docid"].to_numpy(np.int64),
+            rows["max_score"].to_numpy(np.float64) * w,
+            theta,
+        )
+        return theta, rows[keep], (wts if max(wts.values()) > 1 else None)
+
+    def _fused_topk(self, plans: dict, terms: list, k: int) -> DataFrame:
+        """Phase 2 of driver-planned queries as ONE job: ``plans`` maps
+        qid -> _plan's (θ, survivors, weights); returns (qid, docid,
+        score), each qid's top k (_fused_topk_fn).
+
+        The scan is the blocks of ``terms`` plus a first_docid bound
+        derived from the survivors — an IN list when small, a min/max
+        range otherwise (the kernel skips non-survivor keys exactly
+        either way). coalesce(1) funnels the bounded survivor set into
+        one Python task WITHOUT an exchange."""
+        cols = ["field", "term", "first_docid", "last_docid"]
+        survmaps = {
+            q: {
+                (f_, t, fd): (fd, ld)
+                for f_, t, fd, ld in zip(*(surv[c].tolist() for c in cols))
+            }
+            for q, (_, surv, _) in plans.items() if len(surv)
         }
-        return _score_blocks_fn(
-            avgs, float(self.stats["docs_count"]), self.config.bm25, clipped
-        )
-
-    @staticmethod
-    def _driver_sweep(rows, theta: float):
-        """Exact global interval sweep over collected block metadata
-        (the numpy twin of _sweep_fn without bucket clipping). Returns
-        survivor tuples (field, term, first_docid, clip_start,
-        clip_end) or None when nothing survives."""
-        if not rows:
-            return None
-        first = np.array([r["first_docid"] for r in rows], dtype=np.int64)
-        last = np.array([r["last_docid"] for r in rows], dtype=np.int64)
-        if theta <= 0.0:
-            keep = np.ones(len(rows), dtype=bool)
-        else:
-            thr = theta * (1.0 - _EPS)
-            # clamped like _sweep_fn — see the comment there
-            ms = np.maximum(
-                np.array([r["max_score"] for r in rows], dtype=np.float64), 0.0
-            )
-            pts = np.concatenate([first, last + 1])
-            deltas = np.concatenate([ms, -ms])
-            upts, inv = np.unique(pts, return_inverse=True)
-            sums = np.zeros(len(upts))
-            np.add.at(sums, inv, deltas)
-            seg_ub = np.cumsum(sums)
-            good = np.concatenate(([0], np.cumsum(seg_ub >= thr)))
-            i0 = np.searchsorted(upts, first, side="right") - 1
-            i1 = np.searchsorted(upts, last, side="right") - 1
-            keep = (good[i1 + 1] - good[i0]) > 0
-        if not keep.any():
-            return None
-        return [
-            (r["field"], r["term"], int(first[i]), int(first[i]),
-             int(last[i]))
-            for i, r in enumerate(rows)
-            if keep[i]
-        ]
-
-    @staticmethod
-    def _occurrence_weights(tokens) -> Optional[dict]:
-        """{term: count} when any query token repeats, else None (the
-        reference scores once per occurrence; see _prune's wts note)."""
-        cnt: dict = {}
-        for t in tokens:
-            cnt[t] = cnt.get(t, 0) + 1
-        if any(v > 1 for v in cnt.values()):
-            return {t: float(v) for t, v in cnt.items()}
-        return None
-
-    def _driver_plan(self, tokens, k: int, cap: Optional[int] = None):
-        """Driver-side phases 0/1 for the champion fast path: ONE Spark
-        job (warm: zero) fetches champions + block metadata
-        (_term_data), seeds θ from the occurrence-weighted champion-pool
-        k-th partial sum, applies the weighted negative-min adjustment,
-        and runs the exact interval sweep in numpy.
-
-        Returns (theta, surv, wts) — surv is None when NOTHING survives
-        (the result set is provably empty of θ-beating docs... i.e. no
-        block can contain a qualifying doc) — or None when the metadata
-        exceeds the driver cap and the distributed sweep must run."""
-        if self.champions is None:
-            return None
-        wts = self._occurrence_weights(tokens)
-        pool, rows = self._term_data(tokens, cap)
-        if rows is None:
-            return None
-        sums = pool.groupby("docid")["s"].sum().sort_values(ascending=False)
-        theta = float(sums.iloc[k - 1]) if len(sums) >= k else 0.0
-        mins: dict = {}
-        for r in rows:
-            key = (r["field"], r["term"])
-            mins[key] = min(mins.get(key, float("inf")), r["min_score"])
-        theta += sum(
-            min(0.0, v) * (wts.get(key[1], 1.0) if wts else 1.0)
-            for key, v in mins.items()
-        )
-        sweep_rows = rows
-        if wts is not None:
-            # occurrence-weighted upper bounds for the sweep
-            sweep_rows = [
-                {**r, "max_score": r["max_score"] * wts.get(r["term"], 1.0)}
-                for r in rows
-            ]
-        return theta, self._driver_sweep(sweep_rows, theta), wts
-
-    def _fused_scan(self, all_terms: list, survmaps: dict) -> DataFrame:
-        """The phase-2 input scan for the fused kernel: blocks filtered
-        by the query terms (parquet IN pushdown on the sorted term
-        column) plus a first_docid bound derived from the survivors —
-        an IN list when small, a min/max range otherwise (the kernel
-        skips non-survivor keys exactly either way). coalesce(1) funnels
-        the bounded survivor set into one Python task WITHOUT an
-        exchange, so the whole phase is one job."""
-        fields = self.config.searchable_fields
+        if not survmaps:
+            return self.spark.createDataFrame([], _TOPK_SCHEMA)
         fdids = sorted({key[2] for sm in survmaps.values() for key in sm})
-        scan = self.blocks.where(
-            F.col("term").isin(all_terms) & F.col("field").isin(fields)
-        )
+        scan = self._of_terms(self.blocks, terms)
         if len(fdids) <= 256:
             scan = scan.where(F.col("first_docid").isin(fdids))
         else:
@@ -837,53 +742,36 @@ class BlockIndex:
                 (F.col("first_docid") >= fdids[0])
                 & (F.col("first_docid") <= fdids[-1])
             )
-        return scan.coalesce(1)
+        fn = _fused_topk_fn(
+            self._avgs, self._n_docs, self.config.bm25, survmaps,
+            {q: plans[q][0] for q in survmaps},
+            {q: plans[q][2] for q in survmaps if plans[q][2]}, k,
+        )
+        return scan.coalesce(1).mapInPandas(fn, _TOPK_SCHEMA)
 
-    def _prune(self, meta: DataFrame, k: int, keep_ids: Optional[DataFrame],
-               tokens: Optional[list] = None) -> tuple[DataFrame, DataFrame]:
-        """Phases 0/1: returns (surviving (block ⨝ clip) rows, 1-row θ
-        frame). Fully lazy — zero driver actions (see module doc).
+    def _prune(self, meta: DataFrame, k: int, tokens,
+               keep_ids: Optional[DataFrame] = None,
+               pool: Optional[pd.DataFrame] = None) -> tuple[DataFrame, DataFrame]:
+        """Distributed phases 0/1 for a query the driver does not plan
+        (metadata over the cap, or a ``keep_ids`` filter): returns
+        (surviving (block ⨝ clip) rows, 1-row θ frame), fully lazy.
 
-        θ seed source: the build-time champion lists when present (a
-        (field, term)-sorted parquet scan with the query's term IN-list
-        pushed down — no window, no metadata shuffle); else fall back to
-        a window over ``meta`` picking the top achieved-bound blocks and
-        decoding them inline. Either pool yields partial BM25 sums
-        (exact, non-negative contributions), so the k-th best pooled sum
-        is a valid lower bound of the true k-th score for ANY k — a pool
-        shallower than 4k/BLOCK_SIZE blocks only loosens θ, never breaks
-        soundness."""
-        # Duplicate query tokens: the reference scores each OCCURRENCE
-        # (index.ts loops over tokens), so 'spark spark' weights spark's
-        # contribution ×2 — but `meta` comes from an isin() that dedupes
-        # terms. The weighted path (taken only when a duplicate exists —
-        # the common case pays nothing) attaches an occurrence-count
-        # `wt` column to meta; the score kernel, sweep upper bounds, θ
-        # seed and the negative-min adjustment all scale by it, keeping
-        # WAND rank-identical with the plain engine path.
-        wts: Optional[dict] = None
-        if tokens is not None:
-            cnt: dict = {}
-            for t in tokens:
-                cnt[t] = cnt.get(t, 0) + 1
-            if any(v > 1 for v in cnt.values()):
-                wts = {t: float(v) for t, v in cnt.items()}
-                wdf = F.broadcast(
-                    self.spark.createDataFrame(
-                        list(wts.items()), "term string, wt double"
-                    )
-                )
-                meta = meta.join(wdf, "term")
-        # θ soundness under NEGATIVE term contributions (df counts
-        # occurrences, so df > N gives idf < 0): a pool partial sum is
-        # no longer ≤ the true score — the contributions it is missing
-        # can be negative. true(d) ≥ partial(d) + Σ_t wt_t·min(0, min_t)
-        # where min_t is term t's global minimum posting score, so
-        # lowering θ by that (≤ 0) constant restores the lower-bound
-        # property. All-positive queries have adj = 0 — the common path
-        # is untouched. Lazy: a 2-level agg over the query's block
-        # metadata (tiny), crossJoined into θ.
-        wt_col = F.col("wt") if wts is not None else F.lit(1.0)
+        θ is seeded from ``pool``, the champion rows _term_data already
+        fetched for this query; with ``keep_ids``, from a lazy scan of
+        the query's champion rows semi-joined to the filter, so θ
+        lower-bounds the k-th FILTERED score. Either way it is lowered by
+        the negative-min adjustment, aggregated lazily over ``meta``."""
+        wts = _occurrence_weights(tokens)
+        weighted = max(wts.values()) > 1
+        if weighted:
+            # `meta` comes from an isin() that dedupes terms: an
+            # occurrence-count `wt` column scales the sweep bounds, θ
+            # seed, adjustment and phase-2 scores (module doc)
+            wdf = F.broadcast(
+                self.spark.createDataFrame(list(wts.items()), "term string, wt double")
+            )
+            meta = meta.join(wdf, "term")
+        wt_col = F.col("wt") if weighted else F.lit(1.0)
         adj_df = (
             meta.groupBy("field", "term")
             .agg(F.min("min_score").alias("_mn"), F.first(wt_col).alias("_w"))
@@ -894,84 +782,18 @@ class BlockIndex:
                 ).alias("adj")
             )
         )
-        if self.champions is not None and tokens is not None and keep_ids is None:
-            # fast θ: the champion pool is BOUNDED BY THE QUERY, not the
-            # corpus (CHAMPION_BLOCKS × BLOCK_SIZE × #terms × #fields ≈
-            # a few thousand rows for any human query), so one bounded
-            # collect beats a groupBy→sort→limit shuffle chain; θ then
-            # rides into both phases as a 1-row local broadcast frame.
-            # bounded driver sweep: when the query terms' block METADATA
-            # fits under driver_sweep_max_blocks (rare terms, small
-            # corpora — detected with a LIMIT-guarded collect, one tiny
-            # job), run the exact interval sweep in numpy and broadcast
-            # the surviving block keys, collapsing phase 1 from
-            # explode+shuffle+mapInPandas to a single broadcast join.
-            # Huge-df terms exceed the cap and take the distributed
-            # sweep unchanged — same bounded-collect class as the
-            # engine's top-k/expansion collects. (wand_topk normally
-            # short-circuits to the FUSED kernel before reaching here —
-            # this branch serves pruning_stats and diagnostics.)
-            dp = self._driver_plan(tokens, k)
-            if dp is not None:
-                theta, surv, _ = dp
-                theta_df = F.broadcast(
-                    self.spark.createDataFrame([(theta,)], "theta double")
-                )
-                if surv is None:
-                    kept = self.spark.createDataFrame([], _KEPT_EMPTY_SCHEMA)
-                else:
-                    # survivors are bounded by the cap: funnel them into
-                    # ONE partition so the Arrow decode runs as a single
-                    # Python task instead of fanning a worker per scan
-                    # split (the distributed path keeps its parallelism)
-                    kept = meta.join(
-                        F.broadcast(
-                            self.spark.createDataFrame(surv, _SURVIVOR_SCHEMA)
-                        ),
-                        ["field", "term", "first_docid"],
-                    ).repartition(1)
-                return kept, theta_df
-            # over the cap: distributed sweep with the champion-pool θ
-            # seed, adjusted lazily (the full metadata was never
-            # collected). _term_data is warm here — zero extra jobs.
-            pool, _ = self._term_data(tokens)
-            sums = pool.groupby("docid")["s"].sum().sort_values(ascending=False)
-            theta = float(sums.iloc[k - 1]) if len(sums) >= k else 0.0
-            theta_df = F.broadcast(
-                self.spark.createDataFrame([(theta,)], "theta double")
-                .crossJoin(adj_df)
-                .select((F.col("theta") + F.col("adj")).alias("theta"))
+        if keep_ids is None:
+            seed = self.spark.createDataFrame(
+                [(_seed_theta(pool, k, wts),)], "theta double"
             )
-        elif self.champions is not None and tokens is not None:
-            champ = self.champions.where(
-                F.col("term").isin(tokens)
-                & F.col("field").isin(self.config.searchable_fields)
-            )
-            if wts is not None:
-                champ = champ.join(wdf, "term").withColumn(
-                    "s", F.col("s") * F.col("wt")
-                )
-            seed_scored = champ.select("docid", "s")
-            theta_df = None
         else:
-            n_seed_blocks = max(2, -(-4 * k // BLOCK_SIZE) + 1)
-            w = Window.partitionBy("field", "term").orderBy(
-                F.desc("max_score"), F.asc("first_docid")
-            )
-            seed_blocks = (
-                meta.withColumn("_rk", F.row_number().over(w))
-                .where(F.col("_rk") <= n_seed_blocks)
-                .drop("_rk")
-            )
-            seed_scored = seed_blocks.mapInArrow(
-                self._score_kernel(clipped=False), _SCORED_SCHEMA
-            )
-            theta_df = None
-        if theta_df is None:
-            if keep_ids is not None:
-                seed_scored = seed_scored.join(keep_ids, "docid", "left_semi")
-            theta_df = F.broadcast(
-                seed_scored.groupBy("docid")
+            champ = self._of_terms(self.champions, tokens)
+            if weighted:
+                champ = champ.join(wdf, "term")
+            seed = (
+                champ.select("docid", (F.col("s") * wt_col).alias("s"))
+                .join(keep_ids, "docid", "left_semi")
+                .groupBy("docid")
                 .agg(F.sum("s").alias("ps"))
                 .orderBy(F.desc("ps"), F.asc("docid"))
                 .limit(k)
@@ -980,23 +802,24 @@ class BlockIndex:
                     .otherwise(F.lit(0.0))
                     .alias("theta")
                 )
-                .crossJoin(adj_df)
-                .select((F.col("theta") + F.col("adj")).alias("theta"))
             )
+        theta_df = F.broadcast(
+            seed.crossJoin(adj_df)
+            .select((F.col("theta") + F.col("adj")).alias("theta"))
+        )
 
         # phase 1: bucketed docid-aligned sweep over block metadata.
         # Internal ids are a dense 0-based rank (blocks.py), so the span
         # comes from stats — no extra job.
         dmin, dmax = 0, max(0, int(self.stats["docs_count"]) - 1)
-        width = max(1, -(-(dmax - dmin + 1) // self.sweep_buckets))
+        width = max(1, -(-(dmax - dmin + 1) // SWEEP_BUCKETS))
         bucket_of = lambda c: F.floor((c - F.lit(dmin)) / F.lit(width)).cast("long")
         sweep_parts = max(
-            1, min(self.sweep_buckets, self.spark.sparkContext.defaultParallelism)
+            1, min(SWEEP_BUCKETS, self.spark.sparkContext.defaultParallelism)
         )
         exploded = (
             meta.select(
                 "field", "term", "first_docid", "last_docid",
-                # occurrence-weighted upper bound (see wts comment)
                 (F.col("max_score") * wt_col).alias("max_score"),
                 F.explode(
                     F.sequence(
@@ -1020,8 +843,16 @@ class BlockIndex:
         """Exact-term BM25 top-k via docid-aligned block-max pruning.
         Returns (docid, score) rank-identical with the plain engine path
         (original docids; ties broken by docid asc, like the plain sort).
-        The whole query is ONE lazy plan — no driver-side action happens
-        until the caller collects.
+
+        Without ``keep_ids`` the call fetches the query's champion pool
+        and block metadata EAGERLY (_term_data: one Spark job for
+        cache-missing terms, none when warm) and returns a lazy phase 2:
+        the FUSED single-task kernel under driver_sweep_max_blocks
+        (a cold query is 2 jobs, a warm one 1 — the r4 scale leg showed
+        fixed multi-job orchestration was the only thing keeping WAND
+        behind the plain path), the distributed sweep seeded from the
+        same pool over it. With ``keep_ids`` the whole query is one lazy
+        plan.
 
         ``keep_ids`` (one column ``docid``): a pre-computed doc filter
         (where-clause mask or the exact-mode case-sensitive post-filter,
@@ -1032,50 +863,24 @@ class BlockIndex:
         tokens = self.tokenizer.tokenize(term)
         if not tokens:
             return self.spark.createDataFrame([], "docid long, score double")
-        fields = self.config.searchable_fields
-
-        if keep_ids is None and self.champions is not None:
-            # FUSED fast path (r5): θ + sweep fully driver-side (one
-            # fetch job, cached for warm queries), then decode + score +
-            # aggregate + θ-filter in ONE coalesce(1) kernel — a warm
-            # query is a single Spark job, a cold one two. The r4 scale
-            # leg showed the fixed multi-job orchestration (~2.5 s on
-            # this VM) was the only thing keeping WAND behind the plain
-            # path despite ~100x less posting work.
-            dp = self._driver_plan(tokens, k)
-            if dp is not None:
-                theta, surv, wts = dp
-                if surv is None:
-                    return self.spark.createDataFrame(
-                        [], "docid long, score double"
-                    )
-                survmap = {
-                    (f_, t, fd): (cs, ce) for f_, t, fd, cs, ce in surv
-                }
-                avgs = {
-                    f_: float(v["avg_field_length"])
-                    for f_, v in self.stats["fields"].items()
-                }
-                scan = self._fused_scan(list(dict.fromkeys(tokens)),
-                                        {None: survmap})
-                out = scan.mapInPandas(
-                    _fused_topk_fn(
-                        avgs, float(self.stats["docs_count"]),
-                        self.config.bm25, {None: survmap}, {None: theta},
-                        {None: wts} if wts else {},
-                    ),
-                    "docid long, score double",
-                )
+        pool = None
+        if keep_ids is None:
+            pool, rows = self._term_data(tokens, self.driver_sweep_max_blocks)
+            if rows is not None:
+                out = self._fused_topk(
+                    {"": self._plan(tokens, k, pool, rows)},
+                    list(dict.fromkeys(tokens)), k,
+                ).select("docid", "score")
                 return out.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 
-        meta = self.blocks.where(
-            F.col("term").isin(tokens) & F.col("field").isin(fields)
-        )
-
-        kept, theta_df = self._prune(meta, k, keep_ids, tokens)
+        meta = self._of_terms(self.blocks, tokens)
+        kept, theta_df = self._prune(meta, k, tokens, keep_ids, pool)
 
         # phase 2: decode + score surviving clips only
-        scored = kept.mapInArrow(self._score_kernel(clipped=True), _SCORED_SCHEMA)
+        scored = kept.mapInArrow(
+            _score_blocks_fn(self._avgs, self._n_docs, self.config.bm25, clipped=True),
+            _SCORED_SCHEMA,
+        )
         if keep_ids is not None:
             scored = scored.join(keep_ids, "docid", "left_semi")
         scored = (
@@ -1091,133 +896,65 @@ class BlockIndex:
         return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
 
     def wand_topk_many(self, queries: dict, k: int = 10) -> DataFrame:
-        """Batched exact-term BM25 top-k over N queries with ONE
-        champions collect, ONE metadata collect and ONE decode+score
-        job.  Single-query ``wand_topk`` pays ~3 driver jobs of fixed
-        latency per query — on short queries that overhead dominates
-        the 50-100x posting-decode savings pruning buys (SCALE_r04
-        measured latency parity vs the plain path at 2M docs despite a
-        98% block-prune rate).  Batching amortizes the fixed jobs
-        across the whole workload, which is also the realistic serving
-        shape for a 100 TB cluster (queries arrive in batches; each
-        executor decodes each surviving clip once per query).
+        """Batched exact-term BM25 top-k over N queries: ONE fetch of
+        the batch's champion rows and block metadata, the planner per
+        query, and ONE fused decode+score job in which each surviving
+        block is decoded once however many queries keep it. Single-query
+        ``wand_topk`` pays its fixed job latency per query — on short
+        queries that overhead dominates the 50-100x posting-decode
+        savings pruning buys (SCALE_r04 measured latency parity vs the
+        plain path at 2M docs despite a 98% block-prune rate). Batching
+        amortizes the fixed jobs across the whole workload, which is
+        also the realistic serving shape (queries arrive in batches).
 
-        ``queries``: {qid: term_text}.  Returns (qid, docid, score),
-        per-qid rank-identical with ``wand_topk`` (same θ seed, same
-        exact interval sweep, same clip semantics; ties score DESC,
-        docid ASC).  Falls back to unioned per-query ``wand_topk``
-        when champion lists are absent or the batch's block metadata
-        exceeds ``driver_sweep_max_blocks * len(queries)``.
+        ``queries``: {qid: term_text}. Returns (qid, docid, score),
+        per-qid rank-identical with ``wand_topk`` (same planner; ties
+        score DESC, docid ASC). Falls back to unioned per-query
+        ``wand_topk`` when the batch's block metadata exceeds
+        ``driver_sweep_max_blocks * len(queries)``.
         """
-        out_schema = "qid string, docid long, score double"
-        qtoks = {
-            str(qid): self.tokenizer.tokenize(text)
-            for qid, text in dict(queries).items()
-        }
-        qtoks = {q: t for q, t in qtoks.items() if t}
+        texts = {str(qid): text for qid, text in dict(queries).items()}
+        qtoks = {q: self.tokenizer.tokenize(text) for q, text in texts.items()}
+        qtoks = {q: toks for q, toks in qtoks.items() if toks}
         if not qtoks:
-            return self.spark.createDataFrame([], out_schema)
-
-        def _fallback() -> DataFrame:
-            parts = [
-                self.wand_topk(text, k=k).select(
-                    F.lit(str(qid)).alias("qid"), "docid", "score"
-                )
-                for qid, text in dict(queries).items()
-                if self.tokenizer.tokenize(text)
-            ]
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
-
-        if self.champions is None:
-            return _fallback()
-        all_tokens = sorted({t for toks in qtoks.values() for t in toks})
+            return self.spark.createDataFrame([], _TOPK_SCHEMA)
+        terms = sorted({t for toks in qtoks.values() for t in toks})
         pool, rows = self._term_data(
-            all_tokens,
-            cap=self.driver_sweep_max_blocks * max(1, len(qtoks)),
+            terms, cap=self.driver_sweep_max_blocks * len(qtoks)
         )
         if rows is None:
-            return _fallback()
-
-        survmaps: dict = {}
-        thetas: dict = {}
-        wtsmap: dict = {}
-        for qid, toks in qtoks.items():
-            # occurrence weights: duplicate tokens in a query score once
-            # PER OCCURRENCE (reference loops over tokens) — same
-            # weighting as the single-query path, so per-qid rank
-            # identity with wand_topk holds for duplicate-token queries
-            wts: dict = {}
-            for t in toks:
-                wts[t] = wts.get(t, 0.0) + 1.0
-            rows_q = [r for r in rows if r["term"] in wts]
-            sub = pool[pool["term"].isin(list(wts))]
-            wvec = sub["term"].map(wts).astype(float)
-            sums = (
-                (sub["s"] * wvec).groupby(sub["docid"]).sum()
-                .sort_values(ascending=False)
-            )
-            theta = float(sums.iloc[k - 1]) if len(sums) >= k else 0.0
-            # negative-min_score adjustment, as in the single path
-            mins: dict = {}
-            for r in rows_q:
-                key = (r["field"], r["term"])
-                mins[key] = min(mins.get(key, float("inf")), r["min_score"])
-            theta += sum(
-                min(0.0, v) * wts[key[1]] for key, v in mins.items()
-            )
-            surv = self._driver_sweep(
-                [
-                    {**r, "max_score": r["max_score"] * wts[r["term"]]}
-                    for r in rows_q
-                ],
-                theta,
-            )
-            if surv is not None:
-                survmaps[qid] = {
-                    (f_, t, fd): (cs, ce) for f_, t, fd, cs, ce in surv
-                }
-                thetas[qid] = theta
-                if any(v > 1 for v in wts.values()):
-                    wtsmap[qid] = wts
-        if not survmaps:
-            return self.spark.createDataFrame([], out_schema)
-        avgs = {
-            f_: float(v["avg_field_length"])
-            for f_, v in self.stats["fields"].items()
-        }
-        # ONE fused job: every surviving block is decoded ONCE even when
-        # several queries keep it; per-qid aggregate + θ filter + top-k
-        # happen inside the kernel (see _fused_topk_fn)
-        out = self._fused_scan(all_tokens, survmaps).mapInPandas(
-            _fused_topk_fn(
-                avgs, float(self.stats["docs_count"]), self.config.bm25,
-                survmaps, thetas, wtsmap, k=k,
-            ),
-            out_schema,
-        )
-        return out.sortWithinPartitions(
+            return functools.reduce(DataFrame.unionByName, [
+                self.wand_topk(texts[q], k=k).select(
+                    F.lit(q).alias("qid"), "docid", "score"
+                )
+                for q in qtoks
+            ])
+        plans = {q: self._plan(toks, k, pool, rows) for q, toks in qtoks.items()}
+        return self._fused_topk(plans, terms, k).sortWithinPartitions(
             "qid", F.desc("score"), F.asc("docid")
         )
 
     def pruning_stats(self, term: str, k: int = 10) -> dict:
-        """Diagnostics: how many blocks the docid-aligned sweep keeps."""
+        """Diagnostics: how many of the query's blocks the sweep keeps,
+        and θ. Under driver_sweep_max_blocks this is the planner's own
+        answer — no Spark job beyond the _term_data fetch; over it the
+        distributed sweep is run and counted."""
         tokens = self.tokenizer.tokenize(term)
         if not tokens:
             return {"blocks_total": 0, "blocks_kept": 0, "theta": 0.0}
-        fields = self.config.searchable_fields
-        meta = self.blocks.where(
-            F.col("term").isin(tokens) & F.col("field").isin(fields)
-        ).persist()
-        total = meta.count()
-        kept, theta_df = self._prune(meta, k, None, tokens)
-        theta = theta_df.collect()[0]["theta"]
-        kept_n = (
-            kept.select("field", "term", "first_docid")
-            .dropDuplicates(["field", "term", "first_docid"])
-            .count()
-        )
-        meta.unpersist()
-        return {"blocks_total": total, "blocks_kept": kept_n, "theta": float(theta)}
+        pool, rows = self._term_data(tokens, self.driver_sweep_max_blocks)
+        if rows is not None:
+            theta, surv, _ = self._plan(tokens, k, pool, rows)
+            return {"blocks_total": len(rows), "blocks_kept": len(surv),
+                    "theta": theta}
+        meta = self._of_terms(self.blocks, tokens).persist()
+        try:
+            kept, theta_df = self._prune(meta, k, tokens, pool=pool)
+            return {
+                "blocks_total": meta.count(),
+                "blocks_kept": kept.select("field", "term", "first_docid")
+                .dropDuplicates().count(),
+                "theta": float(theta_df.first()["theta"]),
+            }
+        finally:
+            meta.unpersist()

@@ -5,6 +5,9 @@ engine path."""
 
 import contextlib
 import itertools
+import os
+import shutil
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -251,8 +254,13 @@ CFG = IndexConfig(
 
 
 @pytest.fixture(scope="module")
-def indexes(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("wandidx"))
+def index_dir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("wandidx"))
+
+
+@pytest.fixture(scope="module")
+def indexes(spark, index_dir):
+    out = index_dir
     g = CorpusGenerator(seed=42)
     cols = g.batch(np.arange(N_DOCS, dtype=np.int64))
     rows = [
@@ -283,6 +291,25 @@ def _session_conf(spark, settings: dict):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def _fresh(blocks, **kw):
+    """A BlockIndex over the same tables with empty driver caches."""
+    return BlockIndex(blocks.spark, blocks.config, blocks.blocks,
+                      blocks.dictionary, blocks.stats,
+                      champions=blocks.champions, **kw)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"wandjobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
 
 class TestBlocks:
@@ -422,15 +449,70 @@ class TestWand:
             for (hi, hs), (wi, ws) in zip(have, want):
                 assert hs == pytest.approx(ws, rel=1e-9)
 
-    def test_batched_fallback_without_champions(self, indexes):
-        _, blocks = indexes
-        import copy
+    def test_load_refuses_index_without_champions(self, indexes, index_dir,
+                                                  tmp_path, spark):
+        # θ is always seeded from champions/: a stamped index without it
+        # is refused rather than served
+        copy = str(tmp_path / "idx")
+        shutil.copytree(index_dir, copy)
+        BlockIndex.load(spark, copy, CFG)
+        shutil.rmtree(os.path.join(copy, "champions"))
+        with pytest.raises(ValueError, match="champions.*re-run BlockIndex.build"):
+            BlockIndex.load(spark, copy, CFG)
 
-        nochamp = copy.copy(blocks)
-        nochamp.champions = None
-        got = nochamp.wand_topk_many({"a": "fox"}, k=5).collect()
-        want = blocks.wand_topk("fox", k=5).collect()
-        assert [(r["docid"],) for r in got] == [(r["docid"],) for r in want]
+    def test_no_session_conf_writes(self, indexes, spark, monkeypatch):
+        """No WAND path writes session conf: queries sharing the session
+        (other threads included) must never run under a WAND query's
+        settings."""
+        from pyspark.sql.conf import RuntimeConfig
+
+        plain, blocks = indexes
+        assert isinstance(spark.conf, RuntimeConfig)
+        keep = plain.exact_filter_ids("fox")
+        calls = []
+        for name in ("set", "unset"):
+            def spy(self, *args, _name=name, _orig=getattr(RuntimeConfig, name)):
+                calls.append((_name,) + args)
+                return _orig(self, *args)
+            monkeypatch.setattr(RuntimeConfig, name, spy)
+        _fresh(blocks).wand_topk("river mountain", k=10).collect()
+        _fresh(blocks, driver_sweep_max_blocks=0).wand_topk(
+            "river mountain", k=10).collect()
+        _fresh(blocks).wand_topk("fox", k=10, keep_ids=keep).collect()
+        _fresh(blocks).wand_topk_many(
+            {"a": "fox", "b": "search engine"}, k=10).collect()
+        _fresh(blocks).pruning_stats("fox dog quick", k=10)
+        assert calls == []
+
+    def test_over_cap_query_fetches_once(self, indexes, spark):
+        """Over driver_sweep_max_blocks, wand_topk runs ONE fetch job
+        before the caller collects — its champion pool seeds the
+        distributed sweep — on every call (a multi-term over-cap
+        query's metadata is not cached)."""
+        _, blocks = indexes
+        term = "river mountain"
+        assert blocks.pruning_stats(term, k=10)["blocks_total"] > 1
+        want = blocks.wand_topk(term, k=10).collect()
+        capped = _fresh(blocks, driver_sweep_max_blocks=1)
+        for _ in range(2):
+            out = []
+            assert _jobs(spark, lambda: out.append(capped.wand_topk(term, k=10))) == 1
+            assert out[0].collect() == want
+
+    @pytest.mark.parametrize(
+        "term",
+        ["fox", "search engine", "distributed computing science",
+         "river mountain", "fox dog quick"],
+    )
+    def test_pruning_stats_driver_vs_distributed(self, indexes, term):
+        # the driver planner's counts and θ == the distributed sweep's
+        _, blocks = indexes
+        a = blocks.pruning_stats(term, k=10)
+        b = _fresh(blocks, driver_sweep_max_blocks=0).pruning_stats(term, k=10)
+        assert a["blocks_total"] > 0
+        assert (a["blocks_total"], a["blocks_kept"]) == (
+            b["blocks_total"], b["blocks_kept"]), term
+        assert a["theta"] == pytest.approx(b["theta"], rel=1e-12), term
 
     def test_pruning_actually_prunes(self, indexes):
         _, blocks = indexes
@@ -532,24 +614,36 @@ class TestWandAllowDuplicates:
         for (gi, gs), (wi, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-9)
 
-    def test_pruning_nonzero_under_duplicates(self, dup_indexes):
-        # query two hot POSITIVE-idf terms (df well under N — df counts
+    @staticmethod
+    def _hot_pair(blocks) -> str:
+        # two hot POSITIVE-idf terms (df well under N — df counts
         # occurrences under allow_duplicates, so the very hottest terms
-        # go idf-negative and soundly disengage pruning) spanning many
-        # blocks — pruning must DROP some (θ > 0, kept < total), the
-        # property that was vacuous while allow_duplicates routed to
-        # the plain path
-        _, blocks, _ = dup_indexes
+        # go idf-negative and soundly disengage pruning)
         n = blocks.stats["docs_count"]
-        hot = [
+        return " ".join(
             r["term"]
             for r in blocks.dictionary.where(F.col("df") < 0.4 * n)
             .orderBy(F.desc("df")).limit(2).collect()
-        ]
-        st = blocks.pruning_stats(" ".join(hot), k=10)
+        )
+
+    def test_pruning_nonzero_under_duplicates(self, dup_indexes):
+        # the hot pair spans many blocks — pruning must DROP some (θ > 0,
+        # kept < total), the property that was vacuous while
+        # allow_duplicates routed to the plain path
+        _, blocks, _ = dup_indexes
+        st = blocks.pruning_stats(self._hot_pair(blocks), k=10)
         assert st["blocks_total"] >= 8
         assert 0 < st["blocks_kept"] < st["blocks_total"]
         assert st["theta"] > 0
+
+    def test_pruning_stats_driver_vs_distributed(self, dup_indexes):
+        _, blocks, _ = dup_indexes
+        term = self._hot_pair(blocks)
+        a = blocks.pruning_stats(term, k=10)
+        b = _fresh(blocks, driver_sweep_max_blocks=0).pruning_stats(term, k=10)
+        assert (a["blocks_total"], a["blocks_kept"]) == (
+            b["blocks_total"], b["blocks_kept"])
+        assert a["theta"] == pytest.approx(b["theta"], rel=1e-12)
 
     def test_negative_idf_query_disengages_but_stays_exact(self, dup_indexes):
         # the single hottest term has df > N (idf < 0): θ ≤ 0 disengages
