@@ -1,4 +1,16 @@
-"""Distributed inverted-index builder (the Spark rewrite of Orama insert).
+"""Distributed inverted-index builder (the Spark rewrite of Orama insert)
+and the single owner of the index table format.
+
+Every derived table is defined once, here, as a function of its input
+frame: ``tokens_table`` (docs -> per-field token lists),
+``postings_table`` (tokens -> postings, scalar and string[]),
+``docmeta_table`` (tokens -> per-doc field lengths), ``dictionary_table``
+(postings -> df = Σocc) and ``dictionary_bylen_table`` (dictionary ->
+the length-banded copy), plus ``postings_layout`` for the postings file
+order. ``IndexBuilder.build``, incremental insert / compact
+(maintenance.py), the verbatim dump restore (persistence/restore.py) and
+``SearchIndex.load``'s delta composition all call these; each caller
+chooses only paths, write mode and partition width.
 
 Reference semantics being reproduced (see SURVEY.md §2.3, §7-M2):
   * field_len  = len(token list)  — with the default deduplicating
@@ -16,9 +28,9 @@ Scale design (the part Catalyst doesn't give us):
   * one tokenize pass (Arrow UDF) -> explode -> postings carry
     (tf, field_len) denormalized, so the query path needs NO join with
     docmeta — it joins only the tiny query-term expansion.
-  * dictionary df via groupBy(field, term).count(): partial (map-side)
+  * dictionary df via groupBy(field, term).sum(occ): partial (map-side)
     aggregation makes Zipf skew a non-issue for counts.
-  * postings are written repartitionByRange(field, term) +
+  * postings are written repartitionByRange(field, term, docid) +
     sortWithinPartitions(field, term, docid): range partitioning SAMPLES
     the key distribution, so a hot term ('the' at 10^12 docs) simply
     spans several contiguous partitions instead of exploding one reducer
@@ -37,13 +49,198 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..config import IndexConfig
 from .manifest import BuildManifest
-from .tokenize import tokens_udf
+from .tokenize import tokens_arr_udf, tokens_udf
 
 
 def _tok_col(field: str) -> str:
     """Internal token-column alias; dots in nested paths (meta.tag) must
     not look like struct accessors in column references."""
     return "__tok_" + field.replace(".", "__")
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+# ------------------------------------------------------- table format
+
+def tokens_table(docs: DataFrame, config: IndexConfig) -> DataFrame:
+    """(docid, one token column per searchable field) — the single
+    Arrow-UDF tokenize pass. Scalar string: array<string> of tokens.
+    string[]: one token list per array ELEMENT (the reference inserts
+    each element separately, index.ts:260-301 — order matters, see
+    ``_array_field_postings``)."""
+    tok_cols = [
+        (
+            tokens_arr_udf(config.tokenizer, f_)(F.col(f_))
+            if config.schema[f_] == "string[]"
+            else tokens_udf(config.tokenizer, f_)(F.col(f_).cast("string"))
+        ).alias(_tok_col(f_))
+        for f_ in config.searchable_fields
+    ]
+    return docs.select(F.col(config.docid_col).alias("docid"), *tok_cols)
+
+
+def _scalar_field_postings(tokenized: DataFrame, f_: str, allow_duplicates: bool) -> DataFrame:
+    t = tokenized.select(
+        "docid",
+        F.col(_tok_col(f_)).alias("toks"),
+    ).where(F.col("toks").isNotNull())
+    base = t.select(
+        "docid",
+        F.size("toks").alias("field_len"),
+        F.explode("toks").alias("term"),
+    )
+    if allow_duplicates:
+        base = base.groupBy("docid", "field_len", "term").agg(
+            F.count("*").alias("occ")
+        )
+        tf = F.col("occ") / F.col("field_len")
+        occ = F.col("occ")
+    else:
+        tf = F.lit(1.0) / F.col("field_len")
+        occ = F.lit(1)
+    # occ: token occurrences behind this posting. The reference
+    # increments tokenOccurrences once per OCCURRENCE
+    # (index.ts:113-118), so with allow_duplicates df must be
+    # sum(occ), not the distinct-doc count.
+    return base.select(
+        F.lit(f_).alias("field"),
+        "term",
+        "docid",
+        tf.cast("double").alias("tf"),
+        F.col("field_len").cast("int").alias("field_len"),
+        occ.cast("int").alias("occ"),
+    )
+
+
+def _array_field_postings(tokenized: DataFrame, f_: str) -> DataFrame:
+    """string[] postings replicating the per-element insert
+    (components/index.ts:260-301 + 79-119):
+      * the radix set holds every token of every element -> one
+        posting per distinct (doc, term) across ALL elements
+      * df counts occurrences across elements (occ)
+      * frequencies are RESET per element (index.ts:90), so the
+        stored tf is the token's tf within the LAST element — 0 for
+        tokens only in earlier elements (calculateResultScores
+        falls back to 0, index.ts:107)
+      * field_len is the LAST element's token count (overwritten per
+        element, index.ts:88)
+    """
+    col = _tok_col(f_)
+    t = tokenized.select("docid", F.col(col).alias("toks")).where(
+        F.col("toks").isNotNull() & (F.size("toks") > 0)
+    )
+    base = t.select(
+        "docid",
+        F.element_at("toks", -1).alias("last_toks"),
+        F.explode(F.flatten("toks")).alias("term"),
+    )
+    grouped = base.groupBy("docid", "term").agg(
+        F.count("*").alias("occ"), F.first("last_toks").alias("last_toks")
+    )
+    field_len = F.size("last_toks")
+    in_last = F.size(F.filter("last_toks", lambda x: x == F.col("term")))
+    tf = F.when(field_len > 0, in_last.cast("double") / field_len).otherwise(0.0)
+    return grouped.select(
+        F.lit(f_).alias("field"),
+        "term",
+        "docid",
+        tf.cast("double").alias("tf"),
+        field_len.cast("int").alias("field_len"),
+        F.col("occ").cast("int").alias("occ"),
+    )
+
+
+def postings_table(tokenized: DataFrame, config: IndexConfig) -> DataFrame:
+    """(field, term, docid, tf, field_len, occ): one union over the
+    searchable fields, in no particular order (see ``postings_layout``)."""
+    return _union([
+        _array_field_postings(tokenized, f_)
+        if config.schema[f_] == "string[]"
+        else _scalar_field_postings(tokenized, f_, config.tokenizer.allow_duplicates)
+        for f_ in config.searchable_fields
+    ])
+
+
+def postings_layout(postings: DataFrame, n_part: int | None = None) -> DataFrame:
+    """Postings files sorted by (field, term, docid). With ``n_part``
+    they are first range partitioned on the same key: including docid
+    means a Zipf-hot term ('the' at 10^12 docs) SPLITS across partitions
+    by docid range instead of landing on one reducer (equal range keys
+    co-locate, so (field, term) alone would re-create the skew). Term
+    min/max per file/row-group still prunes IN-list lookups. Without
+    ``n_part`` (an append) each input partition is sorted in place."""
+    if n_part is not None:
+        postings = postings.repartitionByRange(max(n_part, 1), "field", "term", "docid")
+    return postings.sortWithinPartitions("field", "term", "docid")
+
+
+def docmeta_table(tokenized: DataFrame, config: IndexConfig) -> DataFrame:
+    """(docid, field, field_len) per doc that has the field. Scalar:
+    field_len = token count. string[]: the LAST element's token count
+    (fieldLengths is overwritten per element, index.ts:88-89); docs
+    with an empty array have no entry (the per-element loop never
+    runs)."""
+
+    def meta_col(f_: str):
+        if config.schema[f_] == "string[]":
+            return F.size(F.element_at(_tok_col(f_), -1))
+        return F.size(_tok_col(f_))
+
+    def present(f_: str):
+        c = F.col(_tok_col(f_))
+        if config.schema[f_] == "string[]":
+            return c.isNotNull() & (F.size(c) > 0)
+        return c.isNotNull()
+
+    return _union([
+        tokenized.select(
+            "docid",
+            F.lit(f_).alias("field"),
+            meta_col(f_).alias("field_len"),
+        ).where(present(f_))
+        for f_ in config.searchable_fields
+    ])
+
+
+def term_df(postings: DataFrame) -> DataFrame:
+    """(field, term, df) with df = Σocc: one unit per token OCCURRENCE,
+    as the reference's tokenOccurrences (index.ts:113-118). Incremental
+    maintenance derives its df deltas from the same aggregate."""
+    return postings.groupBy("field", "term").agg(F.sum("occ").cast("long").alias("df"))
+
+
+def dictionary_table(postings: DataFrame, n_part: int) -> DataFrame:
+    """The term dictionary, range partitioned into ``n_part`` files and
+    sorted by (field, term) so exact/prefix lookups row-group-prune."""
+    return (
+        term_df(postings)
+        .repartitionByRange(max(n_part, 1), "field", "term")
+        .sortWithinPartitions("field", "term")
+    )
+
+
+def term_len() -> Column:
+    """The dictionary_bylen ``term_len`` column, derived from ``term``."""
+    return F.length("term").cast("int")
+
+
+def dictionary_bylen_table(dictionary: DataFrame, n_part: int) -> DataFrame:
+    """Length-banded dictionary copy for the fuzzy path. The primary
+    dictionary's (field, term) order can't prune a tolerance query's
+    length band (|len(term) - len(tok)| <= tol), which would force a
+    full dictionary scan per fuzzy query (~GBs at 10^12 docs). This copy
+    is sorted by (field, term_len, term) so the band becomes a pushdown
+    range predicate."""
+    return (
+        dictionary.select("field", term_len().alias("term_len"), "term", "df")
+        .repartitionByRange(max(n_part, 1), "field", "term_len", "term")
+        .sortWithinPartitions("field", "term_len", "term")
+    )
 
 
 def _config_fingerprint(config: IndexConfig, extra: str = "") -> str:
@@ -126,163 +323,40 @@ class IndexBuilder:
         tokens_path = os.path.join(out_dir, "tokens")
 
         def _tokens():
-            # scalar string: array<string> of tokens. string[]: one token
-            # list per array ELEMENT (the reference inserts each element
-            # separately, index.ts:260-301 — order matters, see postings)
-            from .tokenize import tokens_arr_udf
-
-            tok_cols = [
-                (
-                    tokens_arr_udf(cfg.tokenizer, f_)(F.col(f_))
-                    if cfg.schema[f_] == "string[]"
-                    else tokens_udf(cfg.tokenizer, f_)(F.col(f_).cast("string"))
-                ).alias(_tok_col(f_))
-                for f_ in cfg.searchable_fields
-            ]
-            (
-                docs_df.select(F.col(docid).alias("docid"), *tok_cols)
-                .write.mode("overwrite")
-                .parquet(tokens_path)
-            )
+            tokens_table(docs_df, cfg).write.mode("overwrite").parquet(tokens_path)
             return {"path": tokens_path}
 
         results["tokens"] = manifest.run_stage("tokens", fp, _tokens)
         tokenized = spark.read.parquet(tokens_path)
 
-        # --- stage: postings per field, one union
         postings_path = os.path.join(out_dir, "postings")
         docmeta_path = os.path.join(out_dir, "docmeta")
-
-        def _field_postings(f_: str) -> DataFrame:
-            if cfg.schema[f_] == "string[]":
-                return IndexBuilder._array_field_postings(tokenized, f_)
-            t = tokenized.select(
-                "docid",
-                F.col(_tok_col(f_)).alias("toks"),
-            ).where(F.col("toks").isNotNull())
-            base = t.select(
-                "docid",
-                F.size("toks").alias("field_len"),
-                F.explode("toks").alias("term"),
-            )
-            if self.config.tokenizer.allow_duplicates:
-                base = base.groupBy("docid", "field_len", "term").agg(
-                    F.count("*").alias("occ")
-                )
-                tf = F.col("occ") / F.col("field_len")
-                occ = F.col("occ")
-            else:
-                tf = F.lit(1.0) / F.col("field_len")
-                occ = F.lit(1)
-            # occ: token occurrences behind this posting. The reference
-            # increments tokenOccurrences once per OCCURRENCE
-            # (index.ts:113-118), so with allow_duplicates df must be
-            # sum(occ), not the distinct-doc count.
-            return base.select(
-                F.lit(f_).alias("field"),
-                "term",
-                "docid",
-                tf.cast("double").alias("tf"),
-                F.col("field_len").cast("int").alias("field_len"),
-                occ.cast("int").alias("occ"),
-            )
-
-        def _postings():
-            parts = [_field_postings(f_) for f_ in cfg.searchable_fields]
-            all_postings = parts[0]
-            for p in parts[1:]:
-                all_postings = all_postings.unionByName(p)
-            # range partitioning includes docid: a Zipf-hot term ('the' at
-            # 10^12 docs) SPLITS across partitions by docid range instead
-            # of landing on one reducer (equal range keys co-locate, so
-            # (field, term) alone would re-create the skew). Term min/max
-            # per file/row-group still prunes IN-list lookups.
-            (
-                all_postings.repartitionByRange(n_part, "field", "term", "docid")
-                .sortWithinPartitions("field", "term", "docid")
-                .write.mode("overwrite")
-                .parquet(postings_path)
-            )
-            return {"path": postings_path}
-
-        # placeholder — postings now runs inside the overlapped chains
-        # below (guide §2.6: two independent stage chains share the
-        # scheduler so one chain's stragglers backfill the other)
-
-        def _docmeta():
-            # scalar: field_len = token count. string[]: the LAST
-            # element's token count (fieldLengths is overwritten per
-            # element, index.ts:88-89); docs with an empty array have no
-            # entry (the per-element loop never runs)
-            def meta_col(f_: str):
-                if cfg.schema[f_] == "string[]":
-                    return F.size(F.element_at(_tok_col(f_), -1))
-                return F.size(_tok_col(f_))
-
-            def present(f_: str):
-                c = F.col(_tok_col(f_))
-                if cfg.schema[f_] == "string[]":
-                    return c.isNotNull() & (F.size(c) > 0)
-                return c.isNotNull()
-
-            metas = [
-                tokenized.select(
-                    "docid",
-                    F.lit(f_).alias("field"),
-                    meta_col(f_).alias("field_len"),
-                ).where(present(f_))
-                for f_ in cfg.searchable_fields
-            ]
-            dm = metas[0]
-            for m in metas[1:]:
-                dm = dm.unionByName(m)
-            # no shuffle: docmeta inherits the tokens partitioning (it is
-            # only aggregated for stats / maintenance, never key-probed)
-            dm.write.mode("overwrite").parquet(docmeta_path)
-            return {"path": docmeta_path}
-
-
-        # --- stage: dictionary (term df per field)
         dict_path = os.path.join(out_dir, "dictionary")
-
-        def _dictionary():
-            (
-                spark.read.parquet(postings_path)
-                .groupBy("field", "term")
-                .agg(F.sum("occ").cast("long").alias("df"))
-                .repartitionByRange(max(n_part // 8, 1), "field", "term")
-                .sortWithinPartitions("field", "term")
-                .write.mode("overwrite")
-                .parquet(dict_path)
-            )
-            return {"path": dict_path}
-
-
-        # --- stage: length-banded dictionary copy for the fuzzy path.
-        # The primary dictionary is sorted by (field, term) so exact/
-        # prefix lookups row-group-prune; a tolerance query's length
-        # band (|len(term) - len(tok)| <= tol) can't prune that layout
-        # and forces a full dictionary scan per fuzzy query (~GBs at
-        # 10^12 docs). This copy is sorted by (field, term_len, term)
-        # so the band becomes a pushdown range predicate.
         bylen_path = os.path.join(out_dir, "dictionary_bylen")
 
-        def _dictionary_bylen():
-            (
-                spark.read.parquet(dict_path)
-                .select(
-                    "field",
-                    F.length("term").cast("int").alias("term_len"),
-                    "term",
-                    "df",
-                )
-                .repartitionByRange(max(n_part // 8, 1), "field", "term_len", "term")
-                .sortWithinPartitions("field", "term_len", "term")
-                .write.mode("overwrite")
-                .parquet(bylen_path)
-            )
-            return {"path": bylen_path}
+        def _postings():
+            postings_layout(postings_table(tokenized, cfg), n_part).write.mode(
+                "overwrite"
+            ).parquet(postings_path)
+            return {"path": postings_path}
 
+        def _docmeta():
+            # no shuffle: docmeta inherits the tokens partitioning (it is
+            # only aggregated for stats / maintenance, never key-probed)
+            docmeta_table(tokenized, cfg).write.mode("overwrite").parquet(docmeta_path)
+            return {"path": docmeta_path}
+
+        def _dictionary():
+            dictionary_table(spark.read.parquet(postings_path), n_part // 8).write.mode(
+                "overwrite"
+            ).parquet(dict_path)
+            return {"path": dict_path}
+
+        def _dictionary_bylen():
+            dictionary_bylen_table(spark.read.parquet(dict_path), n_part // 8).write.mode(
+                "overwrite"
+            ).parquet(bylen_path)
+            return {"path": bylen_path}
 
         # --- stage: stats (global doc count + per-field avg field length)
         stats_path = os.path.join(out_dir, "stats.json")
@@ -357,44 +431,6 @@ class IndexBuilder:
         manifest.save()
         cfg.hooks.run_observe("after_insert_multiple", df, results)
         return results
-
-    @staticmethod
-    def _array_field_postings(tokenized: DataFrame, f_: str) -> DataFrame:
-        """string[] postings replicating the per-element insert
-        (components/index.ts:260-301 + 79-119):
-          * the radix set holds every token of every element -> one
-            posting per distinct (doc, term) across ALL elements
-          * df counts occurrences across elements (occ)
-          * frequencies are RESET per element (index.ts:90), so the
-            stored tf is the token's tf within the LAST element — 0 for
-            tokens only in earlier elements (calculateResultScores
-            falls back to 0, index.ts:107)
-          * field_len is the LAST element's token count (overwritten per
-            element, index.ts:88)
-        """
-        col = _tok_col(f_)
-        t = tokenized.select("docid", F.col(col).alias("toks")).where(
-            F.col("toks").isNotNull() & (F.size("toks") > 0)
-        )
-        base = t.select(
-            "docid",
-            F.element_at("toks", -1).alias("last_toks"),
-            F.explode(F.flatten("toks")).alias("term"),
-        )
-        grouped = base.groupBy("docid", "term").agg(
-            F.count("*").alias("occ"), F.first("last_toks").alias("last_toks")
-        )
-        field_len = F.size("last_toks")
-        in_last = F.size(F.filter("last_toks", lambda x: x == F.col("term")))
-        tf = F.when(field_len > 0, in_last.cast("double") / field_len).otherwise(0.0)
-        return grouped.select(
-            F.lit(f_).alias("field"),
-            "term",
-            "docid",
-            tf.cast("double").alias("tf"),
-            field_len.cast("int").alias("field_len"),
-            F.col("occ").cast("int").alias("occ"),
-        )
 
     # Bucket count for the distributed suffix scan. 64 keeps the
     # driver-side offset table trivial while bounding any one window

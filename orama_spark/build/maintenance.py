@@ -27,18 +27,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import IndexConfig
-from .indexer import IndexBuilder
-from .tokenize import tokens_udf
-
-
-def _tok_col(field: str) -> str:
-    """Internal token-column alias; dots in nested paths (meta.tag) must
-    not look like struct accessors in column references."""
-    return "__tok_" + field.replace(".", "__")
+from .indexer import (
+    _tok_col,
+    dictionary_bylen_table,
+    dictionary_table,
+    docmeta_table,
+    postings_layout,
+    postings_table,
+    term_df,
+    tokens_table,
+)
 
 
 def _array_fields(config: IndexConfig) -> list[str]:
@@ -96,11 +99,8 @@ def remove_documents(
     postings = spark.read.parquet(os.path.join(index_dir, "postings"))
     removed_postings = postings.join(remove_ids, "docid", "left_semi")
 
-    # df decrements per (field, term) (index.ts:134-136) — one unit per
-    # token OCCURRENCE (occ > 1 under allow_duplicates)
-    delta = removed_postings.groupBy("field", "term").agg(
-        (-F.sum("occ")).cast("long").alias("ddf")
-    )
+    # df decrements per (field, term) (index.ts:134-136)
+    delta = term_df(removed_postings).select("field", "term", (-F.col("df")).alias("ddf"))
     delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
 
     # field-length sums for the telescoped avg update (index.ts:121-132)
@@ -197,80 +197,17 @@ def insert_documents(
 
     new_docs.write.mode("append").parquet(docs_path)
 
-    from .tokenize import tokens_arr_udf
-
-    tok_cols = [
-        (
-            tokens_arr_udf(config.tokenizer, f_)(F.col(f_))
-            if config.schema[f_] == "string[]"
-            else tokens_udf(config.tokenizer, f_)(F.col(f_).cast("string"))
-        ).alias(_tok_col(f_))
-        for f_ in config.searchable_fields
-    ]
-    tokenized = new_docs.select(F.col(docid).alias("docid"), *tok_cols).persist()
+    # the builder's table derivations, appended in place: new files are
+    # sorted but not range partitioned (no rewrite of existing data)
+    tokenized = tokens_table(new_docs, config).persist()
     tokenized.write.mode("append").parquet(os.path.join(index_dir, "tokens"))
-
-    parts = []
-    metas = []
-    for f_ in config.searchable_fields:
-        if config.schema[f_] == "string[]":
-            # same per-element shapes as the builder (one posting per
-            # distinct (doc, term) across elements; tf from the LAST
-            # element; field_len = last element's token count)
-            parts.append(IndexBuilder._array_field_postings(tokenized, f_))
-            c_ = F.col(_tok_col(f_))
-            metas.append(
-                tokenized.select(
-                    "docid",
-                    F.lit(f_).alias("field"),
-                    F.size(F.element_at(_tok_col(f_), -1)).alias("field_len"),
-                ).where(c_.isNotNull() & (F.size(c_) > 0))
-            )
-            continue
-        t = tokenized.select("docid", F.col(_tok_col(f_)).alias("toks")).where(
-            F.col("toks").isNotNull()
-        )
-        base = t.select(
-            "docid", F.size("toks").alias("field_len"), F.explode("toks").alias("term")
-        )
-        if config.tokenizer.allow_duplicates:
-            base = base.groupBy("docid", "field_len", "term").agg(
-                F.count("*").alias("occ")
-            )
-            tf, occ = F.col("occ") / F.col("field_len"), F.col("occ")
-        else:
-            tf, occ = F.lit(1.0) / F.col("field_len"), F.lit(1)
-        parts.append(
-            base.select(
-                F.lit(f_).alias("field"),
-                "term",
-                "docid",
-                tf.cast("double").alias("tf"),
-                F.col("field_len").cast("int").alias("field_len"),
-                occ.cast("int").alias("occ"),
-            )
-        )
-        metas.append(
-            tokenized.select(
-                "docid", F.lit(f_).alias("field"), F.size(_tok_col(f_)).alias("field_len")
-            ).where(F.col(_tok_col(f_)).isNotNull())
-        )
-    new_postings = parts[0]
-    for p in parts[1:]:
-        new_postings = new_postings.unionByName(p)
-    new_postings = new_postings.persist()
-    new_postings.sortWithinPartitions("field", "term", "docid").write.mode(
-        "append"
-    ).parquet(os.path.join(index_dir, "postings"))
-    dm = metas[0]
-    for m in metas[1:]:
-        dm = dm.unionByName(m)
-    dm.write.mode("append").parquet(os.path.join(index_dir, "docmeta"))
-
-    # df increments (one per token occurrence)
-    delta = new_postings.groupBy("field", "term").agg(
-        F.sum("occ").cast("long").alias("ddf")
+    new_postings = postings_table(tokenized, config).persist()
+    postings_layout(new_postings).write.mode("append").parquet(
+        os.path.join(index_dir, "postings")
     )
+    dm = docmeta_table(tokenized, config)
+    dm.write.mode("append").parquet(os.path.join(index_dir, "docmeta"))
+    delta = term_df(new_postings).withColumnRenamed("df", "ddf")
     delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
 
     # stats: per-field telescoped running-mean extension over
@@ -355,6 +292,14 @@ def upsert_documents(
     return update_documents(spark, index_dir, config, docs)
 
 
+def _replace(df: DataFrame, path: str) -> None:
+    """Write ``df`` beside ``path``, then swap it in (``df`` may read
+    ``path`` itself)."""
+    df.write.mode("overwrite").parquet(path + ".compact")
+    shutil.rmtree(path)
+    os.rename(path + ".compact", path)
+
+
 def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     """Fold tombstones + dictionary deltas into the base tables (the
     periodic rewrite; query plans shrink back to zero-merge reads)."""
@@ -362,8 +307,6 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     delta_path = os.path.join(index_dir, "dictionary_delta")
     if not os.path.exists(tomb_path) and not os.path.exists(delta_path):
         return
-    import shutil
-
     tombs = (
         spark.read.parquet(tomb_path)
         if os.path.exists(tomb_path)
@@ -375,32 +318,15 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
         if tombs is not None:
             key = config.docid_col if table == "docs" else "docid"
             df = df.join(tombs.withColumnRenamed("docid", key), key, "left_anti")
-        df.write.mode("overwrite").parquet(path + ".compact")
-        shutil.rmtree(path)
-        os.rename(path + ".compact", path)
-    # dictionary: recompute from compacted postings (exact)
+        _replace(df, path)
+    # both dictionaries are re-derived from the compacted postings, at
+    # the dictionary's current width
     dict_path = os.path.join(index_dir, "dictionary")
-    (
-        spark.read.parquet(os.path.join(index_dir, "postings"))
-        .groupBy("field", "term")
-        .agg(F.sum("occ").cast("long").alias("df"))
-        .sortWithinPartitions("field", "term")
-        .write.mode("overwrite")
-        .parquet(dict_path + ".compact")
-    )
-    shutil.rmtree(dict_path)
-    os.rename(dict_path + ".compact", dict_path)
     bylen_path = os.path.join(index_dir, "dictionary_bylen")
-    (
-        spark.read.parquet(dict_path)
-        .select("field", F.length("term").cast("int").alias("term_len"), "term", "df")
-        .sortWithinPartitions("field", "term_len", "term")
-        .write.mode("overwrite")
-        .parquet(bylen_path + ".compact")
-    )
-    if os.path.exists(bylen_path):
-        shutil.rmtree(bylen_path)
-    os.rename(bylen_path + ".compact", bylen_path)
+    width = len(spark.read.parquet(dict_path).inputFiles())
+    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    _replace(dictionary_table(postings, width), dict_path)
+    _replace(dictionary_bylen_table(spark.read.parquet(dict_path), width), bylen_path)
     for p in (tomb_path, delta_path):
         if os.path.exists(p):
             shutil.rmtree(p)

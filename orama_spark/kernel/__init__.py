@@ -6,7 +6,7 @@ once, so the distributed engine and the single-process oracle cannot
 disagree on semantics.
 """
 
-from .bm25 import BM25Params, DEFAULT_BM25, bm25, bm25_batch
+from .bm25 import BM25Params, DEFAULT_BM25, bm25
 from .diacritics import replace_diacritics
 from .levenshtein import bounded_levenshtein, bounded_levenshtein_batch, is_bounded
 from .stemmer import stem
@@ -17,7 +17,6 @@ __all__ = [
     "BM25Params",
     "DEFAULT_BM25",
     "bm25",
-    "bm25_batch",
     "replace_diacritics",
     "bounded_levenshtein",
     "bounded_levenshtein_batch",

@@ -20,8 +20,6 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import numpy as np
-
 
 @dataclass(frozen=True)
 class BM25Params:
@@ -43,22 +41,6 @@ def bm25(
 ) -> float:
     """Scalar port of ``BM25`` (algorithms.ts:116-126)."""
     idf = math.log(1 + (docs_count - matching_count + 0.5) / (matching_count + 0.5))
-    return (idf * (params.d + tf * (params.k + 1))) / (
-        tf + params.k * (1 - params.b + (params.b * field_length) / average_field_length)
-    )
-
-
-def bm25_batch(
-    tf: np.ndarray,
-    matching_count: np.ndarray,
-    docs_count: float,
-    field_length: np.ndarray,
-    average_field_length: float,
-    params: BM25Params = DEFAULT_BM25,
-) -> np.ndarray:
-    """Vectorized BM25 for Arrow-batched scoring (same formula)."""
-    # plain log(1+x) to match JS Math.log(1 + x) bit-for-bit, not log1p
-    idf = np.log(1.0 + (docs_count - matching_count + 0.5) / (matching_count + 0.5))
     return (idf * (params.d + tf * (params.k + 1))) / (
         tf + params.k * (1 - params.b + (params.b * field_length) / average_field_length)
     )

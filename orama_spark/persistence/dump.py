@@ -105,7 +105,6 @@ def save_dump(
     indexes: dict[str, Any] = {}
     frequencies: dict[str, Any] = {}
     token_occurrences: dict[str, Any] = {}
-    allow_dup = config.tokenizer.allow_duplicates
 
     for prop in config.schema:
         ptype = config.schema[prop]
@@ -117,12 +116,10 @@ def save_dump(
             for term, g in sub.groupby("term", sort=True):
                 iids = sorted(int(i) for i in g["iid"])
                 term_docs.append((str(term), iids))
-                # tokenOccurrences increments once per insertTokenScore-
-                # Parameters call — once per OCCURRENCE when duplicates
-                # are kept, once per (doc, token) otherwise
-                # (components/index.ts:113-118, tokenizer dedup
-                # tokenizer/index.ts:57-73)
-                occs[str(term)] = int(g["occ"].sum()) if allow_dup else len(g)
+                # tokenOccurrences is the dictionary's df = Σocc
+                # (build/indexer.py term_df): a string[] doc counts a
+                # token once per element that holds it
+                occs[str(term)] = int(g["occ"].sum())
             indexes[prop] = {
                 "type": "Radix",
                 "node": build_radix(term_docs),

@@ -10,18 +10,22 @@ Two modes:
 - ``verbatim`` (default): trust the dump's own structures — walk the
   radix trees for (term -> internal ids), take tf from ``frequencies``,
   field lengths from ``fieldLengths``, stats from ``avgFieldLength``
-  (methods/serialization.ts:13-20 applied to our table layout). This
-  reproduces the saved instance EXACTLY even if it was built with
-  custom components we don't replicate (custom tokenizer hooks, manual
-  tf edits). Token order within a document is not in the dump, so the
-  ``tokens`` table (used only by incremental maintenance re-tokenize
-  paths) is regenerated with our tokenizer.
+  (methods/serialization.ts:13-20 applied to our table layout), with
+  each posting's occ = tf * field_len. That occ is exact for scalar
+  fields; a string[] dump keeps only the last element's frequencies,
+  so a token repeated across elements gets too small an occ (and df) —
+  restore such indexes with ``rebuild``. Otherwise this reproduces the
+  saved instance EXACTLY even if it was built with custom components
+  we don't replicate (custom tokenizer hooks, manual tf edits). The
+  dictionaries and the ``tokens`` table (used only by incremental
+  maintenance re-tokenize paths; token order is not in the dump) are
+  derived by the builder's table functions (build/indexer.py).
 
 - ``rebuild``: extract the raw docs and run IndexBuilder — the full
   distributed build with every facility (bylen dictionary, manifest
-  resume, docmeta). Identical to verbatim whenever the dump came from
-  the same tokenizer config; preferable when the restored index will
-  keep growing at scale.
+  resume, docmeta). Identical to verbatim (string[] caveat above)
+  whenever the dump came from the same tokenizer config; preferable
+  when the restored index will keep growing at scale.
 
 The dump parse + table assembly are driver-side (the dump is one JSON
 document — see dump.py's scale posture); the parquet writes and the
@@ -37,6 +41,13 @@ from typing import Any, Optional
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..build.indexer import (
+    IndexBuilder,
+    dictionary_bylen_table,
+    dictionary_table,
+    postings_layout,
+    tokens_table,
+)
 from ..config import IndexConfig
 from .format import walk_radix
 
@@ -81,14 +92,12 @@ def restore_index(
     docs_df = _docs_df(spark, docs_rows, config)
 
     if mode == "rebuild":
-        from ..build.indexer import IndexBuilder
-
         IndexBuilder(config).build(
             docs_df, out_dir, input_id=f"restored-{len(docs_rows)}"
         )
         return out_dir
 
-    # ---- verbatim: postings/dictionary/stats straight from the dump
+    # ---- verbatim: postings/docmeta/stats straight from the dump
     index_dump = raw["index"]
     freqs = index_dump.get("frequencies", {})
     flens = index_dump.get("fieldLengths", {})
@@ -125,31 +134,21 @@ def restore_index(
         T.StructField("field_len", T.IntegerType()),
         T.StructField("occ", T.IntegerType()),
     ])
-    postings = spark.createDataFrame(post_rows, post_schema).repartition(
-        max(1, min(32, len(post_rows) // 50_000 + 1)), "field", "term"
-    )
-
+    # postings and docmeta come from the dump; tokens and both
+    # dictionaries are derived by the builder's table functions
+    width = max(1, min(32, len(post_rows) // 50_000 + 1))
+    postings_path = os.path.join(out_dir, "postings")
+    dict_path = os.path.join(out_dir, "dictionary")
     os.makedirs(out_dir, exist_ok=True)
-    postings.sortWithinPartitions("field", "term", "docid").write.mode(
+    postings_layout(spark.createDataFrame(post_rows, post_schema), width).write.mode(
         "overwrite"
-    ).parquet(os.path.join(out_dir, "postings"))
-
-    from pyspark.sql import functions as F
-
-    postings_r = spark.read.parquet(os.path.join(out_dir, "postings"))
-    dictionary = (
-        postings_r.groupBy("field", "term")
-        .agg(F.count("*").alias("df"))
-        .orderBy("field", "term")
-    )
-    dictionary.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "dictionary")
-    )
-    dictionary.select(
-        "field", F.length("term").cast("int").alias("term_len"), "term", "df"
-    ).orderBy("field", "term_len", "term").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "dictionary_bylen")
-    )
+    ).parquet(postings_path)
+    dictionary_table(spark.read.parquet(postings_path), width // 8).write.mode(
+        "overwrite"
+    ).parquet(dict_path)
+    dictionary_bylen_table(spark.read.parquet(dict_path), width // 8).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(out_dir, "dictionary_bylen"))
 
     docs_df.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
 
@@ -183,23 +182,11 @@ def restore_index(
     with open(os.path.join(out_dir, "stats.json"), "w") as f:
         json.dump(stats, f, indent=1)
 
-    # tokens table (maintenance re-tokenize input): token order is not
-    # in the dump — regenerate with our tokenizer, distributed (same
-    # Arrow-UDF pass as the builder's tokens stage, indexer.py:126-143)
-    from ..build.indexer import _tok_col
-    from ..build.tokenize import tokens_arr_udf, tokens_udf
-
-    tok_cols = [
-        (
-            tokens_arr_udf(config.tokenizer, f_)(F.col(f_))
-            if config.schema[f_] == "string[]"
-            else tokens_udf(config.tokenizer, f_)(F.col(f_).cast("string"))
-        ).alias(_tok_col(f_))
-        for f_ in config.searchable_fields
-    ]
-    docs_df.select(
-        F.col(config.docid_col).alias("docid"), *tok_cols
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "tokens"))
+    # token order is not in the dump: the tokens table (maintenance
+    # re-tokenize input) is regenerated with our tokenizer
+    tokens_table(docs_df, config).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "tokens")
+    )
 
     from ..build.manifest import BuildManifest
 

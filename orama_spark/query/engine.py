@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import BooleanType
 
+from ..build.indexer import term_len
 from ..config import IndexConfig
 from ..kernel.levenshtein import bounded_levenshtein_batch
 from ..kernel.tokenizer import Tokenizer
@@ -187,6 +188,20 @@ class SearchResult:
         return final[self.offset : self.offset + self.limit]
 
 
+def _with_delta(table: DataFrame, delta: DataFrame) -> DataFrame:
+    """Compose summed df deltas (field, term, ddf) into either dictionary
+    table: a full outer join on (field, term) that keeps the table's
+    columns, derives term_len for terms only the delta knows, and drops
+    terms whose df falls to 0."""
+    df = F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("ddf"), F.lit(0))
+    cols = {"df": df, "term_len": F.coalesce(F.col("term_len"), term_len())}
+    return (
+        table.join(delta, ["field", "term"], "full_outer")
+        .select(*[cols[c].alias(c) if c in cols else c for c in table.columns])
+        .where(F.col("df") > 0)
+    )
+
+
 class SearchIndex:
     """A loaded index: docs + postings + dictionary + stats."""
 
@@ -197,6 +212,7 @@ class SearchIndex:
         docs: DataFrame,
         postings: DataFrame,
         dictionary: DataFrame,
+        dictionary_bylen: DataFrame,
         stats: dict,
     ):
         self.spark = spark
@@ -204,13 +220,10 @@ class SearchIndex:
         self.docs = docs
         self.postings = postings
         self.dictionary = dictionary
+        # the (field, term_len, term)-sorted copy fuzzy length bands scan
+        self.dictionary_bylen = dictionary_bylen
         self.stats = stats
         self.tokenizer = Tokenizer(config.tokenizer)
-        # fuzzy length-band scans use the (field, term_len, term)-sorted
-        # copy when the index ships one (load() overrides this default)
-        self.dictionary_bylen = dictionary.select(
-            "field", F.length("term").cast("int").alias("term_len"), "term", "df"
-        )
         # (tokens, props, tolerance) -> (collected expansion | None, tokens_found)
         self._fuzzy_cache: dict[tuple, tuple] = {}
         self._where = WhereCompiler(
@@ -232,14 +245,7 @@ class SearchIndex:
         docs = spark.read.parquet(os.path.join(index_dir, "docs"))
         postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         dictionary = spark.read.parquet(os.path.join(index_dir, "dictionary"))
-        bylen_path = os.path.join(index_dir, "dictionary_bylen")
-        if os.path.exists(bylen_path):
-            dictionary_bylen = spark.read.parquet(bylen_path)
-        else:
-            # older index layout: same semantics, no length pruning
-            dictionary_bylen = dictionary.select(
-                "field", F.length("term").cast("int").alias("term_len"), "term", "df"
-            )
+        dictionary_bylen = spark.read.parquet(os.path.join(index_dir, "dictionary_bylen"))
 
         tomb_path = os.path.join(index_dir, "tombstones")
         if os.path.exists(tomb_path):
@@ -258,38 +264,11 @@ class SearchIndex:
                 .groupBy("field", "term")
                 .agg(F.sum("ddf").alias("ddf"))
             )
-            dictionary = (
-                dictionary.join(delta, ["field", "term"], "full_outer")
-                .select(
-                    "field",
-                    "term",
-                    (
-                        F.coalesce(F.col("df"), F.lit(0))
-                        + F.coalesce(F.col("ddf"), F.lit(0))
-                    ).alias("df"),
-                )
-                .where(F.col("df") > 0)
-            )
-            dictionary_bylen = (
-                dictionary_bylen.join(delta, ["field", "term"], "full_outer")
-                .select(
-                    "field",
-                    F.coalesce(
-                        F.col("term_len"), F.length("term").cast("int")
-                    ).alias("term_len"),
-                    "term",
-                    (
-                        F.coalesce(F.col("df"), F.lit(0))
-                        + F.coalesce(F.col("ddf"), F.lit(0))
-                    ).alias("df"),
-                )
-                .where(F.col("df") > 0)
-            )
+            dictionary = _with_delta(dictionary, delta)
+            dictionary_bylen = _with_delta(dictionary_bylen, delta)
 
-        idx = cls(spark, config, docs=docs, postings=postings,
-                  dictionary=dictionary, stats=stats)
-        idx.dictionary_bylen = dictionary_bylen
-        return idx
+        return cls(spark, config, docs=docs, postings=postings, dictionary=dictionary,
+                   dictionary_bylen=dictionary_bylen, stats=stats)
 
     # -------------------------------------------------------- expansion
     def _expansion_df(

@@ -310,3 +310,70 @@ def test_string_array_remove_nan_quirk(spark, tmpdir_index):
     idx = SearchIndex.load(spark, tmpdir_index, cfg)
     assert math.isnan(idx.stats["fields"]["tags"]["avg_field_length"])
     assert math.isnan(orc.avg_field_length["tags"])
+
+
+# ------------------------------------------------------ table parity
+def _table(spark, root, name):
+    """A table's rows as a multiset, nested lists frozen to tuples."""
+    from collections import Counter
+
+    def freeze(v):
+        return tuple(freeze(x) for x in v) if isinstance(v, list) else v
+
+    return Counter(
+        tuple(sorted((k, freeze(v)) for k, v in r.asDict(recursive=True).items()))
+        for r in spark.read.parquet(f"{root}/{name}").collect()
+    )
+
+
+PARITY_CASES = {
+    "scalar": (
+        {"t": "string", "cat": "enum"},
+        {},
+        ROWS,
+        [{"docid": 10, "t": "alpha nu xi", "cat": "w"},
+         {"docid": 11, "t": "omega omicron alpha", "cat": "w"}],
+    ),
+    "string_array": (
+        TAGS_SCHEMA,
+        {},
+        TAGS_ROWS + [{"docid": 6, "tags": ["red kite", "blue jay red"], "cat": "w"}],
+        [{"docid": 10, "tags": ["red red", "grey seal", "red"], "cat": "w"},
+         {"docid": 11, "tags": ["blue whale"], "cat": "x"},
+         {"docid": 12, "tags": [], "cat": "x"}],
+    ),
+    "allow_duplicates": (
+        {"t": "string"},
+        {"allow_duplicates": True},
+        [{"docid": 1, "t": "alpha alpha alpha beta"},
+         {"docid": 2, "t": "alpha beta beta"},
+         {"docid": 3, "t": "gamma alpha"},
+         {"docid": 4, "t": "delta"}],
+        [{"docid": 10, "t": "beta beta gamma"},
+         {"docid": 11, "t": "alpha delta delta delta"}],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PARITY_CASES))
+def test_maintained_tables_equal_fresh_build(spark, tmp_path, case):
+    """build(A) + insert(B) + remove(R) + compact writes the same tokens,
+    postings, docmeta and dictionaries as a fresh build of (A ∪ B) \\ R."""
+    from orama_spark.kernel.tokenizer import TokenizerConfig
+
+    schema, tok, a_rows, b_rows = PARITY_CASES[case]
+    cfg = IndexConfig(schema=schema, tokenizer=TokenizerConfig(**tok))
+    removed = {2, 6, 10}
+    maintained, fresh = str(tmp_path / "maintained"), str(tmp_path / "fresh")
+    IndexBuilder(cfg, postings_partitions=2).build(
+        spark.createDataFrame(a_rows), maintained, input_id="a")
+    insert_documents(spark, maintained, cfg, spark.createDataFrame(b_rows))
+    remove_documents(spark, maintained, cfg, spark.createDataFrame(
+        [(d,) for d in sorted(removed)], "docid long"))
+    compact(spark, maintained, cfg)
+    kept = [r for r in a_rows + b_rows if r["docid"] not in removed]
+    IndexBuilder(cfg, postings_partitions=2).build(
+        spark.createDataFrame(kept, spark.createDataFrame(a_rows).schema),
+        fresh, input_id="fresh")
+    for name in ("tokens", "postings", "docmeta", "dictionary", "dictionary_bylen"):
+        assert _table(spark, maintained, name) == _table(spark, fresh, name), name

@@ -39,6 +39,14 @@ DOCS = [
 ]
 SCHEMA = {"title": "string", "views": "number", "cat": "enum",
           "ok": "boolean"}
+# repeated tokens: under allow_duplicates 'spark' has 4 occurrences in 3
+# docs and 'merge' 4 in 2
+DUP_DOCS = [
+    (1, "spark spark merge"),
+    (2, "spark merge merge merge"),
+    (3, "spark streaming join"),
+    (4, "sort join shuffle"),
+]
 
 
 @pytest.fixture(scope="module")
@@ -197,6 +205,24 @@ class TestSaveDump:
         assert occ["quick"] == 4  # docs 1-4 (dedup tokenizer: df)
         assert occ["fox"] == 3  # docs 1, 4 ('foxes' stems to 'fox'), 5
 
+    def test_token_occurrences_count_array_elements(self, spark, tmp_path):  # noqa: F811
+        """A string[] doc counts a token once per element that holds it
+        (the reference inserts each element), so 'red' is 4, not 2 docs."""
+        from orama_spark.oracle.engine import OramaOracle
+
+        cfg = IndexConfig(schema={"tags": "string[]"}, docid_col="id")
+        rows = [(1, ["red fox", "red hen"]), (2, ["blue jay"]),
+                (3, ["red", "fox red"])]
+        d = str(tmp_path / "arr")
+        IndexBuilder(cfg).build(spark.createDataFrame(rows, ["id", "tags"]), d,
+                                input_id="persist-arr")
+        orc = OramaOracle({"tags": "string[]"})
+        for i, tags in rows:
+            orc.insert({"tags": tags}, docid=i)
+        occ = P.save_dump(spark, d, cfg)["index"]["tokenOccurrences"]["tags"]
+        assert occ == orc.token_occurrences["tags"]
+        assert occ["red"] == 4
+
     def test_export_guards(self, spark, built):  # noqa: F811
         d, cfg = built
         with pytest.raises(ValueError, match="max_docs"):
@@ -225,21 +251,50 @@ class TestRoundTrip:
             assert [(r["docid"], round(r["score"], 12)) for r in ra] == \
                    [(r["docid"], round(r["score"], 12)) for r in rb], term
 
-    def test_rebuild_mode_equals_verbatim(self, spark, built, tmp_path):  # noqa: F811
-        d, cfg = built
+    @pytest.mark.parametrize("case", ["default", "allow_duplicates"])
+    def test_rebuild_mode_equals_verbatim(self, spark, built, tmp_path,  # noqa: F811
+                                          case):
+        """Verbatim restore writes the same postings and both dictionaries
+        as a rebuild, and ranks identically. Under allow_duplicates a
+        term's df is its occurrence count, not its document count."""
+        if case == "default":
+            d, cfg = built
+            queries = ["quick fox", "sleep", "qui"]
+        else:
+            cfg = IndexConfig(schema={"title": "string"},
+                              tokenizer=TokenizerConfig(allow_duplicates=True),
+                              docid_col="id")
+            d = str(tmp_path / "dup")
+            IndexBuilder(cfg).build(
+                spark.createDataFrame(DUP_DOCS, ["id", "title"]), d,
+                input_id="persist-dup")
+            queries = ["spark merge", "merge", "spark join"]
         dump = P.save_dump(spark, d, cfg)
         v = str(tmp_path / "v")
         r = str(tmp_path / "r")
         P.restore_index(spark, dump, v, cfg, mode="verbatim")
         P.restore_index(spark, dump, r, cfg, mode="rebuild")
-        pv = (spark.read.parquet(v + "/postings")
-              .orderBy("field", "term", "docid").collect())
-        pr = (spark.read.parquet(r + "/postings")
-              .orderBy("field", "term", "docid").collect())
-        assert [(x["field"], x["term"], x["docid"], round(x["tf"], 12),
-                 x["field_len"], x["occ"]) for x in pv] == \
-               [(x["field"], x["term"], x["docid"], round(x["tf"], 12),
-                 x["field_len"], x["occ"]) for x in pr]
+
+        def table(root, name, cols):
+            return sorted(
+                tuple(round(x[c], 12) if c == "tf" else x[c] for c in cols)
+                for x in spark.read.parquet(f"{root}/{name}").collect())
+
+        for name, cols in [
+            ("postings", ["field", "term", "docid", "tf", "field_len", "occ"]),
+            ("dictionary", ["field", "term", "df"]),
+            ("dictionary_bylen", ["field", "term_len", "term", "df"]),
+        ]:
+            assert table(v, name, cols) == table(r, name, cols), name
+        iv = SearchIndex.load(spark, v, cfg)
+        ir = SearchIndex.load(spark, r, cfg)
+        for term in queries:
+            hv = iv.search(term=term, limit=10).top_df().collect()
+            hr = ir.search(term=term, limit=10).top_df().collect()
+            assert hv, term
+            assert [x["docid"] for x in hv] == [x["docid"] for x in hr], term
+            for x, y in zip(hv, hr):
+                assert x["score"] == pytest.approx(y["score"], rel=1e-12), term
 
     def test_stats_survive(self, spark, built, tmp_path):  # noqa: F811
         d, cfg = built
