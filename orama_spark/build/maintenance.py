@@ -25,6 +25,7 @@ expiry, which TableIO can adopt without touching engine logic.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -156,6 +157,37 @@ def remove_documents(
     return stats
 
 
+def _insert_probe(
+    spark: SparkSession, new_ids: DataFrame, doc_ids: DataFrame, tomb_path: str
+) -> tuple:
+    """(new rows, new rows whose docid is live in the index, new rows
+    whose docid is tombstoned) in ONE aggregate: the new, stored and
+    tombstoned docids are tagged, unioned and grouped by docid, so
+    duplicates on any side count as the separate semi-join counts they
+    replace would count them."""
+    one, zero = F.lit(1), F.lit(0)
+    tagged = [
+        new_ids.select("docid", one.alias("n"), zero.alias("stored"), zero.alias("dead")),
+        doc_ids.select("docid", zero.alias("n"), one.alias("stored"), zero.alias("dead")),
+    ]
+    if os.path.exists(tomb_path):
+        tagged.append(spark.read.parquet(tomb_path).select(
+            "docid", zero.alias("n"), zero.alias("stored"), one.alias("dead")
+        ))
+    per_id = (
+        functools.reduce(DataFrame.unionByName, tagged)
+        .groupBy("docid")
+        .agg(F.sum("n").alias("n"), F.max("stored").alias("stored"), F.max("dead").alias("dead"))
+        .where(F.col("n") > 0)
+    )
+    row = per_id.agg(
+        F.sum("n").alias("n_new"),
+        F.sum(F.when((F.col("stored") == 1) & (F.col("dead") == 0), F.col("n"))).alias("dup"),
+        F.sum(F.when(F.col("dead") == 1, F.col("n"))).alias("reinserts"),
+    ).collect()[0]
+    return int(row["n_new"] or 0), int(row["dup"] or 0), int(row["reinserts"] or 0)
+
+
 def insert_documents(
     spark: SparkSession, index_dir: str, config: IndexConfig, new_docs: DataFrame
 ) -> dict:
@@ -165,35 +197,23 @@ def insert_documents(
     new_docs = config.hooks.run_transform("before_insert_multiple", new_docs)
     docid = config.docid_col
     docs_path = os.path.join(index_dir, "docs")
-    existing_ids = spark.read.parquet(docs_path).select(F.col(docid).alias("docid"))
     tomb_path = os.path.join(index_dir, "tombstones")
-    if os.path.exists(tomb_path):
-        existing_ids = existing_ids.join(
-            spark.read.parquet(tomb_path), "docid", "left_anti"
-        )
-    dup = (
-        new_docs.select(F.col(docid).alias("docid"))
-        .join(existing_ids, "docid", "left_semi")
-        .count()
+    new_docs = new_docs.persist()
+    n_new, dup, tombstoned_reinserts = _insert_probe(
+        spark, new_docs.select(F.col(docid).alias("docid")),
+        spark.read.parquet(docs_path).select(F.col(docid).alias("docid")),
+        tomb_path,
     )
     if dup:
+        new_docs.unpersist()
         raise ValueError(f"DOCUMENT_ALREADY_EXISTS: {dup} duplicate docids")
-
-    new_docs = new_docs.persist()
-    n_new = new_docs.count()
 
     # re-inserting a tombstoned id: simply clearing the tombstone would
     # REVIVE the dead base rows alongside the new ones. Fold tombstones
     # physically first (compact), then append — correct always, costs a
     # rewrite only on the remove-then-reinsert path.
-    if os.path.exists(tomb_path):
-        tombstoned_reinserts = (
-            new_docs.select(F.col(docid).alias("docid"))
-            .join(spark.read.parquet(tomb_path), "docid", "left_semi")
-            .count()
-        )
-        if tombstoned_reinserts:
-            compact(spark, index_dir, config)
+    if tombstoned_reinserts:
+        compact(spark, index_dir, config)
 
     new_docs.write.mode("append").parquet(docs_path)
 

@@ -130,6 +130,15 @@ def _shingle_hash_rows(
     Carrying sz on every row lets callers aggregate pair sizes without
     a second corpus pass. Cardinality changes per row, hence mapInArrow
     rather than a pandas UDF.
+
+    Semantic boundary: two different shingles with the same 64-bit gh
+    compare equal. Treating gh as uniform, N distinct shingles across
+    the compared tables give about N²/2⁶⁵ colliding pairs: ~0.5 at
+    N = 2³², ~128 at 2³⁶. Up to ~2³² the results are exact in
+    practice; far beyond it a collision can add a shared shingle that
+    is not there (a Jaccard estimate too high, a spurious pair or
+    contamination hit) or merge two of one doc's shingles (sz one
+    short). It never loses a shingle two docs really share.
     """
     import re
 
@@ -409,6 +418,12 @@ def minhash_lsh_pairs(
     rows/band r = n_hashes/bands; P(candidate) = 1-(1-j^r)^bands.
     ``max_bucket_size`` caps degenerate buckets (all-identical boiler-
     plate) before the quadratic within-bucket join.
+
+    Semantic boundary: the signatures are materialized once with
+    ``localCheckpoint``, which keeps no lineage. If an executor holding
+    checkpoint blocks is lost mid-query the query fails with a
+    missing-checkpoint-block error rather than recomputing them; rerun
+    it (the signatures are deterministic, so the pairs are the same).
     """
     assert n_hashes % bands == 0
     r = n_hashes // bands

@@ -16,41 +16,83 @@ Physical plan (what makes this hold at 10^12 docs):
     so exact/prefix lookups hit few parquet row-groups; fuzzy expansion
     scans a length-banded slice refined by an Arrow-vectorized bounded
     Levenshtein.
-  * small expansions (the normal case: a handful of query tokens, each
-    expanding to < ~50k words) are collected and re-joined as a
-    BROADCAST table, plus a literal term IN-list pre-filter on postings
-    so the parquet scan prunes row-groups by the sorted term column —
-    postings never shuffle for a query.
-  * scoring is pure JVM expression code (whole-stage codegen): BM25 is
-    log/arithmetic on (tf, field_len) columns already denormalized into
-    postings, with df/avg_field_length/docs_count joined from the tiny
-    expansion or inlined as literals. No Python in the per-posting path.
-  * top-k uses orderBy().limit() = TakeOrdered (per-partition heaps +
-    driver merge), never a global sort.
+  * bounded searches (the normal case: a handful of query tokens whose
+    expansion has at most EXPANSION_COLLECT_CAP rows and whose postings
+    number at most DRIVER_POSTINGS_CAP) score on the driver, as Orama
+    scores in process. One job reads the matched dictionary rows (a
+    fuzzy query reads its cached expansion instead); Σdf over them
+    bounds the postings rows, so a query over the cap is sent to the
+    distributed plan before any posting is read. A second job reads the
+    postings under the same literal term predicate (parquet min/max
+    prunes row-groups on the sorted term column), joined with the
+    ``where`` docids by a broadcast of the bounded postings side. The
+    rows are scored with the numpy BM25 WAND uses (build/blocks.py
+    ``bm25_scores``, idf per dictionary row), summed per doc in a fixed
+    (field, term) order, thresholded and ranked by (score DESC, docid
+    ASC); the result is a driver-side frame and its pages are local
+    DataFrames (a LocalTableScan: collecting one starts no job).
+  * over the cap the same query runs as a distributed plan: scoring is
+    pure JVM expression code (whole-stage codegen) over (tf, field_len)
+    columns already denormalized into postings, with df joined from the
+    pruned expansion (broadcast, plus the literal postings pre-filter,
+    so postings never shuffle for a query) and avg_field_length /
+    docs_count inlined as literals. No Python in the per-posting path.
+  * top-k over the distributed plan uses orderBy().limit() =
+    TakeOrdered (per-partition heaps + driver merge), never a global
+    sort.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
 import re
-from dataclasses import dataclass, field as dc_field
-from typing import Any, Optional
+from typing import Optional
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import (
+    BooleanType, DoubleType, LongType, StringType, StructField, StructType,
+)
 
+from ..build.blocks import bm25_scores, idf_per_row
 from ..build.indexer import term_len
 from ..config import IndexConfig
 from ..kernel.levenshtein import bounded_levenshtein_batch
 from ..kernel.tokenizer import Tokenizer
 from .filters import WhereCompiler
 
-# Collect-to-driver cap for term expansions; larger expansions stay
-# distributed (plain join instead of broadcast + IN-list pushdown).
+# Rows a collected expansion (field, qtoken, term, df) may have. Over it
+# a search runs the distributed plan, and a fuzzy expansion is joined as
+# a plan (no broadcast or literal IN-list pushdown).
 EXPANSION_COLLECT_CAP = 50_000
+# Postings rows a search may score on the driver. The bound is checked
+# before any postings row is read: Σdf over the matched (field, term)
+# pairs of the expansion is at least the postings rows they select.
+# Measured with tools/cap_crossover.py (100k-doc web corpus, local[4],
+# 4-core VM; driver vs distributed, median ms): OR queries of common
+# words stay 2-3x faster on the driver to 324k rows (950 vs 2,995),
+# while one prefix expanding to many words is where the driver path
+# pays most per row: 255k rows 578 vs 819, 484k 900 vs 1,036, 916k
+# 1,192 vs 1,126, 1.33M 1,399 vs 1,068. The cap sits where that worst
+# shape is still ~30% faster on the driver, about half its crossover
+# (between 484k and 916k rows). Both caps are read at call time, so a test can
+# force the distributed path by patching them (to -1: even an empty
+# expansion is over them).
+DRIVER_POSTINGS_CAP = 250_000
+
+_SCORED = StructType([
+    StructField("docid", LongType()), StructField("score", DoubleType()),
+])
+_EXPANSION = StructType([
+    StructField("field", StringType()), StructField("qtoken", StringType()),
+    StructField("term", StringType()), StructField("df", LongType()),
+])
 
 
 def _escape_java_regex(s: str) -> str:
@@ -105,21 +147,52 @@ def _paged(df: DataFrame, keys: list, offset: int, limit: int) -> DataFrame:
     )
 
 
-@dataclass
 class SearchResult:
-    """Lazy result: ``scored`` is the full pre-pagination match set
-    (docid, score); hits/facets/groups derive from it."""
+    """Lazy result over the full pre-pagination match set (docid,
+    score); hits/facets/groups derive from it.
 
-    index: "SearchIndex"
-    scored: DataFrame
-    offset: int = 0
-    limit: int = 10
+    A bounded search hands over ``ranked``: the whole match set on the
+    driver, in rank order (score DESC, docid ASC). ``scored`` is then
+    built from it on first use as a local DataFrame, ``count()`` is its
+    length and a page is a slice. ``fetch`` is the search's postings
+    fetch, kept for plan inspection (not run when the expansion leaves
+    nothing to score; None for a term with no tokens).
+    Over the cap ``scored`` is the distributed plan and ``ranked`` is
+    None."""
+
+    def __init__(
+        self,
+        index: "SearchIndex",
+        scored: Optional[DataFrame] = None,
+        offset: int = 0,
+        limit: int = 10,
+        ranked: Optional[pd.DataFrame] = None,
+        fetch: Optional[DataFrame] = None,
+    ):
+        self.index = index
+        self._scored = scored
+        self.offset = offset
+        self.limit = limit
+        self.ranked = ranked
+        self.fetch = fetch
+
+    @property
+    def scored(self) -> DataFrame:
+        if self._scored is None:
+            self._scored = self.index._local(self.ranked, _SCORED)
+        return self._scored
 
     def count(self) -> int:
+        if self.ranked is not None:
+            return len(self.ranked)
         return self.scored.count()
 
     def top_df(self) -> DataFrame:
         """(docid, score) page in rank order (score DESC, docid ASC)."""
+        if self.ranked is not None:
+            lo = self.offset
+            page = self.ranked.iloc[lo : lo + max(self.limit, 0)]
+            return self.index._local(page, _SCORED)
         return _paged(
             self.scored, [F.desc("score"), F.asc("docid")], self.offset, self.limit
         )
@@ -188,6 +261,54 @@ class SearchResult:
         return final[self.offset : self.offset + self.limit]
 
 
+def _term_predicate(tokens: list[str], exact: bool) -> Optional[Column]:
+    """Literal predicate on ``term`` covering every word the tokens
+    expand to (exact: IN-list, prefix: startswith) — the form parquet
+    min/max pruning understands; None when a "" token expands to the
+    whole trie."""
+    if any(t == "" for t in tokens):
+        return None
+    if exact:
+        return F.col("term").isin(tokens)
+    return functools.reduce(Column.__or__, [F.col("term").startswith(t) for t in tokens])
+
+
+def _expand(tokens: list[str], exact: bool, dic: pa.Table) -> pd.DataFrame:
+    """Expansion rows (field, qtoken, term, df) of fetched dictionary
+    rows: one row per (query token, matched word), tokens repeated as
+    often as the query repeats them — the rows ``_expansion_df`` plans."""
+    parts = []
+    for tok in tokens:
+        if tok == "" and not exact:
+            hit = dic
+        else:
+            op = pc.equal if exact else pc.starts_with
+            hit = dic.filter(op(dic.column("term"), tok))
+        part = hit.to_pandas()
+        part.insert(1, "qtoken", tok)
+        parts.append(part)
+    return pd.concat(parts, ignore_index=True)
+
+
+def _misses_a_token(exp: pd.DataFrame, tokens: list[str], threshold: float) -> bool:
+    """Threshold 0 with several tokens needs every token to match
+    somewhere (index.ts:554-560)."""
+    return threshold == 0 and len(tokens) > 1 and not set(tokens) <= set(exp["qtoken"])
+
+
+def _ranked(ids=(), score=()) -> pd.DataFrame:
+    return pd.DataFrame({
+        "docid": np.asarray(ids, dtype=np.int64),
+        "score": np.asarray(score, dtype=np.float64),
+    })
+
+
+def _rank_order(ids: np.ndarray, score: np.ndarray) -> np.ndarray:
+    """Indices in rank order: score DESC, docid ASC. NaN ranks first,
+    as Spark orders NaN above every number."""
+    return np.lexsort((ids, -score, ~np.isnan(score)))
+
+
 def _with_delta(table: DataFrame, delta: DataFrame) -> DataFrame:
     """Compose summed df deltas (field, term, ddf) into either dictionary
     table: a full outer join on (field, term) that keeps the table's
@@ -224,8 +345,11 @@ class SearchIndex:
         self.dictionary_bylen = dictionary_bylen
         self.stats = stats
         self.tokenizer = Tokenizer(config.tokenizer)
-        # (tokens, props, tolerance) -> (collected expansion | None, tokens_found)
-        self._fuzzy_cache: dict[tuple, tuple] = {}
+        # (tokens, props, tolerance) -> collected fuzzy expansion | None
+        self._fuzzy_cache: dict[tuple, Optional[pd.DataFrame]] = {}
+        # props -> the (dictionary, postings) scans of the expansion
+        # probe and the bounded path
+        self._bases: dict[tuple, tuple] = {}
         self._where = WhereCompiler(
             config,
             docs,
@@ -329,14 +453,197 @@ class SearchIndex:
         min/max prunes row-groups on the sorted term column — the reason
         exact/prefix queries never shuffle or fully scan postings."""
         p = self.postings.where(F.col("field").isin(props))
-        if any(t == "" for t in tokens):
-            return p  # whole-trie expansion: all terms participate
-        if exact:
-            return p.where(F.col("term").isin(tokens))
-        cond = F.col("term").startswith(tokens[0])
-        for t in tokens[1:]:
-            cond = cond | F.col("term").startswith(t)
-        return p.where(cond)
+        pred = _term_predicate(tokens, exact)
+        return p if pred is None else p.where(pred)
+
+    def _fuzzy_expansion(
+        self, tokens: list[str], props: list[str], tolerance: int
+    ) -> Optional[pd.DataFrame]:
+        """The expansion rows of a fuzzy query, or None when there are
+        more than EXPANSION_COLLECT_CAP. Their matched-word set is the
+        literal IN-list that keeps the postings scan row-group-pruned (a
+        fuzzy predicate can't push into parquet). They only depend on
+        the dictionary, so they are collected once per (tokens, props,
+        tolerance) and cached; repeated fuzzy queries skip the scan.
+        Callers must not modify the frame."""
+        key = (tuple(tokens), tuple(props), tolerance)
+        if key not in self._fuzzy_cache:
+            cap = EXPANSION_COLLECT_CAP
+            got = self._expansion_df(tokens, props, False, tolerance).limit(cap + 1).toArrow()
+            self._fuzzy_cache.setdefault(key, None if got.num_rows > cap else got.to_pandas())
+        return self._fuzzy_cache[key]
+
+    def _expansion(
+        self, tokens: list[str], props: list[str], exact: bool, tolerance: int
+    ) -> tuple:
+        """(rows, pred): the expansion rows (field, qtoken, term, df) on
+        the driver, or None when there are more than
+        EXPANSION_COLLECT_CAP, and the literal predicate on ``term`` that
+        selects their postings (None: every term, or an over-cap fuzzy
+        expansion, which only a join can select). Exact and prefix
+        tokens read their matched dictionary rows in one job; a fuzzy
+        query reads its cached expansion."""
+        if tolerance and not exact and "" not in tokens:
+            exp = self._fuzzy_expansion(tokens, props, tolerance)
+            if exp is None:
+                return None, None
+            return exp, F.col("term").isin(sorted(set(exp["term"])))
+        pred = _term_predicate(tokens, exact)
+        dic = self._scans(props)[0]
+        cap = EXPANSION_COLLECT_CAP
+        got = (dic if pred is None else dic.where(pred)).limit(cap + 1).toArrow()
+        return (None if got.num_rows > cap else _expand(tokens, exact, got)), pred
+
+    def _text(
+        self,
+        term: str,
+        props: list[str],
+        exact: bool,
+        tolerance: int,
+        boost: dict[str, float],
+        threshold: float,
+        where_ids: Optional[DataFrame],
+    ) -> dict:
+        """``SearchResult`` arguments of a text search: ``ranked`` and
+        ``fetch`` from the bounded driver path when the expansion fits
+        under EXPANSION_COLLECT_CAP and its postings (Σdf over the
+        matched (field, term) pairs, at least the postings rows they
+        select) under DRIVER_POSTINGS_CAP; else ``scored``, the
+        distributed plan. The caps are checked before any posting is
+        read."""
+        tokens = self.tokenizer.tokenize(term)
+        if not tokens:
+            if term:
+                return {"ranked": _ranked()}
+            tokens = [""]
+        exp, pred = self._expansion(tokens, props, exact, tolerance)
+        if exp is not None and (
+            exp.drop_duplicates(["field", "term"])["df"].sum() <= DRIVER_POSTINGS_CAP
+        ):
+            ranked, fetch = self._bounded(tokens, exp, pred, props, boost, threshold, where_ids)
+            if exact and term and len(ranked):
+                ok = (
+                    self._matched_docs(ranked["docid"].to_numpy())
+                    .where(self._exact_predicate(term, props))
+                    .select(F.col(self.config.docid_col).cast("long"))
+                    .toArrow().column(0).to_numpy()
+                )
+                ranked = ranked[np.isin(ranked["docid"].to_numpy(), ok)].reset_index(drop=True)
+            return {"ranked": ranked, "fetch": fetch}
+        scored = self._scored(tokens, exp, pred, props, exact, tolerance, boost, threshold, where_ids)
+        if exact and term:
+            scored = self._exact_post_filter(scored, term, props)
+        return {"scored": scored}
+
+    # ----------------------------------------------------- bounded path
+    def _local(self, data, schema: StructType) -> DataFrame:
+        """A driver-side pandas frame or Arrow table as a local
+        DataFrame: it plans as a LocalTableScan, so collecting it starts
+        no Spark job (built from Arrow whatever the session's Arrow conf
+        says)."""
+        if isinstance(data, pd.DataFrame):
+            data = pa.Table.from_pandas(data, preserve_index=False)
+        return self.spark.createDataFrame(data, schema)
+
+    def _scans(self, props: list[str]) -> tuple:
+        """The (dictionary, postings) scans of the expansion probe and
+        the bounded path over ``props``, projected to the columns they
+        read; built on first use and shared by reader threads (a
+        DataFrame is immutable; two threads missing at once build equal
+        frames and the first stored wins). Reusing them keeps a query's
+        plan-building py4j calls to its own predicates."""
+        key = tuple(props)
+        got = self._bases.get(key)
+        if got is None:
+            in_props = F.col("field").isin(list(props))
+            got = self._bases.setdefault(key, (
+                self.dictionary.where(in_props).select("field", "term", "df"),
+                self.postings.where(in_props)
+                .select("field", "term", "docid", "tf", "field_len"),
+            ))
+        return got
+
+    def _matched_docs(self, ids: np.ndarray) -> DataFrame:
+        """The docs rows of a driver-side docid set (a semi-join with
+        the set as a local DataFrame, no literal IN-list)."""
+        docid = self.config.docid_col
+        ids_df = self._local(
+            pa.table({docid: pa.array(ids, pa.int64())}),
+            StructType([StructField(docid, LongType())]),
+        )
+        return self.docs.join(ids_df, docid, "left_semi")
+
+    def _bounded(
+        self,
+        tokens: list[str],
+        exp: pd.DataFrame,
+        pred: Optional[Column],
+        props: list[str],
+        boost: dict[str, float],
+        threshold: float,
+        where_ids: Optional[DataFrame],
+    ) -> tuple:
+        """``_scored`` on the driver: (ranked frame, postings fetch).
+        One job reads the postings under ``pred``, joined with the
+        ``where`` docids as a broadcast of the bounded postings side
+        (not run when the expansion leaves nothing to score)."""
+        fetch = self._scans(props)[1]
+        if pred is not None:
+            fetch = fetch.where(pred)
+        if where_ids is not None:
+            fetch = where_ids.join(F.broadcast(fetch), "docid")
+        if exp.empty or _misses_a_token(exp, tokens, threshold):
+            return _ranked(), fetch
+        exp = exp.assign(idf=idf_per_row(exp["df"].to_numpy(), float(self.stats["docs_count"])))
+        hits = fetch.toArrow().to_pandas().merge(exp[["field", "term", "idf"]], on=["field", "term"])
+        return self._rank(hits, len(tokens), boost, threshold), fetch
+
+    def _rank(
+        self,
+        hits: pd.DataFrame,
+        keywords_count: int,
+        boost: dict[str, float],
+        threshold: float,
+    ) -> pd.DataFrame:
+        """The scoring and threshold tail of ``_scored`` over one row per
+        (posting, matched query token): BM25 per row (``bm25_scores``,
+        the scorer WAND uses), summed per (docid, field) in term order
+        and per docid in field order — so a score never depends on fetch
+        order — then the threshold (components/index.ts:554-591) and rank order. Against the
+        distributed sums only the float-addition order differs, which
+        moves a score by a few ulp."""
+        hits = hits.sort_values(["docid", "field", "term"], kind="stable")
+        if hits.empty:
+            return _ranked()
+        field = hits["field"].to_numpy(object)
+        docid = hits["docid"].to_numpy(np.int64)
+        fl = hits["field_len"].to_numpy(np.float64)
+        avgs = {f_: float(v["avg_field_length"]) for f_, v in self.stats["fields"].items()}
+        s = bm25_scores(
+            hits["idf"].to_numpy(), fl, hits["tf"].to_numpy(np.float64),
+            hits["field"].map(avgs).to_numpy(np.float64), self.config.bm25,
+        )
+        if boost:
+            s = s * hits["field"].map(boost).fillna(1.0).to_numpy(np.float64)
+        starts = np.flatnonzero(np.r_[True, (docid[1:] != docid[:-1]) | (field[1:] != field[:-1])])
+        per_field = np.add.reduceat(s, starts)
+        full_field = np.diff(np.r_[starts, len(s)]) == keywords_count
+        doc_of = docid[starts]
+        dstarts = np.flatnonzero(np.r_[True, doc_of[1:] != doc_of[:-1]])
+        ids = doc_of[dstarts]
+        score = np.add.reduceat(per_field, dstarts)
+        full = np.logical_or.reduceat(full_field, dstarts)
+        if threshold == 0 and keywords_count > 1:
+            ids, score = ids[full], score[full]
+        elif threshold not in (0, 1) and full.any():
+            # all full matches + ceil(|partial| * t) of the best partials
+            partial = np.flatnonzero(~full)
+            take = max(math.ceil(len(partial) * threshold), 0)
+            sel = full.copy()
+            sel[partial[_rank_order(ids[partial], score[partial])[:take]]] = True
+            ids, score = ids[sel], score[sel]
+        order = _rank_order(ids, score)
+        return _ranked(ids[order], score[order])
 
     # ------------------------------------------------------------ search
     def search(
@@ -380,12 +687,10 @@ class SearchIndex:
         if where:
             where_ids = self._where.docids(where)
 
+        result = None
         if term or properties is not None:
-            scored = self._scored(
-                term or "", props, exact, tolerance, boost, threshold, where_ids
-            )
-            if exact and term:
-                scored = self._exact_post_filter(scored, term, props)
+            text = self._text(term or "", props, exact, tolerance, boost, threshold, where_ids)
+            result = SearchResult(self, offset=offset, limit=limit, **text)
         else:
             if where is not None and where != {}:
                 geo = self._geo_only(where)
@@ -399,7 +704,8 @@ class SearchIndex:
                 scored = self.docs.select(
                     F.col(docid).alias("docid"), F.lit(0.0).alias("score")
                 )
-        result = SearchResult(self, scored, offset=offset, limit=limit)
+        if result is None:
+            result = SearchResult(self, scored, offset=offset, limit=limit)
         if cfg.hooks.after_search:
             result = cfg.hooks.run_transform("after_search", result, self)
         return result
@@ -419,9 +725,10 @@ class SearchIndex:
         against the pruned dictionary, the postings scan is pre-filtered
         with the UNION of all queries' literal predicates (still
         row-group-prunable), and per-query top-k is one window over the
-        (qid, docid) scores. Rank- and score-identical with N separate
-        ``search()`` calls in the default mode (prefix, threshold=1,
-        no filters) — pinned in tests. ``exact=True`` matches the
+        (qid, docid) scores. Rank-identical with N separate ``search()``
+        calls in the default mode (prefix, threshold=1, no filters), with
+        scores equal within a few ulp (a bounded ``search()`` sums on the
+        driver in another order) — pinned in tests. ``exact=True`` matches the
         tokenized-exact find; the reference's case-sensitive exact
         POST-filter (issue #866, ``search(exact=True)``) is a per-query
         doc-store pass and is not applied here.
@@ -492,7 +799,9 @@ class SearchIndex:
 
     def _scored(
         self,
-        term: str,
+        tokens: list[str],
+        exp: Optional[pd.DataFrame],
+        pred: Optional[Column],
         props: list[str],
         exact: bool,
         tolerance: int,
@@ -500,77 +809,30 @@ class SearchIndex:
         threshold: float,
         where_ids: Optional[DataFrame],
     ) -> DataFrame:
-        """Port of index.search (components/index.ts:457-592) as a plan."""
-        cfg = self.config
-        tokens = self.tokenizer.tokenize(term)
-        keywords_count = len(tokens) or 1
-        if not tokens:
-            if term:
+        """Port of index.search (components/index.ts:457-592) as a plan:
+        the path of a search over either cap (see ``_text``). A collected
+        expansion ``exp`` is joined as a broadcast; over
+        EXPANSION_COLLECT_CAP (``exp`` None) the expansion stays a plan.
+        Postings are pre-filtered by the literal ``pred`` either way, so
+        parquet min/max prunes row-groups on the sorted term column."""
+        keywords_count = len(tokens)
+        if exp is not None:
+            if exp.empty or _misses_a_token(exp, tokens, threshold):
                 return self._empty_scored()
-            tokens = [""]
-
-        exp = self._expansion_df(tokens, props, exact, tolerance)
-        fuzzy = bool(tolerance) and not exact and all(t != "" for t in tokens)
-
-        if fuzzy:
-            # fuzzy is the one path that must materialize the expansion:
-            # the matched-word set is needed as a literal IN-list to keep
-            # the postings scan row-group-pruned (a fuzzy predicate can't
-            # push into parquet). The collected expansion is cached per
-            # (tokens, props, tolerance) — it only depends on the
-            # dictionary, so repeated fuzzy queries skip the scan.
-            cache_key = (tuple(tokens), tuple(props), tolerance)
-            hit = self._fuzzy_cache.get(cache_key)
-            if hit is None:
-                rows = exp.limit(EXPANSION_COLLECT_CAP + 1).collect()
-                if len(rows) > EXPANSION_COLLECT_CAP:
-                    # over-cap: the truncated sample is arbitrary — a
-                    # qtoken can have all its matches outside the sample.
-                    # tokens_found must come from a (tiny) distinct scan.
-                    tokens_found = {
-                        r["qtoken"]
-                        for r in exp.select("qtoken").distinct().collect()
-                    }
-                    rows = None  # stay distributed
-                else:
-                    tokens_found = {r["qtoken"] for r in rows}
-                    rows = [
-                        (r["field"], r["qtoken"], r["term"], r["df"]) for r in rows
-                    ]
-                hit = (rows, tokens_found)
-                self._fuzzy_cache[cache_key] = hit
-            rows, tokens_found = hit
-            if not tokens_found:
-                return self._empty_scored()
-            if threshold == 0 and keywords_count > 1:
-                if any(t not in tokens_found for t in tokens):
-                    return self._empty_scored()
-            p = self.postings.where(F.col("field").isin(props))
-            if rows is not None:
-                p = p.where(F.col("term").isin(list({r[2] for r in rows})))
-                exp = F.broadcast(
-                    self.spark.createDataFrame(
-                        rows,
-                        schema="field string, qtoken string, term string, df long",
-                    )
-                )
-            joined = p.join(exp, ["field", "term"])
+            exp_df = F.broadcast(self._local(exp, _EXPANSION))
         else:
-            # exact / prefix / whole-trie: ZERO driver actions — literal
-            # pushdown on postings + a join with the pruned dictionary
-            # scan (AQE broadcasts the small expansion side at runtime)
+            exp_df = self._expansion_df(tokens, props, exact, tolerance)
             if threshold == 0 and keywords_count > 1:
                 # every token must match somewhere (index.ts:554-560):
                 # one tiny action against the pruned dictionary scan
                 found = {
                     r["qtoken"]
-                    for r in exp.select("qtoken").distinct().collect()
+                    for r in exp_df.select("qtoken").distinct().collect()
                 }
                 if any(t not in found for t in tokens):
                     return self._empty_scored()
-            joined = self._postings_pushdown(tokens, props, exact).join(
-                exp, ["field", "term"]
-            )
+        p = self.postings.where(F.col("field").isin(props))
+        joined = (p if pred is None else p.where(pred)).join(exp_df, ["field", "term"])
 
         score_row = self._bm25_col(props, boost)
         per_field = (
@@ -638,25 +900,28 @@ class SearchIndex:
         )
         return (num / den * boost_expr).alias("s")
 
-    def exact_filter_ids(self, term: str, props: Optional[list[str]] = None) -> DataFrame:
-        """Docids passing the exact-mode case-sensitive whole-word filter
-        (methods/search-fulltext.ts:88-115): some property contains ALL
-        whitespace-split query words as \\b-bounded case-sensitive
-        matches. Reusable as a WAND keep_ids mask."""
-        docid = self.config.docid_col
-        props = props or self.config.searchable_fields
+    def _exact_predicate(self, term: str, props: Optional[list[str]]) -> Column:
+        """The exact-mode case-sensitive whole-word filter
+        (methods/search-fulltext.ts:88-115) on docs columns: some
+        property contains ALL whitespace-split query words as
+        \\b-bounded case-sensitive matches."""
         search_terms = term.strip().split()
         per_prop = []
-        for prop in props:
+        for prop in props or self.config.searchable_fields:
             cond = F.lit(True)
             for t in search_terms:
                 pat = r"\b" + _escape_java_regex(t) + r"\b"
                 cond = cond & F.col(prop).cast("string").rlike(pat)
             per_prop.append(F.col(prop).isNotNull() & cond)
-        any_prop = per_prop[0]
-        for c in per_prop[1:]:
-            any_prop = any_prop | c
-        return self.docs.where(any_prop).select(F.col(docid).alias("docid"))
+        return functools.reduce(Column.__or__, per_prop)
+
+    def exact_filter_ids(self, term: str, props: Optional[list[str]] = None) -> DataFrame:
+        """Docids passing the exact-mode post-filter (``_exact_predicate``).
+        Reusable as a WAND keep_ids mask."""
+        docid = self.config.docid_col
+        return self.docs.where(self._exact_predicate(term, props)).select(
+            F.col(docid).alias("docid")
+        )
 
     def _exact_post_filter(
         self, scored: DataFrame, term: str, props: list[str]
@@ -667,24 +932,14 @@ class SearchIndex:
         # whole-corpus regex scan was 6-9 s while the matched set is
         # orders of magnitude smaller (SCALE_r04 wand_crossover notes).
         docid = self.config.docid_col
-        props = props or self.config.searchable_fields
         matched = self.docs.join(
             scored.select(F.col("docid").alias(docid)).distinct(),
             docid,
             "left_semi",
         )
-        search_terms = term.strip().split()
-        per_prop = []
-        for prop in props:
-            cond = F.lit(True)
-            for t in search_terms:
-                pat = r"\b" + _escape_java_regex(t) + r"\b"
-                cond = cond & F.col(prop).cast("string").rlike(pat)
-            per_prop.append(F.col(prop).isNotNull() & cond)
-        any_prop = per_prop[0]
-        for c in per_prop[1:]:
-            any_prop = any_prop | c
-        ok = matched.where(any_prop).select(F.col(docid).alias("docid"))
+        ok = matched.where(self._exact_predicate(term, props)).select(
+            F.col(docid).alias("docid")
+        )
         return scored.join(ok, "docid", "left_semi")
 
     # ------------------------------------------------------------ facets

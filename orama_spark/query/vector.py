@@ -76,8 +76,11 @@ def hybrid_merge(
     Empty sides yield the other side unchanged (max of empty -> skip).
 
     ZERO driver actions: the two max-normalizers are 1-row aggregates
-    broadcast-cross-joined into the plan, so a hybrid query is a single
-    Spark job instead of three (two maxes were separate collect()s)."""
+    broadcast-cross-joined into the plan instead of two collect()s. It
+    is not one Spark job: AQE runs each shuffle and broadcast stage as
+    its own job. At sf0.01, the top 10 of a merge over a bounded
+    search's local result ran 8 jobs, and the ``hybrid_topk`` driver
+    query, its search's probe and fetch included, 12."""
     t_max = text_scored.agg(F.max("score").alias("__tmax"))
     v_max = vector_scored.agg(F.max("score").alias("__vmax"))
     safe = lambda c: F.when(c.isNull() | (c == 0.0), F.lit(1.0)).otherwise(c)  # noqa: E731

@@ -82,6 +82,36 @@ def test_duplicate_insert_rejected(spark, tmpdir_index):
         )
 
 
+def _jobs(spark, fn) -> int:
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"maint-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
+def test_insert_probe_is_one_aggregate(spark, tmpdir_index):
+    """insert_documents asks how many rows are new, how many collide
+    with live docids and how many revive tombstoned ones in ONE
+    aggregate. With three separate counts an insert into this index ran
+    15 jobs, and 21 once tombstones existed."""
+    cfg = build(spark, tmpdir_index)
+    one = lambda d: spark.createDataFrame([{"docid": d, "t": "alpha new", "cat": "w"}])  # noqa: E731
+    assert _jobs(spark, lambda: insert_documents(spark, tmpdir_index, cfg, one(30))) <= 13
+    remove_documents(spark, tmpdir_index, cfg, spark.createDataFrame([(2,)], "docid long"))
+    assert _jobs(spark, lambda: insert_documents(spark, tmpdir_index, cfg, one(31))) <= 14
+    idx = SearchIndex.load(spark, tmpdir_index, cfg)
+    assert idx.stats["docs_count"] == 6
+    assert {r["docid"] for r in idx.search(term="alpha", limit=20).top_df().collect()} == {
+        1, 3, 5, 30, 31,
+    }
+
+
 def test_update_parity(spark, tmpdir_index):
     cfg = build(spark, tmpdir_index)
     orc = oracle()

@@ -35,50 +35,66 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_exact_term_filter_pushed_to_postings_scan(idx):
-    plan = _plan(idx.search(term="fox", exact=True).scored)
-    scans = [l for l in plan.splitlines() if "PushedFilters" in l and "postings" in plan]
-    assert any("term" in l and ("In(term" in l or "EqualTo(term" in l) for l in scans), plan
+def _both_plans(idx, monkeypatch, **q) -> list:
+    """The plans a query reads: under the cap its bounded fetch, and
+    with the cap forced to -1 (even an empty fetch is over it) its
+    distributed ``scored`` plan."""
+    from orama_spark.query import engine
+
+    fetch = idx.search(**q).fetch
+    with monkeypatch.context() as m:
+        m.setattr(engine, "EXPANSION_COLLECT_CAP", -1)
+        scored = idx.search(**q).scored
+    return [_plan(fetch), _plan(scored)]
 
 
-def test_prefix_filter_pushed_as_startswith(idx):
-    plan = _plan(idx.search(term="optimiz").scored)
-    assert "StringStartsWith(term,optim" in plan, plan
+def test_exact_term_filter_pushed_to_postings_scan(idx, monkeypatch):
+    for plan in _both_plans(idx, monkeypatch, term="fox", exact=True):
+        scans = [l for l in plan.splitlines() if "PushedFilters" in l and "postings" in plan]
+        assert any("term" in l and ("In(term" in l or "EqualTo(term" in l) for l in scans), plan
 
 
-def test_postings_scan_prunes_columns(idx):
+def test_prefix_filter_pushed_as_startswith(idx, monkeypatch):
+    for plan in _both_plans(idx, monkeypatch, term="optimiz"):
+        assert "StringStartsWith(term,optim" in plan, plan
+
+
+def test_postings_scan_prunes_columns(idx, monkeypatch):
     # scoring needs (field, term, docid, tf, field_len) — never the full
     # docs row; the docs table must not appear in a pure scoring plan
-    plan = _plan(idx.search(term="fox").scored)
-    assert "ReadSchema" in plan
-    read = [l for l in plan.splitlines() if "ReadSchema" in l]
-    # the raw document text column must never be read by scoring
-    # ("text" also appears as a literal field VALUE, so match the
-    # schema entry, not the bare word)
-    assert all("text:string" not in l for l in read), read
+    for plan in _both_plans(idx, monkeypatch, term="fox"):
+        assert "ReadSchema" in plan
+        read = [l for l in plan.splitlines() if "ReadSchema" in l]
+        # the raw document text column must never be read by scoring
+        # ("text" also appears as a literal field VALUE, so match the
+        # schema entry, not the bare word)
+        assert all("text:string" not in l for l in read), read
 
 
-def test_where_filter_pushed_to_docs_scan(idx):
+def test_where_filter_pushed_to_docs_scan(idx, monkeypatch):
     # plain-column filter compiles to one predicate on the docs scan
-    sr = idx.search(term="fox", where={"lang": {"eq": "en"}})
-    plan = _plan(sr.scored)
-    assert "EqualTo(lang,en)" in plan, plan
+    for plan in _both_plans(idx, monkeypatch, term="fox", where={"lang": {"eq": "en"}}):
+        assert "EqualTo(lang,en)" in plan, plan
 
 
-def test_topk_uses_take_ordered(idx):
+def test_topk_uses_take_ordered(idx, monkeypatch):
+    # over the cap; an under-cap page is a local slice
+    # (test_bounded_search::test_under_cap_page_is_local_and_starts_no_job)
+    from orama_spark.query import engine
+
+    monkeypatch.setattr(engine, "EXPANSION_COLLECT_CAP", -1)
     plan = _plan(idx.search(term="fox").top_df())
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_no_exchange_on_postings_before_join(idx):
+def test_no_exchange_on_postings_before_join(idx, monkeypatch):
     # the postings side of the query join must not be re-partitioned:
     # the only exchanges allowed in a threshold-1 scoring plan are the
     # per-doc aggregations AFTER the join
-    df = idx.search(term="fox dog").scored
-    plan = _plan(df)
-    # expansion side may broadcast; postings side must never SORT or
-    # range-partition at query time
-    assert "rangepartitioning" not in plan.lower(), plan
+    for plan in _both_plans(idx, monkeypatch, term="fox dog"):
+        # expansion side may broadcast; postings side must never SORT or
+        # range-partition at query time
+        assert "rangepartitioning" not in plan.lower(), plan
 
 
 def test_fuzzy_band_pushes_term_len_range(idx):
