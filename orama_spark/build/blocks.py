@@ -203,8 +203,9 @@ def varint_decode(buf: bytes) -> np.ndarray:
 
 
 def varint_decode_binary(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Segmented decode of a whole Arrow ``binary`` column (32-bit
-    offsets, as Spark sends BinaryType) of varint streams.
+    """Segmented decode of a whole Arrow ``binary`` or ``large_binary``
+    column of varint streams (Spark sends BinaryType as ``binary``, or
+    as ``large_binary`` under spark.sql.execution.arrow.useLargeVarTypes).
 
     The data buffer is decoded once; per-row value counts come from the
     terminator bytes (< 0x80) between consecutive offsets. Returns
@@ -214,8 +215,9 @@ def varint_decode_binary(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         arr = pc.fill_null(arr, pa.scalar(b"", type=arr.type))
     n = len(arr)
     _, obuf, dbuf = arr.buffers()
+    width = np.dtype(np.int64 if pa.types.is_large_binary(arr.type) else np.int32)
     offs = np.frombuffer(
-        obuf, dtype=np.int32, count=n + 1, offset=arr.offset * 4
+        obuf, dtype=width, count=n + 1, offset=arr.offset * width.itemsize
     ).astype(np.int64)
     lo, hi = int(offs[0]), int(offs[-1])
     b = (

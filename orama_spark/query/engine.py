@@ -49,6 +49,8 @@ import json
 import math
 import os
 import re
+import threading
+from concurrent.futures import Future
 from typing import Optional
 
 import numpy as np
@@ -200,11 +202,9 @@ class SearchResult:
     def hits_df(self) -> DataFrame:
         """Page joined with full documents (late materialization:
         only offset+limit docs are ever fetched, search.ts:129-131)."""
-        docs = self.index.docs
-        docid = self.index.config.docid_col
         return (
             self.top_df()
-            .join(docs.withColumnRenamed(docid, "docid"), "docid")
+            .join(self.index.docs_by_docid, "docid")
             .orderBy(F.desc("score"), F.asc("docid"))
         )
 
@@ -339,14 +339,20 @@ class SearchIndex:
         self.spark = spark
         self.config = config
         self.docs = docs
+        # docs keyed by the engine's "docid" name: the side every
+        # result-to-document join takes
+        self.docs_by_docid = docs.withColumnRenamed(config.docid_col, "docid")
         self.postings = postings
         self.dictionary = dictionary
         # the (field, term_len, term)-sorted copy fuzzy length bands scan
         self.dictionary_bylen = dictionary_bylen
         self.stats = stats
         self.tokenizer = Tokenizer(config.tokenizer)
-        # (tokens, props, tolerance) -> collected fuzzy expansion | None
-        self._fuzzy_cache: dict[tuple, Optional[pd.DataFrame]] = {}
+        # (tokens, props, tolerance) -> Future of the collected fuzzy
+        # expansion | None; the lock makes the first reader to miss a
+        # key its only computer (_fuzzy_expansion)
+        self._fuzzy_cache: dict[tuple, Future] = {}
+        self._fuzzy_lock = threading.Lock()
         # props -> the (dictionary, postings) scans of the expansion
         # probe and the bounded path
         self._bases: dict[tuple, tuple] = {}
@@ -465,13 +471,27 @@ class SearchIndex:
         fuzzy predicate can't push into parquet). They only depend on
         the dictionary, so they are collected once per (tokens, props,
         tolerance) and cached; repeated fuzzy queries skip the scan.
-        Callers must not modify the frame."""
+        Single flight: readers that miss the same key at once wait for
+        the first one's job instead of each running their own. A failed
+        job raises in every reader waiting on it and is not cached, so
+        the next query retries. Callers must not modify the frame."""
         key = (tuple(tokens), tuple(props), tolerance)
-        if key not in self._fuzzy_cache:
-            cap = EXPANSION_COLLECT_CAP
-            got = self._expansion_df(tokens, props, False, tolerance).limit(cap + 1).toArrow()
-            self._fuzzy_cache.setdefault(key, None if got.num_rows > cap else got.to_pandas())
-        return self._fuzzy_cache[key]
+        with self._fuzzy_lock:
+            flight = self._fuzzy_cache.get(key)
+            owner = flight is None
+            if owner:
+                flight = self._fuzzy_cache[key] = Future()
+        if owner:
+            try:
+                cap = EXPANSION_COLLECT_CAP
+                got = self._expansion_df(tokens, props, False, tolerance).limit(cap + 1).toArrow()
+                flight.set_result(None if got.num_rows > cap else got.to_pandas())
+            except BaseException as e:
+                with self._fuzzy_lock:
+                    del self._fuzzy_cache[key]
+                flight.set_exception(e)
+                raise
+        return flight.result()
 
     def _expansion(
         self, tokens: list[str], props: list[str], exact: bool, tolerance: int
@@ -950,10 +970,7 @@ class SearchIndex:
         value ASC as the deterministic tie-break."""
         cfg = config or {}
         typ = self.config.schema[prop]
-        docid = self.config.docid_col
-        m = result.scored.join(
-            self.docs.withColumnRenamed(docid, "docid"), "docid"
-        )
+        m = result.scored.join(self.docs_by_docid, "docid")
         if typ in ("number", "number[]"):
             aggs = []
             for r in cfg.get("ranges", []):
@@ -997,12 +1014,11 @@ class SearchIndex:
         increment; string/enum/bool count distinct present values."""
         cfg = config or {}
         typ = self.config.schema[prop]
-        docid = self.config.docid_col
         if typ == "number":
             return self.docs.sparkSession.range(1).select(
                 F.lit(len(cfg.get("ranges", []))).cast("long").alias("facet_count")
             )
-        m = result.scored.join(self.docs.withColumnRenamed(docid, "docid"), "docid")
+        m = result.scored.join(self.docs_by_docid, "docid")
         if typ == "number[]":
             hits = []
             for r in cfg.get("ranges", []):
@@ -1035,10 +1051,7 @@ class SearchIndex:
         top-k. Distributed as one window per property (shuffle on the
         property value) — no driver-side combination enumeration; empty
         combinations never materialize."""
-        docid = self.config.docid_col
-        m = result.scored.join(
-            self.docs.withColumnRenamed(docid, "docid"), "docid"
-        )
+        m = result.scored.join(self.docs_by_docid, "docid")
         for p in properties:
             m = m.where(F.col(p).isNotNull())
         if max_result is not None:
@@ -1067,21 +1080,16 @@ class SearchIndex:
         score + group_rank, rank order preserved by group_rank) arrive
         as one pandas frame — the Spark-native UDAF surface. Groups
         respect the same per-property maxResult cap as groups_df."""
-        docid = self.config.docid_col
         members = self.groups_df(result, properties, max_result=max_result)
-        docs_side = self.docs.withColumnRenamed(docid, "docid")
-        dup = [c for c in docs_side.columns if c in set(properties)]
-        joined = members.join(docs_side.drop(*dup), "docid")
+        dup = [c for c in self.docs_by_docid.columns if c in set(properties)]
+        joined = members.join(self.docs_by_docid.drop(*dup), "docid")
         return joined.groupBy(*properties).applyInPandas(reduce_fn, schema=output_schema)
 
     # -------------------------------------------------------- distinct_on
     def distinct_df(self, result: SearchResult, prop: str, offset: int = 0, limit: int = 10) -> DataFrame:
         """distinctOn (methods/search.ts:43-99): first (best-ranked) doc
         per distinct value, paginated over the distinct stream."""
-        docid = self.config.docid_col
-        m = result.scored.join(
-            self.docs.withColumnRenamed(docid, "docid"), "docid"
-        ).where(F.col(prop).isNotNull())
+        m = result.scored.join(self.docs_by_docid, "docid").where(F.col(prop).isNotNull())
         w = Window.partitionBy(prop).orderBy(F.desc("score"), F.asc("docid"))
         firsts = (
             m.withColumn("__rn", F.row_number().over(w))
@@ -1106,10 +1114,7 @@ class SearchIndex:
         "UNICODE_CI", ...) or None for raw binary order.  Spark 4's
         ``F.collate`` keeps the comparison JVM-side (codegen'd), so the
         TakeOrdered pagination plan is unchanged."""
-        docid = self.config.docid_col
-        m = result.scored.join(
-            self.docs.withColumnRenamed(docid, "docid"), "docid"
-        )
+        m = result.scored.join(self.docs_by_docid, "docid")
         sort_col = F.col(prop)
         if collation is not None and self.config.schema.get(prop) == "string":
             name = (
@@ -1148,10 +1153,7 @@ class SearchIndex:
         sort last regardless of direction (the reference's
         missing-property rule); ties break on docid.
         """
-        docid = self.config.docid_col
-        m = result.scored.join(
-            self.docs.withColumnRenamed(docid, "docid"), "docid"
-        )
+        m = result.scored.join(self.docs_by_docid, "docid")
         if callable(key):
             cols = list(m.columns)
 

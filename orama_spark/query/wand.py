@@ -25,7 +25,7 @@ on the length-ordered internal docid space from build/blocks.py:
             max_score of the unique block of term t covering d (blocks
             of one term are disjoint internal ranges). A block survives
             iff max_{d∈block} UB(d) ≥ θ — an exact interval sweep
-            (_sweep_keep). Under driver_sweep_max_blocks it runs in
+            (_sweep_keep). Under DRIVER_SWEEP_MAX_BLOCKS it runs in
             numpy over the fetched metadata. Otherwise it runs
             distributed: block METADATA (no binary payload) explodes to
             coarse internal-range buckets — one tiny shuffle — and each
@@ -33,11 +33,11 @@ on the length-ordered internal docid space from build/blocks.py:
             (clipping makes buckets independent — no cross-bucket
             state). Survivor cells come back as (block key, clip range)
             and equi-join the block payloads.
-  phase 2   decode ONLY surviving clips (clips never overlap, so no
-            dedup shuffle), score inside the same Arrow kernel (df is
-            denormalized onto block rows — no dictionary join), exact
-            BM25 sums per original docid, drop docs below θ,
-            TakeOrdered k.
+  phase 2   decode ONLY surviving blocks (or, distributed, surviving
+            clips — clips never overlap, so no dedup shuffle) and score
+            them with one vectorized kernel, _score_postings (df is
+            denormalized onto block rows — no dictionary join); exact
+            BM25 sums per original docid, drop docs below θ, top k.
 
 Soundness: any doc d with true score ≥ θ has UB(d) ≥ score(d) ≥ θ, so
 for every term covering d, the (block, bucket) cell containing d
@@ -82,12 +82,16 @@ tagged union of their champion rows and block metadata as one ordered
 top-level LIMIT (champion rows first), read through DataFrame.toArrow()
 — the plan runs as one job, where a LIMIT collect() runs several.
 No session conf is read or written, so concurrent queries on one
-session never see each other's settings. Under driver_sweep_max_blocks
-θ and the sweep run in numpy, and phase 2 is one coalesce(1) Arrow task
-(decode, score, per-doc sum, θ filter, top-k): 2 jobs cold, 1 warm. Over
-the cap the fetched pool seeds θ and the sweep runs distributed:
-metadata scan → bucket shuffle → Arrow sweep → payload join → Arrow
-decode+score → docid shuffle → top-k.
+session never see each other's settings. Under DRIVER_SWEEP_MAX_BLOCKS
+the whole query runs on the driver, as Orama scores in process: θ and
+the sweep in numpy, then phase 2 reads the survivors' block rows in one
+toArrow() (at most DRIVER_SWEEP_MAX_BLOCKS × BLOCK_SIZE postings) and
+scores them per record batch with _score_postings. The result is a
+local DataFrame (a LocalTableScan), so a cold query is 2 jobs, a warm
+one 1, and collecting the result starts none. Over the cap the fetched
+pool seeds θ and the sweep runs distributed: metadata scan → bucket
+shuffle → Arrow sweep → payload join → Arrow decode+score (the same
+_score_postings) → docid shuffle → top-k.
 
 Scope: exact-term queries with threshold=1 and no filters (prefix/fuzzy
 expansion makes per-token upper bounds additive across matched words and
@@ -109,8 +113,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..build.blocks import (
     BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, POSTINGS_READ_SCHEMA,
-    avgfl_per_row, bm25_for_fl, bm25_scores, build_blocks, decode_blocks,
-    idf_per_row, run_starts, segment_ids, varint_decode,
+    avgfl_per_row, bm25_scores, build_blocks, decode_blocks, idf_per_row,
+    run_starts, segment_ids,
 )
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
@@ -145,6 +149,13 @@ CHAMPION_BLOCKS = 8
 # truncating to 64, which halves pruning power; lower it only if the
 # champions table (≤ vocab × CHAMPION_BLOCKS × this) needs shrinking.
 CHAMPION_POSTINGS_PER_BLOCK = 128
+# block metadata rows a call may sweep and score on the driver (per
+# query, for wand_topk_many); over it the sweep runs distributed. Read
+# at call time, so a test can force the distributed sweep by patching it.
+DRIVER_SWEEP_MAX_BLOCKS = 8192
+# terms each driver cache (block metadata, champion rows) may hold
+# before it is cleared wholesale
+METADATA_CACHE_MAX_TERMS = 4096
 
 
 def _score_postings(batch, avgs: dict, n_docs: float, bm25_params,
@@ -277,81 +288,6 @@ def _champions_fn(avgs: dict, n_docs: float, bm25_params, depth: int,
     return fn
 
 
-def _fused_topk_fn(avgs: dict, n_docs: float, bm25_params,
-                   survmaps: dict, thetas: dict, wts: dict, k: int):
-    """Arrow kernel for the FUSED driver-sweep phase 2 (r5): decode +
-    score + per-doc aggregate + θ filter + top-k in ONE task. The
-    survivor clip map, θ and occurrence weights are driver-side
-    closures, so the whole phase is a single coalesce(1) scan job — no
-    broadcast-join / repartition / groupBy exchanges for AQE to
-    materialize as separate jobs (the r4 scale profile showed ~2.5 s of
-    fixed multi-job driver latency dominating short queries).
-
-    ``survmaps``: {qid: {(field, term, first_docid): (clip_s, clip_e)}};
-    ``thetas``: {qid: θ}; ``wts``: {qid: {term: occurrence_weight}} for
-    the queries with a repeated token. Emits (qid, docid, score): each
-    qid's top ``k`` docs at or above θ, by (score desc, docid asc).
-    Each block row is DECODED ONCE even when several queries keep it —
-    only the clip mask and weight differ per query."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc_ids: dict = {q: [] for q in survmaps}
-        acc_s: dict = {q: [] for q in survmaps}
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                key = (r.field, r.term, r.first_docid)
-                hit_qids = [q for q, sm in survmaps.items() if key in sm]
-                if not hit_qids:
-                    continue
-                deltas = varint_decode(bytes(r.docid_deltas)).astype(np.int64)
-                internal = r.first_docid + np.concatenate(
-                    ([0], np.cumsum(deltas[1:]))
-                )
-                origs = varint_decode(bytes(r.orig_docids)).astype(np.int64)
-                fls = varint_decode(bytes(r.field_lens)).astype(np.float64)
-                raw_t = bytes(r.tfns or b"")
-                tfns = (
-                    varint_decode(raw_t).astype(np.float64) if raw_t else None
-                )
-                s_all = bm25_for_fl(
-                    fls, float(r.df), n_docs, avgs[r.field], bm25_params,
-                    tfn=tfns,
-                )
-                for q in hit_qids:
-                    cs, ce = survmaps[q][key]
-                    m = (internal >= cs) & (internal <= ce)
-                    if not m.all():
-                        o, s = origs[m], s_all[m]
-                    else:
-                        o, s = origs, s_all
-                    if len(o) == 0:
-                        continue
-                    w = wts.get(q, {}).get(r.term)
-                    acc_ids[q].append(o)
-                    acc_s[q].append(s * w if w is not None else s)
-        outs = []
-        for q in survmaps:
-            if not acc_ids[q]:
-                continue
-            uids, inv = np.unique(np.concatenate(acc_ids[q]), return_inverse=True)
-            sums = np.zeros(len(uids))
-            np.add.at(sums, inv, np.concatenate(acc_s[q]))
-            theta = thetas[q]
-            if theta > 0.0:
-                keep = sums >= theta * (1.0 - _EPS)
-                uids, sums = uids[keep], sums[keep]
-            order = np.lexsort((uids, -sums))[:k]
-            if len(order):
-                outs.append(pd.DataFrame(
-                    {"qid": np.full(len(order), q, dtype=object),
-                     "docid": uids[order], "score": sums[order]}
-                ))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    return fn
-
-
 def _sweep_keep(start: np.ndarray, end: np.ndarray, ms: np.ndarray,
                 theta: float) -> np.ndarray:
     """Keep mask of the exact interval sweep, shared by the driver
@@ -438,14 +374,13 @@ def _by_term(df: pd.DataFrame, terms) -> dict:
 class BlockIndex:
     def __init__(self, spark: SparkSession, config: IndexConfig,
                  blocks: DataFrame, dictionary: DataFrame, stats: dict,
-                 champions: DataFrame, driver_sweep_max_blocks: int = 8192):
+                 champions: DataFrame):
         self.spark = spark
         self.config = config
         self.blocks = blocks
         self.dictionary = dictionary
         self.stats = stats
         self.champions = champions
-        self.driver_sweep_max_blocks = driver_sweep_max_blocks
         self.tokenizer = Tokenizer(config.tokenizer)
         self._avgs = {
             f_: float(v["avg_field_length"]) for f_, v in stats["fields"].items()
@@ -456,8 +391,7 @@ class BlockIndex:
         # coordinator). Sound because blocks/champions are immutable
         # for the lifetime of this instance (the build stamp checked at
         # load() invalidates on any rebuild/maintenance). Bounded:
-        # wholesale-cleared past metadata_cache_max_terms.
-        self.metadata_cache_max_terms = 4096
+        # wholesale-cleared past METADATA_CACHE_MAX_TERMS.
         self._meta_cache: dict = {}   # term -> pd.DataFrame(_META_COLS) | _OVER_CAP
         self._champ_cache: dict = {}  # term -> pd.DataFrame(term, docid, s)
 
@@ -488,7 +422,7 @@ class BlockIndex:
         more than ``cap`` metadata rows come back exactly when the terms
         have more than ``cap`` blocks."""
         for cache in (self._meta_cache, self._champ_cache):
-            if len(cache) > self.metadata_cache_max_terms:
+            if len(cache) > METADATA_CACHE_MAX_TERMS:
                 cache.clear()
         # work on snapshots: reader threads share the caches, and one of
         # them may clear a cache between this call's fetch and its reads
@@ -713,41 +647,69 @@ class BlockIndex:
         )
         return theta, rows[keep], (wts if max(wts.values()) > 1 else None)
 
-    def _fused_topk(self, plans: dict, terms: list, k: int) -> DataFrame:
-        """Phase 2 of driver-planned queries as ONE job: ``plans`` maps
-        qid -> _plan's (θ, survivors, weights); returns (qid, docid,
-        score), each qid's top k (_fused_topk_fn).
+    def _driver_topk(self, plans: dict, terms: list, k: int) -> pa.Table:
+        """Phase 2 of driver-planned queries, on the driver: ``plans``
+        maps qid -> _plan's (θ, survivors, weights); returns the Arrow
+        table (qid, docid, score) of each qid's top k docs at or above
+        θ, qids in ``plans`` order, each by (score DESC, docid ASC).
 
-        The scan is the blocks of ``terms`` plus a first_docid bound
-        derived from the survivors — an IN list when small, a min/max
-        range otherwise (the kernel skips non-survivor keys exactly
-        either way). coalesce(1) funnels the bounded survivor set into
-        one Python task WITHOUT an exchange."""
-        cols = ["field", "term", "first_docid", "last_docid"]
-        survmaps = {
-            q: {
-                (f_, t, fd): (fd, ld)
-                for f_, t, fd, ld in zip(*(surv[c].tolist() for c in cols))
-            }
-            for q, (_, surv, _) in plans.items() if len(surv)
+        The survivors' block rows come back in ONE toArrow(): the blocks
+        of ``terms`` plus a first_docid bound derived from the
+        survivors — an IN list when small, a min/max range otherwise
+        (rows outside a qid's survivor keys are masked out either way).
+        Each record batch is decoded and scored once by _score_postings
+        however many queries keep its blocks; only the per-qid row mask
+        and occurrence weight differ. The driver sweep keeps whole
+        blocks, so no clip applies."""
+        keys = ["field", "term", "first_docid"]
+        surv = {
+            q: pd.MultiIndex.from_frame(p[1][keys])
+            for q, p in plans.items() if len(p[1])
         }
-        if not survmaps:
-            return self.spark.createDataFrame([], _TOPK_SCHEMA)
-        fdids = sorted({key[2] for sm in survmaps.values() for key in sm})
-        scan = self._of_terms(self.blocks, terms)
-        if len(fdids) <= 256:
-            scan = scan.where(F.col("first_docid").isin(fdids))
-        else:
-            scan = scan.where(
-                (F.col("first_docid") >= fdids[0])
-                & (F.col("first_docid") <= fdids[-1])
-            )
-        fn = _fused_topk_fn(
-            self._avgs, self._n_docs, self.config.bm25, survmaps,
-            {q: plans[q][0] for q in survmaps},
-            {q: plans[q][2] for q in survmaps if plans[q][2]}, k,
-        )
-        return scan.coalesce(1).mapInPandas(fn, _TOPK_SCHEMA)
+        acc = {q: ([np.zeros(0, np.int64)], [np.zeros(0)]) for q in surv}
+        if surv:
+            fdids = sorted({fd for ix in surv.values() for fd in ix.levels[2]})
+            scan = self._of_terms(self.blocks, terms)
+            if len(fdids) <= 256:
+                scan = scan.where(F.col("first_docid").isin(fdids))
+            else:
+                scan = scan.where(F.col("first_docid").between(fdids[0], fdids[-1]))
+            got = scan.select(
+                *keys, "df", "orig_docids", "field_lens", "tfns"
+            ).toArrow()
+            for batch in got.to_batches():
+                rid, docid, s = _score_postings(
+                    batch, self._avgs, self._n_docs, self.config.bm25, clipped=False
+                )
+                rows = pd.MultiIndex.from_arrays(
+                    [batch.column(c).to_numpy(zero_copy_only=False) for c in keys]
+                )
+                for q, ix in surv.items():
+                    m = rows.isin(ix)[rid]
+                    sq = s[m]
+                    wts = plans[q][2]
+                    if wts:
+                        w = rows.get_level_values(1).map(wts).to_numpy(np.float64)
+                        sq = sq * w[rid[m]]
+                    acc[q][0].append(docid[m])
+                    acc[q][1].append(sq)
+        qid, ids, scores = [], [], []
+        for q, (q_ids, q_s) in acc.items():
+            uids, inv = np.unique(np.concatenate(q_ids), return_inverse=True)
+            sums = np.bincount(inv, weights=np.concatenate(q_s), minlength=len(uids))
+            theta = plans[q][0]
+            if theta > 0.0:
+                keep = sums >= theta * (1.0 - _EPS)
+                uids, sums = uids[keep], sums[keep]
+            order = np.lexsort((uids, -sums))[:k]
+            qid += [q] * len(order)
+            ids.append(uids[order])
+            scores.append(sums[order])
+        return pa.table({
+            "qid": pa.array(qid, pa.string()),
+            "docid": pa.array(np.concatenate(ids or [[]]).astype(np.int64)),
+            "score": pa.array(np.concatenate(scores or [[]]).astype(np.float64)),
+        })
 
     def _prune(self, meta: DataFrame, k: int, tokens,
                keep_ids: Optional[DataFrame] = None,
@@ -846,13 +808,15 @@ class BlockIndex:
 
         Without ``keep_ids`` the call fetches the query's champion pool
         and block metadata EAGERLY (_term_data: one Spark job for
-        cache-missing terms, none when warm) and returns a lazy phase 2:
-        the FUSED single-task kernel under driver_sweep_max_blocks
-        (a cold query is 2 jobs, a warm one 1 — the r4 scale leg showed
-        fixed multi-job orchestration was the only thing keeping WAND
-        behind the plain path), the distributed sweep seeded from the
-        same pool over it. With ``keep_ids`` the whole query is one lazy
-        plan.
+        cache-missing terms, none when warm). Under
+        DRIVER_SWEEP_MAX_BLOCKS it then runs phase 2 on the driver too
+        (_driver_topk: one more job) and returns the page as a local
+        DataFrame — a cold query is 2 jobs, a warm one 1, and the
+        caller's collect starts none (the r4 scale leg showed fixed
+        multi-job orchestration was the only thing keeping WAND behind
+        the plain path). Over the cap it returns the distributed sweep
+        seeded from the same pool, lazily. With ``keep_ids`` the whole
+        query is one lazy plan.
 
         ``keep_ids`` (one column ``docid``): a pre-computed doc filter
         (where-clause mask or the exact-mode case-sensitive post-filter,
@@ -865,13 +829,15 @@ class BlockIndex:
             return self.spark.createDataFrame([], "docid long, score double")
         pool = None
         if keep_ids is None:
-            pool, rows = self._term_data(tokens, self.driver_sweep_max_blocks)
+            pool, rows = self._term_data(tokens, DRIVER_SWEEP_MAX_BLOCKS)
             if rows is not None:
-                out = self._fused_topk(
+                top = self._driver_topk(
                     {"": self._plan(tokens, k, pool, rows)},
                     list(dict.fromkeys(tokens)), k,
-                ).select("docid", "score")
-                return out.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+                )
+                return self.spark.createDataFrame(
+                    top.select(["docid", "score"]), "docid long, score double"
+                )
 
         meta = self._of_terms(self.blocks, tokens)
         kept, theta_df = self._prune(meta, k, tokens, keep_ids, pool)
@@ -898,8 +864,8 @@ class BlockIndex:
     def wand_topk_many(self, queries: dict, k: int = 10) -> DataFrame:
         """Batched exact-term BM25 top-k over N queries: ONE fetch of
         the batch's champion rows and block metadata, the planner per
-        query, and ONE fused decode+score job in which each surviving
-        block is decoded once however many queries keep it. Single-query
+        query, and ONE fetch of the survivors' blocks, each decoded and
+        scored on the driver once however many queries keep it. Single-query
         ``wand_topk`` pays its fixed job latency per query — on short
         queries that overhead dominates the 50-100x posting-decode
         savings pruning buys (SCALE_r04 measured latency parity vs the
@@ -907,11 +873,12 @@ class BlockIndex:
         amortizes the fixed jobs across the whole workload, which is
         also the realistic serving shape (queries arrive in batches).
 
-        ``queries``: {qid: term_text}. Returns (qid, docid, score),
-        per-qid rank-identical with ``wand_topk`` (same planner; ties
-        score DESC, docid ASC). Falls back to unioned per-query
-        ``wand_topk`` when the batch's block metadata exceeds
-        ``driver_sweep_max_blocks * len(queries)``.
+        ``queries``: {qid: term_text}. Returns (qid, docid, score) as a
+        local DataFrame ordered by qid, then score DESC, docid ASC —
+        per-qid rank-identical with ``wand_topk`` (same planner, same
+        scorer). Falls back to unioned per-query ``wand_topk`` when the
+        batch's block metadata exceeds
+        ``DRIVER_SWEEP_MAX_BLOCKS * len(queries)``.
         """
         texts = {str(qid): text for qid, text in dict(queries).items()}
         qtoks = {q: self.tokenizer.tokenize(text) for q, text in texts.items()}
@@ -919,9 +886,7 @@ class BlockIndex:
         if not qtoks:
             return self.spark.createDataFrame([], _TOPK_SCHEMA)
         terms = sorted({t for toks in qtoks.values() for t in toks})
-        pool, rows = self._term_data(
-            terms, cap=self.driver_sweep_max_blocks * len(qtoks)
-        )
+        pool, rows = self._term_data(terms, DRIVER_SWEEP_MAX_BLOCKS * len(qtoks))
         if rows is None:
             return functools.reduce(DataFrame.unionByName, [
                 self.wand_topk(texts[q], k=k).select(
@@ -929,20 +894,21 @@ class BlockIndex:
                 )
                 for q in qtoks
             ])
-        plans = {q: self._plan(toks, k, pool, rows) for q, toks in qtoks.items()}
-        return self._fused_topk(plans, terms, k).sortWithinPartitions(
-            "qid", F.desc("score"), F.asc("docid")
+        plans = {q: self._plan(qtoks[q], k, pool, rows) for q in sorted(qtoks)}
+        return self.spark.createDataFrame(
+            self._driver_topk(plans, terms, k), _TOPK_SCHEMA
         )
 
     def pruning_stats(self, term: str, k: int = 10) -> dict:
         """Diagnostics: how many of the query's blocks the sweep keeps,
-        and θ. Under driver_sweep_max_blocks this is the planner's own
-        answer — no Spark job beyond the _term_data fetch; over it the
-        distributed sweep is run and counted."""
+        and θ. Under DRIVER_SWEEP_MAX_BLOCKS this is the planner's own
+        answer — no Spark job beyond the _term_data fetch, and no block
+        payload is read; over it the distributed sweep is run and
+        counted."""
         tokens = self.tokenizer.tokenize(term)
         if not tokens:
             return {"blocks_total": 0, "blocks_kept": 0, "theta": 0.0}
-        pool, rows = self._term_data(tokens, self.driver_sweep_max_blocks)
+        pool, rows = self._term_data(tokens, DRIVER_SWEEP_MAX_BLOCKS)
         if rows is not None:
             theta, surv, _ = self._plan(tokens, k, pool, rows)
             return {"blocks_total": len(rows), "blocks_kept": len(surv),

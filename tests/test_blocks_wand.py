@@ -23,6 +23,7 @@ from orama_spark.build.indexer import IndexBuilder
 from orama_spark.config import IndexConfig
 from orama_spark.kernel import TokenizerConfig
 from orama_spark.query.engine import SearchIndex
+from orama_spark.query import wand
 from orama_spark.query.wand import BlockIndex
 from orama_spark.sources.webpages import CorpusGenerator
 
@@ -68,6 +69,22 @@ class TestVarint:
             ]
             assert list(counts) == [len(v) for v in per_row]
             assert vals.tolist() == np.concatenate(per_row).tolist()
+
+    def test_segmented_decode_large_binary(self):
+        # Spark sends BinaryType as large_binary (64-bit offsets) under
+        # spark.sql.execution.arrow.useLargeVarTypes; the decode must
+        # read offsets at the column's own width
+        streams = [varint_encode(np.arange(3, dtype=np.uint64)),
+                   varint_encode(np.array([300, 7], dtype=np.uint64)),
+                   None, b""]
+        small = pa.array(streams, type=pa.binary())
+        large = pa.array(streams, type=pa.large_binary())
+        for lo, n in ((0, 4), (1, 2)):
+            want_vals, want_counts = varint_decode_binary(small.slice(lo, n))
+            vals, counts = varint_decode_binary(large.slice(lo, n))
+            assert counts.tolist() == want_counts.tolist()
+            assert vals.tolist() == want_vals.tolist()
+        assert varint_decode_binary(large)[1].tolist() == [3, 2, 0, 0]
 
 
 # --------------------------------------------------------------- encoder
@@ -293,11 +310,20 @@ def _session_conf(spark, settings: dict):
                 spark.conf.set(k, v)
 
 
-def _fresh(blocks, **kw):
+def _fresh(blocks):
     """A BlockIndex over the same tables with empty driver caches."""
     return BlockIndex(blocks.spark, blocks.config, blocks.blocks,
                       blocks.dictionary, blocks.stats,
-                      champions=blocks.champions, **kw)
+                      champions=blocks.champions)
+
+
+@contextlib.contextmanager
+def _sweep_cap(blocks: int):
+    """wand.DRIVER_SWEEP_MAX_BLOCKS set to ``blocks`` (0: every query
+    with any block takes the distributed sweep)."""
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(wand, "DRIVER_SWEEP_MAX_BLOCKS", blocks)
+        yield
 
 
 def _jobs(spark, fn) -> int:
@@ -476,8 +502,8 @@ class TestWand:
                 return _orig(self, *args)
             monkeypatch.setattr(RuntimeConfig, name, spy)
         _fresh(blocks).wand_topk("river mountain", k=10).collect()
-        _fresh(blocks, driver_sweep_max_blocks=0).wand_topk(
-            "river mountain", k=10).collect()
+        with _sweep_cap(0):
+            _fresh(blocks).wand_topk("river mountain", k=10).collect()
         _fresh(blocks).wand_topk("fox", k=10, keep_ids=keep).collect()
         _fresh(blocks).wand_topk_many(
             {"a": "fox", "b": "search engine"}, k=10).collect()
@@ -485,7 +511,7 @@ class TestWand:
         assert calls == []
 
     def test_over_cap_query_fetches_once(self, indexes, spark):
-        """Over driver_sweep_max_blocks, wand_topk runs ONE fetch job
+        """Over DRIVER_SWEEP_MAX_BLOCKS, wand_topk runs ONE fetch job
         before the caller collects — its champion pool seeds the
         distributed sweep — on every call (a multi-term over-cap
         query's metadata is not cached)."""
@@ -493,11 +519,12 @@ class TestWand:
         term = "river mountain"
         assert blocks.pruning_stats(term, k=10)["blocks_total"] > 1
         want = blocks.wand_topk(term, k=10).collect()
-        capped = _fresh(blocks, driver_sweep_max_blocks=1)
-        for _ in range(2):
-            out = []
-            assert _jobs(spark, lambda: out.append(capped.wand_topk(term, k=10))) == 1
-            assert out[0].collect() == want
+        capped = _fresh(blocks)
+        with _sweep_cap(1):
+            for _ in range(2):
+                out = []
+                assert _jobs(spark, lambda: out.append(capped.wand_topk(term, k=10))) == 1
+                assert out[0].collect() == want
 
     @pytest.mark.parametrize(
         "term",
@@ -508,7 +535,8 @@ class TestWand:
         # the driver planner's counts and θ == the distributed sweep's
         _, blocks = indexes
         a = blocks.pruning_stats(term, k=10)
-        b = _fresh(blocks, driver_sweep_max_blocks=0).pruning_stats(term, k=10)
+        with _sweep_cap(0):
+            b = _fresh(blocks).pruning_stats(term, k=10)
         assert a["blocks_total"] > 0
         assert (a["blocks_total"], a["blocks_kept"]) == (
             b["blocks_total"], b["blocks_kept"]), term
@@ -551,22 +579,84 @@ class TestWand:
         assert cold == 2, cold
         assert warm == 1, warm
 
+    def test_under_cap_page_is_local(self, indexes, spark):
+        """Under the cap phase 2 runs on the driver: the page is a
+        LocalTableScan, and collecting it starts no Spark job."""
+        _, blocks = indexes
+        page = _fresh(blocks).wand_topk("river mountain", k=10)
+        plan = page._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        rows = []
+        assert _jobs(spark, lambda: rows.extend(page.collect())) == 0
+        assert len(rows) == 10
+
+    def test_under_cap_plans_run_no_python_worker(self, indexes, monkeypatch):
+        """No plan a WAND call executes under the cap (the metadata and
+        block fetches, and the returned page) hands rows to a Python
+        worker; over the cap the distributed sweep does, which shows
+        the check sees such nodes."""
+        _, blocks = indexes
+        DataFrame = type(blocks.blocks)  # the session's concrete class
+        plans = []
+
+        def spying(name):
+            orig = getattr(DataFrame, name)
+
+            def spy(self, *args, **kw):
+                plans.append(self._jdf.queryExecution().executedPlan().toString())
+                return orig(self, *args, **kw)
+            return spy
+
+        for name in ("toArrow", "collect", "count", "first"):
+            monkeypatch.setattr(DataFrame, name, spying(name))
+        fresh = _fresh(blocks)
+        fresh.wand_topk("river mountain", k=10).collect()
+        fresh.wand_topk("fox fox river", k=10).collect()
+        fresh.wand_topk_many({"a": "fox", "b": "search engine"}, k=10).collect()
+        fresh.pruning_stats("fox dog quick", k=10)
+        assert len(plans) >= 6
+        python_nodes = ("MapInPandas", "MapInArrow")
+        for plan in plans:
+            assert not any(n in plan for n in python_nodes), plan
+        plans.clear()
+        with _sweep_cap(0):
+            _fresh(blocks).wand_topk("river mountain", k=10).collect()
+        assert any("MapInArrow" in plan for plan in plans)
+
+    def test_batched_shared_blocks_and_repeated_token(self, indexes):
+        """Two queries keeping some of the same blocks, one weighting a
+        repeated token: the shared blocks are scored once in the batch,
+        and every qid's rows equal its own wand_topk."""
+        _, blocks = indexes
+        queries = {"a": "river mountain", "b": "river river fox"}
+        kept = []
+        for text in queries.values():
+            toks = blocks.tokenizer.tokenize(text)
+            pool, rows = blocks._term_data(toks, wand.DRIVER_SWEEP_MAX_BLOCKS)
+            surv = blocks._plan(toks, 10, pool, rows)[1]
+            kept.append(set(zip(surv["field"], surv["term"], surv["first_docid"])))
+        assert kept[0] & kept[1]
+        got = [tuple(r) for r in blocks.wand_topk_many(queries, k=10).collect()]
+        want = [
+            (q,) + tuple(r)
+            for q, text in sorted(queries.items())
+            for r in blocks.wand_topk(text, k=10).collect()
+        ]
+        assert got == want and len(want) == 20
+
     def test_driver_and_distributed_sweeps_identical(self, indexes):
         """wand_topk without keep_ids takes the bounded driver-sweep
-        fast path; forcing driver_sweep_max_blocks=0 exercises the
+        fast path; forcing DRIVER_SWEEP_MAX_BLOCKS=0 exercises the
         distributed bucketed sweep on the same query — both phase-1
         implementations must agree exactly."""
         _, blocks = indexes
-        forced = BlockIndex(
-            blocks.spark, CFG, blocks.blocks, blocks.dictionary,
-            blocks.stats, champions=blocks.champions,
-            driver_sweep_max_blocks=0,
-        )
+        forced = _fresh(blocks)
         for term in ["fox", "search engine", "river mountain"]:
             a = [(r["docid"], round(r["score"], 9))
                  for r in blocks.wand_topk(term, k=10).collect()]
-            b = [(r["docid"], round(r["score"], 9))
-                 for r in forced.wand_topk(term, k=10).collect()]
+            with _sweep_cap(0):
+                b = [(r["docid"], round(r["score"], 9))
+                     for r in forced.wand_topk(term, k=10).collect()]
             assert a == b and a, term
 
 
@@ -640,7 +730,8 @@ class TestWandAllowDuplicates:
         _, blocks, _ = dup_indexes
         term = self._hot_pair(blocks)
         a = blocks.pruning_stats(term, k=10)
-        b = _fresh(blocks, driver_sweep_max_blocks=0).pruning_stats(term, k=10)
+        with _sweep_cap(0):
+            b = _fresh(blocks).pruning_stats(term, k=10)
         assert (a["blocks_total"], a["blocks_kept"]) == (
             b["blocks_total"], b["blocks_kept"])
         assert a["theta"] == pytest.approx(b["theta"], rel=1e-12)
@@ -706,17 +797,14 @@ class TestWandAllowDuplicates:
 
     def test_duplicate_token_sweeps_identical(self, dup_indexes):
         # weighted driver sweep ≡ weighted distributed sweep
-        _, blocks, cfg = dup_indexes
-        forced = BlockIndex(
-            blocks.spark, cfg, blocks.blocks, blocks.dictionary,
-            blocks.stats, champions=blocks.champions,
-            driver_sweep_max_blocks=0,
-        )
+        _, blocks, _ = dup_indexes
+        forced = _fresh(blocks)
         for term in ["fox fox", "fox fox river"]:
             a = [(r["docid"], round(r["score"], 9))
                  for r in blocks.wand_topk(term, k=10).collect()]
-            b = [(r["docid"], round(r["score"], 9))
-                 for r in forced.wand_topk(term, k=10).collect()]
+            with _sweep_cap(0):
+                b = [(r["docid"], round(r["score"], 9))
+                     for r in forced.wand_topk(term, k=10).collect()]
             assert a == b and a, term
 
     def test_tfns_materialized(self, dup_indexes):

@@ -13,6 +13,7 @@ than that.
 import random
 import sys
 import threading
+import time
 import uuid
 
 import numpy as np
@@ -318,3 +319,55 @@ def test_concurrent_readers_match_serial(spark, tmp_path, monkeypatch):
             _assert_same_ranking(res[1], serial[i][1])
         else:
             assert res == serial[i], ops[i]
+
+
+def test_fuzzy_expansion_single_flight(corpora, spark, monkeypatch):
+    """Readers missing the same fuzzy key at once run ONE expansion job
+    between them and all get the serial result; a failed job is not
+    cached."""
+    _, _, d = corpora["fresh0"]
+    q = {"term": "rivex sparx", "tolerance": 1, "threshold": 0.0}
+    serial = [tuple(r) for r in SearchIndex.load(spark, d, _config())
+              .search(limit=10, **q).top_df().collect()]
+    assert serial
+
+    idx = SearchIndex.load(spark, d, _config())
+    calls = []
+    orig = SearchIndex._expansion_df
+
+    def slow(self, *args):
+        calls.append(args)
+        time.sleep(0.3)  # the other readers miss while this one computes
+        return orig(self, *args)
+
+    monkeypatch.setattr(SearchIndex, "_expansion_df", slow)
+    start = threading.Barrier(3)
+    got, errors = [], []
+
+    def reader():
+        try:
+            start.wait(timeout=60)
+            got.append([tuple(r) for r in idx.search(limit=10, **q).top_df().collect()])
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(calls) == 1
+    assert got == [serial] * 3
+
+    # a failure reaches the reader and is not cached: the next query retries
+    def failing(self, *args):
+        raise RuntimeError("boom")
+
+    fresh = SearchIndex.load(spark, d, _config())
+    monkeypatch.setattr(SearchIndex, "_expansion_df", failing)
+    with pytest.raises(RuntimeError, match="boom"):
+        fresh.search(limit=10, **q)
+    monkeypatch.setattr(SearchIndex, "_expansion_df", orig)
+    assert [tuple(r) for r in fresh.search(limit=10, **q).top_df().collect()] == serial
