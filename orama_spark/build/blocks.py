@@ -82,6 +82,12 @@ from pyspark.sql.types import (
 from ..kernel.bm25 import BM25Params
 
 BLOCK_SIZE = 128
+# θ-seed depth: per (field, term) fragment the encoder marks the top
+# CHAMPION_BLOCKS blocks by max_score and the first CHAMPION_BLOCKS in
+# internal order as candidates (``champ_rk``), and WAND seeds θ from
+# their postings. ANY subset of postings yields valid (exact, partial)
+# sums, so the depth only sets how tight θ is, never soundness.
+CHAMPION_BLOCKS = 8
 
 BLOCKS_SCHEMA = StructType(
     [
@@ -100,8 +106,8 @@ BLOCKS_SCHEMA = StructType(
         StructField("df", LongType(), False),
         # per-ENCODER-FRAGMENT θ-seed candidate mark (>0 = candidate;
         # 0 = not). Candidates are the UNION of (a) the fragment's top
-        # champion_blocks blocks by (max_score desc, first_docid asc)
-        # and (b) the fragment's FIRST champion_blocks blocks in
+        # CHAMPION_BLOCKS blocks by (max_score desc, first_docid asc)
+        # and (b) the fragment's FIRST CHAMPION_BLOCKS blocks in
         # internal order — the internal axis is length-ordered, so
         # scores decay along it and the first blocks hold each term's
         # top-scoring postings (exactly so for single-field trivial-tf
@@ -130,6 +136,13 @@ POSTINGS_READ_SCHEMA = StructType(
         StructField("term", StringType()),
         StructField("docid", LongType()),
         StructField("tf", DoubleType()),
+        StructField("field_len", IntegerType()),
+    ]
+)
+DOCMETA_READ_SCHEMA = StructType(
+    [
+        StructField("docid", LongType()),
+        StructField("field", StringType()),
         StructField("field_len", IntegerType()),
     ]
 )
@@ -331,14 +344,13 @@ def segment_ids(starts: np.ndarray, n: int) -> np.ndarray:
 
 # ---------------------------------------------------------------- encoder
 
-def block_encoder(avgs: dict, n_docs: float, params: BM25Params,
-                  block_size: int = BLOCK_SIZE, champion_blocks: int = 8):
+def block_encoder(avgs: dict, n_docs: float, params: BM25Params):
     """mapInArrow kernel: sorted (field, term, docid, internal, field_len,
     df, tfn) batches -> BLOCKS_SCHEMA batches.
 
     Input must be sorted by (field, term, internal) within the task.
     Each (field, term) run of a task is one encoder FRAGMENT: it is cut
-    into blocks of ``block_size`` postings numbered from 0, and its
+    into blocks of ``BLOCK_SIZE`` postings numbered from 0, and its
     champion candidates are marked (BLOCKS_SCHEMA ``champ_rk``). The
     run still open at the end of a batch is carried until a later batch
     closes it, so a fragment is encoded whole wherever batches split
@@ -352,9 +364,9 @@ def block_encoder(avgs: dict, n_docs: float, params: BM25Params,
         fl = col("field_len").astype(np.float64)
         gid = segment_ids(gstarts, m)
         pos = np.arange(m, dtype=np.int64) - gstarts[gid]
-        bs = np.flatnonzero(pos % block_size == 0)
+        bs = np.flatnonzero(pos % BLOCK_SIZE == 0)
         bounds = np.append(bs, m)
-        bgid, bpos = gid[bs], pos[bs] // block_size
+        bgid, bpos = gid[bs], pos[bs] // BLOCK_SIZE
         # block-local docid deltas: global diff, reset at block starts
         deltas = np.diff(internal, prepend=internal[:1])
         deltas[bs] = 0
@@ -366,17 +378,17 @@ def block_encoder(avgs: dict, n_docs: float, params: BM25Params,
         ubs = np.maximum.reduceat(sc, bs)
         lbs = np.minimum.reduceat(sc, bs)
         # fragment-local champion candidates (see BLOCKS_SCHEMA): union
-        # of the top champion_blocks by (max_score desc, internal asc)
-        # and the first champion_blocks blocks of the run (score decays
+        # of the top CHAMPION_BLOCKS by (max_score desc, internal asc)
+        # and the first CHAMPION_BLOCKS blocks of the run (score decays
         # along the length-ordered internal axis, so these hold the
         # term's top-scoring postings — the multi-term-overlap docs
         # that max_score ranking alone misses)
         order = np.lexsort((internal[bs], -ubs, bgid))
         rank = np.empty(len(bs), dtype=np.int64)
         rank[order] = np.arange(len(bs)) - np.flatnonzero(bpos == 0)[bgid[order]]
-        champ = np.where(rank < champion_blocks, rank + 1, 0)
-        head = (bpos < champion_blocks) & (champ == 0)
-        champ[head] = champion_blocks + 1 + bpos[head]
+        champ = np.where(rank < CHAMPION_BLOCKS, rank + 1, 0)
+        head = (bpos < CHAMPION_BLOCKS) & (champ == 0)
+        champ[head] = CHAMPION_BLOCKS + 1 + bpos[head]
 
         def stream(vals: np.ndarray, rows: np.ndarray | None = None) -> pa.Array:
             if rows is None:
@@ -456,9 +468,11 @@ def block_encoder(avgs: dict, n_docs: float, params: BM25Params,
     return encode
 
 
-def assign_internal_ids(postings: DataFrame) -> DataFrame:
+def assign_internal_ids(docmeta: DataFrame) -> DataFrame:
     """(docid) -> (docid, internal): internal = 0-based rank of the doc by
-    (total field length asc, docid asc).
+    (total field length asc, docid asc), the lengths summed from the
+    docmeta table (one row per doc and field it holds). A doc without
+    postings (every field empty) takes an id too; it lies in no block.
 
     Distributed rank — no single-partition window: range-partition by the
     sort key and materialize that once with ``localCheckpoint``, collect
@@ -477,12 +491,7 @@ def assign_internal_ids(postings: DataFrame) -> DataFrame:
     by then, so the torn build is never served and a rerun starts
     clean.
     """
-    doclen = (
-        postings.select("field", "docid", "field_len")
-        .dropDuplicates(["field", "docid"])
-        .groupBy("docid")
-        .agg(F.sum("field_len").alias("dl"))
-    )
+    doclen = docmeta.groupBy("docid").agg(F.sum("field_len").alias("dl"))
     ranked = (
         doclen.repartitionByRange("dl", "docid")
         .sortWithinPartitions("dl", "docid")
@@ -506,23 +515,22 @@ def assign_internal_ids(postings: DataFrame) -> DataFrame:
 
 def build_blocks(
     postings: DataFrame,
+    docmeta: DataFrame,
     dictionary: DataFrame,
     stats: dict,
     bm25: BM25Params,
-    block_size: int = BLOCK_SIZE,
-    champion_blocks: int = 8,
 ) -> DataFrame:
     """postings -> compressed blocks in length-ordered internal docid space.
 
     Internal ids are assigned (assign_internal_ids; the docmap joins the
     postings by broadcast), the stream is range-partitioned + sorted by
     (field, term, internal), then each task cuts blocks at term
-    boundaries or every ``block_size`` rows — narrow after the one sort,
+    boundaries or every ``BLOCK_SIZE`` rows — narrow after the one sort,
     skew split by internal range.
     """
     n_docs = float(stats["docs_count"])
     avgs = {f_: float(v["avg_field_length"]) for f_, v in stats["fields"].items()}
-    docmap = assign_internal_ids(postings)
+    docmap = assign_internal_ids(docmeta)
     # docmap is two longs per DOC (not per posting). Under ~4M docs
     # (≤ ~64 MB) broadcasting it turns the postings-side sort-merge
     # join — a full postings shuffle, ~20 s of the 104 s build at the
@@ -547,7 +555,4 @@ def build_blocks(
         .repartitionByRange("field", "term", "internal")
         .sortWithinPartitions("field", "term", "internal")
     )
-    return p.mapInArrow(
-        block_encoder(avgs, n_docs, bm25, block_size, champion_blocks),
-        BLOCKS_SCHEMA,
-    )
+    return p.mapInArrow(block_encoder(avgs, n_docs, bm25), BLOCKS_SCHEMA)

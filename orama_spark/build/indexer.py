@@ -7,10 +7,12 @@ frame: ``tokens_table`` (docs -> per-field token lists),
 ``docmeta_table`` (tokens -> per-doc field lengths), ``dictionary_table``
 (postings -> df = Σocc) and ``dictionary_bylen_table`` (dictionary ->
 the length-banded copy), plus ``postings_layout`` for the postings file
-order. ``IndexBuilder.build``, incremental insert / compact
+order, and ``field_stats`` (a batch of inserts or removes -> stats.json).
+``IndexBuilder.build``, incremental insert / remove / compact
 (maintenance.py), the verbatim dump restore (persistence/restore.py) and
 ``SearchIndex.load``'s delta composition all call these; each caller
-chooses only paths, write mode and partition width.
+chooses only paths, write mode and partition width, and ``field_stats``'
+callers only the batch, its order and the start state.
 
 Reference semantics being reproduced (see SURVEY.md §2.3, §7-M2):
   * field_len  = len(token list)  — with the default deduplicating
@@ -19,10 +21,11 @@ Reference semantics being reproduced (see SURVEY.md §2.3, §7-M2):
     dedup (index.ts:93-111)
   * df         = per-(field, term) number of (doc, token) inserts
     (index.ts:113-118)
-  * avg_field_length = running mean over the GLOBAL doc count at each
-    insert (index.ts:88) — equals the plain mean when every doc has the
-    field (the telescoped recurrence), which is the fast path; the
-    order-dependent general case is reproduced exactly for dense docids
+  * avg_field_length = running mean over the live doc count at each
+    insert and remove (index.ts:79-91, 121-132) — it telescopes to a
+    closed form when every doc of a batch fires exactly once, the fast
+    path; otherwise it depends on the order, which a build takes from
+    the docids and insert / remove from the caller's rows (any docids)
 
 Scale design (the part Catalyst doesn't give us):
   * one tokenize pass (Arrow UDF) -> explode -> postings carry
@@ -43,6 +46,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -243,6 +247,193 @@ def dictionary_bylen_table(dictionary: DataFrame, n_part: int) -> DataFrame:
     )
 
 
+# --------------------------------------------------- avg_field_length
+
+# Bucket count of the distributed rank and suffix scan. 64 keeps the
+# driver-side offset tables trivial while bounding any one window
+# partition to ~1/64 of the batch; at 1000 executors raise it to
+# O(cores) — the collects stay tiny either way.
+_STATS_BUCKETS = 64
+
+
+def _elements(config: IndexConfig, f_: str) -> Column:
+    """The field as the reference feeds it to the score parameters: one
+    token list per element (index.ts:260-301), a scalar being a
+    one-element array, and an empty array on docs that lack it."""
+    c = F.col(_tok_col(f_))
+    if config.schema[f_] != "string[]":
+        c = F.when(c.isNotNull(), F.array(c))
+    return F.coalesce(c, F.array().cast("array<array<string>>"))
+
+
+def _bucket_expr(col: Column, lo: int, hi: int) -> Column:
+    """Value-range bucket of ``col`` over [lo, hi]: monotone in it."""
+    span = max(int(hi) - int(lo) + 1, 1)
+    return F.floor(
+        (col.cast("long") - F.lit(int(lo))) * _STATS_BUCKETS / F.lit(span)
+    ).cast("int")
+
+
+def field_stats(
+    tokens: DataFrame, config: IndexConfig, order: str, start: dict | None = None,
+    sign: int = 1,
+) -> dict:
+    """``stats.json`` after one batch of inserts (``sign`` +1) or removes
+    (-1) applied to ``start`` (an empty index when None): the live
+    ``docs_count``, and per searchable field ``docs_with_field`` and the
+    reference's running mean ``avg_field_length``.
+
+    ``tokens`` holds the tokens-table row of every document of the
+    batch; the batch applies them one by one in ascending ``order``.
+    With c the live document count before a document's event, the
+    reference updates A <- (A*c + s*len) / (c + s) (index.ts:79-91 for
+    inserts, 121-132 for removes), and the result is 0 when c + s = 0.
+    An insert fires once per element of the field at the same c
+    (string[], index.ts:290-296); a remove fires once per document with
+    its stored length — the last element's — and then gives NaN for
+    every further element, the reference's quirk (index.ts:383-405:
+    the first call clears fieldLengths, the second subtracts
+    undefined). Documents lacking the field fire nothing, but advance c.
+
+    One aggregate over ``tokens`` decides each field. When every
+    document fires exactly once the recurrence telescopes to
+    (A0*c0 + s*Σlen) / (c0 + s*m); otherwise the distributed suffix
+    scan (``_suffix_avg_df``) evaluates it."""
+    start = start or {"docs_count": 0, "fields": {}}
+    c0 = int(start["docs_count"])
+    fields = config.searchable_fields
+    aggs = [F.count("*").alias("m"), F.min(order).alias("lo"), F.max(order).alias("hi")]
+    for i, f_ in enumerate(fields):
+        el = _elements(config, f_)
+        aggs += [
+            F.sum(F.size(el)).alias(f"n{i}"),  # events
+            F.count_if(F.size(el) > 0).alias(f"k{i}"),  # docs with the field
+            F.max(F.size(el)).alias(f"top{i}"),
+            F.sum(F.aggregate(el, F.lit(0), lambda acc, x: acc + F.size(x))).alias(f"s{i}"),
+        ]
+    row = tokens.agg(*aggs).collect()[0]
+    m = int(row["m"])
+    out = {"docs_count": c0 + sign * m, "fields": dict(start["fields"])}
+    a0s: dict[str, float] = {}
+    for i, f_ in enumerate(fields):
+        info = start["fields"].get(f_, {"avg_field_length": 0.0, "docs_with_field": 0})
+        a0 = float(info["avg_field_length"])
+        n, top = int(row[f"n{i}"] or 0), int(row[f"top{i}"] or 0)
+        if n == 0:
+            avg = a0
+        elif n == m and top == 1:
+            c_end = c0 + sign * m
+            avg = (a0 * c0 + sign * int(row[f"s{i}"])) / c_end if c_end else 0.0
+        elif sign < 0 and top >= 2 and c0 > m:
+            avg = float("nan")  # poisoned, and no later reset to 0
+        else:
+            avg, a0s[f_] = None, a0
+        out["fields"][f_] = {
+            "avg_field_length": avg,
+            "docs_with_field": int(info["docs_with_field"]) + sign * int(row[f"k{i}"]),
+        }
+    if a0s:
+        for r in _suffix_avg_df(
+            _events(tokens, config, order, list(a0s), row["lo"], row["hi"], c0, sign),
+            sign, a0s,
+        ).collect():
+            out["fields"][r["field"]]["avg_field_length"] = float(r["avg"])
+    return out
+
+
+def _events(
+    tokens: DataFrame, config: IndexConfig, order: str, fields: list[str],
+    lo: int, hi: int, c0: int, sign: int,
+) -> DataFrame:
+    """(field, bucket, rank, c, pos, len): one row per event of
+    ``fields``. ``rank`` is the document's 1-based place in the batch,
+    distributed: value-range buckets on ``order``, per-bucket counts
+    collected for the offsets, a row_number PARTITIONED on bucket."""
+    from pyspark.sql import Window
+
+    docs = tokens.withColumn("bucket", _bucket_expr(F.col(order), lo, hi))
+    counts = {r["bucket"]: r["count"] for r in docs.groupBy("bucket").count().collect()}
+    offs, acc = {}, 0
+    for b in sorted(counts):
+        offs[b] = acc
+        acc += counts[b]
+    rmap = F.create_map(*[F.lit(x) for kv in offs.items() for x in kv])
+    rank = F.row_number().over(Window.partitionBy("bucket").orderBy(order)) + rmap[F.col("bucket")]
+    ranked = docs.withColumn("rank", rank)
+    c = (F.lit(c0) + sign * (F.col("rank") - 1)).cast("double").alias("c")
+    # a remove subtracts the stored (last-element) length once, then NaN
+    ln = (
+        F.size("toks") if sign > 0
+        else F.when(F.col("pos") == 0, F.size(F.try_element_at("el", F.lit(-1))))
+    )
+    return _union([
+        ranked.select(
+            F.lit(f_).alias("field"), "bucket", "rank", c, _elements(config, f_).alias("el")
+        )
+        .select("*", F.posexplode("el").alias("pos", "toks"))
+        .select(
+            "field", "bucket", "rank", "c", "pos",
+            F.coalesce(ln.cast("double"), F.lit(float("nan"))).alias("len"),
+        )
+        for f_ in fields
+    ])
+
+
+def _suffix_avg_df(rows: DataFrame, sign: int, start: dict[str, float]) -> DataFrame:
+    """Per field, the running mean after the events in ``rows`` (field,
+    bucket, rank, c, pos, len), applied in (rank, pos) order from
+    ``start[field]`` (0 when absent). Each event is affine,
+    A <- a*A + b with a = c/(c+s) and b = s*len/(c+s) (a = b = 0 where
+    c + s = 0), so
+        A = A0 * Π a + Σ_i b_i * Π_{j>i} a_j
+    with the products in log space: lp = log a (-inf where a = 0).
+
+    ``bucket`` must be monotone non-decreasing in rank. The suffix sum
+    is a two-stage scan, never a global Window.orderBy:
+      1. per-(field, bucket) lp totals -> driver; a bucket's offset is
+         the sum of the totals of the field's LATER buckets;
+      2. the within-bucket suffix via a window PARTITIONED on
+         (bucket, field), each partition at most one bucket of rows.
+    A term whose suffix is -inf precedes a reset and is dropped, NaN
+    included (a remove to 0 resets the field); the head A0 * Π a keeps
+    NaN * 0 = NaN on inserts, as the reference does."""
+    from pyspark.sql import Window
+
+    s = float(sign)
+    c, ln = F.col("c"), F.col("len")
+    lp = F.when((c > 0) & (c + s > 0), F.log(c) - F.log(c + s)).otherwise(
+        F.lit(float("-inf"))
+    )
+    b = F.when(c + s != 0, s * ln / (c + s)).otherwise(ln * 0.0)
+    rows = rows.withColumn("lp", lp).withColumn("b", b)
+    totals: dict[str, dict[int, float]] = {}
+    for r in rows.groupBy("field", "bucket").agg(F.sum("lp").alias("t")).collect():
+        totals.setdefault(r["field"], {})[r["bucket"]] = float(r["t"])
+    offs, heads = {}, {}
+    for f_, per in totals.items():
+        offs[f_], acc = {}, 0.0
+        for bk in sorted(per, reverse=True):
+            offs[f_][bk] = acc
+            acc += per[bk]
+        a0 = start.get(f_, 0.0)
+        heads[f_] = 0.0 if sign < 0 and acc == float("-inf") else a0 * math.exp(acc)
+    omap = F.create_map(*[
+        x for f_, per in offs.items()
+        for x in (F.lit(f_), F.create_map(*[F.lit(v) for kv in per.items() for v in kv]))
+    ])
+    hmap = F.create_map(*[F.lit(v) for kv in heads.items() for v in kv])
+    w = (
+        Window.partitionBy("bucket", "field")
+        .orderBy(F.desc("rank"), F.desc("pos"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    suffix = F.coalesce(F.sum("lp").over(w), F.lit(0.0)) + omap[F.col("field")][F.col("bucket")]
+    term = F.when(F.col("suffix") > float("-inf"), F.col("b") * F.exp("suffix")).otherwise(0.0)
+    return rows.withColumn("suffix", suffix).groupBy("field").agg(
+        (F.sum(term) + F.first(hmap[F.col("field")])).alias("avg")
+    )
+
+
 def _config_fingerprint(config: IndexConfig, extra: str = "") -> str:
     cfg = json.dumps(
         {
@@ -362,46 +553,17 @@ class IndexBuilder:
         stats_path = os.path.join(out_dir, "stats.json")
 
         def _stats():
-            docs_count = spark.read.parquet(docs_path).count()
-            dm = spark.read.parquet(docmeta_path)
-            per_field = {
-                r["field"]: {"n": r["n"], "mean": r["mean"]}
-                for r in dm.groupBy("field")
-                .agg(F.count("*").alias("n"), F.avg("field_len").alias("mean"))
-                .collect()
-            }
-            fields = {}
-            for f_ in self.config.searchable_fields:
-                info = per_field.get(f_, {"n": 0, "mean": 0.0})
-                if self.config.schema[f_] == "string[]":
-                    # per-element recurrence (one avg update PER ELEMENT
-                    # at the same docsCount, index.ts:88 via 290-296) —
-                    # never a plain mean unless every doc has exactly
-                    # one element
-                    avg = (
-                        self._exact_avg_field_length_elements(
-                            spark.read.parquet(tokens_path), f_
-                        )
-                        if info["n"] > 0
-                        else 0.0
-                    )
-                elif info["n"] == docs_count or info["n"] == 0:
-                    # telescoped running mean == plain mean (index.ts:88)
-                    avg = float(info["mean"] or 0.0)
-                else:
-                    avg = self._exact_avg_field_length(dm, f_, docs_count)
-                fields[f_] = {
-                    "avg_field_length": avg,
-                    "docs_with_field": int(info["n"]),
-                }
-            stats = {"docs_count": int(docs_count), "fields": fields}
+            # the build is one insert batch into an empty index, its
+            # documents inserted in docid order
+            stats = field_stats(tokenized, cfg, order="docid")
             with open(stats_path, "w") as fh:
                 json.dump(stats, fh, indent=1)
-            return {"path": stats_path, "docs_count": int(docs_count)}
+            return {"path": stats_path, "docs_count": stats["docs_count"]}
 
         # Overlap the two independent stage chains (guide §2.6): the
         # postings chain (postings -> dictionary -> dictionary_bylen)
-        # and the docmeta chain (docmeta -> stats) share no data, so a
+        # and the docmeta chain (docmeta -> stats, both read only the
+        # tokens table) share no data, so a
         # second driver thread lets the shorter chain's jobs backfill
         # executor slots freed by the longer one's stragglers. Spark's
         # scheduler handles concurrent jobs natively; the manifest
@@ -431,144 +593,3 @@ class IndexBuilder:
         manifest.save()
         cfg.hooks.run_observe("after_insert_multiple", df, results)
         return results
-
-    # Bucket count for the distributed suffix scan. 64 keeps the
-    # driver-side offset table trivial while bounding any one window
-    # partition to ~1/64 of the corpus; at 1000 executors raise it to
-    # O(cores) — the collect stays tiny either way.
-    _STATS_BUCKETS = 64
-
-    @staticmethod
-    def _suffix_avg_df(rows: DataFrame) -> DataFrame:
-        """Distributed evaluation of the order-dependent running-mean
-        telescoping sum  A = Σ_i len_i/c_i · exp(Σ_{j>i} lp_j)  with
-        lp = log((c-1)/c) and rows ordered by (c, pos) ascending.
-
-        ``rows`` must carry (bucket int, c double, pos int, len double)
-        with ``bucket`` monotone non-decreasing in (c, pos) — a
-        value-range bucketing. The suffix sum is a two-stage scan
-        (r4 VERDICT Wrong #3 fix — no more global Window.orderBy):
-          1. per-bucket lp totals → driver (≤ _STATS_BUCKETS scalars);
-             bucket b's global offset = Σ totals of buckets AFTER b;
-          2. within-bucket suffix via a window PARTITIONED on bucket
-             (hash exchange, each partition ≤ one bucket of rows).
-        c=1 rows (the first insert) have lp = -inf; they live in the
-        minimum bucket, so -inf never contaminates another bucket's
-        offset, and exp(-inf)=0 reproduces the reference's reset
-        semantics exactly. Returns a 1-row (avg) DataFrame so tests can
-        assert the physical plan has no single-partition exchange."""
-        from pyspark.sql import Window
-
-        lp = F.when(F.col("c") <= 1, F.lit(float("-inf"))).otherwise(
-            F.log(F.col("c") - 1) - F.log(F.col("c"))
-        )
-        rows = rows.withColumn("lp", lp)
-        totals = {
-            r["bucket"]: float(r["t"])
-            for r in rows.groupBy("bucket").agg(F.sum("lp").alias("t")).collect()
-        }
-        if not totals:
-            return rows.sparkSession.range(1).select(
-                F.lit(0.0).alias("avg")
-            )
-        offs: dict[int, float] = {}
-        acc = 0.0
-        for b in sorted(totals, reverse=True):
-            offs[b] = acc
-            acc += totals[b]
-        omap = F.create_map(
-            *[F.lit(x) for kv in offs.items() for x in kv]
-        )
-        w = (
-            Window.partitionBy("bucket")
-            .orderBy(F.desc("c"), F.desc("pos"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        suffix = F.coalesce(F.sum("lp").over(w), F.lit(0.0)) + omap[F.col("bucket")]
-        return rows.withColumn("suffix", suffix).select(
-            F.sum(F.col("len") / F.col("c") * F.exp(F.col("suffix"))).alias("avg")
-        )
-
-    @staticmethod
-    def _bucket_expr(col: Column, lo: int, hi: int) -> Column:
-        n = IndexBuilder._STATS_BUCKETS
-        span = max(int(hi) - int(lo) + 1, 1)
-        return (
-            F.floor((col.cast("long") - F.lit(int(lo))) * n / F.lit(span))
-            .cast("int")
-            .alias("bucket")
-        )
-
-    @staticmethod
-    def _exact_avg_field_length(docmeta: DataFrame, field: str, docs_count: int) -> float:
-        """Order-dependent running mean (index.ts:88) for fields missing
-        on some docs. Requires dense docids 0..N-1 (insert position
-        c = docid+1). A_M = sum_m (len_m/c_m) * prod_{k>m} (c_k-1)/c_k,
-        computed with log-space suffix sums via the distributed
-        two-stage scan in _suffix_avg_df."""
-        fr = docmeta.where(F.col("field") == field)
-        ext = fr.agg(F.min("docid").alias("lo"), F.max("docid").alias("hi")).first()
-        if ext["lo"] is None:
-            return 0.0
-        rows = fr.select(
-            IndexBuilder._bucket_expr(F.col("docid"), ext["lo"], ext["hi"]),
-            (F.col("docid") + 1).cast("double").alias("c"),
-            F.lit(0).alias("pos"),
-            F.col("field_len").cast("double").alias("len"),
-        )
-        out = IndexBuilder._suffix_avg_df(rows).collect()
-        return float(out[0]["avg"] or 0.0)
-
-    @staticmethod
-    def _exact_avg_field_length_elements(tokenized: DataFrame, field: str) -> float:
-        """string[] generalization of the recurrence: ONE avg update per
-        (doc, element) at the doc's insert count c (index.ts:88 called
-        per element, 290-296):
-        A = sum_{(m,e)} len_{m,e}/c_m * prod_{(k,f) > (m,e)} (c_k-1)/c_k
-        ordered by (doc, element position), with c_m the doc's 1-based
-        rank in docid order over ALL docs (the reference's docsCount is
-        the global running insert count — docs without the field still
-        advance it).
-
-        Runs on EVERY string[] build, so both the doc ranking and the
-        suffix sum are distributed (r4 VERDICT Wrong #3): value-range
-        buckets on docid, per-bucket doc counts collected to the driver
-        give each bucket its rank offset, a bucket-PARTITIONED
-        row_number finishes the rank; the telescoping sum then goes
-        through _suffix_avg_df's two-stage scan."""
-        from pyspark.sql import Window
-
-        col = _tok_col(field)
-        b = tokenized.select("docid", F.col(col).alias("toks"))
-        ext = b.agg(F.min("docid").alias("lo"), F.max("docid").alias("hi")).first()
-        if ext["lo"] is None:
-            return 0.0
-        b = b.withColumn(
-            "bucket", IndexBuilder._bucket_expr(F.col("docid"), ext["lo"], ext["hi"])
-        )
-        cnts = {
-            r["bucket"]: r["n"]
-            for r in b.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        roffs: dict[int, int] = {}
-        acc = 0
-        for k in sorted(cnts):
-            roffs[k] = acc
-            acc += cnts[k]
-        rmap = F.create_map(*[F.lit(x) for kv in roffs.items() for x in kv])
-        wrank = Window.partitionBy("bucket").orderBy("docid")
-        ranked = b.withColumn(
-            "c", (F.row_number().over(wrank) + rmap[F.col("bucket")]).cast("double")
-        )
-        rows = (
-            ranked.where(F.col("toks").isNotNull())
-            .select("bucket", "c", F.posexplode("toks").alias("pos", "etoks"))
-            .select(
-                "bucket",
-                "c",
-                F.col("pos").alias("pos"),
-                F.size("etoks").cast("double").alias("len"),
-            )
-        )
-        out = IndexBuilder._suffix_avg_df(rows).collect()
-        return float(out[0]["avg"] or 0.0)

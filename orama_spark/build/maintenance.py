@@ -4,11 +4,12 @@ Reference semantics (methods/insert.ts, methods/remove.ts:10-318,
 methods/update.ts:8-49, methods/upsert.ts):
   * remove reverses insert: postings/doc gone, df decremented per
     (field, term) (components/index.ts:134-136), avgFieldLength updated
-    by the telescoped removal recurrence (index.ts:121-132):
-    sequentially A' = (A*c - fl)/(c-1) collapses to
-    A_final = (A*N - sum(fl_removed)) / (N - m).
-  * insert appends and advances the running mean the same way:
-    A_final = (A*N + sum(fl_new)) / (N + m).
+    by the removal recurrence (index.ts:121-132) A' = (A*c - fl)/(c-1),
+    c the live count before each removed doc, in the caller's order.
+  * insert appends and advances the running mean A' = (A*c + fl)/(c+1).
+    Only when every doc of the batch holds the field once do the two
+    collapse to A_final = (A*N -/+ sum(fl)) / (N -/+ m); both, and the
+    general case, are ``indexer.field_stats``.
   * update = remove + insert; upsert = exists ? update : insert.
 
 Scale design: removals NEVER rewrite the posting store. They append to
@@ -34,22 +35,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import IndexConfig
 from .indexer import (
-    _tok_col,
     dictionary_bylen_table,
     dictionary_table,
     docmeta_table,
+    field_stats,
     postings_layout,
     postings_table,
     term_df,
     tokens_table,
 )
-
-
-def _array_fields(config: IndexConfig) -> list[str]:
-    return [
-        f_ for f_ in config.searchable_fields
-        if config.schema[f_] == "string[]"
-    ]
 
 
 def _stats_path(index_dir: str) -> str:
@@ -75,10 +69,16 @@ def remove_documents(
     stats after removal. Idempotence: ids already tombstoned are ignored;
     ids that never existed are ignored too (the reference remove is a
     no-op returning false for unknown ids, methods/remove.ts), so stats
-    are only adjusted for documents that actually leave the index.
+    are only adjusted for documents that actually leave the index. The
+    documents leave in the frame's row order, which the running mean
+    depends on; a repeated id counts at its first occurrence.
     """
     remove_ids = config.hooks.run_transform("before_remove_multiple", remove_ids)
-    remove_ids = remove_ids.select(F.col(remove_ids.columns[0]).alias("docid")).distinct()
+    # the caller's row order, a repeated id at its first occurrence
+    remove_ids = remove_ids.select(
+        F.col(remove_ids.columns[0]).alias("docid"),
+        F.monotonically_increasing_id().alias("_ord"),
+    ).groupBy("docid").agg(F.min("_ord").alias("_ord"))
     # only docs that exist: semi-join against the live docs table —
     # without this, removing (or upserting) unknown ids would decrement
     # docs_count and rescale avg_field_length for nothing, permanently
@@ -92,8 +92,7 @@ def remove_documents(
         existing = spark.read.parquet(tomb_path)
         remove_ids = remove_ids.join(existing, "docid", "left_anti")
     remove_ids = remove_ids.persist()
-    n_removed = remove_ids.count()
-    if n_removed == 0:
+    if remove_ids.count() == 0:
         remove_ids.unpersist()
         return _load_stats(index_dir)
 
@@ -104,55 +103,14 @@ def remove_documents(
     delta = term_df(removed_postings).select("field", "term", (-F.col("df")).alias("ddf"))
     delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
 
-    # field-length sums for the telescoped avg update (index.ts:121-132)
-    docmeta = spark.read.parquet(os.path.join(index_dir, "docmeta"))
-    fl_sums = {
-        r["field"]: (r["s"], r["c"])
-        for r in docmeta.join(remove_ids, "docid", "left_semi")
-        .groupBy("field")
-        .agg(F.sum("field_len").alias("s"), F.count("*").alias("c"))
-        .collect()
-    }
-    # string[] removal quirk (REPLICATED from the reference): remove
-    # runs removeDocumentScoreParameters once PER ELEMENT
-    # (index.ts:383-405 -> removeScalar -> index.ts:121-132), but the
-    # first element call clears fieldLengths[internalId]; the second
-    # element then computes (avg*N - undefined)/(N-1) = NaN, permanently
-    # poisoning avgFieldLength for that field until a rebuild. So:
-    # removing ANY doc whose array field holds >= 2 elements sets the
-    # field average to NaN; 1-element docs behave exactly like scalars.
-    poisoned: set[str] = set()
-    arr_fields = _array_fields(config)
-    if arr_fields:
-        tokens = spark.read.parquet(os.path.join(index_dir, "tokens")).join(
-            remove_ids, "docid", "left_semi"
-        )
-        for f_ in arr_fields:
-            c_ = F.col(_tok_col(f_))
-            if tokens.where(c_.isNotNull() & (F.size(c_) >= 2)).limit(1).count():
-                poisoned.add(f_)
-    stats = _load_stats(index_dir)
-    n = stats["docs_count"]
-    for field, info in stats["fields"].items():
-        s, c = fl_sums.get(field, (0, 0))
-        # per-field telescoped mean over docs-with-field: removing docs
-        # that lack the field leaves its average untouched (the reference
-        # recurrence only fires for props present on the doc,
-        # index.ts:121-132 / remove.ts)
-        dwf = info["docs_with_field"]
-        denom = dwf - c
-        if field in poisoned:
-            info["avg_field_length"] = float("nan")
-        else:
-            info["avg_field_length"] = (
-                (info["avg_field_length"] * dwf - s) / denom if denom > 0 else 0.0
-            )
-        info["docs_with_field"] = denom
-    stats["docs_count"] = n - n_removed
+    # stats: the removed docs' events in the caller's order
+    tokens = spark.read.parquet(os.path.join(index_dir, "tokens")).join(remove_ids, "docid")
+    stats = field_stats(tokens, config, "_ord", _load_stats(index_dir), sign=-1)
 
-    remove_ids.write.mode("append").parquet(tomb_path)
+    removed = remove_ids.select("docid")
+    removed.write.mode("append").parquet(tomb_path)
     _save_stats(index_dir, stats)
-    config.hooks.run_observe("after_remove_multiple", remove_ids, stats)
+    config.hooks.run_observe("after_remove_multiple", removed, stats)
     remove_ids.unpersist()
     return stats
 
@@ -160,8 +118,8 @@ def remove_documents(
 def _insert_probe(
     spark: SparkSession, new_ids: DataFrame, doc_ids: DataFrame, tomb_path: str
 ) -> tuple:
-    """(new rows, new rows whose docid is live in the index, new rows
-    whose docid is tombstoned) in ONE aggregate: the new, stored and
+    """(new rows whose docid is live in the index, new rows whose docid
+    is tombstoned) in ONE aggregate: the new, stored and
     tombstoned docids are tagged, unioned and grouped by docid, so
     duplicates on any side count as the separate semi-join counts they
     replace would count them."""
@@ -181,11 +139,10 @@ def _insert_probe(
         .where(F.col("n") > 0)
     )
     row = per_id.agg(
-        F.sum("n").alias("n_new"),
         F.sum(F.when((F.col("stored") == 1) & (F.col("dead") == 0), F.col("n"))).alias("dup"),
         F.sum(F.when(F.col("dead") == 1, F.col("n"))).alias("reinserts"),
     ).collect()[0]
-    return int(row["n_new"] or 0), int(row["dup"] or 0), int(row["reinserts"] or 0)
+    return int(row["dup"] or 0), int(row["reinserts"] or 0)
 
 
 def insert_documents(
@@ -193,13 +150,14 @@ def insert_documents(
 ) -> dict:
     """Append new documents (must carry config.docid_col; ids must be new
     — duplicate ids raise, mirroring DOCUMENT_ALREADY_EXISTS,
-    documents-store.ts:54)."""
+    documents-store.ts:54). They are inserted in the frame's row order,
+    which the running mean depends on."""
     new_docs = config.hooks.run_transform("before_insert_multiple", new_docs)
     docid = config.docid_col
     docs_path = os.path.join(index_dir, "docs")
     tomb_path = os.path.join(index_dir, "tombstones")
     new_docs = new_docs.persist()
-    n_new, dup, tombstoned_reinserts = _insert_probe(
+    dup, tombstoned_reinserts = _insert_probe(
         spark, new_docs.select(F.col(docid).alias("docid")),
         spark.read.parquet(docs_path).select(F.col(docid).alias("docid")),
         tomb_path,
@@ -230,64 +188,13 @@ def insert_documents(
     delta = term_df(new_postings).withColumnRenamed("df", "ddf")
     delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
 
-    # stats: per-field telescoped running-mean extension over
-    # docs-with-field (docs lacking the field leave its average alone)
-    fl_sums = {
-        r["field"]: (r["s"], r["c"])
-        for r in dm.groupBy("field")
-        .agg(F.sum("field_len").alias("s"), F.count("*").alias("c"))
-        .collect()
-    }
-    stats = _load_stats(index_dir)
-    n = stats["docs_count"]
-    arr_fields = set(_array_fields(config))
-    arr_rows: dict[str, list] = {}
-    if arr_fields:
-        # per-element order-dependent recurrence (index.ts:88 fires once
-        # per element with the GLOBAL running doc count; docs lacking
-        # the field still advance it): fold sequentially from the stored
-        # average. Bounded by the user's insert batch (lengths only
-        # cross the driver), like the reference's own per-doc loop.
-        # The reference folds in the insert BATCH's encounter order, not
-        # docid order — replay in the caller's row order (partition
-        # index + in-partition position via monotonically_increasing_id
-        # over the persisted frame), so stats match the reference even
-        # when insertion order differs from docid sort order.
-        enc = {
-            r["docid"]: r["_ord"]
-            for r in tokenized.select(
-                "docid", F.monotonically_increasing_id().alias("_ord")
-            ).collect()
-        }
-        for f_ in arr_fields:
-            c_ = F.col(_tok_col(f_))
-            rows = (
-                tokenized.select("docid", F.posexplode(c_).alias("pos", "etoks"))
-                .select("docid", "pos", F.size("etoks").alias("len"))
-                .collect()
-            )
-            rows.sort(key=lambda r: (enc[r["docid"]], r["pos"]))
-            arr_rows[f_] = rows
-        id_rank = {
-            d: i + 1
-            for i, d in enumerate(sorted(enc, key=enc.get))
-        }
-    for field, info in stats["fields"].items():
-        s, c = fl_sums.get(field, (0, 0))
-        dwf = info["docs_with_field"]
-        denom = dwf + c
-        if field in arr_fields:
-            avg = info["avg_field_length"]
-            for r in arr_rows[field]:
-                cj = float(n + id_rank[r["docid"]])
-                avg = (avg * (cj - 1) + r["len"]) / cj
-            info["avg_field_length"] = avg
-        else:
-            info["avg_field_length"] = (
-                (info["avg_field_length"] * dwf + s) / denom if denom > 0 else 0.0
-            )
-        info["docs_with_field"] = denom
-    stats["docs_count"] = n + n_new
+    # stats: the new docs' events in the caller's row order (partition
+    # index + in-partition position over the persisted frame), the
+    # order the reference inserts the batch in
+    stats = field_stats(
+        tokenized.withColumn("_ord", F.monotonically_increasing_id()),
+        config, "_ord", _load_stats(index_dir),
+    )
     _save_stats(index_dir, stats)
     tokenized.unpersist()
     new_postings.unpersist()

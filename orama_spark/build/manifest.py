@@ -1,11 +1,12 @@
 """Build lineage + checkpoint-resume manifests.
 
-Every index-build stage records (fingerprint, rows, wall seconds,
-output path) in ``manifest.json`` at the index root. A re-run with the
-same fingerprint (config hash + input identity) skips completed stages —
-the resumability contract of the north rule: a 100 TB build that dies at
-stage 4 resumes at stage 4, not at zero. Per-stage metrics double as the
-per-partition lineage log.
+Every index-build stage records its fingerprint, wall seconds,
+completion time and output path (the stats stage adds ``docs_count``)
+in ``manifest.json`` at the index root; no stage records row counts,
+bytes or jobs yet. A re-run with the same fingerprint (config hash +
+input identity) skips completed stages — the resumability contract of
+the north rule: a 100 TB build that dies at stage 4 resumes at stage 4,
+not at zero.
 """
 
 from __future__ import annotations

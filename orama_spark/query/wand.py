@@ -114,7 +114,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..build.blocks import (
-    BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, POSTINGS_READ_SCHEMA,
+    BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, DOCMETA_READ_SCHEMA, POSTINGS_READ_SCHEMA,
     avgfl_per_row, bm25_scores, build_blocks, decode_blocks, idf_per_row,
 )
 from ..config import IndexConfig
@@ -136,12 +136,6 @@ _EPS = 1e-12  # relative float-jitter allowance on θ comparisons
 # (~blocks_per_term / SWEEP_BUCKETS rows per term per bucket)
 SWEEP_BUCKETS = 256
 
-# θ-seed depth: per (field, term) fragment the encoder marks the top
-# CHAMPION_BLOCKS blocks by max_score and the first CHAMPION_BLOCKS in
-# internal order as candidates (blocks.py champ_rk), and θ is seeded
-# from their postings. ANY subset of postings yields valid (exact,
-# partial) sums, so the depth only sets how tight θ is, never soundness.
-CHAMPION_BLOCKS = 8
 # block metadata rows a call may sweep and score on the driver (per
 # query, for wand_topk_many); over it the sweep runs distributed. Read
 # at call time, so a test can force the distributed sweep by patching it.
@@ -378,14 +372,13 @@ class BlockIndex:
     # ------------------------------------------------------------ build
     @classmethod
     def build(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":
-        """Materialize index_dir/blocks from postings + dictionary +
-        stats.
+        """Materialize index_dir/blocks from postings + docmeta +
+        dictionary + stats.
 
-        Exchanges, in order: the per-doc length aggregate (a hash
-        exchange by (field, docid), then by docid) and its range
-        exchange by (dl, docid), checkpointed once for the docmap; the
-        range exchange by (field, term, internal) that feeds the block
-        encoder — hot terms split by internal range. The docmap and
+        Exchanges, in order: the per-doc length sum over docmeta (a
+        hash exchange by docid) and its range exchange by (dl, docid),
+        checkpointed once for the docmap; the range exchange by
+        (field, term, internal) that feeds the block encoder — hot terms split by internal range. The docmap and
         dictionary joins are broadcasts. Every table is read with its
         known schema."""
         import json
@@ -413,10 +406,10 @@ class BlockIndex:
         dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
             os.path.join(index_dir, "dictionary")
         )
-        blocks = build_blocks(
-            postings, dictionary, stats, config.bm25,
-            champion_blocks=CHAMPION_BLOCKS,
+        docmeta = spark.read.schema(DOCMETA_READ_SCHEMA).parquet(
+            os.path.join(index_dir, "docmeta")
         )
+        blocks = build_blocks(postings, docmeta, dictionary, stats, config.bm25)
         blocks.write.mode("overwrite").parquet(os.path.join(index_dir, "blocks"))
         import uuid
 

@@ -346,12 +346,13 @@ class TestBlocks:
         n_in_blocks = blocks.blocks.agg(F.sum("n")).collect()[0][0]
         assert n_in_blocks == n_postings
 
-    def test_internal_ids_are_length_rank(self, indexes):
+    def test_internal_ids_are_length_rank(self, spark, indexes, index_dir):
         # internal = dense 0-based rank by (total field length, docid)
         plain, _ = indexes
+        docmeta = spark.read.parquet(f"{index_dir}/docmeta")
         got = {
             r["docid"]: r["internal"]
-            for r in assign_internal_ids(plain.postings).collect()
+            for r in assign_internal_ids(docmeta).collect()
         }
         dl = (
             plain.postings.select("field", "docid", "field_len")

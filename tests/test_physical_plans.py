@@ -169,7 +169,7 @@ def test_stats_suffix_scan_is_partitioned(spark):
 
     from pyspark.sql import functions as F
 
-    from orama_spark.build.indexer import IndexBuilder
+    from orama_spark.build.indexer import _suffix_avg_df
 
     rng = random.Random(7)
     data = []  # (c, pos, len) for 200 docs, 1-3 elements each
@@ -177,14 +177,15 @@ def test_stats_suffix_scan_is_partitioned(spark):
     for c in range(1, 201):
         for pos in range(rng.randint(1, 3)):
             ln = float(rng.randint(0, 9))
-            data.append((c, c - 1, float(c), pos, ln))
+            # rank c, inserted at live count c - 1
+            data.append(("f", c, c - 1, c, float(c - 1), pos, ln))
             flat.append((c, ln))
     rows = spark.createDataFrame(
-        data, "docid long, bucket int, c double, pos int, len double"
+        data, "field string, docid long, bucket int, rank int, c double, pos int, len double"
     ).withColumn(
         "bucket", F.floor((F.col("docid") - 1) * 64 / 200).cast("int")
     )
-    df = IndexBuilder._suffix_avg_df(rows.select("bucket", "c", "pos", "len"))
+    df = _suffix_avg_df(rows.select("field", "bucket", "rank", "c", "pos", "len"), 1, {})
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the suffix window must consume a HASH exchange on bucket; the only
     # permitted SinglePartition exchange is the final 1-row scalar agg

@@ -9,9 +9,12 @@ SF_DIR holds the fixture tables as <table>.parquet; the gate itself
 runs at sf0.01.
 
 Prints one PASS/FAIL line per query with its Spark seconds, then
-`N/M passed`; exits non-zero on any failure.
+`N/M passed`, then the run's record as one JSON line: per query its
+status, Spark and oracle row counts, seconds and error. Exits non-zero
+on any failure.
 """
 
+import json
 import math
 import os
 import sys
@@ -70,22 +73,27 @@ def main():
 
     qs = entry_mod.queries()
     sqls = entry_mod.oracle_sql()
-    failures = checked = 0
+    records = []
     for name, fn in qs.items():
         if only is not None and name not in only:
             continue
-        checked += 1
+        rec = {"query": name, "status": "FAIL", "spark_rows": None,
+               "oracle_rows": None, "seconds": None, "error": None}
+        records.append(rec)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
-            print(f"FAIL {name} [{time.time() - t0:.2f}s]: spark error {type(e).__name__}: {e}")
-            failures += 1
+            rec["seconds"] = round(time.time() - t0, 2)
+            rec["error"] = f"spark error {type(e).__name__}: {e}"
+            print(f"FAIL {name} [{rec['seconds']:.2f}s]: {rec['error']}")
             continue
-        secs = time.time() - t0
+        secs = rec["seconds"] = round(time.time() - t0, 2)
+        rec["spark_rows"] = len(s_rows)
         if name not in sqls:
+            rec["status"] = "OK?"
             print(f"OK?  {name} [{secs:.2f}s]: rows-only ({len(s_rows)} rows, no oracle)")
             continue
         try:
@@ -93,28 +101,29 @@ def main():
             d_cols = rel.columns
             d_rows = rel.fetchall()
         except Exception as e:
-            print(f"FAIL {name} [{secs:.2f}s]: duckdb error {type(e).__name__}: {e}")
-            failures += 1
+            rec["error"] = f"duckdb error {type(e).__name__}: {e}"
+            print(f"FAIL {name} [{secs:.2f}s]: {rec['error']}")
             continue
-        ok = True
+        rec["oracle_rows"] = len(d_rows)
         if sorted(s_cols) != sorted(d_cols):
-            print(f"FAIL {name} [{secs:.2f}s]: columns spark={s_cols} duck={d_cols}")
-            ok = False
+            rec["error"] = f"columns spark={s_cols} duck={d_cols}"
         elif len(s_rows) != len(d_rows):
-            print(f"FAIL {name} [{secs:.2f}s]: rowcount spark={len(s_rows)} duck={len(d_rows)}")
-            ok = False
+            rec["error"] = f"rowcount spark={len(s_rows)} duck={len(d_rows)}"
         else:
             ms = rows_to_multiset(s_cols, s_rows)
             md = rows_to_multiset(d_cols, d_rows)
             if ms != md:
                 diff = [(a, b) for a, b in zip(ms, md) if a != b][:3]
-                print(f"FAIL {name} [{secs:.2f}s]: value mismatch, first diffs: {diff}")
-                ok = False
-        if ok:
+                rec["error"] = f"value mismatch, first diffs: {diff}"
+        if rec["error"] is None:
+            rec["status"] = "PASS"
             print(f"PASS {name} [{secs:.2f}s] ({len(s_rows)} rows)")
         else:
-            failures += 1
-    print(f"\n{checked - failures}/{checked} passed")
+            print(f"FAIL {name} [{secs:.2f}s]: {rec['error']}")
+    failures = sum(r["status"] == "FAIL" for r in records)
+    print(f"\n{len(records) - failures}/{len(records)} passed")
+    print(json.dumps({"sf": os.path.basename(os.path.normpath(sf_dir)), "passed": len(records) - failures,
+                      "checked": len(records), "queries": records}))
     spark.stop()
     return 1 if failures else 0
 
