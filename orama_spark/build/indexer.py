@@ -7,7 +7,8 @@ frame: ``tokens_table`` (docs -> per-field token lists),
 ``docmeta_table`` (tokens -> per-doc field lengths), ``dictionary_table``
 (postings -> df = Σocc) and ``dictionary_bylen_table`` (dictionary ->
 the length-banded copy), plus ``postings_layout`` for the postings file
-order, and ``field_stats`` (a batch of inserts or removes -> stats.json).
+order, and ``field_stats`` (a batch of inserts or removes -> stats.json,
+its events from ``insert_events`` or ``remove_events``).
 ``IndexBuilder.build``, incremental insert / remove / compact
 (maintenance.py), the verbatim dump restore (persistence/restore.py) and
 ``SearchIndex.load``'s delta composition all call these; each caller
@@ -256,14 +257,59 @@ def dictionary_bylen_table(dictionary: DataFrame, n_part: int) -> DataFrame:
 _STATS_BUCKETS = 64
 
 
-def _elements(config: IndexConfig, f_: str) -> Column:
-    """The field as the reference feeds it to the score parameters: one
-    token list per element (index.ts:260-301), a scalar being a
-    one-element array, and an empty array on docs that lack it."""
-    c = F.col(_tok_col(f_))
-    if config.schema[f_] != "string[]":
-        c = F.when(c.isNotNull(), F.array(c))
-    return F.coalesce(c, F.array().cast("array<array<string>>"))
+def _doc_rows(docs: DataFrame, order: str) -> DataFrame:
+    """The batch's documents as event rows with a null ``field``: each
+    advances the live count c."""
+    nul = F.lit(None).cast("int")
+    return docs.select(
+        order, F.lit(None).cast("string").alias("field"), nul.alias("pos"), nul.alias("len")
+    )
+
+
+def insert_events(tokens: DataFrame, config: IndexConfig, order: str) -> DataFrame:
+    """(order, field, pos, len) for inserting the ``tokens`` rows: a row
+    per document, then one per score-parameter event the reference
+    fires: per element of the field at its token count
+    (index.ts:260-301), a scalar being a one-element array, none for a
+    field the document lacks."""
+
+    def events(f_: str) -> DataFrame:
+        c = F.col(_tok_col(f_))
+        if config.schema[f_] != "string[]":
+            c = F.when(c.isNotNull(), F.array(c))
+        return tokens.select(
+            order, F.lit(f_).alias("field"),
+            F.posexplode(F.transform(c, F.size)).alias("pos", "len"),
+        )
+
+    return _union([_doc_rows(tokens, order)] + [events(f_) for f_ in config.searchable_fields])
+
+
+def remove_events(spark: SparkSession, index_dir: str, ids: DataFrame,
+                  config: IndexConfig, order: str) -> DataFrame:
+    """(order, field, pos, len) for removing the documents of ``ids``
+    (``docid``, ``order``) from the index at ``index_dir``: a row per
+    document, then its stored length (docmeta) once per field it holds,
+    then — the quirk of index.ts:383-405, whose first call clears
+    fieldLengths and whose second subtracts undefined — a null len for
+    every further element of a string[]. Reads docmeta, and tokens only
+    when the schema has a string[] field (its element counts)."""
+    stored = spark.read.parquet(os.path.join(index_dir, "docmeta")).join(ids, "docid").select(
+        order, "field", F.lit(0).alias("pos"), F.col("field_len").alias("len")
+    )
+    arr = [f_ for f_ in config.searchable_fields if config.schema[f_] == "string[]"]
+    if arr:
+        removed = spark.read.parquet(os.path.join(index_dir, "tokens")).join(ids, "docid")
+
+    def poisoned(f_: str) -> DataFrame:
+        n = F.size(_tok_col(f_))
+        return removed.where(n > 1).select(
+            order, F.lit(f_).alias("field"),
+            F.explode(F.sequence(F.lit(1), n - 1)).alias("pos"),
+            F.lit(None).cast("int").alias("len"),
+        )
+
+    return _union([_doc_rows(ids, order), stored] + [poisoned(f_) for f_ in arr])
 
 
 def _bucket_expr(col: Column, lo: int, hi: int) -> Column:
@@ -275,7 +321,7 @@ def _bucket_expr(col: Column, lo: int, hi: int) -> Column:
 
 
 def field_stats(
-    tokens: DataFrame, config: IndexConfig, order: str, start: dict | None = None,
+    events: DataFrame, config: IndexConfig, order: str, start: dict | None = None,
     sign: int = 1,
 ) -> dict:
     """``stats.json`` after one batch of inserts (``sign`` +1) or removes
@@ -283,58 +329,54 @@ def field_stats(
     ``docs_count``, and per searchable field ``docs_with_field`` and the
     reference's running mean ``avg_field_length``.
 
-    ``tokens`` holds the tokens-table row of every document of the
-    batch; the batch applies them one by one in ascending ``order``.
-    With c the live document count before a document's event, the
-    reference updates A <- (A*c + s*len) / (c + s) (index.ts:79-91 for
-    inserts, 121-132 for removes), and the result is 0 when c + s = 0.
-    An insert fires once per element of the field at the same c
-    (string[], index.ts:290-296); a remove fires once per document with
-    its stored length — the last element's — and then gives NaN for
-    every further element, the reference's quirk (index.ts:383-405:
-    the first call clears fieldLengths, the second subtracts
-    undefined). Documents lacking the field fire nothing, but advance c.
+    ``events`` holds the batch's rows from ``insert_events`` or
+    ``remove_events``, applied in ascending (``order``, pos). With c the
+    live document count before a document's events, each event updates
+    A <- (A*c + s*len) / (c + s) (index.ts:79-91 for inserts, 121-132
+    for removes), 0 when c + s = 0 and NaN for a null len. All events
+    of one document share its c (string[], index.ts:290-296); documents
+    lacking the field fire nothing, but advance c.
 
-    One aggregate over ``tokens`` decides each field. When every
+    One aggregate over ``events`` decides each field. When every
     document fires exactly once the recurrence telescopes to
     (A0*c0 + s*Σlen) / (c0 + s*m); otherwise the distributed suffix
     scan (``_suffix_avg_df``) evaluates it."""
     start = start or {"docs_count": 0, "fields": {}}
     c0 = int(start["docs_count"])
     fields = config.searchable_fields
-    aggs = [F.count("*").alias("m"), F.min(order).alias("lo"), F.max(order).alias("hi")]
+    aggs = [
+        F.count_if(F.col("field").isNull()).alias("m"),
+        F.min(order).alias("lo"), F.max(order).alias("hi"),
+    ]
     for i, f_ in enumerate(fields):
-        el = _elements(config, f_)
+        on = F.col("field") == f_
         aggs += [
-            F.sum(F.size(el)).alias(f"n{i}"),  # events
-            F.count_if(F.size(el) > 0).alias(f"k{i}"),  # docs with the field
-            F.max(F.size(el)).alias(f"top{i}"),
-            F.sum(F.aggregate(el, F.lit(0), lambda acc, x: acc + F.size(x))).alias(f"s{i}"),
+            F.count_if(on).alias(f"n{i}"),  # events
+            F.count_if(on & (F.col("pos") == 0)).alias(f"k{i}"),  # docs with the field
+            F.sum(F.when(on, F.col("len"))).alias(f"s{i}"),
         ]
-    row = tokens.agg(*aggs).collect()[0]
+    row = events.agg(*aggs).collect()[0]
     m = int(row["m"])
     out = {"docs_count": c0 + sign * m, "fields": dict(start["fields"])}
     a0s: dict[str, float] = {}
     for i, f_ in enumerate(fields):
         info = start["fields"].get(f_, {"avg_field_length": 0.0, "docs_with_field": 0})
         a0 = float(info["avg_field_length"])
-        n, top = int(row[f"n{i}"] or 0), int(row[f"top{i}"] or 0)
+        n, k = int(row[f"n{i}"] or 0), int(row[f"k{i}"] or 0)
         if n == 0:
             avg = a0
-        elif n == m and top == 1:
+        elif n == k == m:
             c_end = c0 + sign * m
             avg = (a0 * c0 + sign * int(row[f"s{i}"])) / c_end if c_end else 0.0
-        elif sign < 0 and top >= 2 and c0 > m:
-            avg = float("nan")  # poisoned, and no later reset to 0
         else:
             avg, a0s[f_] = None, a0
         out["fields"][f_] = {
             "avg_field_length": avg,
-            "docs_with_field": int(info["docs_with_field"]) + sign * int(row[f"k{i}"]),
+            "docs_with_field": int(info["docs_with_field"]) + sign * k,
         }
     if a0s:
         for r in _suffix_avg_df(
-            _events(tokens, config, order, list(a0s), row["lo"], row["hi"], c0, sign),
+            _events(events, order, list(a0s), row["lo"], row["hi"], c0, sign),
             sign, a0s,
         ).collect():
             out["fields"][r["field"]]["avg_field_length"] = float(r["avg"])
@@ -342,41 +384,36 @@ def field_stats(
 
 
 def _events(
-    tokens: DataFrame, config: IndexConfig, order: str, fields: list[str],
-    lo: int, hi: int, c0: int, sign: int,
+    events: DataFrame, order: str, fields: list[str], lo: int, hi: int, c0: int, sign: int,
 ) -> DataFrame:
     """(field, bucket, rank, c, pos, len): one row per event of
     ``fields``. ``rank`` is the document's 1-based place in the batch,
-    distributed: value-range buckets on ``order``, per-bucket counts
-    collected for the offsets, a row_number PARTITIONED on bucket."""
+    distributed: value-range buckets on ``order``, per-bucket document
+    counts collected for the offsets, a running count of document rows
+    in a window PARTITIONED on bucket."""
     from pyspark.sql import Window
 
-    docs = tokens.withColumn("bucket", _bucket_expr(F.col(order), lo, hi))
-    counts = {r["bucket"]: r["count"] for r in docs.groupBy("bucket").count().collect()}
+    doc = F.col("field").isNull()
+    rows = events.where(doc | F.col("field").isin(fields)).withColumn(
+        "bucket", _bucket_expr(F.col(order), lo, hi)
+    )
+    counts = {r["bucket"]: r["count"] for r in rows.where(doc).groupBy("bucket").count().collect()}
     offs, acc = {}, 0
     for b in sorted(counts):
         offs[b] = acc
         acc += counts[b]
     rmap = F.create_map(*[F.lit(x) for kv in offs.items() for x in kv])
-    rank = F.row_number().over(Window.partitionBy("bucket").orderBy(order)) + rmap[F.col("bucket")]
-    ranked = docs.withColumn("rank", rank)
-    c = (F.lit(c0) + sign * (F.col("rank") - 1)).cast("double").alias("c")
-    # a remove subtracts the stored (last-element) length once, then NaN
-    ln = (
-        F.size("toks") if sign > 0
-        else F.when(F.col("pos") == 0, F.size(F.try_element_at("el", F.lit(-1))))
+    # a document's row sorts before its events (nulls first)
+    w = (
+        Window.partitionBy("bucket").orderBy(order, "field", "pos")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return _union([
-        ranked.select(
-            F.lit(f_).alias("field"), "bucket", "rank", c, _elements(config, f_).alias("el")
-        )
-        .select("*", F.posexplode("el").alias("pos", "toks"))
-        .select(
-            "field", "bucket", "rank", "c", "pos",
-            F.coalesce(ln.cast("double"), F.lit(float("nan"))).alias("len"),
-        )
-        for f_ in fields
-    ])
+    rank = F.sum(doc.cast("int")).over(w) + rmap[F.col("bucket")]
+    c = (F.lit(c0) + sign * (F.col("rank") - 1)).cast("double").alias("c")
+    return rows.withColumn("rank", rank).where(~doc).select(
+        "field", "bucket", "rank", c, "pos",
+        F.coalesce(F.col("len").cast("double"), F.lit(float("nan"))).alias("len"),
+    )
 
 
 def _suffix_avg_df(rows: DataFrame, sign: int, start: dict[str, float]) -> DataFrame:
@@ -555,7 +592,7 @@ class IndexBuilder:
         def _stats():
             # the build is one insert batch into an empty index, its
             # documents inserted in docid order
-            stats = field_stats(tokenized, cfg, order="docid")
+            stats = field_stats(insert_events(tokenized, cfg, "docid"), cfg, "docid")
             with open(stats_path, "w") as fh:
                 json.dump(stats, fh, indent=1)
             return {"path": stats_path, "docs_count": stats["docs_count"]}

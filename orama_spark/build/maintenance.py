@@ -39,8 +39,10 @@ from .indexer import (
     dictionary_table,
     docmeta_table,
     field_stats,
+    insert_events,
     postings_layout,
     postings_table,
+    remove_events,
     term_df,
     tokens_table,
 )
@@ -104,8 +106,8 @@ def remove_documents(
     delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
 
     # stats: the removed docs' events in the caller's order
-    tokens = spark.read.parquet(os.path.join(index_dir, "tokens")).join(remove_ids, "docid")
-    stats = field_stats(tokens, config, "_ord", _load_stats(index_dir), sign=-1)
+    events = remove_events(spark, index_dir, remove_ids, config, "_ord")
+    stats = field_stats(events, config, "_ord", _load_stats(index_dir), sign=-1)
 
     removed = remove_ids.select("docid")
     removed.write.mode("append").parquet(tomb_path)
@@ -191,9 +193,9 @@ def insert_documents(
     # stats: the new docs' events in the caller's row order (partition
     # index + in-partition position over the persisted frame), the
     # order the reference inserts the batch in
+    ordered = tokenized.withColumn("_ord", F.monotonically_increasing_id())
     stats = field_stats(
-        tokenized.withColumn("_ord", F.monotonically_increasing_id()),
-        config, "_ord", _load_stats(index_dir),
+        insert_events(ordered, config, "_ord"), config, "_ord", _load_stats(index_dir)
     )
     _save_stats(index_dir, stats)
     tokenized.unpersist()

@@ -378,9 +378,9 @@ class BlockIndex:
         Exchanges, in order: the per-doc length sum over docmeta (a
         hash exchange by docid) and its range exchange by (dl, docid),
         checkpointed once for the docmap; the range exchange by
-        (field, term, internal) that feeds the block encoder — hot terms split by internal range. The docmap and
-        dictionary joins are broadcasts. Every table is read with its
-        known schema."""
+        (field, term, internal) that feeds the block encoder — hot
+        terms split by internal range. The docmap and dictionary joins
+        are broadcasts. Every table is read with its known schema."""
         import json
 
         # every posting shape is supported: blocks carry per-posting tf
