@@ -120,11 +120,11 @@ def remove_documents(
 def _insert_probe(
     spark: SparkSession, new_ids: DataFrame, doc_ids: DataFrame, tomb_path: str
 ) -> tuple:
-    """(new rows whose docid is live in the index, new rows whose docid
-    is tombstoned) in ONE aggregate: the new, stored and
-    tombstoned docids are tagged, unioned and grouped by docid, so
-    duplicates on any side count as the separate semi-join counts they
-    replace would count them."""
+    """(new rows that repeat a docid, new rows whose docid is
+    tombstoned) in ONE aggregate: the new, stored and tombstoned docids
+    are tagged, unioned and grouped by docid. A docid live in the index
+    is repeated by all n of its new rows; any other docid by n - 1 (the
+    reference's insertMultiple raises on the second insert of an id)."""
     one, zero = F.lit(1), F.lit(0)
     tagged = [
         new_ids.select("docid", one.alias("n"), zero.alias("stored"), zero.alias("dead")),
@@ -141,7 +141,10 @@ def _insert_probe(
         .where(F.col("n") > 0)
     )
     row = per_id.agg(
-        F.sum(F.when((F.col("stored") == 1) & (F.col("dead") == 0), F.col("n"))).alias("dup"),
+        F.sum(
+            F.when((F.col("stored") == 1) & (F.col("dead") == 0), F.col("n"))
+            .otherwise(F.col("n") - 1)
+        ).alias("dup"),
         F.sum(F.when(F.col("dead") == 1, F.col("n"))).alias("reinserts"),
     ).collect()[0]
     return int(row["dup"] or 0), int(row["reinserts"] or 0)

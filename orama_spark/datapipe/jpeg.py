@@ -741,15 +741,6 @@ def encode_jpeg(
     dc_syms: list[set] = [set(), set()]
     ac_syms: list[set] = [set(), set()]
 
-    def mcu_order():
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for ci in range(len(planes)):
-                    ch, cv = samp[ci]
-                    for by in range(cv):
-                        for bx in range(ch):
-                            yield ci, comp_blocks[ci][my * cv + by][mx * ch + bx]
-
     def code_block(zz, pred, role, emit):
         diff = int(zz[0]) - pred
         t = _mag_cat(diff)

@@ -2,21 +2,20 @@
 columns with typed metadata.
 
 The Spark-side contract (schema, partitioning, Arrow batch shape, UDF
-signatures) is real and tested. Decoding is REAL for the formats that
-need no codec library: images (P6 PPM, 24-bit BMP — pure numpy — and
-non-interlaced 8-bit PNG — stdlib zlib inflate + the five per-row
-prediction filters; ``decode_image``) and PCM WAV audio
-(``decode_wav``, stdlib ``wave`` + numpy). DCT/entropy formats
-(JPEG/MP3/...) and video remain stubbed: those payloads raise
-NotImplementedError (strict mode) or yield deterministic fake/NULL
-features (test mode).
+signatures) is real and tested. Decoding is REAL for the image formats
+that need no codec library (``decode_image``): P6 PPM and 24-bit BMP
+(pure numpy), 8-bit PNG (stdlib zlib inflate + the five per-row
+prediction filters) and baseline/progressive JPEG
+(``orama_spark.datapipe.jpeg``). Other payloads (audio, video, exotic
+image codecs) raise NotImplementedError in strict mode or yield a
+deterministic fake feature in test mode.
 Swapping in PIL/ffmpeg later changes only the inner kernel function,
 not the Spark plumbing.
 
 Layout guidance for 100 TB of media: binary payloads dominate row size,
-so ops that don't touch bytes must never scan them — every function
-here projects only the columns it needs (column pruning does the rest),
-and ``mapInPandas`` with a small ``maxRecordsPerBatch`` keeps Arrow
+so ops that don't touch bytes must never scan them — ``extract_features``
+projects only the columns it needs (column pruning does the rest), and
+``mapInPandas`` with a small ``maxRecordsPerBatch`` keeps Arrow
 batches bounded when payloads are MBs each.
 """
 
@@ -27,7 +26,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
     StructField, StructType,
@@ -438,31 +437,7 @@ def _decode_image_stub(payload: bytes, strict: bool) -> np.ndarray:
     return (np.frombuffer(h[:32], dtype=np.uint8)[:8].astype(np.float32) / 255.0)
 
 
-def media_metadata(media: DataFrame) -> DataFrame:
-    """Metadata pass that provably never touches payload bytes: the
-    projection prunes the binary column at the parquet scan."""
-    return media.select(
-        "media_id",
-        "kind",
-        "mime",
-        F.coalesce(F.col("width"), F.lit(0)).alias("width"),
-        F.coalesce(F.col("height"), F.lit(0)).alias("height"),
-        (F.coalesce(F.col("width"), F.lit(0)) * F.coalesce(F.col("height"), F.lit(0))).alias("pixels"),
-    )
-
-
-def payload_stats(media: DataFrame) -> DataFrame:
-    """(media_id, n_bytes, payload_sha) — JVM-side length + sha2."""
-    return media.select(
-        "media_id",
-        F.length("payload").alias("n_bytes"),
-        F.sha2("payload", 256).alias("payload_sha"),
-    )
-
-
-def extract_features(
-    media: DataFrame, strict: bool = False, batch_rows: int = 64
-) -> DataFrame:
+def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
     Arrow moves payload bytes in bounded batches; the inner kernel is
@@ -481,28 +456,6 @@ def extract_features(
 
     out_media = media.select("media_id", "payload")
     return out_media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Video frame-sampling *plan*: expands (media_id, duration_ms) into
-    (media_id, frame_ts_ms) rows WITHOUT touching payloads — the decode
-    of each sampled frame is a later mapInPandas over a payload join.
-    Pure sequence/explode expressions."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
 
 
 def synth_media_df(spark, n_rows: int = 64, seed: int = 5) -> DataFrame:
@@ -525,85 +478,3 @@ def synth_media_df(spark, n_rows: int = 64, seed: int = 5) -> DataFrame:
             }
         )
     return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_channels", IntegerType(), True),
-        StructField("n_samples", LongType(), True),
-        StructField("duration_ms", LongType(), True),
-        StructField("rms", FloatType(), True),
-        StructField("zero_crossing_rate", FloatType(), True),
-        StructField("peak", FloatType(), True),
-    ]
-)
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, np.ndarray]:
-    """PCM WAV -> (sample_rate, n_channels, float32 samples in [-1, 1],
-    channel-averaged). Stdlib ``wave`` + numpy — no codec library.
-    Raises on non-PCM / compressed WAV."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload)) as w:
-        sw = w.getsampwidth()
-        if sw not in (1, 2, 4):
-            raise ValueError(f"unsupported sample width {sw}")
-        raw = w.readframes(w.getnframes())
-        rate, ch = w.getframerate(), w.getnchannels()
-    if sw == 1:  # unsigned 8-bit
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
-    else:
-        dt = np.int16 if sw == 2 else np.int32
-        x = np.frombuffer(raw, dtype=dt).astype(np.float32) / float(
-            2 ** (8 * sw - 1)
-        )
-    if ch > 1:
-        x = x.reshape(-1, ch).mean(axis=1)
-    return rate, ch, x
-
-
-def extract_audio_features(media: DataFrame, strict: bool = False) -> DataFrame:
-    """mapInPandas audio features over PCM-WAV payloads: sample rate,
-    duration, RMS, zero-crossing rate, peak. Undecodable payloads
-    (MP3/AAC/... — codec libs absent) raise in strict mode, else yield
-    NULL features. Map-only; payload bytes move once through Arrow."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload) if payload is not None else b""
-                try:
-                    rate, ch, x = decode_wav(b)
-                except Exception:
-                    if strict:
-                        raise NotImplementedError(
-                            "compressed audio needs a codec library; "
-                            "PCM WAV decodes natively — see decode_wav"
-                        )
-                    out.append((mid, None, None, None, None, None, None, None))
-                    continue
-                n = int(x.shape[0])
-                zc = (
-                    float(np.count_nonzero(np.signbit(x[1:]) != np.signbit(x[:-1])))
-                    / max(n - 1, 1)
-                )
-                out.append(
-                    (
-                        mid, int(rate), int(ch), n,
-                        int(round(1000.0 * n / rate)) if rate else None,
-                        float(np.sqrt(np.mean(x * x))) if n else 0.0,
-                        zc,
-                        float(np.abs(x).max()) if n else 0.0,
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, AUDIO_FEATURE_SCHEMA
-    )

@@ -9,151 +9,31 @@ dedupe unless ``allowDuplicates``. Notably the wrapper never calls
 no stemming are applied to CJK tokens (only the tokenize-skip-properties
 path normalizes). That quirk is replicated here faithfully.
 
-Segmentation backend: the default is the ICU-parity dictionary
-segmenter in ``cjk_dict`` (ICU's own cjdict + the published
-CjkBreakEngine Viterbi — see that module), registered at import when
-its data file ships.  The fallback below is the classic IR approach —
-script-run splitting with overlapping han bigrams (CJK bigram
-indexing):
-
-  * runs of han (CJK Unified Ideographs) -> overlapping bigrams
-    (a 1-char run stays a unigram)
-  * runs of hiragana / katakana (incl. U+30FC prolonged mark) /
-    hangul -> one token per run
-  * runs of latin letters / digits -> one token per run, case
-    preserved (ICU preserves case and the wrapper never lowercases)
-  * everything else (punctuation, whitespace, symbols) -> not word-like,
-    dropped
-
-Because query text and document text pass through the SAME segmenter,
-every search-level assertion in the reference package's own test suites
-(tests/japanese.test.ts, tests/mandarin.test.ts) holds under EITHER
-backend — verified in tests/test_cjk.py.  Under the fallback, token
-boundaries differ from ICU on dictionary words of >= 3 chars (ICU:
-東京大学 -> 東京|大学; bigram: 東京|京大|大学); the default dictionary
-backend removes that divergence (differential-fuzzed against
-``Intl.Segmenter`` — tests/test_cjk_dict.py).
+Segmentation is the ICU-parity dictionary segmenter in ``cjk_dict``
+(ICU's own cjdict + the published CjkBreakEngine Viterbi — see that
+module), run through its vectorized twin ``cjk_vec``; texts and chunks
+the vectorized path declines go through the scalar ``segment_dict``.
+There is no second backend: the cjdict table ships as package data,
+it is read on the first CJK segmentation (importing this module reads
+no file), and a missing table raises rather than changing the tokens.
 """
 
 from __future__ import annotations
 
-from typing import Callable, List
+from typing import List
+
+from .cjk_dict import segment_dict
+from .cjk_vec import segment_fast, segment_many
 
 CJK_LANGUAGES = ("japanese", "mandarin")
 
-# script classes for run-splitting; ranges per Unicode 15 block charts
-_HAN = (
-    (0x3400, 0x4DBF),    # CJK Ext A
-    (0x4E00, 0x9FFF),    # CJK Unified
-    (0xF900, 0xFAFF),    # CJK Compat Ideographs
-    (0x20000, 0x2A6DF),  # CJK Ext B
-)
-_HIRAGANA = ((0x3041, 0x3096), (0x309D, 0x309F))
-_KATAKANA = ((0x30A1, 0x30FA), (0x30FC, 0x30FF), (0x31F0, 0x31FF))
-_HANGUL = ((0xAC00, 0xD7A3), (0x1100, 0x11FF), (0x3130, 0x318F))
-
-
-def _cls(ch: str) -> str | None:
-    cp = ord(ch)
-    if cp < 0x80:
-        if (
-            0x30 <= cp <= 0x39
-            or 0x41 <= cp <= 0x5A
-            or 0x61 <= cp <= 0x7A
-        ):
-            return "alnum"
-        return None
-    for lo, hi in _HAN:
-        if lo <= cp <= hi:
-            return "han"
-    for lo, hi in _HIRAGANA:
-        if lo <= cp <= hi:
-            return "hira"
-    for lo, hi in _KATAKANA:
-        if lo <= cp <= hi:
-            return "kata"
-    for lo, hi in _HANGUL:
-        if lo <= cp <= hi:
-            return "hangul"
-    # Latin-1 / Latin Extended letters group with ASCII alnum runs
-    if cp <= 0x24F and ch.isalpha():
-        return "alnum"
-    return None
-
-
-def segment_bigram(text: str) -> List[str]:
-    """Script-run segmentation with overlapping han bigrams."""
-    tokens: List[str] = []
-    run: List[str] = []
-    run_cls: str | None = None
-
-    def flush() -> None:
-        if not run:
-            return
-        s = "".join(run)
-        if run_cls == "han" and len(s) > 1:
-            tokens.extend(s[i : i + 2] for i in range(len(s) - 1))
-        else:
-            tokens.append(s)
-
-    for ch in text:
-        c = _cls(ch)
-        if c is None:
-            flush()
-            run, run_cls = [], None
-        elif c == run_cls:
-            run.append(ch)
-        else:
-            flush()
-            run, run_cls = [ch], c
-    flush()
-    return tokens
-
-
-def _default_segmenter() -> Callable[[str], List[str]]:
-    """ICU-parity dictionary segmentation (cjk_dict) when the cjdict
-    data file ships — vectorized (cjk_vec) with per-chunk scalar
-    fallback when numpy is importable; han-bigram fallback otherwise."""
-    try:
-        from .cjk_dict import dictionary_available, segment_dict
-
-        if dictionary_available():
-            try:
-                from .cjk_vec import segment_fast, segment_many
-
-                def seg(text: str) -> List[str]:
-                    r = segment_fast(text)
-                    return segment_dict(text) if r is None else r
-
-                # batch hook: tokenize_many picks this up per Arrow batch
-                seg.segment_many = segment_many  # type: ignore[attr-defined]
-                return seg
-            except Exception:
-                return segment_dict
-    except Exception:
-        pass
-    return segment_bigram
-
-
-_SEGMENTER: Callable[[str], List[str]] = _default_segmenter()
-
-
-def set_segmenter(fn: Callable[[str], List[str]]) -> None:
-    """Swap the segmentation backend — the seam ``Intl.Segmenter``
-    occupies in the reference."""
-    global _SEGMENTER
-    _SEGMENTER = fn
-
 
 def cjk_segment(text: str) -> List[str]:
-    return _SEGMENTER(text)
+    r = segment_fast(text)
+    return segment_dict(text) if r is None else r
 
 
 def cjk_segment_many(texts: List[str]) -> List[List[str]]:
-    """Segment a batch of texts, using the backend's batch kernel when
-    it has one (the default vectorized segmenter batches every clean CJ
-    run in the batch through one lockstep Viterbi)."""
-    many = getattr(_SEGMENTER, "segment_many", None)
-    if many is not None:
-        return many(texts)
-    return [_SEGMENTER(t) for t in texts]
+    """Segment a batch of texts: every clean CJ run in the batch goes
+    through one lockstep Viterbi (``cjk_vec.segment_many``)."""
+    return segment_many(texts)

@@ -30,20 +30,18 @@ in pure Python from public sources only:
 Differential validation: 12k fuzz cases x 2 locales against
 ``Intl.Segmenter`` (tools/fuzz_cjk_icu.py); mismatches: 0.
 
-The segmenter registers itself as the default backend via
-``cjk.set_segmenter`` when the data file is present (import-time side
-effect of orama_spark.kernel.cjk); ``segment_bigram`` remains the
-fallback for environments without the data file.
+The table is package data, read through ``importlib.resources`` on the
+first segmentation, so it loads the same from a checkout and from the
+spark-submit zip (``tools/package.py`` ships it); a missing table
+raises.  This is the only CJK segmenter (``cjk`` wraps it).
 """
 
 from __future__ import annotations
 
 import gzip
-import os
 import unicodedata
+from importlib.resources import files
 from typing import Dict, List, Optional, Tuple
-
-DATA_PATH = os.path.join(os.path.dirname(__file__), "data", "cjdict.tsv.gz")
 
 # CjkBreakEngine constants — icu4c common/dictbe.cpp (public).
 MAX_WORD = 20
@@ -63,17 +61,14 @@ _MAXLEN: Dict[str, int] = {}
 _MAXLEN2: Dict[str, int] = {}  # first-2-chars -> longest word length
 
 
-def dictionary_available() -> bool:
-    return os.path.exists(DATA_PATH)
-
-
 def _load() -> Dict[str, int]:
     global _WORDS
     if _WORDS is None:
         words: Dict[str, int] = {}
         maxlen = _MAXLEN
         maxlen2 = _MAXLEN2
-        with gzip.open(DATA_PATH, "rt", encoding="utf-8") as f:
+        table = files(__package__) / "data" / "cjdict.tsv.gz"
+        with table.open("rb") as raw, gzip.open(raw, "rt", encoding="utf-8") as f:
             for line in f:
                 if line.startswith("#"):
                     continue
@@ -348,8 +343,7 @@ def _cls(ch: str) -> Optional[str]:
 
 def segment_dict(text: str) -> List[str]:
     """ICU-parity word segmentation: script runs, with Han/kana runs
-    subdivided by the cjdict Viterbi.  Same contract as
-    ``cjk.segment_bigram`` (word-like tokens only)."""
+    subdivided by the cjdict Viterbi; word-like tokens only."""
     tokens: List[str] = []
     run: List[str] = []
     run_cls: Optional[str] = None

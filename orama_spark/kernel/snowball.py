@@ -20,16 +20,6 @@ def _r1_r2(word: str, vowels: str) -> tuple[int, int]:
     (len(word) when absent)."""
     n = len(word)
 
-    def region(start: int) -> int:
-        i = start
-        while i < n and word[i] not in vowels:
-            i += 1
-        while i < n and word[i] in vowels:
-            i += 1
-        while i < n and word[i] not in vowels:
-            i += 1
-        return min(i + 1, n) if i < n else n
-
     # find first vowel, then first non-vowel after it
     i = 0
     while i < n and word[i] not in vowels:
@@ -901,14 +891,6 @@ def stem_ru(word: str) -> str:
 
     def in_rv(wl: int, slen: int) -> bool:
         return wl - slen >= rv
-
-    def del_grp1(word_: str, sufs: tuple) -> str | None:
-        """Suffixes requiring a preceding а/я (the а/я is kept)."""
-        for suf in sorted(sufs, key=len, reverse=True):
-            if word_.endswith(suf) and in_rv(len(word_), len(suf) + 1):
-                if word_[-len(suf) - 1] in "ая":
-                    return word_[: -len(suf)]
-        return None
 
     def del_grp(word_: str, sufs: tuple) -> str | None:
         for suf in sorted(sufs, key=len, reverse=True):

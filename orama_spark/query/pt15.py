@@ -84,10 +84,7 @@ class PT15Index:
         self.tokenizer = Tokenizer(config.tokenizer)
 
     @classmethod
-    def build(
-        cls, df: DataFrame, out_dir: str, config: IndexConfig,
-        partitions: Optional[int] = None,
-    ) -> "PT15Index":
+    def build(cls, df: DataFrame, out_dir: str, config: IndexConfig) -> "PT15Index":
         config.validate()
         docid = config.docid_col
         parts = []
@@ -109,7 +106,7 @@ class PT15Index:
             all_e = all_e.unionByName(p)
         # cnt: the same (doc, prefix, position) can be pushed by several
         # tokens sharing a prefix — each push scores (algorithm.ts:187)
-        n_part = partitions or max(1, df.rdd.getNumPartitions())
+        n_part = max(1, df.rdd.getNumPartitions())
         table = all_e.groupBy("field", "prefix", "position", "docid").agg(
             F.count("*").cast("int").alias("cnt")
         )

@@ -73,10 +73,7 @@ class QPSIndex:
         self.tokenizer = Tokenizer(config.tokenizer)
 
     @classmethod
-    def build(
-        cls, df: DataFrame, out_dir: str, config: IndexConfig,
-        partitions: Optional[int] = None,
-    ) -> "QPSIndex":
+    def build(cls, df: DataFrame, out_dir: str, config: IndexConfig) -> "QPSIndex":
         from ..build.tokenize import _cfg_tuple, _get_tokenizer
 
         config.validate()
@@ -136,7 +133,7 @@ class QPSIndex:
         all_e = parts[0]
         for p in parts[1:]:
             all_e = all_e.unionByName(p)
-        n_part = partitions or max(1, df.rdd.getNumPartitions())
+        n_part = max(1, df.rdd.getNumPartitions())
         (
             all_e.repartitionByRange(n_part, "field", "term", "docid")
             .sortWithinPartitions("field", "term", "docid")

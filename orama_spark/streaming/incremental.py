@@ -18,7 +18,6 @@ the deployment chooses.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,11 +29,9 @@ from ..config import IndexConfig
 class StreamingIndexWriter:
     """foreachBatch sink folding document micro-batches into an index."""
 
-    def __init__(self, config: IndexConfig, index_dir: str,
-                 postings_partitions: Optional[int] = None):
+    def __init__(self, config: IndexConfig, index_dir: str):
         self.config = config
         self.index_dir = index_dir
-        self.postings_partitions = postings_partitions
 
     def _bootstrapped(self) -> bool:
         return os.path.exists(os.path.join(self.index_dir, "stats.json"))
@@ -43,23 +40,23 @@ class StreamingIndexWriter:
         if batch_df.isEmpty():
             return
         if not self._bootstrapped():
-            IndexBuilder(
-                self.config, postings_partitions=self.postings_partitions
-            ).build(batch_df, self.index_dir, input_id=f"stream-batch-{batch_id}")
+            IndexBuilder(self.config).build(
+                batch_df, self.index_dir, input_id=f"stream-batch-{batch_id}"
+            )
         else:
             insert_documents(
                 batch_df.sparkSession, self.index_dir, self.config, batch_df
             )
 
-    def start(self, stream_df: DataFrame, checkpoint_dir: str,
-              trigger_available_now: bool = True):
-        """Attach to a streaming DataFrame; returns the StreamingQuery."""
-        writer = stream_df.writeStream.foreachBatch(self.fold_batch).option(
-            "checkpointLocation", checkpoint_dir
+    def start(self, stream_df: DataFrame, checkpoint_dir: str):
+        """Attach to a streaming DataFrame with an availableNow trigger;
+        returns the StreamingQuery."""
+        return (
+            stream_df.writeStream.foreachBatch(self.fold_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
 
 def index_stream(
@@ -68,17 +65,12 @@ def index_stream(
     index_dir: str,
     checkpoint_dir: str,
     config: IndexConfig,
-    schema=None,
 ):
     """Convenience: file-source stream of parquet document batches ->
-    incremental index. Blocks until the available data is folded."""
-    reader = spark.readStream
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        static = spark.read.parquet(source_dir)
-        reader = reader.schema(static.schema)
-    stream = reader.parquet(source_dir)
+    incremental index, schema inferred from the files. Blocks until the
+    available data is folded."""
+    schema = spark.read.parquet(source_dir).schema
+    stream = spark.readStream.schema(schema).parquet(source_dir)
     q = StreamingIndexWriter(config, index_dir).start(stream, checkpoint_dir)
     q.awaitTermination()
     return q

@@ -3,10 +3,8 @@
 Ports the reference package's own test suites
 (packages/tokenizers/tests/japanese.test.ts, mandarin.test.ts) against
 the oracle engine, then proves Spark-engine rank identity on the same
-corpora. Segmentation backend is script-run + han bigrams (see
-kernel/cjk.py for the documented ICU divergence) — every search-level
-assertion in the reference suites holds because query and document text
-share the segmenter.
+corpora. Segmentation is the ICU-parity dictionary segmenter
+(kernel/cjk.py, kernel/cjk_dict.py); query and document text share it.
 """
 
 import pytest
@@ -14,7 +12,7 @@ import pytest
 from orama_spark.config import IndexConfig
 from orama_spark.build.indexer import IndexBuilder
 from orama_spark.kernel import TokenizerConfig
-from orama_spark.kernel.cjk import segment_bigram
+from orama_spark.kernel.cjk import cjk_segment
 from orama_spark.kernel.tokenizer import Tokenizer
 from orama_spark.oracle.engine import OramaOracle
 from orama_spark.query.engine import SearchIndex
@@ -47,31 +45,32 @@ ZH_CASES = [
 
 class TestSegmenter:
     def test_han_bigrams(self):
-        assert segment_bigram("東京大学") == ["東京", "京大", "大学"]
-        assert segment_bigram("東") == ["東"]
-        assert segment_bigram("") == []
+        # han runs split into dictionary words, never overlapping
+        # bigrams (no 京大 out of 東京大学)
+        assert cjk_segment("東京大学") == ["東京", "大学"]
+        assert cjk_segment("東") == ["東"]
+        assert cjk_segment("") == []
 
     def test_script_runs_mixed(self):
-        # kana runs whole, han runs bigram, punctuation dropped
-        assert segment_bigram("東京で、勉強。") == ["東京", "で", "勉強"]
+        # kana runs whole, punctuation dropped
+        assert cjk_segment("東京で、勉強。") == ["東京", "で", "勉強"]
         # katakana incl. prolonged mark stays one run
-        assert segment_bigram("カード") == ["カード"]
+        assert cjk_segment("カード") == ["カード"]
 
     def test_latin_case_preserved(self):
         # the reference wrapper never lowercases (no normalizeToken on
         # the regular path)
-        assert segment_bigram("東京Apple123店") == ["東京", "Apple123", "店"]
+        assert cjk_segment("東京Apple123店") == ["東京", "Apple123", "店"]
 
     def test_tokenizer_dedupe_and_skip(self):
         tok = Tokenizer(TokenizerConfig(language="japanese"))
-        # dict segmenter (default): 東京東京 -> 東京|東京, deduped;
-        # the bigram fallback's 東京|京東 is pinned via segment_bigram
+        # 東京東京 -> 東京|東京, deduped
         assert tok.tokenize("東京東京") == ["東京"]
         tok_dup = Tokenizer(
             TokenizerConfig(language="japanese", allow_duplicates=True)
         )
         assert tok_dup.tokenize("東京 東京") == ["東京", "東京"]
-        assert segment_bigram("東京東京") == ["東京", "京東", "東京"]
+        assert cjk_segment("東京東京") == ["東京", "東京"]
 
 
 def _oracle(lang, names):
@@ -133,7 +132,7 @@ class TestSegmenterProperties:
     def test_properties(self):
         from hypothesis import given, settings, strategies as st
 
-        from orama_spark.kernel.cjk import _cls, segment_bigram
+        from orama_spark.kernel.cjk_dict import _MARKS, _cls
 
         mixed = st.text(
             alphabet=st.one_of(
@@ -148,20 +147,18 @@ class TestSegmenterProperties:
         @given(mixed)
         @settings(max_examples=300, deadline=None)
         def check(text):
-            toks = segment_bigram(text)
+            toks = cjk_segment(text)
             assert all(toks), "no empty tokens"
-            # non-han tokens appear verbatim in the input; han bigrams
-            # are 1-2 chars of adjacent input han chars
+            # every token is a verbatim slice of the input, in order
+            at = 0
             for t in toks:
-                if _cls(t[0]) == "han":
-                    assert 1 <= len(t) <= 2 and t in text
-                else:
-                    assert t in text
-            # every emitted character is word-like (punctuation and
-            # whitespace never leak into tokens)
+                at = text.index(t, at) + len(t)
+            # every emitted character is word-like or a voicing mark
+            # attached to one (punctuation and whitespace never leak
+            # into tokens)
             for t in toks:
                 for ch in t:
-                    assert _cls(ch) is not None
+                    assert _cls(ch) is not None or ch in _MARKS or ch == "〆"
 
         check()
 

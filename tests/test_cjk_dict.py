@@ -25,21 +25,14 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
-
 from orama_spark.kernel.cjk_dict import (
     _cls,
     _MARKS,
     cj_viterbi,
-    dictionary_available,
     segment_dict,
 )
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "cjk_icu_golden.json")
-
-pytestmark = pytest.mark.skipif(
-    not dictionary_available(), reason="cjdict data file not present"
-)
 
 
 def _wordish(seg: str) -> bool:
@@ -185,14 +178,15 @@ class TestEntryVocabUnambiguous:
 
 class TestDefaultRegistration:
     def test_default_segmenter_is_dict(self):
-        """Default backend is the dictionary segmenter — either the
-        bare scalar or the vectorized wrapper that falls back to it."""
-        from orama_spark.kernel import cjk
+        """The one backend is the dictionary segmenter, on both the
+        scalar (short text) and the vectorized (batch) path."""
+        from orama_spark.kernel.cjk import cjk_segment, cjk_segment_many
 
-        seg = cjk._SEGMENTER
-        assert seg is segment_dict or hasattr(seg, "segment_many")
-        # and it behaves as the dict segmenter on a known case
-        assert seg("東京大学の研究者") == ["東京", "大学", "の", "研究者"]
+        text = "東京大学の研究者"
+        want = ["東京", "大学", "の", "研究者"]
+        assert segment_dict(text) == want
+        assert cjk_segment(text) == want
+        assert cjk_segment_many([text, text * 10]) == [want, want * 10]
 
     def test_wrapper_uses_it(self):
         from orama_spark.kernel.cjk import cjk_segment

@@ -224,16 +224,6 @@ class TestTextQuality:
 
 
 class TestMultimodal:
-    def test_metadata_and_stats(self, spark):
-        media = multimodal.synth_media_df(spark, 30)
-        meta = multimodal.media_metadata(media).collect()
-        assert len(meta) == 30
-        stats = {r["media_id"]: r for r in multimodal.payload_stats(media).collect()}
-        raw = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-        for mid, b in raw.items():
-            assert stats[mid]["n_bytes"] == len(b)
-            assert stats[mid]["payload_sha"] == hashlib.sha256(b).hexdigest()
-
     def test_feature_extraction_stub(self, spark):
         media = multimodal.synth_media_df(spark, 12)
         feats = multimodal.extract_features(media, strict=False).collect()
@@ -246,18 +236,6 @@ class TestMultimodal:
         media = multimodal.synth_media_df(spark, 3)
         with pytest.raises(Exception):
             multimodal.extract_features(media, strict=True).collect()
-
-    def test_frame_sampling_never_reads_payload(self, spark, tmp_path):
-        # column pruning is observable on a columnar (parquet) scan
-        path = str(tmp_path / "media.parquet")
-        multimodal.synth_media_df(spark, 30).write.parquet(path)
-        media = spark.read.parquet(path)
-        plan = multimodal.frame_sample_plan(media, every_ms=500)
-        rows = plan.collect()
-        assert rows, "videos present"
-        explained = plan._jdf.queryExecution().executedPlan().toString()
-        m = [l for l in explained.splitlines() if "ReadSchema" in l]
-        assert m and all("payload" not in l for l in m), explained
 
 
 class TestGopherRules:
@@ -815,51 +793,6 @@ class TestProgressiveJpeg:
         img = np.full((6, 9, 3), [10, 200, 30], dtype=np.uint8)
         arr = multimodal.decode_image(J.encode_jpeg_progressive(img))
         assert arr is not None and arr.shape == (6, 9, 3)
-
-
-class TestRealAudioDecode:
-    def _wav_bytes(self, rate=8000, freq=440.0, secs=0.25):
-        import io
-        import wave
-
-        t = np.arange(int(rate * secs)) / rate
-        x = (0.5 * np.sin(2 * np.pi * freq * t) * 32767).astype(np.int16)
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(rate)
-            w.writeframes(x.tobytes())
-        return buf.getvalue(), x
-
-    def test_decode_wav_round_trip(self):
-        payload, x = self._wav_bytes()
-        rate, ch, samples = multimodal.decode_wav(payload)
-        assert rate == 8000 and ch == 1 and len(samples) == len(x)
-        # 0.5-amplitude sine: rms ~ 0.5/sqrt(2)
-        assert abs(float(np.sqrt((samples ** 2).mean())) - 0.3536) < 0.01
-
-    def test_extract_audio_features(self, spark):
-        payload, x = self._wav_bytes()
-        rows = [
-            {"media_id": 0, "kind": "audio", "mime": "audio/wav",
-             "payload": payload, "width": None, "height": None,
-             "duration_ms": None},
-            {"media_id": 1, "kind": "audio", "mime": "audio/mpeg",
-             "payload": b"\xff\xfb not a wav", "width": None,
-             "height": None, "duration_ms": None},
-        ]
-        df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-        out = {r["media_id"]: r for r in
-               multimodal.extract_audio_features(df).collect()}
-        assert out[0]["sample_rate"] == 8000
-        assert out[0]["duration_ms"] == 250
-        assert abs(out[0]["rms"] - 0.3536) < 0.01
-        # 440 Hz sine at 8 kHz: ~2*440*0.25 = 220 crossings over 2000 samples
-        assert abs(out[0]["zero_crossing_rate"] - 0.11) < 0.01
-        assert out[1]["sample_rate"] is None  # undecodable, non-strict
-        with pytest.raises(Exception):
-            multimodal.extract_audio_features(df, strict=True).collect()
 
 
 class TestRealPngDecode:

@@ -10,6 +10,7 @@ from orama_spark.build.maintenance import (
     insert_documents,
     remove_documents,
     update_documents,
+    upsert_documents,
 )
 from orama_spark.config import IndexConfig
 from orama_spark.oracle.engine import OramaOracle
@@ -80,6 +81,25 @@ def test_duplicate_insert_rejected(spark, tmpdir_index):
             spark, tmpdir_index, cfg,
             spark.createDataFrame([{"docid": 1, "t": "dup", "cat": "x"}]),
         )
+
+
+@pytest.mark.parametrize("write", [insert_documents, upsert_documents], ids=["insert", "upsert"])
+def test_insert_batch_repeating_a_docid_rejected(spark, tmpdir_index, write):
+    """insertMultiple raises on the second insert of an id even when the
+    first came in the same batch; nothing of the batch is written.
+    upsert inherits the check through its insert."""
+    import os
+
+    cfg = build(spark, tmpdir_index)
+    remove_documents(spark, tmpdir_index, cfg, spark.createDataFrame([(2,)], "docid long"))
+    for ids in ([10, 10], [2, 2]):  # new, tombstoned
+        batch = [{"docid": d, "t": t, "cat": "w"} for d, t in zip(ids, ("beta", "gamma"))]
+        with pytest.raises(ValueError, match="DOCUMENT_ALREADY_EXISTS: 1 "):
+            write(spark, tmpdir_index, cfg, spark.createDataFrame(batch))
+    assert spark.read.parquet(os.path.join(tmpdir_index, "docs")).count() == 5
+    idx = SearchIndex.load(spark, tmpdir_index, cfg)
+    assert idx.stats["docs_count"] == 4
+    assert idx.search(term="gamma").count() == 1
 
 
 def _jobs(spark, fn) -> int:

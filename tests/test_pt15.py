@@ -39,7 +39,7 @@ def pair(spark):
     d = tempfile.mkdtemp(prefix="orama_spark_pt15_")
     cfg = IndexConfig(schema=SCHEMA)
     df = spark.createDataFrame(ROWS, "docid long, name string, algo array<string>")
-    idx = PT15Index.build(df, d, cfg, partitions=2)
+    idx = PT15Index.build(df, d, cfg)
     orc = PT15Oracle(SCHEMA)
     for i, name, algo in ROWS:
         orc.insert({"name": name, "algo": algo}, docid=i)

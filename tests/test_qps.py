@@ -45,7 +45,7 @@ def pair(spark):
     d = tempfile.mkdtemp(prefix="orama_spark_qps_")
     cfg = IndexConfig(schema=SCHEMA)
     df = spark.createDataFrame(ROWS, "docid long, name string")
-    idx = QPSIndex.build(df, d, cfg, partitions=2)
+    idx = QPSIndex.build(df, d, cfg)
     orc = QPSOracle(SCHEMA)
     for i, name in ROWS:
         orc.insert({"name": name}, docid=i)
@@ -84,7 +84,7 @@ def test_proximity_bonus(spark):
     d = tempfile.mkdtemp(prefix="orama_spark_qps2_")
     cfg = IndexConfig(schema=SCHEMA)
     idx = QPSIndex.build(
-        spark.createDataFrame(rows, "docid long, name string"), d, cfg, partitions=2
+        spark.createDataFrame(rows, "docid long, name string"), d, cfg
     )
     orc = QPSOracle(SCHEMA)
     for i, name in rows:

@@ -1,5 +1,9 @@
 """Package the engine for spark-submit: dist/engine.zip (--py-files).
 
+The zip holds every file of the ``orama_spark`` package, its data files
+(the CJK segmenter's ``kernel/data/cjdict.tsv.gz``) included;
+``__pycache__`` directories are left out.
+
 Usage:
     python tools/package.py
     spark-submit --master local[32] --py-files dist/engine.zip \
@@ -23,9 +27,8 @@ def build_zip(out: str | None = None) -> str:
             if "__pycache__" in root:
                 continue
             for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, REPO))
+                full = os.path.join(root, f)
+                z.write(full, os.path.relpath(full, REPO))
     return out
 
 
