@@ -21,16 +21,19 @@ in ``_AUX`` and reached through ``_aux(spark, sf_dir, name)``. Each is
 cached in ``/dev/shm/orama_spark_entry_<name>/<basename(sf_dir)>`` and
 in one in-process dict, both keyed by a content key: the spec name, the
 resolved ``sf_dir``, the size and mtime of every source parquet file it
-reads, and for a derived spec (``restored``) its parent's key. A dir is
-reused only when its ``_STAMP`` file holds that key; the stamp is
-written after the build and any mutation finish, so a torn build or a
-rewritten fixture at the same path is rebuilt from an empty dir. The key
-does not cover code: after changing a spec or ``IndexBuilder``,
+reads, a digest of the library's source (``orama_spark/**/*.py``), and
+for a derived spec (``restored``) its parent's key. A dir is reused only
+when its ``_STAMP`` file holds that key; the stamp is written after the
+build and any mutation finish, so a torn build, a rewritten fixture at
+the same path or a fixture built by other library code is rebuilt from
+an empty dir. The key does not cover this file: after changing a spec,
 remove the ``/dev/shm/orama_spark_entry_*`` dirs.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import hashlib
 import json
 import os
@@ -40,6 +43,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+import orama_spark
 from orama_spark.build.indexer import IndexBuilder
 from orama_spark.build.maintenance import remove_documents, update_documents, upsert_documents
 from orama_spark.config import IndexConfig
@@ -411,7 +415,7 @@ def _build_restored(spark, sf_dir, out, key):
 
     _aux(spark, sf_dir, "idx")
     payload = _P.persist(spark, _aux_dir("idx", sf_dir), DOC_CONFIG, format="binary")
-    _P.restore(spark, payload, out, DOC_CONFIG, format="binary", mode="verbatim")
+    _P.restore(spark, payload, out, DOC_CONFIG, format="binary")
 
 
 def _copy_events(spark, sf_dir, out, key):
@@ -521,15 +525,29 @@ def _file_ids(path: str) -> list:
     return [[os.path.basename(f), (st := os.stat(f)).st_size, st.st_mtime_ns] for f in files]
 
 
+@functools.cache
+def _library_digest() -> str:
+    """Digest of every orama_spark/**/*.py (relative path and bytes):
+    a fixture built by other library code holds other tables."""
+    root = os.path.dirname(orama_spark.__file__)
+    h = hashlib.sha256()
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(path, root).encode())
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
+
+
 def _aux_key(sf_dir: str, name: str) -> str:
     """Content key of fixture `name` over `sf_dir`: the spec name, the
-    resolved sf_dir, the size and mtime of every source file, and the
-    parent's key for a derived spec."""
+    resolved sf_dir, the size and mtime of every source file, the
+    library digest, and the parent's key for a derived spec."""
     spec = _AUX[name]
     ident = [
         name,
         os.path.realpath(sf_dir),
         [_file_ids(os.path.join(sf_dir, s)) for s in spec.sources],
+        _library_digest(),
         spec.parent and _aux_key(sf_dir, spec.parent),
     ]
     return hashlib.sha256(json.dumps(ident).encode()).hexdigest()[:16]

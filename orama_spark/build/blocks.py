@@ -487,9 +487,9 @@ def assign_internal_ids(docmeta: DataFrame) -> DataFrame:
     no lineage to recompute from. If an executor holding checkpointed
     blocks is lost before the docmap is consumed, the build fails with
     a missing-checkpoint-block error rather than assigning ids from a
-    different partitioning; ``BlockIndex.build`` has removed its stamp
-    by then, so the torn build is never served and a rerun starts
-    clean.
+    different partitioning; ``BlockIndex.build`` has dropped its
+    manifest entry by then, so the torn build is never served and a
+    rerun starts clean.
     """
     doclen = docmeta.groupBy("docid").agg(F.sum("field_len").alias("dl"))
     ranked = (

@@ -49,6 +49,7 @@ import hashlib
 import json
 import math
 import os
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
@@ -487,6 +488,12 @@ def _config_fingerprint(config: IndexConfig, extra: str = "") -> str:
     return hashlib.sha256(cfg.encode()).hexdigest()[:16]
 
 
+# the stages of IndexBuilder.build, as named in its manifest
+BUILD_STAGES = (
+    "docs", "tokens", "postings", "dictionary", "dictionary_bylen", "docmeta", "stats",
+)
+
+
 class IndexBuilder:
     def __init__(
         self,
@@ -511,6 +518,13 @@ class IndexBuilder:
         ``df`` must contain ``config.docid_col`` (int64, unique; ranking
         ties break on it ascending, mirroring Orama's internal-ID order,
         utils.ts:184-190) plus every schema property as a column.
+
+        ``input_id`` names the input. A re-run with the same
+        ``input_id``, config and layout into the same ``out_dir`` skips
+        every stage the manifest records as complete: resume is for
+        callers that name their input, and naming it promises that the
+        same name means the same content. Without ``input_id`` the
+        fingerprint takes a fresh nonce, so every stage runs.
         """
         cfg = self.config
         docid = cfg.docid_col
@@ -524,67 +538,30 @@ class IndexBuilder:
         n_part = self.postings_partitions or max(1, df.rdd.getNumPartitions())
         # the output layout is part of the fingerprint: a rebuild with a
         # different width or docs ordering into the same dir re-runs
-        fp = _config_fingerprint(cfg, extra=json.dumps([input_id, n_part, self.docs_already_sorted]))
+        fp = _config_fingerprint(
+            cfg, extra=json.dumps([input_id or uuid.uuid4().hex, n_part, self.docs_already_sorted])
+        )
 
         # --- stage: docs (the document store, late-materialized at query)
-        docs_path = os.path.join(out_dir, "docs")
-
-        def _docs():
-            out = df
-            if not self.docs_already_sorted:
-                out = df.repartitionByRange(max(n_part // 2, 1), docid).sortWithinPartitions(docid)
-            out.write.mode("overwrite").parquet(docs_path)
-            return {"path": docs_path}
-
-        results: dict = {}
-        results["docs"] = manifest.run_stage("docs", fp, _docs)
+        docs_out = df
+        if not self.docs_already_sorted:
+            docs_out = df.repartitionByRange(max(n_part // 2, 1), docid).sortWithinPartitions(docid)
+        results: dict = {"docs": manifest.write_table("docs", fp, docs_out)}
 
         # downstream stages read the WRITTEN docs parquet: the input DAG
         # (which may be an expensive synthetic source or a remote scan)
         # is evaluated exactly once, and resume-after-failure re-reads
         # local columnar data instead of recomputing upstream.
-        docs_df = spark.read.parquet(docs_path)
+        def _read(table: str) -> DataFrame:
+            return spark.read.parquet(os.path.join(out_dir, table))
+
+        docs_df = _read("docs")
 
         # --- stage: tokens — the single Arrow-UDF tokenize pass, written
         # once so the (CPU-bound) stemmer never runs twice per doc; the
         # tokens table also serves incremental remove/update later.
-        tokens_path = os.path.join(out_dir, "tokens")
-
-        def _tokens():
-            tokens_table(docs_df, cfg).write.mode("overwrite").parquet(tokens_path)
-            return {"path": tokens_path}
-
-        results["tokens"] = manifest.run_stage("tokens", fp, _tokens)
-        tokenized = spark.read.parquet(tokens_path)
-
-        postings_path = os.path.join(out_dir, "postings")
-        docmeta_path = os.path.join(out_dir, "docmeta")
-        dict_path = os.path.join(out_dir, "dictionary")
-        bylen_path = os.path.join(out_dir, "dictionary_bylen")
-
-        def _postings():
-            postings_layout(postings_table(tokenized, cfg), n_part).write.mode(
-                "overwrite"
-            ).parquet(postings_path)
-            return {"path": postings_path}
-
-        def _docmeta():
-            # no shuffle: docmeta inherits the tokens partitioning (it is
-            # only aggregated for stats / maintenance, never key-probed)
-            docmeta_table(tokenized, cfg).write.mode("overwrite").parquet(docmeta_path)
-            return {"path": docmeta_path}
-
-        def _dictionary():
-            dictionary_table(spark.read.parquet(postings_path), n_part // 8).write.mode(
-                "overwrite"
-            ).parquet(dict_path)
-            return {"path": dict_path}
-
-        def _dictionary_bylen():
-            dictionary_bylen_table(spark.read.parquet(dict_path), n_part // 8).write.mode(
-                "overwrite"
-            ).parquet(bylen_path)
-            return {"path": bylen_path}
+        results["tokens"] = manifest.write_table("tokens", fp, tokens_table(docs_df, cfg))
+        tokenized = _read("tokens")
 
         # --- stage: stats (global doc count + per-field avg field length)
         stats_path = os.path.join(out_dir, "stats.json")
@@ -608,17 +585,19 @@ class IndexBuilder:
         from concurrent.futures import ThreadPoolExecutor
 
         def _chain_postings() -> dict:
-            return {
-                "postings": manifest.run_stage("postings", fp, _postings),
-                "dictionary": manifest.run_stage("dictionary", fp, _dictionary),
-                "dictionary_bylen": manifest.run_stage(
-                    "dictionary_bylen", fp, _dictionary_bylen
-                ),
-            }
+            postings = postings_layout(postings_table(tokenized, cfg), n_part)
+            out = {"postings": manifest.write_table("postings", fp, postings)}
+            dictionary = dictionary_table(_read("postings"), n_part // 8)
+            out["dictionary"] = manifest.write_table("dictionary", fp, dictionary)
+            bylen = dictionary_bylen_table(_read("dictionary"), n_part // 8)
+            out["dictionary_bylen"] = manifest.write_table("dictionary_bylen", fp, bylen)
+            return out
 
         def _chain_docmeta() -> dict:
+            # no shuffle: docmeta inherits the tokens partitioning (it is
+            # only aggregated for stats / maintenance, never key-probed)
             return {
-                "docmeta": manifest.run_stage("docmeta", fp, _docmeta),
+                "docmeta": manifest.write_table("docmeta", fp, docmeta_table(tokenized, cfg)),
                 "stats": manifest.run_stage("stats", fp, _stats),
             }
 
@@ -627,6 +606,5 @@ class IndexBuilder:
             fb = pool.submit(_chain_docmeta)
             results.update(fa.result())
             results.update(fb.result())
-        manifest.save()
         cfg.hooks.run_observe("after_insert_multiple", df, results)
         return results

@@ -46,6 +46,7 @@ from .indexer import (
     term_df,
     tokens_table,
 )
+from .manifest import BuildManifest
 
 
 def _stats_path(index_dir: str) -> str:
@@ -234,11 +235,21 @@ def _replace(df: DataFrame, path: str) -> None:
 
 def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     """Fold tombstones + dictionary deltas into the base tables (the
-    periodic rewrite; query plans shrink back to zero-merge reads)."""
+    periodic rewrite; query plans shrink back to zero-merge reads).
+    Drops the manifest's ``blocks`` entry: BlockIndex.load refuses until
+    BlockIndex.build re-runs over the compacted tables."""
     tomb_path = os.path.join(index_dir, "tombstones")
     delta_path = os.path.join(index_dir, "dictionary_delta")
     if not os.path.exists(tomb_path) and not os.path.exists(delta_path):
         return
+    # the block-max WAND table (blocks/) embeds the PRE-compact (df,
+    # avgfl, N) in its bounds and scores: once the tombstone markers
+    # are gone, BlockIndex.load()'s staleness check would pass and
+    # silently serve bounds/θ computed for the old corpus — a stale θ can
+    # exceed the true k-th score and drop true top-k hits. Drop its
+    # manifest entry first, so load() refuses from here on, a torn
+    # compact included, until BlockIndex.build() re-runs.
+    BuildManifest.load(index_dir).forget("blocks")
     tombs = (
         spark.read.parquet(tomb_path)
         if os.path.exists(tomb_path)
@@ -262,16 +273,3 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     for p in (tomb_path, delta_path):
         if os.path.exists(p):
             shutil.rmtree(p)
-    # the block-max WAND table (blocks/) embeds the PRE-compact (df,
-    # avgfl, N) in its bounds and scores: once the tombstone markers
-    # above are gone, BlockIndex.load()'s staleness check would pass and
-    # silently serve bounds/θ computed for the old corpus — a stale θ can
-    # exceed the true k-th score and drop true top-k hits. Delete it
-    # (and its build stamp) so load() refuses until BlockIndex.build()
-    # re-runs.
-    blocks = os.path.join(index_dir, "blocks")
-    if os.path.exists(blocks):
-        shutil.rmtree(blocks)
-    stamp = os.path.join(index_dir, "blocks_build.json")
-    if os.path.exists(stamp):
-        os.remove(stamp)

@@ -1,12 +1,17 @@
-"""Build lineage + checkpoint-resume manifests.
+"""Build lineage + checkpoint-resume manifests: the one record of what
+an index directory holds.
 
-Every index-build stage records its fingerprint, wall seconds,
-completion time and output path (the stats stage adds ``docs_count``)
-in ``manifest.json`` at the index root; no stage records row counts,
-bytes or jobs yet. A re-run with the same fingerprint (config hash +
-input identity) skips completed stages — the resumability contract of
-the north rule: a 100 TB build that dies at stage 4 resumes at stage 4,
-not at zero.
+Every stage that writes an index table (the seven IndexBuilder stages,
+the dump restore's, and ``blocks``) records its fingerprint, wall
+seconds, completion time and output path (the stats stage adds
+``docs_count``) in ``manifest.json`` at the index root; no stage records
+row counts, bytes or jobs yet. The path is relative to the root, so an
+index keeps its manifest (and its size) wherever it is copied. A stage
+is complete when its entry carries the asked-for fingerprint and its
+output is whole: a directory with Spark's ``_SUCCESS`` marker, or an
+existing file. A re-run with the same fingerprint skips completed
+stages — the resumability contract of the north rule: a 100 TB build
+that dies at stage 4 resumes at stage 4, not at zero.
 """
 
 from __future__ import annotations
@@ -54,12 +59,29 @@ class BuildManifest:
         e = self.entries.get(stage)
         if not e or e.get("fingerprint") != fingerprint:
             return False
-        out = e.get("path")
-        if out and not (
-            os.path.exists(os.path.join(out, "_SUCCESS")) or os.path.exists(out)
-        ):
-            return False
-        return True
+        if "path" not in e:
+            return True
+        # an absolute path (older manifests) survives the join unchanged
+        out = os.path.join(self.root, e["path"])
+        return os.path.isfile(out) or os.path.exists(os.path.join(out, "_SUCCESS"))
+
+    def forget(self, stage: str) -> None:
+        """Drop ``stage``'s entry and save at once: its output no longer
+        counts as complete, even if a later write of it is torn."""
+        with self._lock:
+            if self.entries.pop(stage, None) is not None:
+                self.save()
+
+    def write_table(self, stage: str, fingerprint: str, df, force: bool = False) -> dict:
+        """``run_stage`` writing the DataFrame ``df`` as the parquet table
+        ``<root>/<stage>`` (overwrite)."""
+        path = os.path.join(self.root, stage)
+
+        def write() -> dict:
+            df.write.mode("overwrite").parquet(path)
+            return {"path": path}
+
+        return self.run_stage(stage, fingerprint, write, force)
 
     def run_stage(
         self,
@@ -74,6 +96,8 @@ class BuildManifest:
             return {**self.entries[stage], "skipped": True}
         t0 = time.time()
         metrics = fn() or {}
+        if "path" in metrics:
+            metrics["path"] = os.path.relpath(metrics["path"], self.root)
         metrics.update(
             fingerprint=fingerprint,
             seconds=round(time.time() - t0, 3),

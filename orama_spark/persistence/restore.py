@@ -5,50 +5,45 @@ The migration path for a reference user: take the JSON (or msgpack-hex
 ``persist(db, format)`` and turn it into our parquet index layout,
 query-ready via SearchIndex.load.
 
-Two modes:
-
-- ``verbatim`` (default): trust the dump's own structures — walk the
-  radix trees for (term -> internal ids), take tf from ``frequencies``,
-  field lengths from ``fieldLengths``, stats from ``avgFieldLength``
-  (methods/serialization.ts:13-20 applied to our table layout), with
-  each posting's occ = tf * field_len for scalar fields. A string[]
-  dump keeps only the last element's frequencies, which undercount a
-  token repeated across elements, so string[] occ comes from the
-  builder's postings over the regenerated ``tokens`` table. This
-  reproduces the saved instance EXACTLY even if it was built with
-  custom components we don't replicate (custom tokenizer hooks, manual
-  tf edits). The dictionaries and the ``tokens`` table (the
-  maintenance re-tokenize input; token order is not in the dump) are
-  derived by the builder's table functions (build/indexer.py).
-
-- ``rebuild``: extract the raw docs and run IndexBuilder — the full
-  distributed build with every facility (bylen dictionary, manifest
-  resume, docmeta). Identical to verbatim whenever the dump came from
-  the same tokenizer config; preferable when the restored index will
-  keep growing at scale.
+The restore trusts the dump's own structures — walk the radix trees
+for (term -> internal ids), take tf from ``frequencies``, field lengths
+from ``fieldLengths``, stats from ``avgFieldLength``
+(methods/serialization.ts:13-20 applied to our table layout), with each
+posting's occ = tf * field_len for scalar fields. A string[] dump keeps
+only the last element's frequencies, which undercount a token repeated
+across elements, so string[] occ comes from the builder's postings over
+the regenerated ``tokens`` table. This reproduces the saved instance
+EXACTLY even if it was built with custom components we don't replicate
+(custom tokenizer hooks, manual tf edits). The dictionaries and the
+``tokens`` table (the maintenance re-tokenize input; token order is not
+in the dump) are derived by the builder's table functions
+(build/indexer.py). Every table is written as a build-manifest stage
+under one fresh fingerprint, so blocks built over an earlier index in
+the same directory are refused.
 
 The dump parse + table assembly are driver-side (the dump is one JSON
-document — see dump.py's scale posture); the parquet writes and the
-rebuild path run distributed.
+document — see dump.py's scale posture); the parquet writes run
+distributed.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 from typing import Any, Optional
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..build.indexer import (
-    IndexBuilder,
     dictionary_bylen_table,
     dictionary_table,
     postings_layout,
     postings_table,
     tokens_table,
 )
+from ..build.manifest import BuildManifest
 from ..config import IndexConfig
 from .format import walk_radix
 
@@ -71,14 +66,9 @@ def restore_index(
     raw: dict,
     out_dir: str,
     config: IndexConfig,
-    *,
-    mode: str = "verbatim",
 ) -> str:
     """Materialize a reference RawData dump as our index layout at
     ``out_dir``. Returns ``out_dir`` (load with SearchIndex.load)."""
-    if mode not in ("verbatim", "rebuild"):
-        raise ValueError(f"restore_index: unknown mode {mode!r}")
-
     internal_ids = raw["internalDocumentIDStore"]["internalIdToId"]
     docs_raw = raw["docs"]["docs"]
     docs_rows = []
@@ -92,13 +82,7 @@ def restore_index(
 
     docs_df = _docs_df(spark, docs_rows, config)
 
-    if mode == "rebuild":
-        IndexBuilder(config).build(
-            docs_df, out_dir, input_id=f"restored-{len(docs_rows)}"
-        )
-        return out_dir
-
-    # ---- verbatim: postings/docmeta/stats straight from the dump
+    # postings/docmeta/stats straight from the dump
     index_dump = raw["index"]
     freqs = index_dump.get("frequencies", {})
     flens = index_dump.get("fieldLengths", {})
@@ -140,33 +124,32 @@ def restore_index(
     # order is not in the dump: the tokens table is regenerated with
     # our tokenizer.
     width = max(1, min(32, len(post_rows) // 50_000 + 1))
-    postings_path = os.path.join(out_dir, "postings")
-    dict_path = os.path.join(out_dir, "dictionary")
-    tokens_path = os.path.join(out_dir, "tokens")
-    os.makedirs(out_dir, exist_ok=True)
-    tokens_table(docs_df, config).write.mode("overwrite").parquet(tokens_path)
+    manifest = BuildManifest.load(out_dir)
+    fp = f"restored-{uuid.uuid4().hex}"
+
+    def stage(name: str, df) -> DataFrame:
+        """Write ``df`` as manifest stage ``name``; returns the table read back."""
+        manifest.write_table(name, fp, df, force=True)
+        return spark.read.parquet(os.path.join(out_dir, name))
+
+    tokens = stage("tokens", tokens_table(docs_df, config))
     postings = spark.createDataFrame(post_rows, post_schema)
     arrays = [f_ for f_ in config.searchable_fields if config.schema[f_] == "string[]"]
     if arrays:
         # the dump's string[] tf is the last element's: occ spanning
         # elements comes from the regenerated tokens
         occ = (
-            postings_table(spark.read.parquet(tokens_path), config)
+            postings_table(tokens, config)
             .where(F.col("field").isin(arrays))
             .select("field", "term", "docid", F.col("occ").alias("_occ"))
         )
         postings = postings.join(occ, ["field", "term", "docid"], "left").select(
             *post_schema.names[:-1], F.coalesce("_occ", "occ").alias("occ")
         )
-    postings_layout(postings, width).write.mode("overwrite").parquet(postings_path)
-    dictionary_table(spark.read.parquet(postings_path), width // 8).write.mode(
-        "overwrite"
-    ).parquet(dict_path)
-    dictionary_bylen_table(spark.read.parquet(dict_path), width // 8).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_dir, "dictionary_bylen"))
-
-    docs_df.write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
+    postings = stage("postings", postings_layout(postings, width))
+    dictionary = stage("dictionary", dictionary_table(postings, width // 8))
+    stage("dictionary_bylen", dictionary_bylen_table(dictionary, width // 8))
+    stage("docs", docs_df)
 
     dm_rows = []
     for prop, by_id in flens.items():
@@ -181,9 +164,7 @@ def restore_index(
         T.StructField("field", T.StringType()),
         T.StructField("field_len", T.IntegerType()),
     ])
-    spark.createDataFrame(dm_rows, dm_schema).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "docmeta")
-    )
+    stage("docmeta", spark.createDataFrame(dm_rows, dm_schema))
 
     stats = {
         "docs_count": int(raw["docs"]["count"]),
@@ -195,20 +176,14 @@ def restore_index(
             for prop, avg in index_dump.get("avgFieldLength", {}).items()
         },
     }
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(stats, f, indent=1)
+    stats_path = os.path.join(out_dir, "stats.json")
 
-    from ..build.manifest import BuildManifest
+    def _stats() -> dict:
+        with open(stats_path, "w") as f:
+            json.dump(stats, f, indent=1)
+        return {"path": stats_path, "docs_count": stats["docs_count"]}
 
-    m = BuildManifest.load(out_dir)
-    for stage in ("postings", "dictionary", "dictionary_bylen", "docs",
-                  "docmeta", "stats"):
-        m.entries[stage] = {
-            "fingerprint": f"restored-{len(docs_rows)}",
-            "path": os.path.join(out_dir, stage),
-            "seconds": 0.0,
-        }
-    m.save()
+    manifest.run_stage("stats", fp, _stats, force=True)
     return out_dir
 
 
@@ -219,12 +194,9 @@ def restore(
     config: IndexConfig,
     *,
     format: str = "json",
-    mode: str = "verbatim",
 ) -> str:
     """One-call plugin-data-persistence ``restore(format, data)``."""
-    return restore_index(
-        spark, parse_payload(data, format), out_dir, config, mode=mode
-    )
+    return restore_index(spark, parse_payload(data, format), out_dir, config)
 
 
 # ------------------------------------------------------------ helpers

@@ -117,6 +117,7 @@ from ..build.blocks import (
     BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, DOCMETA_READ_SCHEMA, POSTINGS_READ_SCHEMA,
     avgfl_per_row, bm25_scores, build_blocks, decode_blocks, idf_per_row,
 )
+from ..build.manifest import BuildManifest
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
 
@@ -296,7 +297,7 @@ class BlockIndex:
         # Driver-side per-term cache of block metadata and θ-seed pool
         # (every real WAND serving system keeps posting metadata in the
         # coordinator). Sound because blocks are immutable for the
-        # lifetime of this instance (the build stamp checked at load()
+        # lifetime of this instance (the manifest check at load()
         # invalidates on any rebuild/maintenance). Bounded: wholesale-
         # cleared past METADATA_CACHE_MAX_TERMS.
         self._cache: dict = {}  # term -> (metadata rows, pool rows) | _OVER_CAP
@@ -373,14 +374,21 @@ class BlockIndex:
     @classmethod
     def build(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":
         """Materialize index_dir/blocks from postings + docmeta +
-        dictionary + stats.
+        dictionary + stats, as the manifest's ``blocks`` stage under
+        the ``stats`` entry's fingerprint.
 
         Exchanges, in order: the per-doc length sum over docmeta (a
         hash exchange by docid) and its range exchange by (dl, docid),
         checkpointed once for the docmap; the range exchange by
         (field, term, internal) that feeds the block encoder — hot
         terms split by internal range. The docmap and dictionary joins
-        are broadcasts. Every table is read with its known schema."""
+        are broadcasts. Every table is read with its known schema.
+
+        The blocks/ overwrite is not atomic: a failure part-way would
+        leave blocks from two builds (bounds and θ seeds of mixed
+        statistics -> unsound pruning). So the ``blocks`` entry is
+        dropped FIRST and recorded only after the write completes;
+        load() refuses without it, so a torn build is never served."""
         import json
 
         # every posting shape is supported: blocks carry per-posting tf
@@ -390,33 +398,33 @@ class BlockIndex:
         # the EXACT per-posting scores, so the bound stays achieved and
         # pruning stays sound for all of them (build/blocks.py).
         cls._check_not_stale(index_dir)
+        manifest = BuildManifest.load(index_dir)
+        if "stats" not in manifest.entries:
+            raise ValueError(
+                f"{index_dir} has no manifest stats entry; build it with "
+                "IndexBuilder.build (or restore it) before BlockIndex.build"
+            )
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
-        # the blocks/ overwrite is not atomic: a failure part-way would
-        # leave blocks from two builds (bounds and θ seeds of mixed
-        # statistics -> unsound pruning). Protocol: remove the stamp
-        # FIRST, write blocks/, write the stamp LAST — load() refuses
-        # whenever the stamp is absent, so a torn build is never served.
-        stamp_path = os.path.join(index_dir, "blocks_build.json")
-        if os.path.exists(stamp_path):
-            os.remove(stamp_path)
-        postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
-            os.path.join(index_dir, "postings")
-        )
-        dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
-            os.path.join(index_dir, "dictionary")
-        )
-        docmeta = spark.read.schema(DOCMETA_READ_SCHEMA).parquet(
-            os.path.join(index_dir, "docmeta")
-        )
-        blocks = build_blocks(postings, docmeta, dictionary, stats, config.bm25)
-        blocks.write.mode("overwrite").parquet(os.path.join(index_dir, "blocks"))
-        import uuid
+        manifest.forget("blocks")
 
-        with open(stamp_path, "w") as f:
-            json.dump(
-                {"build_id": uuid.uuid4().hex, "docs_count": stats["docs_count"]}, f
+        def _blocks() -> dict:
+            postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
+                os.path.join(index_dir, "postings")
             )
+            dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
+                os.path.join(index_dir, "dictionary")
+            )
+            docmeta = spark.read.schema(DOCMETA_READ_SCHEMA).parquet(
+                os.path.join(index_dir, "docmeta")
+            )
+            path = os.path.join(index_dir, "blocks")
+            build_blocks(postings, docmeta, dictionary, stats, config.bm25).write.mode(
+                "overwrite"
+            ).parquet(path)
+            return {"path": path}
+
+        manifest.run_stage("blocks", manifest.entries["stats"]["fingerprint"], _blocks, force=True)
         return cls.load(spark, index_dir, config)
 
     @staticmethod
@@ -435,17 +443,19 @@ class BlockIndex:
 
     @classmethod
     def load(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":
+        """The blocks of ``index_dir``, served only when the manifest
+        records a complete ``blocks`` stage built from the current
+        ``stats`` entry's fingerprint: a rebuild of the index, a
+        compact() or a torn blocks build leaves none, and load refuses."""
         import json
 
         cls._check_not_stale(index_dir)
-        missing = [
-            p for p in ("blocks", "blocks_build.json")
-            if not os.path.exists(os.path.join(index_dir, p))
-        ]
-        if missing:
+        manifest = BuildManifest.load(index_dir)
+        stats_fp = manifest.entries.get("stats", {}).get("fingerprint")
+        if not manifest.is_complete("blocks", stats_fp):
             raise ValueError(
-                f"{', '.join(missing)} missing (torn, pre-stamp or no "
-                "BlockIndex.build, or a compact() invalidation); re-run "
+                "blocks are not current (torn, never built, built before the "
+                "last index build, or invalidated by compact()); re-run "
                 "BlockIndex.build()"
             )
         with open(os.path.join(index_dir, "stats.json")) as f:

@@ -17,24 +17,30 @@ the deployment chooses.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..build.indexer import IndexBuilder
+from ..build.indexer import BUILD_STAGES, IndexBuilder
 from ..build.maintenance import insert_documents
+from ..build.manifest import BuildManifest
 from ..config import IndexConfig
 
 
 class StreamingIndexWriter:
-    """foreachBatch sink folding document micro-batches into an index."""
+    """foreachBatch sink folding document micro-batches into an index.
+
+    The index is bootstrapped only when its manifest records every
+    IndexBuilder stage (``BUILD_STAGES``). A bootstrap torn part-way (its
+    two concurrent stage chains finish in either order) is not yet
+    bootstrapped: the replayed batch goes through the same build, with
+    the same input_id, and resumes at the missing stages."""
 
     def __init__(self, config: IndexConfig, index_dir: str):
         self.config = config
         self.index_dir = index_dir
 
     def _bootstrapped(self) -> bool:
-        return os.path.exists(os.path.join(self.index_dir, "stats.json"))
+        entries = BuildManifest.load(self.index_dir).entries
+        return all(stage in entries for stage in BUILD_STAGES)
 
     def fold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

@@ -10,12 +10,14 @@ sequential reference-semantics oracle on the same docs.
 
 import json
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from orama_spark import persistence as P
-from orama_spark.build.indexer import IndexBuilder
+from orama_spark.build.indexer import BUILD_STAGES, IndexBuilder
+from orama_spark.build.manifest import BuildManifest
 from orama_spark.config import IndexConfig, TokenizerConfig
 from orama_spark.persistence.format import (
     build_avl,
@@ -247,7 +249,7 @@ class TestRoundTrip:
         d, cfg = built
         payload = P.persist(spark, d, cfg, format=fmt)
         out = str(tmp_path / f"restored_{fmt}")
-        P.restore(spark, payload, out, cfg, format=fmt, mode="verbatim")
+        P.restore(spark, payload, out, cfg, format=fmt)
         a = SearchIndex.load(spark, d, cfg)
         b = SearchIndex.load(spark, out, cfg)
         for term, kw in [("quick fox", {}), ("sleep", {}),
@@ -259,12 +261,13 @@ class TestRoundTrip:
                    [(r["docid"], round(r["score"], 12)) for r in rb], term
 
     @pytest.mark.parametrize("case", ["default", "allow_duplicates", "string[]"])
-    def test_rebuild_mode_equals_verbatim(self, spark, built, tmp_path,  # noqa: F811
-                                          case):
-        """Verbatim restore writes the same postings and both dictionaries
-        as a rebuild, and ranks identically. Under allow_duplicates a
-        term's df is its occurrence count, not its document count; in a
-        string[] field the occurrences of a token span its elements."""
+    def test_restore_equals_source(self, spark, built, tmp_path,  # noqa: F811
+                                   case):
+        """Restore writes the same postings and both dictionaries as the
+        index the dump was saved from, and ranks identically. Under
+        allow_duplicates a term's df is its occurrence count, not its
+        document count; in a string[] field the occurrences of a token
+        span its elements."""
         if case == "default":
             d, cfg = built
             queries = ["quick fox", "sleep", "qui"]
@@ -286,9 +289,7 @@ class TestRoundTrip:
             queries = ["spark merge", "merge", "spark join"]
         dump = P.save_dump(spark, d, cfg)
         v = str(tmp_path / "v")
-        r = str(tmp_path / "r")
-        P.restore_index(spark, dump, v, cfg, mode="verbatim")
-        P.restore_index(spark, dump, r, cfg, mode="rebuild")
+        P.restore_index(spark, dump, v, cfg)
 
         def table(root, name, cols):
             return sorted(
@@ -300,9 +301,9 @@ class TestRoundTrip:
             ("dictionary", ["field", "term", "df"]),
             ("dictionary_bylen", ["field", "term_len", "term", "df"]),
         ]:
-            assert table(v, name, cols) == table(r, name, cols), name
+            assert table(v, name, cols) == table(d, name, cols), name
         iv = SearchIndex.load(spark, v, cfg)
-        ir = SearchIndex.load(spark, r, cfg)
+        ir = SearchIndex.load(spark, d, cfg)
         for term in queries:
             hv = iv.search(term=term, limit=10).top_df().collect()
             hr = ir.search(term=term, limit=10).top_df().collect()
@@ -318,6 +319,10 @@ class TestRoundTrip:
         P.restore_index(spark, dump, out, cfg)
         a = SearchIndex.load(spark, d, cfg)
         b = SearchIndex.load(spark, out, cfg)
+        # every table is a manifest stage, its path relative to the root
+        entries = BuildManifest.load(out).entries
+        assert set(BUILD_STAGES) <= set(entries)
+        assert not any(os.path.isabs(e["path"]) for e in entries.values())
         assert b.stats["docs_count"] == a.stats["docs_count"]
         assert b.stats["fields"]["title"]["avg_field_length"] == \
             pytest.approx(a.stats["fields"]["title"]["avg_field_length"],

@@ -2,14 +2,17 @@
 an index that is rank-identical with a one-shot batch build of the same
 corpus (scores too — the maintenance recurrences telescope exactly)."""
 
+import json
 import os
+import shutil
 
 import pytest
 
 from orama_spark.build.indexer import IndexBuilder
+from orama_spark.build.manifest import BuildManifest
 from orama_spark.config import IndexConfig
 from orama_spark.query.engine import SearchIndex
-from orama_spark.streaming.incremental import index_stream
+from orama_spark.streaming.incremental import StreamingIndexWriter, index_stream
 
 SCHEMA = {"t": "string", "cat": "enum"}
 ROWS = [
@@ -51,6 +54,34 @@ def test_stream_matches_batch_build(spark, tmp_path):
         for (gi, gs), (wi, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-9)
     assert s_idx.stats["docs_count"] == len(ROWS)
+
+
+def test_torn_bootstrap_resumes(spark, tmp_path):
+    """A bootstrap whose postings chain died before ``dictionary_bylen``
+    (its docmeta chain, stats.json included, had finished) is replayed
+    through the build and resumes at the missing stage."""
+    cfg = IndexConfig(schema=SCHEMA)
+    batch0 = spark.createDataFrame(ROWS[:3])
+    d = str(tmp_path / "stream_idx")
+    writer = StreamingIndexWriter(cfg, d)
+    writer.fold_batch(batch0, 0)
+    shutil.rmtree(os.path.join(d, "dictionary_bylen"))
+    manifest = BuildManifest.load(d)
+    del manifest.entries["dictionary_bylen"]
+    manifest.save()
+    writer.fold_batch(batch0, 0)
+
+    one = str(tmp_path / "one_shot")
+    IndexBuilder(cfg).build(batch0, one, input_id="one")
+    for table in ("docs", "tokens", "postings", "dictionary", "dictionary_bylen", "docmeta"):
+        rows = [sorted(map(tuple, spark.read.parquet(os.path.join(root, table)).collect()))
+                for root in (d, one)]
+        assert rows[0] == rows[1], table
+    stats = []
+    for root in (d, one):
+        with open(os.path.join(root, "stats.json")) as f:
+            stats.append(json.load(f))
+    assert stats[0] == stats[1]
 
 
 def test_map_only_datapipe_ops_stream_equals_batch(spark, tmp_path):
