@@ -488,6 +488,12 @@ def _config_fingerprint(config: IndexConfig, extra: str = "") -> str:
     return hashlib.sha256(cfg.encode()).hexdigest()[:16]
 
 
+def input_digest(input_id: str) -> str:
+    """How the docs entry records the build's ``input_id``: fixed-length,
+    so the manifest's size does not depend on the name (often a path)."""
+    return hashlib.sha256(input_id.encode()).hexdigest()[:16]
+
+
 # the stages of IndexBuilder.build, as named in its manifest
 BUILD_STAGES = (
     "docs", "tokens", "postings", "dictionary", "dictionary_bylen", "docmeta", "stats",
@@ -542,11 +548,17 @@ class IndexBuilder:
             cfg, extra=json.dumps([input_id or uuid.uuid4().hex, n_part, self.docs_already_sorted])
         )
 
-        # --- stage: docs (the document store, late-materialized at query)
+        # blocks are sound only over the tables they were built from: not
+        # current once one below is overwritten, even if stats never is
+        if not manifest.is_complete("stats", fp):
+            manifest.forget("blocks")
+
+        # --- stage: docs (the document store, late-materialized at query);
+        # its entry names the input, so a stream knows its own bootstrap
         docs_out = df
         if not self.docs_already_sorted:
             docs_out = df.repartitionByRange(max(n_part // 2, 1), docid).sortWithinPartitions(docid)
-        results: dict = {"docs": manifest.write_table("docs", fp, docs_out)}
+        results: dict = {"docs": manifest.write_table("docs", fp, docs_out, input=input_digest(input_id))}
 
         # downstream stages read the WRITTEN docs parquet: the input DAG
         # (which may be an expensive synthetic source or a remote scan)

@@ -242,13 +242,9 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     delta_path = os.path.join(index_dir, "dictionary_delta")
     if not os.path.exists(tomb_path) and not os.path.exists(delta_path):
         return
-    # the block-max WAND table (blocks/) embeds the PRE-compact (df,
-    # avgfl, N) in its bounds and scores: once the tombstone markers
-    # are gone, BlockIndex.load()'s staleness check would pass and
-    # silently serve bounds/θ computed for the old corpus — a stale θ can
-    # exceed the true k-th score and drop true top-k hits. Drop its
-    # manifest entry first, so load() refuses from here on, a torn
-    # compact included, until BlockIndex.build() re-runs.
+    # blocks/ bounds embed the PRE-compact (df, avgfl, N): once the
+    # tombstones are gone, a stale θ could exceed the true k-th score and
+    # drop true top-k hits. Forget first, so a torn compact is refused too.
     BuildManifest.load(index_dir).forget("blocks")
     tombs = (
         spark.read.parquet(tomb_path)

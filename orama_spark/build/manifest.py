@@ -3,11 +3,11 @@ an index directory holds.
 
 Every stage that writes an index table (the seven IndexBuilder stages,
 the dump restore's, and ``blocks``) records its fingerprint, wall
-seconds, completion time and output path (the stats stage adds
-``docs_count``) in ``manifest.json`` at the index root; no stage records
-row counts, bytes or jobs yet. The path is relative to the root, so an
-index keeps its manifest (and its size) wherever it is copied. A stage
-is complete when its entry carries the asked-for fingerprint and its
+seconds, completion time and output path in ``manifest.json`` at the
+index root (stats adds ``docs_count``, docs a digest of the input_id;
+no stage records rows, bytes or jobs). The path is relative to the
+root, so a copied index keeps its manifest and size. A stage is
+complete when its entry carries the asked-for fingerprint and its
 output is whole: a directory with Spark's ``_SUCCESS`` marker, or an
 existing file. A re-run with the same fingerprint skips completed
 stages — the resumability contract of the north rule: a 100 TB build
@@ -72,16 +72,16 @@ class BuildManifest:
             if self.entries.pop(stage, None) is not None:
                 self.save()
 
-    def write_table(self, stage: str, fingerprint: str, df, force: bool = False) -> dict:
+    def write_table(self, stage: str, fingerprint: str, df, **metrics) -> dict:
         """``run_stage`` writing the DataFrame ``df`` as the parquet table
-        ``<root>/<stage>`` (overwrite)."""
+        ``<root>/<stage>`` (overwrite); ``metrics`` join its entry."""
         path = os.path.join(self.root, stage)
 
         def write() -> dict:
             df.write.mode("overwrite").parquet(path)
-            return {"path": path}
+            return {"path": path, **metrics}
 
-        return self.run_stage(stage, fingerprint, write, force)
+        return self.run_stage(stage, fingerprint, write)
 
     def run_stage(
         self,

@@ -62,10 +62,7 @@ def parse_payload(data: str, format: str = "json") -> dict:
 
 
 def restore_index(
-    spark: SparkSession,
-    raw: dict,
-    out_dir: str,
-    config: IndexConfig,
+    spark: SparkSession, raw: dict, out_dir: str, config: IndexConfig
 ) -> str:
     """Materialize a reference RawData dump as our index layout at
     ``out_dir``. Returns ``out_dir`` (load with SearchIndex.load)."""
@@ -124,12 +121,15 @@ def restore_index(
     # order is not in the dump: the tokens table is regenerated with
     # our tokenizer.
     width = max(1, min(32, len(post_rows) // 50_000 + 1))
+    # a fresh fingerprint, and blocks forgotten before any table is
+    # overwritten: blocks over an earlier index here are refused, even
+    # if this restore is torn
     manifest = BuildManifest.load(out_dir)
+    manifest.forget("blocks")
     fp = f"restored-{uuid.uuid4().hex}"
 
     def stage(name: str, df) -> DataFrame:
-        """Write ``df`` as manifest stage ``name``; returns the table read back."""
-        manifest.write_table(name, fp, df, force=True)
+        manifest.write_table(name, fp, df)
         return spark.read.parquet(os.path.join(out_dir, name))
 
     tokens = stage("tokens", tokens_table(docs_df, config))
@@ -151,14 +151,12 @@ def restore_index(
     stage("dictionary_bylen", dictionary_bylen_table(dictionary, width // 8))
     stage("docs", docs_df)
 
-    dm_rows = []
-    for prop, by_id in flens.items():
-        for iid, length in by_id.items():
-            if length is None:
-                continue
-            dm_rows.append(
-                (id_of_internal[int(iid)], prop, int(length))
-            )
+    dm_rows = [
+        (id_of_internal[int(iid)], prop, int(length))
+        for prop, by_id in flens.items()
+        for iid, length in by_id.items()
+        if length is not None
+    ]
     dm_schema = T.StructType([
         T.StructField("docid", docid_type),
         T.StructField("field", T.StringType()),
@@ -183,7 +181,7 @@ def restore_index(
             json.dump(stats, f, indent=1)
         return {"path": stats_path, "docs_count": stats["docs_count"]}
 
-    manifest.run_stage("stats", fp, _stats, force=True)
+    manifest.run_stage("stats", fp, _stats)
     return out_dir
 
 

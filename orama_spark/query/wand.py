@@ -117,6 +117,7 @@ from ..build.blocks import (
     BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, DOCMETA_READ_SCHEMA, POSTINGS_READ_SCHEMA,
     avgfl_per_row, bm25_scores, build_blocks, decode_blocks, idf_per_row,
 )
+from ..build.indexer import BUILD_STAGES
 from ..build.manifest import BuildManifest
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
@@ -375,7 +376,9 @@ class BlockIndex:
     def build(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":
         """Materialize index_dir/blocks from postings + docmeta +
         dictionary + stats, as the manifest's ``blocks`` stage under
-        the ``stats`` entry's fingerprint.
+        the ``stats`` entry's fingerprint. Refuses unless every
+        IndexBuilder stage is complete under that fingerprint: a build
+        torn part-way leaves tables of two corpora side by side.
 
         Exchanges, in order: the per-doc length sum over docmeta (a
         hash exchange by docid) and its range exchange by (dl, docid),
@@ -399,32 +402,26 @@ class BlockIndex:
         # pruning stays sound for all of them (build/blocks.py).
         cls._check_not_stale(index_dir)
         manifest = BuildManifest.load(index_dir)
-        if "stats" not in manifest.entries:
+        stats_fp = manifest.entries.get("stats", {}).get("fingerprint")
+        if not all(manifest.is_complete(stage, stats_fp) for stage in BUILD_STAGES):
             raise ValueError(
-                f"{index_dir} has no manifest stats entry; build it with "
-                "IndexBuilder.build (or restore it) before BlockIndex.build"
+                f"{index_dir} does not hold one complete index build; build it "
+                "with IndexBuilder.build (or restore it) before BlockIndex.build"
             )
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
         manifest.forget("blocks")
-
-        def _blocks() -> dict:
-            postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
-                os.path.join(index_dir, "postings")
-            )
-            dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
-                os.path.join(index_dir, "dictionary")
-            )
-            docmeta = spark.read.schema(DOCMETA_READ_SCHEMA).parquet(
-                os.path.join(index_dir, "docmeta")
-            )
-            path = os.path.join(index_dir, "blocks")
-            build_blocks(postings, docmeta, dictionary, stats, config.bm25).write.mode(
-                "overwrite"
-            ).parquet(path)
-            return {"path": path}
-
-        manifest.run_stage("blocks", manifest.entries["stats"]["fingerprint"], _blocks, force=True)
+        postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
+            os.path.join(index_dir, "postings")
+        )
+        dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
+            os.path.join(index_dir, "dictionary")
+        )
+        docmeta = spark.read.schema(DOCMETA_READ_SCHEMA).parquet(
+            os.path.join(index_dir, "docmeta")
+        )
+        blocks = build_blocks(postings, docmeta, dictionary, stats, config.bm25)
+        manifest.write_table("blocks", stats_fp, blocks)
         return cls.load(spark, index_dir, config)
 
     @staticmethod
@@ -444,9 +441,8 @@ class BlockIndex:
     @classmethod
     def load(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":
         """The blocks of ``index_dir``, served only when the manifest
-        records a complete ``blocks`` stage built from the current
-        ``stats`` entry's fingerprint: a rebuild of the index, a
-        compact() or a torn blocks build leaves none, and load refuses."""
+        records a complete ``blocks`` stage under the ``stats`` entry's
+        fingerprint: a rebuild, a compact() or a torn build leaves none."""
         import json
 
         cls._check_not_stale(index_dir)

@@ -17,9 +17,11 @@ the deployment chooses.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-from ..build.indexer import BUILD_STAGES, IndexBuilder
+from ..build.indexer import BUILD_STAGES, IndexBuilder, input_digest
 from ..build.maintenance import insert_documents
 from ..build.manifest import BuildManifest
 from ..config import IndexConfig
@@ -28,27 +30,27 @@ from ..config import IndexConfig
 class StreamingIndexWriter:
     """foreachBatch sink folding document micro-batches into an index.
 
-    The index is bootstrapped only when its manifest records every
-    IndexBuilder stage (``BUILD_STAGES``). A bootstrap torn part-way (its
-    two concurrent stage chains finish in either order) is not yet
-    bootstrapped: the replayed batch goes through the same build, with
-    the same input_id, and resumes at the missing stages."""
+    A batch is inserted into any index with ``stats.json``, unless the
+    manifest's docs entry names this batch's input_id and one of
+    ``BUILD_STAGES`` is unrecorded: then this batch's own bootstrap was
+    torn, and the replayed batch resumes it through the same build."""
 
     def __init__(self, config: IndexConfig, index_dir: str):
         self.config = config
         self.index_dir = index_dir
 
-    def _bootstrapped(self) -> bool:
+    def _bootstrapped(self, input_id: str) -> bool:
         entries = BuildManifest.load(self.index_dir).entries
-        return all(stage in entries for stage in BUILD_STAGES)
+        if entries.get("docs", {}).get("input") == input_digest(input_id):
+            return all(stage in entries for stage in BUILD_STAGES)
+        return os.path.exists(os.path.join(self.index_dir, "stats.json"))
 
     def fold_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if not self._bootstrapped():
-            IndexBuilder(self.config).build(
-                batch_df, self.index_dir, input_id=f"stream-batch-{batch_id}"
-            )
+        input_id = f"stream-batch-{batch_id}"
+        if not self._bootstrapped(input_id):
+            IndexBuilder(self.config).build(batch_df, self.index_dir, input_id=input_id)
         else:
             insert_documents(
                 batch_df.sparkSession, self.index_dir, self.config, batch_df

@@ -157,6 +157,32 @@ def test_rebuild_refuses_old_blocks(spark, tmp_path):
     assert [r["docid"] for r in top] == [10]
 
 
+def test_failed_rebuild_refuses_old_blocks(spark, tmp_path, monkeypatch):
+    """A rebuild that dies after overwriting docs but before its stats
+    stage leaves A's stats entry behind: A's blocks are not served over
+    B's tables, and blocks are not built over the mixed tables either."""
+    from orama_spark.build import indexer
+    from orama_spark.query.wand import BlockIndex
+
+    out = str(tmp_path / "idx")
+    cfg = _plain_config()
+    _build(spark, CORPUS_A, out, input_id="A")
+    BlockIndex.build(spark, out, cfg)
+
+    def die(*args, **kwargs):
+        raise RuntimeError("docmeta stage died")
+
+    monkeypatch.setattr(indexer, "docmeta_table", die)
+    with pytest.raises(RuntimeError, match="docmeta stage died"):
+        _build(spark, CORPUS_B, out, input_id="B")
+    entries = BuildManifest.load(out).entries
+    assert entries["docs"]["fingerprint"] != entries["stats"]["fingerprint"]
+    with pytest.raises(ValueError, match="not current"):
+        BlockIndex.load(spark, out, cfg)
+    with pytest.raises(ValueError, match="one complete index build"):
+        BlockIndex.build(spark, out, cfg)
+
+
 def test_build_without_input_id_runs_every_stage(spark, tmp_path):
     """An unnamed input is never taken for the one already built."""
     out = str(tmp_path / "idx")

@@ -84,6 +84,26 @@ def test_torn_bootstrap_resumes(spark, tmp_path):
     assert stats[0] == stats[1]
 
 
+@pytest.mark.parametrize("manifest_state", ["no_tokens_entry", "no_manifest"])
+def test_stream_into_existing_index_inserts(spark, tmp_path, manifest_state):
+    """A batch streamed into an index this stream did not bootstrap — one
+    restored by an older release (its manifest has no ``tokens`` entry)
+    or one without a manifest — is inserted, never rebuilt over it."""
+    cfg = IndexConfig(schema=SCHEMA)
+    d = str(tmp_path / "idx")
+    IndexBuilder(cfg).build(spark.createDataFrame(ROWS[:3]), d, input_id="restored-3")
+    manifest = BuildManifest.load(d)
+    if manifest_state == "no_tokens_entry":
+        del manifest.entries["tokens"]
+        manifest.save()
+    else:
+        os.remove(manifest.path)
+    StreamingIndexWriter(cfg, d).fold_batch(spark.createDataFrame(ROWS[3:]), 0)
+    docids = sorted(r["docid"] for r in spark.read.parquet(os.path.join(d, "docs")).collect())
+    assert docids == [r["docid"] for r in ROWS]
+    assert SearchIndex.load(spark, d, cfg).stats["docs_count"] == len(ROWS)
+
+
 def test_map_only_datapipe_ops_stream_equals_batch(spark, tmp_path):
     """The map-only datapipe operators (pii_stats, gopher_rules,
     repetition_stats) are stateless transforms, so they must run
