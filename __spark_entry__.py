@@ -538,16 +538,28 @@ def _library_digest() -> str:
     return h.hexdigest()
 
 
+# the file whose specs build the fixtures; its digest is part of every key
+_ENTRY_FILE = os.path.abspath(__file__)
+
+
+@functools.cache
+def _file_digest(path: str) -> str:
+    with open(path, "rb") as fh:
+        return hashlib.sha256(fh.read()).hexdigest()
+
+
 def _aux_key(sf_dir: str, name: str) -> str:
     """Content key of fixture `name` over `sf_dir`: the spec name, the
     resolved sf_dir, the size and mtime of every source file, the
-    library digest, and the parent's key for a derived spec."""
+    library digest, the digest of this file (a changed spec builds
+    another index), and the parent's key for a derived spec."""
     spec = _AUX[name]
     ident = [
         name,
         os.path.realpath(sf_dir),
         [_file_ids(os.path.join(sf_dir, s)) for s in spec.sources],
         _library_digest(),
+        _file_digest(_ENTRY_FILE),
         spec.parent and _aux_key(sf_dir, spec.parent),
     ]
     return hashlib.sha256(json.dumps(ident).encode()).hexdigest()[:16]

@@ -210,11 +210,6 @@ def _varint_decode_bytes(b: np.ndarray) -> np.ndarray:
     return np.add.reduceat(payload, starts)
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Inverse of varint_encode."""
-    return _varint_decode_bytes(np.frombuffer(buf, dtype=np.uint8))
-
-
 def varint_decode_binary(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """Segmented decode of a whole Arrow ``binary`` or ``large_binary``
     column of varint streams (Spark sends BinaryType as ``binary``, or
@@ -295,17 +290,9 @@ def bm25_scores(idf, fl: np.ndarray, tf: np.ndarray, avgfl, p: BM25Params) -> np
     return (idf * (p.d + tf * (p.k + 1))) / (tf + p.k * (1 - p.b + (p.b * fl) / avgfl))
 
 
-def bm25_for_fl(fl: np.ndarray, df: float, n_docs: float, avgfl: float,
-                p: BM25Params, tfn: np.ndarray | None = None) -> np.ndarray:
-    """BM25 with tf = tfn/fl; tfn=None means the all-ones identity of the
-    deduplicating tokenizer (tf = 1/fl)."""
-    tf = (1.0 if tfn is None else tfn) / fl
-    return bm25_scores(_idf(df, n_docs), fl, tf, avgfl, p)
-
-
 def idf_per_row(df: np.ndarray, n_docs: float) -> np.ndarray:
-    """math.log per row (not np.log), so scores match bm25_for_fl bit
-    for bit."""
+    """math.log per row (not np.log), so every path that scores a term
+    gets the same idf bit for bit."""
     return np.array(
         [_idf(d, n_docs) for d in np.asarray(df, dtype=np.float64).tolist()],
         dtype=np.float64,

@@ -16,21 +16,27 @@ Physical plan (what makes this hold at 10^12 docs):
     so exact/prefix lookups hit few parquet row-groups; fuzzy expansion
     scans a length-banded slice refined by an Arrow-vectorized bounded
     Levenshtein.
+  * a dictionary of at most EXPANSION_COLLECT_CAP rows (composed with
+    its pending df deltas; the bound is counted from parquet footers at
+    load) is held on the driver, as Orama holds its radix tree: one job
+    reads it on the index's first text search, and from then on exact,
+    prefix and fuzzy tokens expand against it with no Spark job. A
+    larger dictionary is probed by one job per search (a fuzzy query
+    reads its cached expansion instead).
   * bounded searches (the normal case: a handful of query tokens whose
     expansion has at most EXPANSION_COLLECT_CAP rows and whose postings
     number at most DRIVER_POSTINGS_CAP) score on the driver, as Orama
-    scores in process. One job reads the matched dictionary rows (a
-    fuzzy query reads its cached expansion instead); Σdf over them
-    bounds the postings rows, so a query over the cap is sent to the
-    distributed plan before any posting is read. A second job reads the
-    postings under the same literal term predicate (parquet min/max
-    prunes row-groups on the sorted term column), joined with the
-    ``where`` docids by a broadcast of the bounded postings side. The
-    rows are scored with the numpy BM25 WAND uses (build/blocks.py
-    ``bm25_scores``, idf per dictionary row), summed per doc in a fixed
-    (field, term) order, thresholded and ranked by (score DESC, docid
-    ASC); the result is a driver-side frame and its pages are local
-    DataFrames (a LocalTableScan: collecting one starts no job).
+    scores in process. Σdf over the expansion bounds the postings rows,
+    so a query over the cap is sent to the distributed plan before any
+    posting is read. One job reads the postings under the same literal
+    term predicate (parquet min/max prunes row-groups on the sorted
+    term column), joined with the ``where`` docids by a broadcast of
+    the bounded postings side. The rows are scored with the numpy BM25
+    WAND uses (build/blocks.py ``bm25_scores``, idf per dictionary
+    row), summed per doc in a fixed (field, term) order, thresholded
+    and ranked by (score DESC, docid ASC); the result is a driver-side
+    frame and its pages are local DataFrames (a LocalTableScan:
+    collecting one starts no job).
   * over the cap the same query runs as a distributed plan: scoring is
     pure JVM expression code (whole-stage codegen) over (tf, field_len)
     columns already denormalized into postings, with df joined from the
@@ -57,6 +63,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
@@ -71,7 +78,9 @@ from .filters import WhereCompiler
 
 # Rows a collected expansion (field, qtoken, term, df) may have. Over it
 # a search runs the distributed plan, and a fuzzy expansion is joined as
-# a plan (no broadcast or literal IN-list pushdown).
+# a plan (no broadcast or literal IN-list pushdown). A loaded index whose
+# dictionary has at most this many rows holds it on the driver
+# (SearchIndex._held_dictionary).
 EXPANSION_COLLECT_CAP = 50_000
 # Postings rows a search may score on the driver. The bound is checked
 # before any postings row is read: Σdf over the matched (field, term)
@@ -284,10 +293,42 @@ def _expand(tokens: list[str], exact: bool, dic: pa.Table) -> pd.DataFrame:
         else:
             op = pc.equal if exact else pc.starts_with
             hit = dic.filter(op(dic.column("term"), tok))
-        part = hit.to_pandas()
-        part.insert(1, "qtoken", tok)
-        parts.append(part)
+        parts.append(_with_qtoken(hit, tok))
     return pd.concat(parts, ignore_index=True)
+
+
+def _fuzzy_expand(tokens: list[str], tolerance: int, dic: pa.Table) -> pd.DataFrame:
+    """``_expand`` for fuzzy tokens: per token the prefix matches plus
+    the words of the length band |len(term) - len(tok)| <= tolerance
+    that are not prefix matches and pass the bounded Levenshtein — the
+    two sets ``_expansion_df`` unions. Lengths count characters, as
+    Spark's ``length`` (``term_len``) does."""
+    term = dic.column("term")
+    lens = pc.utf8_length(term)
+    parts = []
+    for tok in tokens:
+        pre = pc.starts_with(term, tok)
+        in_band = pc.and_(
+            pc.and_(pc.greater_equal(lens, len(tok) - tolerance),
+                    pc.less_equal(lens, len(tok) + tolerance)),
+            pc.invert(pre),
+        )
+        band = dic.filter(in_band)
+        words = band.column("term").to_numpy(zero_copy_only=False)
+        ok = bounded_levenshtein_batch(tok, words, tolerance)
+        parts.append(_with_qtoken(dic.filter(pre), tok))
+        parts.append(_with_qtoken(band.filter(pa.array(ok)), tok))
+    return pd.concat(parts, ignore_index=True)
+
+
+def _in_props(dic: pa.Table, props: list[str]) -> pa.Table:
+    return dic.filter(pc.is_in(dic.column("field"), value_set=pa.array(props, pa.string())))
+
+
+def _with_qtoken(rows: pa.Table, tok: str) -> pd.DataFrame:
+    part = rows.to_pandas()
+    part.insert(1, "qtoken", tok)
+    return part
 
 
 def _misses_a_token(exp: pd.DataFrame, tokens: list[str], threshold: float) -> bool:
@@ -307,6 +348,40 @@ def _rank_order(ids: np.ndarray, score: np.ndarray) -> np.ndarray:
     """Indices in rank order: score DESC, docid ASC. NaN ranks first,
     as Spark orders NaN above every number."""
     return np.lexsort((ids, -score, ~np.isnan(score)))
+
+
+def _parquet_rows(path: str) -> int:
+    """Rows of a parquet table directory, summed from its file footers
+    (no Spark job; ``_SUCCESS`` and hidden files are skipped)."""
+    return pads.dataset(path, format="parquet").count_rows()
+
+
+class _Flights:
+    """Values computed at most once per key and shared by reader
+    threads. Single flight: readers that miss the same key at once wait
+    for the first one's computation instead of each running their own.
+    A failed computation raises in every reader waiting on it and is not
+    kept, so the next call retries. Callers must not modify a value."""
+
+    def __init__(self):
+        self._flights: dict = {}
+        self._lock = threading.Lock()
+
+    def get(self, key, compute):
+        with self._lock:
+            flight = self._flights.get(key)
+            owner = flight is None
+            if owner:
+                flight = self._flights[key] = Future()
+        if owner:
+            try:
+                flight.set_result(compute())
+            except BaseException as e:
+                with self._lock:
+                    del self._flights[key]
+                flight.set_exception(e)
+                raise
+        return flight.result()
 
 
 def _with_delta(table: DataFrame, delta: DataFrame) -> DataFrame:
@@ -335,6 +410,7 @@ class SearchIndex:
         dictionary: DataFrame,
         dictionary_bylen: DataFrame,
         stats: dict,
+        dictionary_rows: Optional[int] = None,
     ):
         self.spark = spark
         self.config = config
@@ -348,11 +424,12 @@ class SearchIndex:
         self.dictionary_bylen = dictionary_bylen
         self.stats = stats
         self.tokenizer = Tokenizer(config.tokenizer)
-        # (tokens, props, tolerance) -> Future of the collected fuzzy
-        # expansion | None; the lock makes the first reader to miss a
-        # key its only computer (_fuzzy_expansion)
-        self._fuzzy_cache: dict[tuple, Future] = {}
-        self._fuzzy_lock = threading.Lock()
+        # an upper bound on the rows of ``dictionary`` (None: unknown, the
+        # dictionary is never held); see _held_dictionary
+        self._dictionary_rows = dictionary_rows
+        # "dictionary" -> the held dictionary table; (tokens, props,
+        # tolerance) -> the fuzzy expansion | None (_fuzzy_expansion)
+        self._flights = _Flights()
         # props -> the (dictionary, postings) scans of the expansion
         # probe and the bounded path
         self._bases: dict[tuple, tuple] = {}
@@ -369,12 +446,17 @@ class SearchIndex:
         """Load index tables; tombstones and dictionary deltas written by
         incremental maintenance (build/maintenance.py) are composed
         lazily — an anti-join on the (small) tombstone set and a df
-        adjustment join on the (small) delta set — until compact()."""
+        adjustment join on the (small) delta set — until compact().
+        Starts no Spark job: the dictionary's row bound (the rows of
+        ``dictionary`` plus ``dictionary_delta``, from parquet footers)
+        decides whether the first text search reads it onto the driver
+        (``_held_dictionary``)."""
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
         docs = spark.read.parquet(os.path.join(index_dir, "docs"))
         postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         dictionary = spark.read.parquet(os.path.join(index_dir, "dictionary"))
+        dictionary_rows = _parquet_rows(os.path.join(index_dir, "dictionary"))
         dictionary_bylen = spark.read.parquet(os.path.join(index_dir, "dictionary_bylen"))
 
         tomb_path = os.path.join(index_dir, "tombstones")
@@ -396,9 +478,12 @@ class SearchIndex:
             )
             dictionary = _with_delta(dictionary, delta)
             dictionary_bylen = _with_delta(dictionary_bylen, delta)
+            # the composed table has at most one row per input row
+            dictionary_rows += _parquet_rows(delta_path)
 
         return cls(spark, config, docs=docs, postings=postings, dictionary=dictionary,
-                   dictionary_bylen=dictionary_bylen, stats=stats)
+                   dictionary_bylen=dictionary_bylen, stats=stats,
+                   dictionary_rows=dictionary_rows)
 
     # -------------------------------------------------------- expansion
     def _expansion_df(
@@ -462,36 +547,43 @@ class SearchIndex:
         pred = _term_predicate(tokens, exact)
         return p if pred is None else p.where(pred)
 
+    def _held_dictionary(self) -> Optional[pa.Table]:
+        """The composed dictionary's (field, term, df) rows on the
+        driver, or None when its row bound is over EXPANSION_COLLECT_CAP
+        (read at call time) or unknown. One job reads it on the first
+        text search (single flight across reader threads; a failed read
+        is retried by the next search), and it is kept as long as the
+        index. A dictionary this small never gives an over-cap probe."""
+        rows = self._dictionary_rows
+        if rows is None or rows > EXPANSION_COLLECT_CAP:
+            return None
+        return self._flights.get(
+            "dictionary", lambda: self.dictionary.select("field", "term", "df").toArrow()
+        )
+
     def _fuzzy_expansion(
-        self, tokens: list[str], props: list[str], tolerance: int
+        self, tokens: list[str], props: list[str], tolerance: int,
+        held: Optional[pa.Table],
     ) -> Optional[pd.DataFrame]:
         """The expansion rows of a fuzzy query, or None when there are
-        more than EXPANSION_COLLECT_CAP. Their matched-word set is the
-        literal IN-list that keeps the postings scan row-group-pruned (a
-        fuzzy predicate can't push into parquet). They only depend on
-        the dictionary, so they are collected once per (tokens, props,
-        tolerance) and cached; repeated fuzzy queries skip the scan.
-        Single flight: readers that miss the same key at once wait for
-        the first one's job instead of each running their own. A failed
-        job raises in every reader waiting on it and is not cached, so
-        the next query retries. Callers must not modify the frame."""
-        key = (tuple(tokens), tuple(props), tolerance)
-        with self._fuzzy_lock:
-            flight = self._fuzzy_cache.get(key)
-            owner = flight is None
-            if owner:
-                flight = self._fuzzy_cache[key] = Future()
-        if owner:
-            try:
-                cap = EXPANSION_COLLECT_CAP
-                got = self._expansion_df(tokens, props, False, tolerance).limit(cap + 1).toArrow()
-                flight.set_result(None if got.num_rows > cap else got.to_pandas())
-            except BaseException as e:
-                with self._fuzzy_lock:
-                    del self._fuzzy_cache[key]
-                flight.set_exception(e)
-                raise
-        return flight.result()
+        more than EXPANSION_COLLECT_CAP: expanded on the driver against
+        the ``held`` dictionary, else collected by one job that scans the
+        length band with the Levenshtein UDF. Their matched-word set is
+        the literal IN-list that keeps the postings scan row-group-pruned
+        (a fuzzy predicate can't push into parquet). They only depend on
+        the dictionary, so they are computed once per (tokens, props,
+        tolerance), single flight, and kept; a repeated fuzzy query skips
+        the scan and the Levenshtein work."""
+
+        def collect():
+            cap = EXPANSION_COLLECT_CAP
+            if held is not None:
+                exp = _fuzzy_expand(tokens, tolerance, _in_props(held, props))
+                return None if len(exp) > cap else exp
+            got = self._expansion_df(tokens, props, False, tolerance).limit(cap + 1).toArrow()
+            return None if got.num_rows > cap else got.to_pandas()
+
+        return self._flights.get((tuple(tokens), tuple(props), tolerance), collect)
 
     def _expansion(
         self, tokens: list[str], props: list[str], exact: bool, tolerance: int
@@ -500,15 +592,19 @@ class SearchIndex:
         the driver, or None when there are more than
         EXPANSION_COLLECT_CAP, and the literal predicate on ``term`` that
         selects their postings (None: every term, or an over-cap fuzzy
-        expansion, which only a join can select). Exact and prefix
-        tokens read their matched dictionary rows in one job; a fuzzy
-        query reads its cached expansion."""
+        expansion, which only a join can select). Against a held
+        dictionary every token expands on the driver with no Spark job;
+        otherwise exact and prefix tokens read their matched dictionary
+        rows in one job. A fuzzy query reads its cached expansion."""
+        held = self._held_dictionary()
         if tolerance and not exact and "" not in tokens:
-            exp = self._fuzzy_expansion(tokens, props, tolerance)
+            exp = self._fuzzy_expansion(tokens, props, tolerance, held)
             if exp is None:
                 return None, None
             return exp, F.col("term").isin(sorted(set(exp["term"])))
         pred = _term_predicate(tokens, exact)
+        if held is not None:
+            return _expand(tokens, exact, _in_props(held, props)), pred
         dic = self._scans(props)[0]
         cap = EXPANSION_COLLECT_CAP
         got = (dic if pred is None else dic.where(pred)).limit(cap + 1).toArrow()

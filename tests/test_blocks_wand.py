@@ -15,8 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from orama_spark.build.blocks import (
-    BLOCK_SIZE, PA_BLOCKS_SCHEMA, assign_internal_ids, block_encoder,
-    bm25_for_fl, varint_decode, varint_decode_binary, varint_encode,
+    BLOCK_SIZE, PA_BLOCKS_SCHEMA, _varint_decode_bytes, assign_internal_ids,
+    block_encoder, bm25_scores, idf_per_row, varint_decode_binary, varint_encode,
 )
 from orama_spark.kernel.bm25 import BM25Params
 from orama_spark.build.indexer import IndexBuilder
@@ -26,6 +26,19 @@ from orama_spark.query.engine import SearchIndex
 from orama_spark.query import wand
 from orama_spark.query.wand import BlockIndex
 from orama_spark.sources.webpages import CorpusGenerator
+
+
+def varint_decode(buf: bytes) -> np.ndarray:
+    """Per-stream reference decode: the inverse of varint_encode."""
+    return _varint_decode_bytes(np.frombuffer(buf, dtype=np.uint8))
+
+
+def bm25_for_fl(fl: np.ndarray, df: float, n_docs: float, avgfl: float,
+                p: BM25Params, tfn: np.ndarray | None = None) -> np.ndarray:
+    """Per-term reference BM25 with tf = tfn/fl; tfn=None means the
+    all-ones identity of the deduplicating tokenizer (tf = 1/fl)."""
+    tf = (1.0 if tfn is None else tfn) / fl
+    return bm25_scores(idf_per_row([df], n_docs)[0], fl, tf, avgfl, p)
 
 
 class TestVarint:

@@ -15,6 +15,7 @@ import sys
 import threading
 import time
 import uuid
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -188,6 +189,19 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
 
+def test_tombstoned_warm_search_runs_only_the_fetch(corpora, spark):
+    """A warm bounded single-token search over pending tombstones and
+    dictionary deltas expands against the held, composed dictionary:
+    only the postings fetch (its anti-join with the tombstones) runs."""
+    _, _, d = corpora["tombstoned"]
+    idx = SearchIndex.load(spark, d, _config())
+    idx.search(term="river")
+    for term in ("river", "fox"):
+        sr, n = _jobs(spark, lambda: idx.search(term=term))
+        assert sr.ranked is not None and len(sr.ranked)
+        assert n == 2, (term, n)  # the fetch and its tombstone broadcast
+
+
 @pytest.mark.parametrize("cap, q", [
     ("DRIVER_POSTINGS_CAP", {"term": "river fox"}),
     ("DRIVER_POSTINGS_CAP", {"term": "river", "where": {"lang": {"eq": "b"}}}),
@@ -213,9 +227,12 @@ def test_over_cap_falls_back(corpora, monkeypatch, spark, cap, q):
 
 
 def test_under_cap_page_is_local_and_starts_no_job(corpora, spark):
-    idx = corpora["fresh0"][0]
+    _, _, d = corpora["fresh0"]
+    idx = SearchIndex.load(spark, d, _config())
+    _, n = _jobs(spark, lambda: idx.search(term="river mountain"))
+    assert n == 2  # the held dictionary's read and the postings fetch
     sr, n = _jobs(spark, lambda: idx.search(term="river mountain"))
-    assert n == 2  # the dictionary probe and the postings fetch
+    assert n == 1  # the postings fetch
     page = sr.top_df()
     plan = page._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan, plan
@@ -238,7 +255,7 @@ def test_search_py4j_calls_are_pinned(corpora, spark):
             calls.append(1)
         return orig(self, *a, **k)
 
-    for term, bound in (("river", 150), ("river mountain", 200)):
+    for term, bound in (("river", 80), ("river mountain", 115)):
         idx.search(term=term).top_df().collect()  # the per-props frames
         calls.clear()
         JavaClient.send_command = counting
@@ -321,11 +338,130 @@ def test_concurrent_readers_match_serial(spark, tmp_path, monkeypatch):
             assert res == serial[i], ops[i]
 
 
+def _not_held(monkeypatch, idx) -> None:
+    """Patch EXPANSION_COLLECT_CAP just under ``idx``'s dictionary rows:
+    the dictionary is not held, and every expansion of the test queries
+    is still under the cap (the probe path)."""
+    assert idx._held_dictionary() is not None
+    monkeypatch.setattr(engine, "EXPANSION_COLLECT_CAP", idx._dictionary_rows - 1)
+    assert idx._held_dictionary() is None
+
+
+def _expansion_rows(spark, idx, monkeypatch, q) -> tuple:
+    """(the (field, qtoken, term, df) multiset of the expansion a search
+    for ``q`` collects and whether it has a postings predicate, the jobs
+    the expansion ran)."""
+    seen = []
+    orig = SearchIndex._expansion
+
+    def recording(self, *args):
+        seen.append(_jobs(spark, lambda: orig(self, *args)))
+        return seen[-1][0]
+
+    with monkeypatch.context() as m:
+        m.setattr(SearchIndex, "_expansion", recording)
+        idx.search(limit=10, **q)
+    if not seen:  # a term with no tokens expands nothing
+        return None, 0
+    ((exp, pred), n), = seen
+    assert exp is not None, q
+    rows = exp[["field", "qtoken", "term", "df"]].itertuples(index=False, name=None)
+    return (Counter((f, t, w, int(df)) for f, t, w, df in rows), pred is None), n
+
+
+@pytest.mark.parametrize("name", ["fresh0", "fresh1", "tombstoned", "upserted"])
+def test_held_expansion_equals_probe(corpora, spark, monkeypatch, name):
+    """Against the held dictionary every query expands, with no Spark
+    job, to the same rows as the dictionary probe (and the fuzzy
+    Levenshtein UDF) over the same index, pending deltas included."""
+    _, queries, d = corpora[name]
+    held = SearchIndex.load(spark, d, _config())
+    want = {}
+    with monkeypatch.context() as m:
+        probe = SearchIndex.load(spark, d, _config())
+        _not_held(m, probe)
+        for i, q in enumerate(queries):
+            want[i] = _expansion_rows(spark, probe, m, q)[0]
+    assert held._held_dictionary() is not None  # read outside the counted calls
+    for i, q in enumerate(queries):
+        got, n = _expansion_rows(spark, held, monkeypatch, q)
+        assert got == want[i], q
+        assert n == 0, q
+    assert any(q.get("tolerance") for q in queries)
+
+
+class _Reads:
+    """A DataFrame stand-in for ``SearchIndex.dictionary`` that counts
+    (and slows, or fails) the held dictionary's reads."""
+
+    def __init__(self, df, fail=False):
+        self.df, self.fail, self.calls = df, fail, 0
+
+    def __getattr__(self, name):
+        return getattr(self.df, name)
+
+    def select(self, *cols):
+        self.calls += 1
+        time.sleep(0.5)  # the other readers miss while this one reads
+        if self.fail:
+            raise RuntimeError("boom")
+        return self.df.select(*cols)
+
+
+def _race(idx, q, n=3) -> tuple:
+    """``n`` readers search ``q`` at once: (pages, errors)."""
+    start = threading.Barrier(n)
+    got, errors = [], []
+
+    def reader():
+        try:
+            start.wait(timeout=60)
+            got.append([tuple(r) for r in idx.search(limit=10, **q).top_df().collect()])
+        except Exception as e:  # surfaced by the caller
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    return got, errors
+
+
+def test_held_dictionary_single_flight(corpora, spark):
+    """Readers that miss the held dictionary at once run ONE read
+    between them and all get the serial result; a failed read raises in
+    every reader and the next search retries it."""
+    _, _, d = corpora["fresh1"]
+    q = {"term": "rivex sparx", "tolerance": 1, "threshold": 0.0}
+    serial = [tuple(r) for r in SearchIndex.load(spark, d, _config())
+              .search(limit=10, **q).top_df().collect()]
+    assert serial
+
+    idx = SearchIndex.load(spark, d, _config())
+    idx.dictionary = reads = _Reads(idx.dictionary)
+    got, errors = _race(idx, q)
+    assert not errors, errors
+    assert reads.calls == 1
+    assert got == [serial] * 3
+
+    idx = SearchIndex.load(spark, d, _config())
+    idx.dictionary = reads = _Reads(idx.dictionary, fail=True)
+    got, errors = _race(idx, q)
+    assert not got
+    assert len(errors) == 3 and all("boom" in str(e) for e in errors), errors
+    reads.fail, calls = False, reads.calls
+    assert [tuple(r) for r in idx.search(limit=10, **q).top_df().collect()] == serial
+    assert reads.calls == calls + 1
+
+
 def test_fuzzy_expansion_single_flight(corpora, spark, monkeypatch):
-    """Readers missing the same fuzzy key at once run ONE expansion job
-    between them and all get the serial result; a failed job is not
-    cached."""
+    """Over a dictionary that is not held, readers missing the same
+    fuzzy key at once run ONE expansion job between them and all get
+    the serial result; a failed job is not cached."""
     _, _, d = corpora["fresh0"]
+    _not_held(monkeypatch, SearchIndex.load(spark, d, _config()))
     q = {"term": "rivex sparx", "tolerance": 1, "threshold": 0.0}
     serial = [tuple(r) for r in SearchIndex.load(spark, d, _config())
               .search(limit=10, **q).top_df().collect()]
@@ -341,22 +477,7 @@ def test_fuzzy_expansion_single_flight(corpora, spark, monkeypatch):
         return orig(self, *args)
 
     monkeypatch.setattr(SearchIndex, "_expansion_df", slow)
-    start = threading.Barrier(3)
-    got, errors = [], []
-
-    def reader():
-        try:
-            start.wait(timeout=60)
-            got.append([tuple(r) for r in idx.search(limit=10, **q).top_df().collect()])
-        except Exception as e:  # surfaced below
-            errors.append(e)
-
-    threads = [threading.Thread(target=reader) for _ in range(3)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=600)
-    assert not any(t.is_alive() for t in threads)
+    got, errors = _race(idx, q)
     assert not errors, errors
     assert len(calls) == 1
     assert got == [serial] * 3

@@ -100,3 +100,20 @@ def test_torn_build_rebuilds(spark, sf_dir):
     assert os.path.exists(_stamp("removed", sf_dir))
     assert not os.path.exists(leftover)
     assert _spark(spark, sf_dir, "flt_after_remove") == _oracle(sf_dir, "flt_after_remove")
+
+
+def test_key_covers_the_entry_file(sf_dir, tmp_path, monkeypatch):
+    """A fixture built by another version of the entry's specs is not
+    reused: the key holds a digest of the entry file's bytes."""
+    key = E._aux_key(sf_dir, "removed")
+    restored_key = E._aux_key(sf_dir, "restored")
+    copy = tmp_path / "__spark_entry__.py"
+    src = open(E._ENTRY_FILE, "rb").read()
+    copy.write_bytes(src)
+    monkeypatch.setattr(E, "_ENTRY_FILE", str(copy))
+    assert E._aux_key(sf_dir, "removed") == key  # same bytes, same key
+    copy2 = tmp_path / "edited.py"
+    copy2.write_bytes(src + b"\n# a changed spec\n")
+    monkeypatch.setattr(E, "_ENTRY_FILE", str(copy2))
+    assert E._aux_key(sf_dir, "removed") != key
+    assert E._aux_key(sf_dir, "restored") != restored_key
