@@ -9,11 +9,13 @@ textbook metric):
     the query token matches at distance 0)
 Returns -1 when the distance exceeds the tolerance.
 
-``bounded_levenshtein_batch`` is the numpy-vectorized variant used inside
-Arrow UDFs for dictionary-scan fuzzy expansion at scale.
+``bounded_levenshtein_batch`` is the numpy-vectorized variant the fuzzy
+term expansion runs over many dictionary words at once.
 """
 
 from __future__ import annotations
+
+from itertools import repeat
 
 import numpy as np
 
@@ -75,28 +77,46 @@ def bounded_levenshtein_batch(term: str, words: np.ndarray, tolerance: int) -> n
     """Vectorized ``bounded_levenshtein(term, w, tolerance) >= 0`` over a
     numpy object array of candidate words.
 
-    Used by the fuzzy term-expansion scan over the ``dictionary`` table:
-    the per-word work is O(|term| * |word|) only for candidates that pass
-    the cheap prefix / length-band screens.
+    Used by the fuzzy term expansion over the ``dictionary`` table, in
+    the Levenshtein UDF and on the driver over a held dictionary. No
+    per-word bytecode: the lengths and the completions of ``term``
+    (distance 0, levenshtein.ts:31-33) are builtins mapped over the
+    words, and the other words of the length band run one textbook
+    edit-distance DP
+    together (``_distances``). A word that ``term`` completes is at
+    distance len(term) - len(word) there too, so levenshtein.ts:26-29
+    needs no case of its own, and the scalar's per-row early exit only
+    saves work: a DP row's minimum never decreases.
     """
-    out = np.zeros(len(words), dtype=bool)
+    n = len(words)
     if tolerance < 0:
-        return out
-    tlen = len(term)
-    for idx, w in enumerate(words):
-        wlen = len(w)
-        if term == w:
-            out[idx] = True
-            continue
-        # empty-string cases precede the prefix shortcuts (levenshtein.ts:19-20)
-        if tlen == 0 or wlen == 0:
-            out[idx] = abs(tlen - wlen) <= tolerance
-            continue
-        # cheap screens: prefix cases and the length band (levenshtein.ts:26-39)
-        if w.startswith(term) or (term.startswith(w) and tlen - wlen <= tolerance):
-            out[idx] = True
-            continue
-        if abs(tlen - wlen) > tolerance:
-            continue
-        out[idx] = bounded_levenshtein(term, w, tolerance) >= 0
+        return np.zeros(n, dtype=bool)
+    lens = np.fromiter(map(len, words), dtype=np.int64, count=n)
+    if not term:  # every word completes "" (levenshtein.ts:19-20 first)
+        return lens <= tolerance
+    out = np.fromiter(map(str.startswith, words, repeat(term)), dtype=bool, count=n)
+    todo = np.flatnonzero(~out & (np.abs(lens - len(term)) <= tolerance))
+    if len(todo):
+        band = np.asarray(words, dtype=object)[todo]
+        out[todo] = _distances(term, band, lens[todo]) <= tolerance
     return out
+
+
+def _distances(term: str, words: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Textbook Levenshtein distance of ``term`` to each word (of
+    ``lens`` characters). One DP row per character of ``term`` over a
+    (characters x words) code-point matrix, words along the contiguous
+    axis; within a row, D[i][j] = min(D[i][j-1] + 1, a[j]) with a[j] the
+    substitution and deletion moves, which is j + cummin(a[k] - k) over
+    k <= j. Cells past a word's end never reach its D[m][len]."""
+    n, width = len(words), max(int(lens.max()), 1)
+    chars = np.ascontiguousarray(words.astype(f"<U{width}").view(np.uint32).reshape(n, width).T)
+    cols = np.arange(width + 1, dtype=np.int32)[:, None]
+    row = np.broadcast_to(cols, (width + 1, n))
+    a = np.empty((width + 1, n), dtype=np.int32)
+    for i, c in enumerate(term, 1):
+        a[0] = i
+        np.minimum(row[1:] + 1, row[:-1] + (chars != ord(c)), out=a[1:])
+        a -= cols
+        row = np.minimum.accumulate(a, axis=0) + cols
+    return row[lens, np.arange(n)]

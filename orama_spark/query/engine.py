@@ -14,12 +14,12 @@ components/index.ts:457-592):
 Physical plan (what makes this hold at 10^12 docs):
   * the dictionary scan is pruned: it is stored sorted by (field, term),
     so exact/prefix lookups hit few parquet row-groups; fuzzy expansion
-    scans a length-banded slice refined by an Arrow-vectorized bounded
+    scans a length-banded slice refined by a numpy-vectorized bounded
     Levenshtein.
   * a dictionary of at most EXPANSION_COLLECT_CAP rows (composed with
-    its pending df deltas; the bound is counted from parquet footers at
-    load) is held on the driver, as Orama holds its radix tree: one job
-    reads it on the index's first text search, and from then on exact,
+    its pending df deltas; the bound is counted from parquet footers on
+    the first text search) is held on the driver, as Orama holds its
+    radix tree: one job reads it then, and from then on exact,
     prefix and fuzzy tokens expand against it with no Spark job. A
     larger dictionary is probed by one job per search (a fuzzy query
     reads its cached expansion instead).
@@ -63,7 +63,8 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pads
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
@@ -350,10 +351,18 @@ def _rank_order(ids: np.ndarray, score: np.ndarray) -> np.ndarray:
     return np.lexsort((ids, -score, ~np.isnan(score)))
 
 
-def _parquet_rows(path: str) -> int:
-    """Rows of a parquet table directory, summed from its file footers
-    (no Spark job; ``_SUCCESS`` and hidden files are skipped)."""
-    return pads.dataset(path, format="parquet").count_rows()
+def _rows_over(files: list[str], cap: int) -> bool:
+    """Whether the parquet ``files`` (URIs) hold more than ``cap`` rows
+    in all, summed from their footers with no Spark job. Footers past
+    the first ``cap`` rows are not read."""
+    rows = 0
+    for uri in files:
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with fs.open_input_file(path) as src:
+            rows += pq.read_metadata(src).num_rows
+        if rows > cap:
+            return True
+    return False
 
 
 class _Flights:
@@ -410,7 +419,6 @@ class SearchIndex:
         dictionary: DataFrame,
         dictionary_bylen: DataFrame,
         stats: dict,
-        dictionary_rows: Optional[int] = None,
     ):
         self.spark = spark
         self.config = config
@@ -424,11 +432,10 @@ class SearchIndex:
         self.dictionary_bylen = dictionary_bylen
         self.stats = stats
         self.tokenizer = Tokenizer(config.tokenizer)
-        # an upper bound on the rows of ``dictionary`` (None: unknown, the
-        # dictionary is never held); see _held_dictionary
-        self._dictionary_rows = dictionary_rows
-        # "dictionary" -> the held dictionary table; (tokens, props,
-        # tolerance) -> the fuzzy expansion | None (_fuzzy_expansion)
+        # ("over", cap) -> whether the dictionary's row bound is over
+        # cap, "dictionary" -> the held dictionary table
+        # (_held_dictionary); (tokens, props, tolerance) -> the fuzzy
+        # expansion | None (_fuzzy_expansion)
         self._flights = _Flights()
         # props -> the (dictionary, postings) scans of the expansion
         # probe and the bounded path
@@ -447,16 +454,14 @@ class SearchIndex:
         incremental maintenance (build/maintenance.py) are composed
         lazily — an anti-join on the (small) tombstone set and a df
         adjustment join on the (small) delta set — until compact().
-        Starts no Spark job: the dictionary's row bound (the rows of
-        ``dictionary`` plus ``dictionary_delta``, from parquet footers)
-        decides whether the first text search reads it onto the driver
+        Starts no Spark job and reads no table: the first text search
+        decides whether the dictionary is held on the driver
         (``_held_dictionary``)."""
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
         docs = spark.read.parquet(os.path.join(index_dir, "docs"))
         postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         dictionary = spark.read.parquet(os.path.join(index_dir, "dictionary"))
-        dictionary_rows = _parquet_rows(os.path.join(index_dir, "dictionary"))
         dictionary_bylen = spark.read.parquet(os.path.join(index_dir, "dictionary_bylen"))
 
         tomb_path = os.path.join(index_dir, "tombstones")
@@ -478,12 +483,9 @@ class SearchIndex:
             )
             dictionary = _with_delta(dictionary, delta)
             dictionary_bylen = _with_delta(dictionary_bylen, delta)
-            # the composed table has at most one row per input row
-            dictionary_rows += _parquet_rows(delta_path)
 
         return cls(spark, config, docs=docs, postings=postings, dictionary=dictionary,
-                   dictionary_bylen=dictionary_bylen, stats=stats,
-                   dictionary_rows=dictionary_rows)
+                   dictionary_bylen=dictionary_bylen, stats=stats)
 
     # -------------------------------------------------------- expansion
     def _expansion_df(
@@ -550,12 +552,19 @@ class SearchIndex:
     def _held_dictionary(self) -> Optional[pa.Table]:
         """The composed dictionary's (field, term, df) rows on the
         driver, or None when its row bound is over EXPANSION_COLLECT_CAP
-        (read at call time) or unknown. One job reads it on the first
-        text search (single flight across reader threads; a failed read
-        is retried by the next search), and it is kept as long as the
-        index. A dictionary this small never gives an over-cap probe."""
-        rows = self._dictionary_rows
-        if rows is None or rows > EXPANSION_COLLECT_CAP:
+        (read at call time). The bound is the rows of every file the
+        composed plan reads (``dictionary`` plus ``dictionary_delta``:
+        the composition has at most one row per input row), summed from
+        parquet footers once per cap. One job reads the table on the
+        first text search (single flight across reader threads; a failed
+        read is retried by the next search), and it is kept as long as
+        the index. A dictionary this small never gives an over-cap
+        probe."""
+        cap = EXPANSION_COLLECT_CAP
+        over = self._flights.get(
+            ("over", cap), lambda: _rows_over(self.dictionary.inputFiles(), cap)
+        )
+        if over:
             return None
         return self._flights.get(
             "dictionary", lambda: self.dictionary.select("field", "term", "df").toArrow()

@@ -10,6 +10,7 @@ rel 1e-12, docids identical wherever neighbouring scores differ by more
 than that.
 """
 
+import os
 import random
 import sys
 import threading
@@ -18,6 +19,7 @@ import uuid
 from collections import Counter
 
 import numpy as np
+import pyarrow.dataset as pads
 import pytest
 
 from orama_spark.build.indexer import IndexBuilder
@@ -338,13 +340,35 @@ def test_concurrent_readers_match_serial(spark, tmp_path, monkeypatch):
             assert res == serial[i], ops[i]
 
 
-def _not_held(monkeypatch, idx) -> None:
-    """Patch EXPANSION_COLLECT_CAP just under ``idx``'s dictionary rows:
-    the dictionary is not held, and every expansion of the test queries
-    is still under the cap (the probe path)."""
+def _dictionary_rows(d: str) -> int:
+    """The held dictionary's row bound: the rows of ``dictionary`` plus
+    those of a pending ``dictionary_delta``."""
+    tables = (os.path.join(d, t) for t in ("dictionary", "dictionary_delta"))
+    return sum(pads.dataset(t, format="parquet").count_rows() for t in tables if os.path.exists(t))
+
+
+def _not_held(monkeypatch, idx, d) -> None:
+    """Patch EXPANSION_COLLECT_CAP just under the dictionary rows of
+    ``idx`` (loaded from ``d``): the dictionary is not held, and every
+    expansion of the test queries is still under the cap (the probe
+    path)."""
     assert idx._held_dictionary() is not None
-    monkeypatch.setattr(engine, "EXPANSION_COLLECT_CAP", idx._dictionary_rows - 1)
+    monkeypatch.setattr(engine, "EXPANSION_COLLECT_CAP", _dictionary_rows(d) - 1)
     assert idx._held_dictionary() is None
+
+
+def test_row_bound_stops_at_the_cap(corpora):
+    """The held dictionary's row bound reads footers only until their
+    rows pass the cap: a file after that point is never opened."""
+    idx, _, d = corpora["fresh0"]
+    files = sorted(idx.dictionary.inputFiles())
+    rows = _dictionary_rows(d)
+    missing = "file://" + os.path.join(d, "dictionary", "no-such-file.parquet")
+    assert not engine._rows_over(files, rows)
+    assert engine._rows_over(files, rows - 1)
+    assert engine._rows_over(files + [missing], rows - 1)
+    with pytest.raises(OSError):
+        engine._rows_over(files + [missing], rows)
 
 
 def _expansion_rows(spark, idx, monkeypatch, q) -> tuple:
@@ -379,7 +403,7 @@ def test_held_expansion_equals_probe(corpora, spark, monkeypatch, name):
     want = {}
     with monkeypatch.context() as m:
         probe = SearchIndex.load(spark, d, _config())
-        _not_held(m, probe)
+        _not_held(m, probe, d)
         for i, q in enumerate(queries):
             want[i] = _expansion_rows(spark, probe, m, q)[0]
     assert held._held_dictionary() is not None  # read outside the counted calls
@@ -461,7 +485,7 @@ def test_fuzzy_expansion_single_flight(corpora, spark, monkeypatch):
     fuzzy key at once run ONE expansion job between them and all get
     the serial result; a failed job is not cached."""
     _, _, d = corpora["fresh0"]
-    _not_held(monkeypatch, SearchIndex.load(spark, d, _config()))
+    _not_held(monkeypatch, SearchIndex.load(spark, d, _config()), d)
     q = {"term": "rivex sparx", "tolerance": 1, "threshold": 0.0}
     serial = [tuple(r) for r in SearchIndex.load(spark, d, _config())
               .search(limit=10, **q).top_df().collect()]

@@ -186,17 +186,24 @@ class TestLevenshtein:
             assert (d >= 0) == c["isBounded"]
 
     def test_batch_matches_scalar(self):
+        """The fixed cases, then seeded random words: non-ASCII and NUL
+        characters, empty strings, every length band edge."""
+        import random
+
         import numpy as np
 
-        words = np.array(
-            ["fox", "box", "fo", "f", "foxes", "dog", "", "fax", "oxf"],
-            dtype=object,
-        )
-        for term in ["fox", "fo", "f", ""]:
-            for tol in [-1, 0, 1, 2]:
-                got = bounded_levenshtein_batch(term, words, tol)
-                want = [bounded_levenshtein(term, w, tol) >= 0 for w in words]
-                assert list(got) == want, f"term={term} tol={tol}"
+        words = ["fox", "box", "fo", "f", "foxes", "dog", "", "fax", "oxf"]
+        cases = [(term, words, tol) for term in ["fox", "fo", "f", ""] for tol in [-1, 0, 1, 2]]
+        rng = random.Random(5)
+        word = lambda k: "".join(rng.choices("abcé日\x00", k=k))  # noqa: E731
+        for _ in range(500):
+            cases.append((word(rng.randint(0, 7)),
+                          [word(rng.randint(0, 8)) for _ in range(rng.randint(0, 40))],
+                          rng.randint(-1, 3)))
+        for term, ws, tol in cases:
+            got = bounded_levenshtein_batch(term, np.array(ws, dtype=object), tol)
+            want = [bounded_levenshtein(term, w, tol) >= 0 for w in ws]
+            assert got.dtype == bool and list(got) == want, (term, ws, tol)
 
 
 class TestBM25:
