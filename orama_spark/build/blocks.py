@@ -189,11 +189,6 @@ def varint_encode_stream(arr: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, cuts
 
 
-def varint_encode(arr: np.ndarray) -> bytes:
-    """LEB128 varint encode of a uint64 array."""
-    return varint_encode_stream(arr)[0].tobytes()
-
-
 def _varint_decode_bytes(b: np.ndarray) -> np.ndarray:
     """Decode a uint8 array holding back-to-back varints (bytes after
     the last terminator are ignored)."""

@@ -6,14 +6,15 @@ frame: ``tokens_table`` (docs -> per-field token lists),
 ``postings_table`` (tokens -> postings, scalar and string[]),
 ``docmeta_table`` (tokens -> per-doc field lengths), ``dictionary_table``
 (postings -> df = Σocc) and ``dictionary_bylen_table`` (dictionary ->
-the length-banded copy), plus ``postings_layout`` for the postings file
-order, and ``field_stats`` (a batch of inserts or removes -> stats.json,
-its events from ``insert_events`` or ``remove_events``).
-``IndexBuilder.build``, incremental insert / remove / compact
-(maintenance.py), the verbatim dump restore (persistence/restore.py) and
-``SearchIndex.load``'s delta composition all call these; each caller
-chooses only paths, write mode and partition width, and ``field_stats``'
-callers only the batch, its order and the start state.
+the length-banded copy), plus ``postings_layout`` and
+``dictionary_layout`` for the postings and dictionary file order, and
+``field_stats`` (a batch of inserts or removes -> stats.json, its events
+from ``insert_events`` or ``remove_events``). ``IndexBuilder.build``,
+incremental insert / remove / compact and the live view readers see
+(maintenance.py) and the verbatim dump restore (persistence/restore.py)
+all call these; each caller chooses only paths, write mode and
+partition width, and ``field_stats``' callers only the batch, its order
+and the start state.
 
 Reference semantics being reproduced (see SURVEY.md §2.3, §7-M2):
   * field_len  = len(token list)  — with the default deduplicating
@@ -220,14 +221,19 @@ def term_df(postings: DataFrame) -> DataFrame:
     return postings.groupBy("field", "term").agg(F.sum("occ").cast("long").alias("df"))
 
 
-def dictionary_table(postings: DataFrame, n_part: int) -> DataFrame:
-    """The term dictionary, range partitioned into ``n_part`` files and
-    sorted by (field, term) so exact/prefix lookups row-group-prune."""
+def dictionary_layout(dictionary: DataFrame, n_part: int) -> DataFrame:
+    """(field, term, df) rows in the dictionary's file layout: range
+    partitioned into ``n_part`` files and sorted by (field, term) so
+    exact/prefix lookups row-group-prune."""
     return (
-        term_df(postings)
-        .repartitionByRange(max(n_part, 1), "field", "term")
+        dictionary.repartitionByRange(max(n_part, 1), "field", "term")
         .sortWithinPartitions("field", "term")
     )
+
+
+def dictionary_table(postings: DataFrame, n_part: int) -> DataFrame:
+    """The term dictionary of ``postings`` in ``dictionary_layout``."""
+    return dictionary_layout(term_df(postings), n_part)
 
 
 def term_len() -> Column:

@@ -1,4 +1,5 @@
-"""Incremental index maintenance: insert / remove / update / upsert.
+"""Incremental index maintenance: insert / remove / update / upsert,
+compaction, and the one reader of the pending maintenance tables.
 
 Reference semantics (methods/insert.ts, methods/remove.ts:10-318,
 methods/update.ts:8-49, methods/upsert.ts):
@@ -12,13 +13,16 @@ methods/update.ts:8-49, methods/upsert.ts):
     general case, are ``indexer.field_stats``.
   * update = remove + insert; upsert = exists ? update : insert.
 
-Scale design: removals NEVER rewrite the posting store. They append to
-  * ``tombstones``        (docid)            — anti-joined at query time
-  * ``dictionary_delta``  (field, term, ddf) — df decrements, joined at
-                                               expansion time (tiny)
-and patch stats.json. ``compact()`` folds tombstones/deltas into the
-base tables (the periodic rewrite a real deployment schedules). Inserts
-append parquet files in the same layouts (no rewrite of existing data).
+Scale design: the reference removes a document in place; here removals
+NEVER rewrite the posting store. They append to
+  * ``tombstones``        (docid)            — removed docs
+  * ``dictionary_delta``  (field, term, ddf) — df decrements (inserts
+                                               append increments)
+and patch stats.json. This module is the only one that knows that
+format: ``live_tables`` gives every reader (``SearchIndex.load``,
+``compact()``, the writers here) the tables with tombstoned docs and
+df deltas composed in, and ``compact()`` writes that live view back as
+the base tables (the periodic rewrite a real deployment schedules).
 This is the LSM-ish pattern every mutable columnar store uses; with an
 Iceberg catalog the same operations become MERGE INTO + snapshot
 expiry, which TableIO can adopt without touching engine logic.
@@ -30,13 +34,14 @@ import functools
 import json
 import os
 import shutil
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import IndexConfig
 from .indexer import (
     dictionary_bylen_table,
-    dictionary_table,
+    dictionary_layout,
     docmeta_table,
     field_stats,
     insert_events,
@@ -44,6 +49,7 @@ from .indexer import (
     postings_table,
     remove_events,
     term_df,
+    term_len,
     tokens_table,
 )
 from .manifest import BuildManifest
@@ -61,6 +67,67 @@ def _load_stats(index_dir: str) -> dict:
 def _save_stats(index_dir: str, stats: dict) -> None:
     with open(_stats_path(index_dir), "w") as f:
         json.dump(stats, f, indent=1)
+
+
+_TOMBSTONES = "tombstones"
+_DELTA = "dictionary_delta"
+_DICTIONARIES = ("dictionary", "dictionary_bylen")
+
+
+def _pending(spark: SparkSession, index_dir: str, name: str) -> Optional[DataFrame]:
+    path = os.path.join(index_dir, name)
+    return spark.read.parquet(path) if os.path.exists(path) else None
+
+
+def pending_tables(index_dir: str) -> list[str]:
+    """The pending maintenance tables ``index_dir`` holds (empty once
+    compacted or never maintained)."""
+    return [t for t in (_TOMBSTONES, _DELTA) if os.path.exists(os.path.join(index_dir, t))]
+
+
+def _with_deltas(table: DataFrame, delta: DataFrame) -> DataFrame:
+    """Compose df deltas (field, term, ddf) into either dictionary table:
+    one union of the table's rows and the delta rows in its columns
+    (``term_len`` derived), summed per (field, [term_len,] term), terms
+    whose df falls to 0 dropped. A filter on the grouping columns passes
+    the aggregate and the union, so a literal ``field`` / ``term`` /
+    ``term_len`` predicate still reaches the base table's parquet scan."""
+    keys = [c for c in table.columns if c != "df"]
+    rows = delta.select(
+        *[term_len().alias(c) if c == "term_len" else c for c in keys],
+        F.col("ddf").alias("df"),
+    )
+    return (
+        table.unionByName(rows)
+        .groupBy(*keys)
+        .agg(F.sum("df").alias("df"))
+        .where(F.col("df") > 0)
+    )
+
+
+def live_tables(
+    spark: SparkSession, index_dir: str, config: IndexConfig, names: Sequence[str]
+) -> dict[str, DataFrame]:
+    """name -> the lazy table a reader of ``index_dir`` sees, for each
+    of ``names``: tombstoned docs anti-joined out of docs / tokens /
+    postings / docmeta, df deltas composed into both dictionaries. Opens
+    only the tables named and the pending ones they need."""
+    tombs = delta = None
+    if set(names) - set(_DICTIONARIES):
+        tombs = _pending(spark, index_dir, _TOMBSTONES)
+    if set(names) & set(_DICTIONARIES):
+        delta = _pending(spark, index_dir, _DELTA)
+    out = {}
+    for name in names:
+        table = spark.read.parquet(os.path.join(index_dir, name))
+        if name in _DICTIONARIES:
+            if delta is not None:
+                table = _with_deltas(table, delta)
+        elif tombs is not None:
+            key = config.docid_col if name == "docs" else "docid"
+            table = table.join(tombs.withColumnRenamed("docid", key), key, "left_anti")
+        out[name] = table
+    return out
 
 
 def remove_documents(
@@ -82,19 +149,14 @@ def remove_documents(
         F.col(remove_ids.columns[0]).alias("docid"),
         F.monotonically_increasing_id().alias("_ord"),
     ).groupBy("docid").agg(F.min("_ord").alias("_ord"))
-    # only docs that exist: semi-join against the live docs table —
-    # without this, removing (or upserting) unknown ids would decrement
-    # docs_count and rescale avg_field_length for nothing, permanently
-    # skewing BM25
-    live = spark.read.parquet(os.path.join(index_dir, "docs")).select(
+    # only docs that are live: one semi-join against the live docs —
+    # without it, removing (or upserting) unknown or already removed ids
+    # would decrement docs_count and rescale avg_field_length for
+    # nothing, permanently skewing BM25
+    live = live_tables(spark, index_dir, config, ["docs"])["docs"].select(
         F.col(config.docid_col).alias("docid")
     )
-    remove_ids = remove_ids.join(live, "docid", "left_semi")
-    tomb_path = os.path.join(index_dir, "tombstones")
-    if os.path.exists(tomb_path):
-        existing = spark.read.parquet(tomb_path)
-        remove_ids = remove_ids.join(existing, "docid", "left_anti")
-    remove_ids = remove_ids.persist()
+    remove_ids = remove_ids.join(live, "docid", "left_semi").persist()
     if remove_ids.count() == 0:
         remove_ids.unpersist()
         return _load_stats(index_dir)
@@ -104,14 +166,14 @@ def remove_documents(
 
     # df decrements per (field, term) (index.ts:134-136)
     delta = term_df(removed_postings).select("field", "term", (-F.col("df")).alias("ddf"))
-    delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
+    delta.write.mode("append").parquet(os.path.join(index_dir, _DELTA))
 
     # stats: the removed docs' events in the caller's order
     events = remove_events(spark, index_dir, remove_ids, config, "_ord")
     stats = field_stats(events, config, "_ord", _load_stats(index_dir), sign=-1)
 
     removed = remove_ids.select("docid")
-    removed.write.mode("append").parquet(tomb_path)
+    removed.write.mode("append").parquet(os.path.join(index_dir, _TOMBSTONES))
     _save_stats(index_dir, stats)
     config.hooks.run_observe("after_remove_multiple", removed, stats)
     remove_ids.unpersist()
@@ -119,7 +181,7 @@ def remove_documents(
 
 
 def _insert_probe(
-    spark: SparkSession, new_ids: DataFrame, doc_ids: DataFrame, tomb_path: str
+    spark: SparkSession, index_dir: str, new_ids: DataFrame, doc_ids: DataFrame
 ) -> tuple:
     """(new rows that repeat a docid, new rows whose docid is
     tombstoned) in ONE aggregate: the new, stored and tombstoned docids
@@ -131,8 +193,9 @@ def _insert_probe(
         new_ids.select("docid", one.alias("n"), zero.alias("stored"), zero.alias("dead")),
         doc_ids.select("docid", zero.alias("n"), one.alias("stored"), zero.alias("dead")),
     ]
-    if os.path.exists(tomb_path):
-        tagged.append(spark.read.parquet(tomb_path).select(
+    tombs = _pending(spark, index_dir, _TOMBSTONES)
+    if tombs is not None:
+        tagged.append(tombs.select(
             "docid", zero.alias("n"), zero.alias("stored"), one.alias("dead")
         ))
     per_id = (
@@ -161,12 +224,10 @@ def insert_documents(
     new_docs = config.hooks.run_transform("before_insert_multiple", new_docs)
     docid = config.docid_col
     docs_path = os.path.join(index_dir, "docs")
-    tomb_path = os.path.join(index_dir, "tombstones")
     new_docs = new_docs.persist()
     dup, tombstoned_reinserts = _insert_probe(
-        spark, new_docs.select(F.col(docid).alias("docid")),
+        spark, index_dir, new_docs.select(F.col(docid).alias("docid")),
         spark.read.parquet(docs_path).select(F.col(docid).alias("docid")),
-        tomb_path,
     )
     if dup:
         new_docs.unpersist()
@@ -192,7 +253,7 @@ def insert_documents(
     dm = docmeta_table(tokenized, config)
     dm.write.mode("append").parquet(os.path.join(index_dir, "docmeta"))
     delta = term_df(new_postings).withColumnRenamed("df", "ddf")
-    delta.write.mode("append").parquet(os.path.join(index_dir, "dictionary_delta"))
+    delta.write.mode("append").parquet(os.path.join(index_dir, _DELTA))
 
     # stats: the new docs' events in the caller's row order (partition
     # index + in-partition position over the persisted frame), the
@@ -225,47 +286,36 @@ def upsert_documents(
     return update_documents(spark, index_dir, config, docs)
 
 
-def _replace(df: DataFrame, path: str) -> None:
-    """Write ``df`` beside ``path``, then swap it in (``df`` may read
-    ``path`` itself)."""
-    df.write.mode("overwrite").parquet(path + ".compact")
-    shutil.rmtree(path)
-    os.rename(path + ".compact", path)
-
-
 def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
-    """Fold tombstones + dictionary deltas into the base tables (the
-    periodic rewrite; query plans shrink back to zero-merge reads).
+    """Write the live view (``live_tables``) back as the base tables and
+    drop the pending ones (the periodic rewrite; query plans shrink back
+    to zero-merge reads): docs, tokens, postings and docmeta without the
+    tombstoned docs, the dictionary with its deltas summed in, at its
+    current width, and ``dictionary_bylen`` from the new dictionary.
     Drops the manifest's ``blocks`` entry: BlockIndex.load refuses until
     BlockIndex.build re-runs over the compacted tables."""
-    tomb_path = os.path.join(index_dir, "tombstones")
-    delta_path = os.path.join(index_dir, "dictionary_delta")
-    if not os.path.exists(tomb_path) and not os.path.exists(delta_path):
+    pending = pending_tables(index_dir)
+    if not pending:
         return
     # blocks/ bounds embed the PRE-compact (df, avgfl, N): once the
     # tombstones are gone, a stale θ could exceed the true k-th score and
     # drop true top-k hits. Forget first, so a torn compact is refused too.
     BuildManifest.load(index_dir).forget("blocks")
-    tombs = (
-        spark.read.parquet(tomb_path)
-        if os.path.exists(tomb_path)
-        else None
-    )
-    for table in ("docs", "tokens", "postings", "docmeta"):
-        path = os.path.join(index_dir, table)
-        df = spark.read.parquet(path)
-        if tombs is not None:
-            key = config.docid_col if table == "docs" else "docid"
-            df = df.join(tombs.withColumnRenamed("docid", key), key, "left_anti")
-        _replace(df, path)
-    # both dictionaries are re-derived from the compacted postings, at
-    # the dictionary's current width
-    dict_path = os.path.join(index_dir, "dictionary")
-    bylen_path = os.path.join(index_dir, "dictionary_bylen")
-    width = len(spark.read.parquet(dict_path).inputFiles())
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    _replace(dictionary_table(postings, width), dict_path)
-    _replace(dictionary_bylen_table(spark.read.parquet(dict_path), width), bylen_path)
-    for p in (tomb_path, delta_path):
-        if os.path.exists(p):
-            shutil.rmtree(p)
+    path = functools.partial(os.path.join, index_dir)
+    width = len(spark.read.parquet(path("dictionary")).inputFiles())
+    names = ("docs", "tokens", "postings", "docmeta", "dictionary")
+    live = live_tables(spark, index_dir, config, names)
+    live["dictionary"] = dictionary_layout(live["dictionary"], width)
+    for name, df in live.items():
+        df.write.mode("overwrite").parquet(path(name + ".compact"))
+    bylen = dictionary_bylen_table(spark.read.parquet(path("dictionary.compact")), width)
+    bylen.write.mode("overwrite").parquet(path("dictionary_bylen.compact"))
+    # swap only once every table is written, so a compact that dies in
+    # the writes leaves the index as it was: the new dictionary has the
+    # deltas summed in, and one re-run over it and the deltas would sum
+    # them twice. Only these renames stand between the two.
+    for name in (*names, "dictionary_bylen"):
+        shutil.rmtree(path(name))
+        os.rename(path(name + ".compact"), path(name))
+    for name in pending:
+        shutil.rmtree(path(name))

@@ -26,8 +26,9 @@ import math
 import os
 from typing import Any, Optional
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
+from ..build.maintenance import live_tables
 from ..config import IndexConfig
 from .format import (
     build_avl,
@@ -144,14 +145,8 @@ def save_dump(
     # fieldLengths / avgFieldLength from docmeta + stats
     # (components/index.ts:86-90)
     field_lengths: dict[str, dict[str, int]] = {p: {} for p in searchable}
-    dm_path = os.path.join(index_dir, "docmeta")
-    if os.path.exists(dm_path):
-        dm = (
-            spark.read.parquet(dm_path)
-            .join(idx.docs.select(F.col(docid_col).alias("docid")),
-                  "docid", "left_semi")
-            .toPandas()
-        )
+    if os.path.exists(os.path.join(index_dir, "docmeta")):
+        dm = live_tables(spark, index_dir, config, ["docmeta"])["docmeta"].toPandas()
         for fld, did, fl in zip(dm["field"], dm["docid"], dm["field_len"]):
             if fld in field_lengths:
                 field_lengths[fld][str(internal_of[str(did)])] = int(fl)

@@ -15,14 +15,16 @@ Physical plan (what makes this hold at 10^12 docs):
   * the dictionary scan is pruned: it is stored sorted by (field, term),
     so exact/prefix lookups hit few parquet row-groups; fuzzy expansion
     scans a length-banded slice refined by a numpy-vectorized bounded
-    Levenshtein.
-  * a dictionary of at most EXPANSION_COLLECT_CAP rows (composed with
-    its pending df deltas; the bound is counted from parquet footers on
-    the first text search) is held on the driver, as Orama holds its
-    radix tree: one job reads it then, and from then on exact,
-    prefix and fuzzy tokens expand against it with no Spark job. A
-    larger dictionary is probed by one job per search (a fuzzy query
-    reads its cached expansion instead).
+    Levenshtein. So does a maintained index's: its pending df deltas
+    are summed in by a union + groupBy (build/maintenance.py) that the
+    literal field / term / term_len predicates pass.
+  * a dictionary of at most EXPANSION_COLLECT_CAP rows (the bound is
+    counted from parquet footers on the first text search) is held on
+    the driver, as Orama holds its radix tree: one job reads it then
+    (two over pending deltas), and from then on exact, prefix and fuzzy
+    tokens expand against it with no Spark job. A larger dictionary is
+    probed by one job per search (a fuzzy query reads its cached
+    expansion instead).
   * bounded searches (the normal case: a handful of query tokens whose
     expansion has at most EXPANSION_COLLECT_CAP rows and whose postings
     number at most DRIVER_POSTINGS_CAP) score on the driver, as Orama
@@ -71,7 +73,7 @@ from pyspark.sql.types import (
 )
 
 from ..build.blocks import bm25_scores, idf_per_row
-from ..build.indexer import term_len
+from ..build.maintenance import live_tables
 from ..config import IndexConfig
 from ..kernel.levenshtein import bounded_levenshtein_batch
 from ..kernel.tokenizer import Tokenizer
@@ -393,20 +395,6 @@ class _Flights:
         return flight.result()
 
 
-def _with_delta(table: DataFrame, delta: DataFrame) -> DataFrame:
-    """Compose summed df deltas (field, term, ddf) into either dictionary
-    table: a full outer join on (field, term) that keeps the table's
-    columns, derives term_len for terms only the delta knows, and drops
-    terms whose df falls to 0."""
-    df = F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("ddf"), F.lit(0))
-    cols = {"df": df, "term_len": F.coalesce(F.col("term_len"), term_len())}
-    return (
-        table.join(delta, ["field", "term"], "full_outer")
-        .select(*[cols[c].alias(c) if c in cols else c for c in table.columns])
-        .where(F.col("df") > 0)
-    )
-
-
 class SearchIndex:
     """A loaded index: docs + postings + dictionary + stats."""
 
@@ -450,42 +438,17 @@ class SearchIndex:
     # ---------------------------------------------------------------- io
     @classmethod
     def load(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "SearchIndex":
-        """Load index tables; tombstones and dictionary deltas written by
-        incremental maintenance (build/maintenance.py) are composed
-        lazily — an anti-join on the (small) tombstone set and a df
-        adjustment join on the (small) delta set — until compact().
+        """Load the index's live tables (``build.maintenance.live_tables``:
+        pending incremental maintenance composed lazily into the plans).
         Starts no Spark job and reads no table: the first text search
         decides whether the dictionary is held on the driver
         (``_held_dictionary``)."""
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
-        docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-        postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-        dictionary = spark.read.parquet(os.path.join(index_dir, "dictionary"))
-        dictionary_bylen = spark.read.parquet(os.path.join(index_dir, "dictionary_bylen"))
-
-        tomb_path = os.path.join(index_dir, "tombstones")
-        if os.path.exists(tomb_path):
-            tombs = spark.read.parquet(tomb_path)
-            docs = docs.join(
-                tombs.withColumnRenamed("docid", config.docid_col),
-                config.docid_col,
-                "left_anti",
-            )
-            postings = postings.join(tombs, "docid", "left_anti")
-
-        delta_path = os.path.join(index_dir, "dictionary_delta")
-        if os.path.exists(delta_path):
-            delta = (
-                spark.read.parquet(delta_path)
-                .groupBy("field", "term")
-                .agg(F.sum("ddf").alias("ddf"))
-            )
-            dictionary = _with_delta(dictionary, delta)
-            dictionary_bylen = _with_delta(dictionary_bylen, delta)
-
-        return cls(spark, config, docs=docs, postings=postings, dictionary=dictionary,
-                   dictionary_bylen=dictionary_bylen, stats=stats)
+        live = live_tables(
+            spark, index_dir, config, ("docs", "postings", "dictionary", "dictionary_bylen")
+        )
+        return cls(spark, config, stats=stats, **live)
 
     # -------------------------------------------------------- expansion
     def _expansion_df(
@@ -550,16 +513,16 @@ class SearchIndex:
         return p if pred is None else p.where(pred)
 
     def _held_dictionary(self) -> Optional[pa.Table]:
-        """The composed dictionary's (field, term, df) rows on the
-        driver, or None when its row bound is over EXPANSION_COLLECT_CAP
-        (read at call time). The bound is the rows of every file the
-        composed plan reads (``dictionary`` plus ``dictionary_delta``:
-        the composition has at most one row per input row), summed from
-        parquet footers once per cap. One job reads the table on the
-        first text search (single flight across reader threads; a failed
-        read is retried by the next search), and it is kept as long as
-        the index. A dictionary this small never gives an over-cap
-        probe."""
+        """The live dictionary's (field, term, df) rows on the driver,
+        or None when its row bound is over EXPANSION_COLLECT_CAP (read at
+        call time). The bound is the rows of every file its plan reads
+        (pending df deltas included: the composition has at most one
+        row per input row), summed from parquet footers once per cap.
+        The first text search reads the table (one job, two while df
+        deltas are pending: their aggregate's shuffle; single flight
+        across reader threads; a failed read is retried by the next
+        search), and it is kept as long as the index. A dictionary this
+        small never gives an over-cap probe."""
         cap = EXPANSION_COLLECT_CAP
         over = self._flights.get(
             ("over", cap), lambda: _rows_over(self.dictionary.inputFiles(), cap)

@@ -43,7 +43,7 @@ from ..kernel.tokenizer import Tokenizer
 BIT_MASK_20 = (1 << 20) - 1
 _SENT_RE = re.compile(r"\.|\?|!")
 
-_QPS_SCHEMA = "array<struct<term:string,occ:int,mask:int>>"
+_QPS_SCHEMA = "array<struct<term:string,occ:int,mask:int,tokens_len:int>>"
 
 
 def token_quantums(text: str, tokenizer: Tokenizer, prop: str) -> tuple[dict, int]:
@@ -94,32 +94,16 @@ class QPSIndex:
                             return []
                         q, n = token_quantums(text, tok, prop)
                         # tokens_len rides along in every row (cheap int)
-                        return [(t, occ, mask) for t, (occ, mask) in q.items()]
+                        return [(t, occ, mask, n) for t, (occ, mask) in q.items()]
 
                     return col.map(one)
 
                 return _quanta
 
-            def make_tok_len(prop):
-                @F.pandas_udf("int")
-                def _tok_len(col: pd.Series) -> pd.Series:
-                    tok = _get_tokenizer(cfg_tuple)
-
-                    def one(text):
-                        if not isinstance(text, str):
-                            return 0
-                        return token_quantums(text, tok, prop)[1]
-
-                    return col.map(one)
-
-                return _tok_len
-
-            _tok_len = make_tok_len(f_)
             kern = make_kernel(f_)
             parts.append(
                 df.select(
                     F.col(docid).alias("docid"),
-                    _tok_len(F.col(f_).cast("string")).alias("tokens_len"),
                     F.explode(kern(F.col(f_).cast("string"))).alias("e"),
                 ).select(
                     F.lit(f_).alias("field"),
@@ -127,7 +111,7 @@ class QPSIndex:
                     "docid",
                     F.col("e.occ").alias("occ"),
                     F.col("e.mask").alias("mask"),
-                    "tokens_len",
+                    F.col("e.tokens_len").alias("tokens_len"),
                 )
             )
         all_e = parts[0]

@@ -118,6 +118,7 @@ from ..build.blocks import (
     avgfl_per_row, bm25_scores, build_blocks, decode_blocks, idf_per_row,
 )
 from ..build.indexer import BUILD_STAGES
+from ..build.maintenance import pending_tables
 from ..build.manifest import BuildManifest
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
@@ -427,16 +428,16 @@ class BlockIndex:
     @staticmethod
     def _check_not_stale(index_dir: str) -> None:
         """Block max_score bounds embed the build-time (df, avgfl, N):
-        pending tombstones / dictionary deltas would let true scores
-        exceed the stored bounds (df shrinks -> idf grows), making the
-        pruning UNSOUND. Refuse, pointing at the safe path."""
-        for pending in ("tombstones", "dictionary_delta"):
-            if os.path.exists(os.path.join(index_dir, pending)):
-                raise ValueError(
-                    f"index has pending incremental {pending}; run "
-                    "build.maintenance.compact() and rebuild blocks "
-                    "(BlockIndex.build) before block-max WAND queries"
-                )
+        pending incremental maintenance would let true scores exceed the
+        stored bounds (df shrinks -> idf grows), making the pruning
+        UNSOUND. Refuse, pointing at the safe path."""
+        pending = pending_tables(index_dir)
+        if pending:
+            raise ValueError(
+                f"index has pending incremental {' and '.join(pending)}; run "
+                "build.maintenance.compact() and rebuild blocks "
+                "(BlockIndex.build) before block-max WAND queries"
+            )
 
     @classmethod
     def load(cls, spark: SparkSession, index_dir: str, config: IndexConfig) -> "BlockIndex":

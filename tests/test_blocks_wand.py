@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from orama_spark.build.blocks import (
     BLOCK_SIZE, PA_BLOCKS_SCHEMA, _varint_decode_bytes, assign_internal_ids,
-    block_encoder, bm25_scores, idf_per_row, varint_decode_binary, varint_encode,
+    block_encoder, bm25_scores, idf_per_row, varint_decode_binary, varint_encode_stream,
 )
 from orama_spark.kernel.bm25 import BM25Params
 from orama_spark.build.indexer import IndexBuilder
@@ -26,6 +26,11 @@ from orama_spark.query.engine import SearchIndex
 from orama_spark.query import wand
 from orama_spark.query.wand import BlockIndex
 from orama_spark.sources.webpages import CorpusGenerator
+
+
+def varint_encode(arr: np.ndarray) -> bytes:
+    """LEB128 varint encode of a uint64 array, one stream."""
+    return varint_encode_stream(arr)[0].tobytes()
 
 
 def varint_decode(buf: bytes) -> np.ndarray:

@@ -194,10 +194,13 @@ def _jobs(spark, fn):
 def test_tombstoned_warm_search_runs_only_the_fetch(corpora, spark):
     """A warm bounded single-token search over pending tombstones and
     dictionary deltas expands against the held, composed dictionary:
-    only the postings fetch (its anti-join with the tombstones) runs."""
+    only the postings fetch (its anti-join with the tombstones) runs.
+    The cold one reads the dictionary first: its union with the deltas
+    and their sum per (field, term), two jobs."""
     _, _, d = corpora["tombstoned"]
     idx = SearchIndex.load(spark, d, _config())
-    idx.search(term="river")
+    _, n = _jobs(spark, lambda: idx.search(term="river"))
+    assert n == 4, n
     for term in ("river", "fox"):
         sr, n = _jobs(spark, lambda: idx.search(term=term))
         assert sr.ranked is not None and len(sr.ranked)

@@ -166,6 +166,30 @@ def test_compaction_preserves_results(spark, tmpdir_index):
     assert not os.path.exists(f"{tmpdir_index}/tombstones")
 
 
+def test_torn_compact_leaves_the_index_as_it_was(spark, tmpdir_index, monkeypatch):
+    """A compact that dies before its swap changes no table: the index
+    answers as before, and a re-run compacts it. (The new dictionary
+    has the df deltas summed in; swapped in while they stay, it would
+    count them twice.)"""
+    from orama_spark.build import maintenance
+
+    cfg = build(spark, tmpdir_index)
+    orc = oracle()
+    remove_documents(spark, tmpdir_index, cfg, spark.createDataFrame([(2,)], "docid long"))
+    orc.remove(2)
+
+    def torn(*args):
+        raise RuntimeError("torn")
+
+    with monkeypatch.context() as m:
+        m.setattr(maintenance, "dictionary_bylen_table", torn)
+        with pytest.raises(RuntimeError, match="torn"):
+            compact(spark, tmpdir_index, cfg)
+    assert_match(SearchIndex.load(spark, tmpdir_index, cfg), orc, "alpha beta", threshold=0.0)
+    compact(spark, tmpdir_index, cfg)
+    assert_match(SearchIndex.load(spark, tmpdir_index, cfg), orc, "alpha beta", threshold=0.0)
+
+
 def test_remove_nonexistent_is_noop(spark, tmpdir_index):
     """Reference remove returns false for unknown ids — stats must not
     drift (ADVICE r01: upserting m new docs left docs_count low by m)."""

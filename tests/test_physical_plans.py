@@ -6,29 +6,48 @@ import numpy as np
 import pytest
 
 from orama_spark.build.indexer import IndexBuilder
+from orama_spark.build.maintenance import insert_documents, remove_documents
 from orama_spark.config import IndexConfig
 from orama_spark.kernel import TokenizerConfig
 from orama_spark.query.engine import SearchIndex
 from orama_spark.sources.webpages import CorpusGenerator
 
 
+CFG = IndexConfig(
+    schema={"text": "string", "lang": "enum"},
+    tokenizer=TokenizerConfig.full(),
+)
+
+
+def _rows(ids) -> list:
+    cols = CorpusGenerator(seed=42).batch(np.asarray(ids, dtype=np.int64))
+    return [
+        {"docid": int(i), "text": cols["text"][k], "lang": cols["lang"][k]}
+        for k, i in enumerate(ids)
+    ]
+
+
+def _built(spark, out: str) -> str:
+    IndexBuilder(CFG, postings_partitions=2).build(
+        spark.createDataFrame(_rows(range(300))), out, input_id="pl"
+    )
+    return out
+
+
 @pytest.fixture(scope="module")
 def idx(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("planidx"))
-    g = CorpusGenerator(seed=42)
-    cols = g.batch(np.arange(300, dtype=np.int64))
-    rows = [
-        {"docid": i, "text": cols["text"][i], "lang": cols["lang"][i]}
-        for i in range(300)
-    ]
-    cfg = IndexConfig(
-        schema={"text": "string", "lang": "enum"},
-        tokenizer=TokenizerConfig.full(),
-    )
-    IndexBuilder(cfg, postings_partitions=2).build(
-        spark.createDataFrame(rows), out, input_id="pl"
-    )
-    return SearchIndex.load(spark, out, cfg)
+    return SearchIndex.load(spark, _built(spark, str(tmp_path_factory.mktemp("planidx"))), CFG)
+
+
+@pytest.fixture(scope="module")
+def maintained_idx(spark, tmp_path_factory):
+    """The same index after one insert batch and one remove batch: df
+    deltas and tombstones pending."""
+    out = _built(spark, str(tmp_path_factory.mktemp("planidx_maintained")))
+    insert_documents(spark, out, CFG, spark.createDataFrame(_rows(range(300, 330))))
+    remove_documents(spark, out, CFG, spark.createDataFrame(
+        [(i,) for i in range(0, 330, 11)], "docid long"))
+    return SearchIndex.load(spark, out, CFG)
 
 
 def _plan(df) -> str:
@@ -57,6 +76,10 @@ def test_exact_term_filter_pushed_to_postings_scan(idx, monkeypatch):
 def test_prefix_filter_pushed_as_startswith(idx, monkeypatch):
     for plan in _both_plans(idx, monkeypatch, term="optimiz"):
         assert "StringStartsWith(term,optim" in plan, plan
+    # the dictionary probe of an index whose dictionary is not held
+    plan = _plan(idx._expansion_df(["optimiz"], ["text"], exact=False, tolerance=0))
+    scans = [l for l in plan.splitlines() if "FileScan" in l and "/dictionary]" in l]
+    assert scans and all("StringStartsWith(term,optimiz)" in l for l in scans), plan
 
 
 def test_postings_scan_prunes_columns(idx, monkeypatch):
@@ -136,6 +159,26 @@ def test_paginated_surfaces_have_no_global_window(idx):
     for name, df in surfaces.items():
         plan = _plan(df)
         assert "Exchange SinglePartition" not in plan, (name, plan)
+
+
+class TestMaintainedIndex:
+    """The index-plan pins above, over an index with df deltas and
+    tombstones pending: composing them must not cost the pushdown."""
+
+    @pytest.fixture
+    def idx(self, maintained_idx):
+        return maintained_idx
+
+    test_exact_term_filter_pushed_to_postings_scan = staticmethod(
+        test_exact_term_filter_pushed_to_postings_scan)
+    test_prefix_filter_pushed_as_startswith = staticmethod(test_prefix_filter_pushed_as_startswith)
+    test_postings_scan_prunes_columns = staticmethod(test_postings_scan_prunes_columns)
+    test_where_filter_pushed_to_docs_scan = staticmethod(test_where_filter_pushed_to_docs_scan)
+    test_topk_uses_take_ordered = staticmethod(test_topk_uses_take_ordered)
+    test_no_exchange_on_postings_before_join = staticmethod(test_no_exchange_on_postings_before_join)
+    test_fuzzy_band_pushes_term_len_range = staticmethod(test_fuzzy_band_pushes_term_len_range)
+    test_paginated_surfaces_have_no_global_window = staticmethod(
+        test_paginated_surfaces_have_no_global_window)
 
 
 def test_datapipe_text_kernels_are_map_only(spark):
