@@ -44,6 +44,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 import orama_spark
+from orama_spark import layout
 from orama_spark.build.indexer import IndexBuilder
 from orama_spark.build.maintenance import remove_documents, update_documents, upsert_documents
 from orama_spark.config import IndexConfig
@@ -255,21 +256,6 @@ ZH_CONFIG = IndexConfig(
 )
 
 
-def _build_parts(spark: SparkSession) -> int:
-    """Postings/dictionary partition count for the fixture-scale entry
-    indexes. The fixture parquet is ONE row group, so the input scan is
-    one task whatever the split config; the docs-stage range shuffle is
-    what fans the corpus out, and this sizes it to the cores (the
-    IndexBuilder's input-partition default would mirror the degenerate scan).
-    Small corpora produce ~1 MB postings files, so every query-time scan
-    pays one task-launch per file — 8 files keeps scans cheap while the
-    build's map side still runs wide (measured: the flt family drops
-    ~25% vs 32 files at sf1.0). Scale-adaptive: large inputs (many scan
-    splits) raise it toward the input's own width.
-    """
-    return max(8, spark.sparkContext.defaultParallelism // 4)
-
-
 # ---- fixture corpora: documents.parquet reshaped per index
 
 def _doc_rows(spark: SparkSession, sf_dir: str, *cols, where=None) -> DataFrame:
@@ -362,7 +348,7 @@ def _indexed(cfg: IndexConfig, corpus: Callable, mutate: Callable | None = None,
     """An IndexBuilder build of `corpus`, optionally mutated afterwards."""
     def build(spark, sf_dir, out, key):
         df = corpus(spark, sf_dir)
-        IndexBuilder(cfg, postings_partitions=_build_parts(spark)).build(df, out, input_id=key)
+        IndexBuilder(cfg).build(df, out, input_id=key)
         if mutate is not None:
             mutate(spark, out, cfg, df)
     return _Aux(build, lambda spark, out: load(spark, out, cfg))
@@ -419,26 +405,11 @@ def _build_restored(spark, sf_dir, out, key):
 
 
 def _copy_events(spark, sf_dir, out, key):
-    """The events table as the streaming-window query replays it."""
-    src = os.path.join(sf_dir, "events.parquet")
-    os.makedirs(out)
-    # testdata ships events as one file; scaled twins ship a directory
-    # of part files — replay whichever shape. A single file is ONE
-    # parquet row group (one scan task for the whole replay), so
-    # re-chunk it into per-core files while copying — same raw rows,
-    # just a parallel-readable layout.
-    if os.path.isdir(src):
-        for p in sorted(os.listdir(src)):
-            if p.endswith(".parquet"):
-                shutil.copy(os.path.join(src, p), os.path.join(out, p))
-        return
-    import pyarrow.parquet as _pq
-
-    tbl = _pq.read_table(src)
-    k = max(spark.sparkContext.defaultParallelism, 1)
-    step = max((tbl.num_rows + k - 1) // k, 1)
-    for ci, off in enumerate(range(0, tbl.num_rows, step)):
-        _pq.write_table(tbl.slice(off, step), os.path.join(out, f"part-{ci:05d}.parquet"))
+    """The events table as the streaming-window query replays it, one
+    file per partition of its layout width (testdata ships events as one
+    parquet row group: a single scan task)."""
+    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    layout.fan_out(events, "event_id", light=True).write.parquet(out)
 
 
 _AUX: dict[str, _Aux] = {
@@ -868,15 +839,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def image_png(spark, sf_dir):
         from orama_spark.datapipe import multimodal as mm
 
-        _path = os.path.join(sf_dir, "documents.parquet")
-        docs = _fan_small(
-            spark,
-            spark.read.parquet(_path)
+        docs = layout.fan_out(
+            spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
             .where(F.col("doc_id") % 5 == 0)
             .select("doc_id"),
-            # id-only fan-out; PNG synth+decode here is cheap enough
-            # that width scales with input (light), unlike JPEG below
-            _path, "doc_id", light=True,
+            # PNG synth+decode here is cheap enough that width scales
+            # with input (light), unlike JPEG below
+            "doc_id", light=True,
         )
 
         def gen(batches):
@@ -928,13 +897,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from orama_spark.datapipe import multimodal as mm
         from orama_spark.datapipe.jpeg import encode_jpeg, encode_jpeg_progressive
 
-        _path = os.path.join(sf_dir, "documents.parquet")
-        # id-only fan-out: the single-row-group fixture scans as ONE
-        # task; the per-row codec work above it needs all cores
-        docs = _fan_small(
-            spark,
-            spark.read.parquet(_path).where(F.col("doc_id") % 7 == 0).select("doc_id"),
-            _path, "doc_id",
+        # the single-row-group fixture scans as ONE task; the per-row
+        # codec work above it needs all cores
+        docs = layout.fan_out(
+            spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+            .where(F.col("doc_id") % 7 == 0)
+            .select("doc_id"),
+            "doc_id",
         )
 
         def gen(batches):
@@ -1003,15 +972,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def media_container(spark, sf_dir):
         from orama_spark.datapipe import containers as ct
 
-        _path = os.path.join(sf_dir, "documents.parquet")
-        docs = _fan_small(
-            spark,
-            spark.read.parquet(_path)
+        docs = layout.fan_out(
+            spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
             .where(F.col("doc_id") % 3 == 0)
             .select("doc_id"),
-            # id-only fan-out; the frame-header walk is light — width
-            # scales with input
-            _path, "doc_id", light=True,
+            # the frame-header walk is light — width scales with input
+            "doc_id", light=True,
         )
 
         def gen(batches):
@@ -1241,67 +1207,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["doc_fingerprint"] = doc_fingerprint
 
     # ---- training-data pipeline operators (orama_spark.datapipe) ----
-    def _fan_small(spark, df, path, key, light=False):
-        """Fan a SMALL single-file table out to the cores once.
-
-        The sf fixtures ship each table as ONE parquet row group, so a
-        scan is a single task no matter how many byte-range splits the
-        planner makes (a row group belongs to the split holding its
-        start offset) — every map-heavy operator above it would run on
-        1 of 32 cores. One deterministic hash repartition (guide §2.5:
-        keyed, not round-robin, so retries are stable) costs a shuffle
-        of the small file and buys full parallelism. Scale-gated: real
-        corpora arrive in many files/row groups and skip the shuffle
-        entirely.
-
-        light=True marks operators whose per-byte kernel cost is near
-        the shuffle's own cost (pure-Column URL math, one-pass counting
-        kernels): for those a fixed cores-wide exchange LOSES below a
-        few MiB of input (measured: +0.08-0.23 s per query at sf0.1),
-        so the width scales with input bytes (~1 partition/MiB, capped
-        at the cores) and the shuffle is skipped entirely when the
-        input rounds to a single partition. Heavy hash/codec kernels
-        (MinHash, shingles, SimHash, winnowing, JPEG) keep full width:
-        their single-thread cost dominates at every fixture scale.
-
-        The input size is the whole file at `path`, a proxy: it is not
-        the bytes left after `df`'s projection and filters, so an
-        id-only or filtered scan is sized as if it read every column.
-        """
-        try:
-            sz = (
-                os.path.getsize(path)
-                if os.path.isfile(path)
-                else sum(
-                    os.path.getsize(os.path.join(path, f))
-                    for f in os.listdir(path)
-                    if f.endswith(".parquet")
-                )
-            )
-        except OSError:
-            return df
-        p = spark.sparkContext.defaultParallelism
-        if light:
-            p = min(p, sz >> 20)  # ~1 partition per MiB of input
-            if p < 2:
-                return df
-        if sz < (64 << 20) * p:  # ~2 GiB at 32 cores: shuffle is cheap
-            return df.repartition(p, key)
-        return df
-
-    def _docs_light(spark, sf_dir):
-        path = os.path.join(sf_dir, "documents.parquet")
-        return _fan_small(
-            spark, spark.read.parquet(path), path, "doc_id", light=True
-        )
-
-    def _docs(spark, sf_dir):
-        path = os.path.join(sf_dir, "documents.parquet")
-        return _fan_small(spark, spark.read.parquet(path), path, "doc_id")
+    def _docs(spark, sf_dir, *cols, light=False):
+        """documents.parquet (its `cols`, all by default) fanned out for
+        a heavy kernel, or a `light` one, on the bytes of those columns."""
+        df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        return layout.fan_out(df.select(*(cols or df.columns)), "doc_id", light=light)
 
     def _emb(spark, sf_dir):
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        return _fan_small(spark, spark.read.parquet(path), path, "vec_id")
+        return layout.fan_out(
+            spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")), "vec_id"
+        )
 
     def ngram_jaccard(spark, sf_dir):
         from orama_spark.datapipe.dedup import ngram_jaccard_pairs
@@ -1358,7 +1273,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def langid(spark, sf_dir):
         from orama_spark.datapipe.text_quality import lang_id
 
-        return lang_id(_docs_light(spark, sf_dir)).withColumnRenamed("id", "docid")
+        return lang_id(_docs(spark, sf_dir, "doc_id", "text", light=True)).withColumnRenamed("id", "docid")
     q["text_lang_id"] = langid
 
     def tokstats(spark, sf_dir):
@@ -1503,7 +1418,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .select(F.col("r.doc_id").alias("doc_id"), F.col("r.text").alias("text"))
         )
-        allp = _fan_small(spark, allp, path, "doc_id")
+        allp = layout.fan_out(allp, "doc_id")
         return gopher_rules(allp).withColumnRenamed("id", "docid")
     q["text_gopher_rules"] = gopher
 
@@ -1592,7 +1507,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .select(F.col("r.doc_id").alias("doc_id"), F.col("r.text").alias("text"))
         )
-        allp = _fan_small(spark, allp, path, "doc_id")
+        allp = layout.fan_out(allp, "doc_id")
         return repetition_stats(allp).withColumnRenamed("id", "docid")
     q["text_repetition"] = repetition
 
@@ -1604,7 +1519,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def url_dedup_q(spark, sf_dir):
         from orama_spark.datapipe.urls import url_dedup
 
-        docs = _docs_light(spark, sf_dir).select("doc_id")
+        docs = _docs(spark, sf_dir, "doc_id", light=True)
         b = (F.col("doc_id") % 100).cast("string")
         base = F.when(
             F.col("doc_id") % 2 == 0, F.lit("HTTP://Example.COM:80")
@@ -1623,7 +1538,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def url_domains(spark, sf_dir):
         from orama_spark.datapipe.urls import domain_stats
 
-        docs = _docs_light(spark, sf_dir)
+        docs = _docs(spark, sf_dir, "doc_id", "source", light=True)
         urls = docs.select(
             F.concat(
                 F.lit("https://"), F.col("source"),
@@ -1641,7 +1556,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def sample_stratified(spark, sf_dir):
         from orama_spark.datapipe.sampling import stratified_sample
 
-        docs = _docs_light(spark, sf_dir).select("doc_id", "lang")
+        docs = _docs(spark, sf_dir, "doc_id", "lang", light=True)
         rates = {"en": 0.3, "de": 0.8, "fr": 0.5, "es": 0.1, "zh": 0.0}
         return stratified_sample(docs, rates, strata_col="lang")
     q["sample_stratified"] = sample_stratified

@@ -12,9 +12,9 @@ the length-banded copy), plus ``postings_layout`` and
 from ``insert_events`` or ``remove_events``). ``IndexBuilder.build``,
 incremental insert / remove / compact and the live view readers see
 (maintenance.py) and the verbatim dump restore (persistence/restore.py)
-all call these; each caller chooses only paths, write mode and
-partition width, and ``field_stats``' callers only the batch, its order
-and the start state.
+all call these; each caller chooses only paths, write mode and an
+optional width override (the default widths come from ``layout``), and
+``field_stats``' callers only the batch, its order and the start state.
 
 Reference semantics being reproduced (see SURVEY.md §2.3, §7-M2):
   * field_len  = len(token list)  — with the default deduplicating
@@ -54,6 +54,7 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .. import layout
 from ..config import IndexConfig
 from .manifest import BuildManifest
 from .tokenize import tokens_arr_udf, tokens_udf
@@ -513,10 +514,14 @@ class IndexBuilder:
         postings_partitions: int | None = None,
         docs_already_sorted: bool = False,
     ):
-        """``docs_already_sorted``: the input is already partitioned in
-        docid order (e.g. a spark.range-derived source or a previously
-        sorted table) — skip the docs-table range shuffle, a full-corpus
-        shuffle that would dominate a 100 TB ingest for no benefit."""
+        """``postings_partitions`` overrides the postings width, and
+        docs and both dictionaries follow it (``layout.index_widths``);
+        by default a build sizes its tables from its input through
+        ``layout``. ``docs_already_sorted``: the input is already
+        partitioned in docid order (e.g. a spark.range-derived source or
+        a previously sorted table) — skip the docs-table range shuffle, a
+        full-corpus shuffle that would dominate a 100 TB ingest for no
+        benefit."""
         config.validate()
         self.config = config
         self.postings_partitions = postings_partitions
@@ -544,14 +549,14 @@ class IndexBuilder:
         df = cfg.hooks.run_transform("before_insert_multiple", df)
         manifest = BuildManifest.load(out_dir)
 
-        # Default to the input's own partitioning: a 100 TB source arrives
-        # in thousands of splits and keeps them; a tiny table stays at a
-        # handful of partitions instead of paying 64-way shuffle overhead.
-        n_part = self.postings_partitions or max(1, df.rdd.getNumPartitions())
+        widths = layout.index_widths(df, self.postings_partitions)
         # the output layout is part of the fingerprint: a rebuild with a
         # different width or docs ordering into the same dir re-runs
         fp = _config_fingerprint(
-            cfg, extra=json.dumps([input_id or uuid.uuid4().hex, n_part, self.docs_already_sorted])
+            cfg,
+            extra=json.dumps(
+                [input_id or uuid.uuid4().hex, widths["postings"], self.docs_already_sorted]
+            ),
         )
 
         # blocks are sound only over the tables they were built from: not
@@ -563,7 +568,7 @@ class IndexBuilder:
         # its entry names the input, so a stream knows its own bootstrap
         docs_out = df
         if not self.docs_already_sorted:
-            docs_out = df.repartitionByRange(max(n_part // 2, 1), docid).sortWithinPartitions(docid)
+            docs_out = df.repartitionByRange(widths["docs"], docid).sortWithinPartitions(docid)
         results: dict = {"docs": manifest.write_table("docs", fp, docs_out, input=input_digest(input_id))}
 
         # downstream stages read the WRITTEN docs parquet: the input DAG
@@ -603,11 +608,11 @@ class IndexBuilder:
         from concurrent.futures import ThreadPoolExecutor
 
         def _chain_postings() -> dict:
-            postings = postings_layout(postings_table(tokenized, cfg), n_part)
+            postings = postings_layout(postings_table(tokenized, cfg), widths["postings"])
             out = {"postings": manifest.write_table("postings", fp, postings)}
-            dictionary = dictionary_table(_read("postings"), n_part // 8)
+            dictionary = dictionary_table(_read("postings"), widths["dictionary"])
             out["dictionary"] = manifest.write_table("dictionary", fp, dictionary)
-            bylen = dictionary_bylen_table(_read("dictionary"), n_part // 8)
+            bylen = dictionary_bylen_table(_read("dictionary"), widths["dictionary"])
             out["dictionary_bylen"] = manifest.write_table("dictionary_bylen", fp, bylen)
             return out
 

@@ -290,10 +290,12 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     """Write the live view (``live_tables``) back as the base tables and
     drop the pending ones (the periodic rewrite; query plans shrink back
     to zero-merge reads): docs, tokens, postings and docmeta without the
-    tombstoned docs, the dictionary with its deltas summed in, at its
-    current width, and ``dictionary_bylen`` from the new dictionary.
-    Drops the manifest's ``blocks`` entry: BlockIndex.load refuses until
-    BlockIndex.build re-runs over the compacted tables."""
+    tombstoned docs (only when tombstones are pending: otherwise their
+    live view is their raw read, and they stay as they are), the
+    dictionary with its deltas summed in, at its current width, and
+    ``dictionary_bylen`` from the new dictionary. Drops the manifest's
+    ``blocks`` entry: BlockIndex.load refuses until BlockIndex.build
+    re-runs over the compacted tables."""
     pending = pending_tables(index_dir)
     if not pending:
         return
@@ -303,7 +305,8 @@ def compact(spark: SparkSession, index_dir: str, config: IndexConfig) -> None:
     BuildManifest.load(index_dir).forget("blocks")
     path = functools.partial(os.path.join, index_dir)
     width = len(spark.read.parquet(path("dictionary")).inputFiles())
-    names = ("docs", "tokens", "postings", "docmeta", "dictionary")
+    names = ("docs", "tokens", "postings", "docmeta") if _TOMBSTONES in pending else ()
+    names += ("dictionary",)
     live = live_tables(spark, index_dir, config, names)
     live["dictionary"] = dictionary_layout(live["dictionary"], width)
     for name, df in live.items():

@@ -324,43 +324,6 @@ def encode_png(
     )
 
 
-def encode_png_palette(
-    idx: np.ndarray, palette: np.ndarray, interlace: bool = False
-) -> bytes:
-    """(H, W) uint8 palette indices + (N, 3) palette -> color-type-3
-    PNG (test/synthesis helper for decode_png's palette path)."""
-    import zlib
-
-    h, w = idx.shape
-    a = idx.astype(np.int64)
-    if interlace:
-        parts = []
-        for x0, y0, dx, dy in _ADAM7:
-            sub = a[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            parts.append(_png_filter_rows(sub, 1, 0))
-        body = b"".join(parts)
-    else:
-        body = _png_filter_rows(a, 1, 0)
-    ihdr = (
-        np.array([w, h], dtype=">u4").tobytes()
-        + bytes([8, 3, 0, 0, int(interlace)])
-    )
-    return (
-        _PNG_SIG + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(body))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_ppm(arr: np.ndarray) -> bytes:
-    """(H, W, 3) uint8 -> binary P6 PPM bytes (test/synthesis helper)."""
-    h, w = arr.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
-
-
 def decode_image(payload: bytes) -> np.ndarray | None:
     """Sniff + decode the natively-supported formats (P6 PPM, 24-bit
     BMP, 8-bit PNG incl. palette and Adam7 interlace, baseline +
@@ -456,25 +419,3 @@ def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
 
     out_media = media.select("media_id", "payload")
     return out_media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def synth_media_df(spark, n_rows: int = 64, seed: int = 5) -> DataFrame:
-    """Deterministic synthetic media table for tests (payload = seeded
-    bytes; metadata consistent with kind)."""
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n_rows):
-        h = hashlib.sha256(f"{seed}:{i}".encode()).digest()
-        kind = kinds[i % 3]
-        rows.append(
-            {
-                "media_id": i,
-                "kind": kind,
-                "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                "payload": bytes(h * 4),
-                "width": 64 + (h[0] % 64) if kind != "audio" else None,
-                "height": 64 + (h[1] % 64) if kind != "audio" else None,
-                "duration_ms": 1000 + h[2] * 37 if kind != "image" else None,
-            }
-        )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

@@ -33,9 +33,11 @@ import os
 import uuid
 from typing import Any, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .. import layout
 from ..build.indexer import (
     dictionary_bylen_table,
     dictionary_table,
@@ -120,7 +122,6 @@ def restore_index(
     # dictionaries are derived by the builder's table functions. Token
     # order is not in the dump: the tokens table is regenerated with
     # our tokenizer.
-    width = max(1, min(32, len(post_rows) // 50_000 + 1))
     # a fresh fingerprint, and blocks forgotten before any table is
     # overwritten: blocks over an earlier index here are refused, even
     # if this restore is torn
@@ -133,7 +134,10 @@ def restore_index(
         return spark.read.parquet(os.path.join(out_dir, name))
 
     tokens = stage("tokens", tokens_table(docs_df, config))
-    postings = spark.createDataFrame(post_rows, post_schema)
+    # a local relation (arrow), so layout sizes it on Catalyst's estimate
+    cols = zip(*post_rows) if post_rows else [()] * len(post_schema)
+    postings = spark.createDataFrame(pa.table(dict(zip(post_schema.names, cols))), post_schema)
+    widths = layout.index_widths(postings)
     arrays = [f_ for f_ in config.searchable_fields if config.schema[f_] == "string[]"]
     if arrays:
         # the dump's string[] tf is the last element's: occ spanning
@@ -146,9 +150,9 @@ def restore_index(
         postings = postings.join(occ, ["field", "term", "docid"], "left").select(
             *post_schema.names[:-1], F.coalesce("_occ", "occ").alias("occ")
         )
-    postings = stage("postings", postings_layout(postings, width))
-    dictionary = stage("dictionary", dictionary_table(postings, width // 8))
-    stage("dictionary_bylen", dictionary_bylen_table(dictionary, width // 8))
+    postings = stage("postings", postings_layout(postings, widths["postings"]))
+    dictionary = stage("dictionary", dictionary_table(postings, widths["dictionary"]))
+    stage("dictionary_bylen", dictionary_bylen_table(dictionary, widths["dictionary"]))
     stage("docs", docs_df)
 
     dm_rows = [

@@ -25,6 +25,7 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import layout
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
 
@@ -106,12 +107,12 @@ class PT15Index:
             all_e = all_e.unionByName(p)
         # cnt: the same (doc, prefix, position) can be pushed by several
         # tokens sharing a prefix — each push scores (algorithm.ts:187)
-        n_part = max(1, df.rdd.getNumPartitions())
         table = all_e.groupBy("field", "prefix", "position", "docid").agg(
             F.count("*").cast("int").alias("cnt")
         )
+        width = layout.index_widths(df)["postings"]
         (
-            table.repartitionByRange(n_part, "field", "prefix", "docid")
+            table.repartitionByRange(width, "field", "prefix", "docid")
             .sortWithinPartitions("field", "prefix", "position", "docid")
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, "pt15"))

@@ -36,6 +36,7 @@ from typing import Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import layout
 from ..config import IndexConfig
 from ..kernel.levenshtein import is_bounded
 from ..kernel.tokenizer import Tokenizer
@@ -117,9 +118,9 @@ class QPSIndex:
         all_e = parts[0]
         for p in parts[1:]:
             all_e = all_e.unionByName(p)
-        n_part = max(1, df.rdd.getNumPartitions())
+        width = layout.index_widths(df)["postings"]
         (
-            all_e.repartitionByRange(n_part, "field", "term", "docid")
+            all_e.repartitionByRange(width, "field", "term", "docid")
             .sortWithinPartitions("field", "term", "docid")
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, "qps"))

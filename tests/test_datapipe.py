@@ -12,6 +12,65 @@ from pyspark.sql import functions as F
 from orama_spark.datapipe import dedup, multimodal, similarity, text_quality
 
 
+def encode_png_palette(
+    idx: np.ndarray, palette: np.ndarray, interlace: bool = False
+) -> bytes:
+    """(H, W) uint8 palette indices + (N, 3) palette -> color-type-3
+    PNG (for decode_png's palette path)."""
+    import zlib
+
+    h, w = idx.shape
+    a = idx.astype(np.int64)
+    if interlace:
+        parts = []
+        for x0, y0, dx, dy in multimodal._ADAM7:
+            sub = a[y0::dy, x0::dx]
+            if sub.shape[0] == 0 or sub.shape[1] == 0:
+                continue
+            parts.append(multimodal._png_filter_rows(sub, 1, 0))
+        body = b"".join(parts)
+    else:
+        body = multimodal._png_filter_rows(a, 1, 0)
+    ihdr = (
+        np.array([w, h], dtype=">u4").tobytes()
+        + bytes([8, 3, 0, 0, int(interlace)])
+    )
+    return (
+        multimodal._PNG_SIG + multimodal._png_chunk(b"IHDR", ihdr)
+        + multimodal._png_chunk(b"PLTE", palette.astype(np.uint8).tobytes())
+        + multimodal._png_chunk(b"IDAT", zlib.compress(body))
+        + multimodal._png_chunk(b"IEND", b"")
+    )
+
+
+def encode_ppm(arr: np.ndarray) -> bytes:
+    """(H, W, 3) uint8 -> binary P6 PPM bytes."""
+    h, w = arr.shape[:2]
+    return b"P6\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
+
+
+def synth_media_df(spark, n_rows: int = 64, seed: int = 5):
+    """Deterministic synthetic media table (payload = seeded bytes;
+    metadata consistent with kind)."""
+    rows = []
+    kinds = ["image", "audio", "video"]
+    for i in range(n_rows):
+        h = hashlib.sha256(f"{seed}:{i}".encode()).digest()
+        kind = kinds[i % 3]
+        rows.append(
+            {
+                "media_id": i,
+                "kind": kind,
+                "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
+                "payload": bytes(h * 4),
+                "width": 64 + (h[0] % 64) if kind != "audio" else None,
+                "height": 64 + (h[1] % 64) if kind != "audio" else None,
+                "duration_ms": 1000 + h[2] * 37 if kind != "image" else None,
+            }
+        )
+    return spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -225,7 +284,7 @@ class TestTextQuality:
 
 class TestMultimodal:
     def test_feature_extraction_stub(self, spark):
-        media = multimodal.synth_media_df(spark, 12)
+        media = synth_media_df(spark, 12)
         feats = multimodal.extract_features(media, strict=False).collect()
         assert len(feats) == 12
         for r in feats:
@@ -233,7 +292,7 @@ class TestMultimodal:
             assert all(0.0 <= x <= 1.0 for x in r["feature"])
 
     def test_strict_mode_raises(self, spark):
-        media = multimodal.synth_media_df(spark, 3)
+        media = synth_media_df(spark, 3)
         with pytest.raises(Exception):
             multimodal.extract_features(media, strict=True).collect()
 
@@ -560,7 +619,7 @@ class TestRealImageDecode:
     def test_ppm_round_trip(self):
         rng = np.random.RandomState(3)
         arr = rng.randint(0, 256, (5, 7, 3)).astype(np.uint8)
-        out = multimodal.decode_ppm(multimodal.encode_ppm(arr))
+        out = multimodal.decode_ppm(encode_ppm(arr))
         assert (out == arr).all()
         # comments + multi-whitespace header
         hdr = b"P6\n# a comment\n7   5\n# more\n255\n" + arr.tobytes()
@@ -597,7 +656,7 @@ class TestRealImageDecode:
         arr = np.full((4, 6, 3), 128, dtype=np.uint8)
         rows = [
             {"media_id": 0, "kind": "image", "mime": "image/x-portable-pixmap",
-             "payload": multimodal.encode_ppm(arr), "width": 6, "height": 4,
+             "payload": encode_ppm(arr), "width": 6, "height": 4,
              "duration_ms": None},
         ]
         df = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
@@ -843,12 +902,12 @@ class TestRealPngDecode:
         idx = rng.integers(0, 17, (9, 14), dtype=np.uint8)
         for il in (False, True):
             dec = multimodal.decode_png(
-                multimodal.encode_png_palette(idx, pal, interlace=il)
+                encode_png_palette(idx, pal, interlace=il)
             )
             assert (dec == pal[idx]).all(), il
         with pytest.raises(ValueError):
             multimodal.decode_png(
-                multimodal.encode_png_palette(
+                encode_png_palette(
                     np.full((2, 2), 30, np.uint8), pal
                 )
             )

@@ -166,6 +166,31 @@ def test_compaction_preserves_results(spark, tmpdir_index):
     assert not os.path.exists(f"{tmpdir_index}/tombstones")
 
 
+def test_insert_only_compact_rewrites_only_the_dictionaries(spark, tmpdir_index):
+    """With no tombstones pending, docs, tokens, postings and docmeta are
+    already what a reader sees: compact leaves their files alone and
+    folds the df deltas into the dictionaries."""
+    import os
+
+    cfg = build(spark, tmpdir_index)
+    orc = oracle()
+    new = {"docid": 9, "t": "alpha sigma", "cat": "q"}
+    insert_documents(spark, tmpdir_index, cfg, spark.createDataFrame([new]))
+    orc.insert({"t": new["t"], "cat": new["cat"]}, docid=9)
+
+    def files():
+        return {
+            t: sorted(os.listdir(os.path.join(tmpdir_index, t)))
+            for t in ("docs", "tokens", "postings", "docmeta")
+        }
+
+    before = files()
+    compact(spark, tmpdir_index, cfg)
+    assert files() == before
+    assert not os.path.exists(f"{tmpdir_index}/dictionary_delta")
+    assert_match(SearchIndex.load(spark, tmpdir_index, cfg), orc, "alpha sigma", threshold=0.0)
+
+
 def test_torn_compact_leaves_the_index_as_it_was(spark, tmpdir_index, monkeypatch):
     """A compact that dies before its swap changes no table: the index
     answers as before, and a re-run compacts it. (The new dictionary
