@@ -122,37 +122,8 @@ BLOCKS_SCHEMA = StructType(
 )
 
 
-
 # Arrow mirror of BLOCKS_SCHEMA for the mapInArrow output batches.
 PA_BLOCKS_SCHEMA = to_arrow_schema(BLOCKS_SCHEMA)
-
-# The postings and dictionary columns the block build reads. Passing
-# them to spark.read.schema skips parquet schema inference, which is a
-# Spark job of its own per read. Integer docids written as int widen to
-# long on read.
-POSTINGS_READ_SCHEMA = StructType(
-    [
-        StructField("field", StringType()),
-        StructField("term", StringType()),
-        StructField("docid", LongType()),
-        StructField("tf", DoubleType()),
-        StructField("field_len", IntegerType()),
-    ]
-)
-DOCMETA_READ_SCHEMA = StructType(
-    [
-        StructField("docid", LongType()),
-        StructField("field", StringType()),
-        StructField("field_len", IntegerType()),
-    ]
-)
-DICTIONARY_READ_SCHEMA = StructType(
-    [
-        StructField("field", StringType()),
-        StructField("term", StringType()),
-        StructField("df", LongType()),
-    ]
-)
 
 
 # ------------------------------------------------------------ varint codec

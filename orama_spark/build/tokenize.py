@@ -18,44 +18,23 @@ from pyspark.sql.types import ArrayType, StringType
 from ..kernel.tokenizer import Tokenizer, TokenizerConfig
 
 # Executor-local tokenizer cache (one memo dict per (config, lifetime of
-# the Python worker), shared across batches).
-_TOKENIZERS: dict[tuple, Tokenizer] = {}
+# the Python worker), shared across batches), keyed by the frozen config.
+_TOKENIZERS: dict[TokenizerConfig, Tokenizer] = {}
 
 
-def _get_tokenizer(cfg_tuple: tuple) -> Tokenizer:
-    tok = _TOKENIZERS.get(cfg_tuple)
+def _get_tokenizer(cfg: TokenizerConfig) -> Tokenizer:
+    tok = _TOKENIZERS.get(cfg)
     if tok is None:
-        cfg = TokenizerConfig(
-            language=cfg_tuple[0],
-            stemming=cfg_tuple[1],
-            stopwords=frozenset(cfg_tuple[2]),
-            allow_duplicates=cfg_tuple[3],
-            tokenize_skip_properties=frozenset(cfg_tuple[4]),
-            stemmer_skip_properties=frozenset(cfg_tuple[5]),
-        )
-        tok = Tokenizer(cfg)
-        _TOKENIZERS[cfg_tuple] = tok
+        tok = _TOKENIZERS[cfg] = Tokenizer(cfg)
     return tok
-
-
-def _cfg_tuple(cfg: TokenizerConfig) -> tuple:
-    return (
-        cfg.language,
-        cfg.stemming,
-        tuple(sorted(cfg.stopwords)),
-        cfg.allow_duplicates,
-        tuple(sorted(cfg.tokenize_skip_properties)),
-        tuple(sorted(cfg.stemmer_skip_properties)),
-    )
 
 
 def tokens_udf(config: TokenizerConfig, prop: str):
     """Returns a pandas UDF: string column -> array<string> of tokens."""
-    cfg_tuple = _cfg_tuple(config)
 
     @F.pandas_udf(ArrayType(StringType()))
     def _tokenize(col: pd.Series) -> pd.Series:
-        tok = _get_tokenizer(cfg_tuple)
+        tok = _get_tokenizer(config)
         # Whole-batch tokenize: the CJK path segments the entire Arrow
         # batch in one vectorized pass.  None for missing values: the
         # reference skips absent properties entirely (no field_len
@@ -75,11 +54,10 @@ def tokens_arr_udf(config: TokenizerConfig, prop: str):
     array<array<string>>, one token list per array ELEMENT in order —
     the reference inserts each element separately (index.ts:260-301),
     and element order matters (last element's tf/field_len win)."""
-    cfg_tuple = _cfg_tuple(config)
 
     @F.pandas_udf(ArrayType(ArrayType(StringType())))
     def _tokenize_arr(col: pd.Series) -> pd.Series:
-        tok = _get_tokenizer(cfg_tuple)
+        tok = _get_tokenizer(config)
         # Flatten every element of every row into one batch call (the
         # CJK path segments them all in one vectorized pass), then
         # regroup per row.

@@ -69,7 +69,7 @@ SPLITTERS: dict[str, re.Pattern] = {
 SUPPORTED_LANGUAGES = list(SPLITTERS.keys())
 
 
-@dataclass
+@dataclass(frozen=True)
 class TokenizerConfig:
     """Mirrors DefaultTokenizerConfig (types.ts / tokenizer/index.ts:95-164).
 
@@ -77,6 +77,9 @@ class TokenizerConfig:
     allow_duplicates False. The engine's "full" web profile enables
     stemming + the 180-word English list (the profile Orama's own
     dataset tests use, tests/dataset.test.ts:52-57).
+
+    Frozen and hashable: a UDF kernel keys its executor-local
+    tokenizer by the config itself (build/tokenize.py).
     """
 
     language: str = "english"

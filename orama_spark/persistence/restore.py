@@ -45,7 +45,7 @@ from ..build.indexer import (
     postings_table,
     tokens_table,
 )
-from ..build.manifest import BuildManifest
+from ..build.manifest import BuildManifest, read_table
 from ..config import IndexConfig
 from .format import walk_radix
 
@@ -131,7 +131,7 @@ def restore_index(
 
     def stage(name: str, df) -> DataFrame:
         manifest.write_table(name, fp, df)
-        return spark.read.parquet(os.path.join(out_dir, name))
+        return read_table(spark, os.path.join(out_dir, name))
 
     tokens = stage("tokens", tokens_table(docs_df, config))
     # a local relation (arrow), so layout sizes it on Catalyst's estimate

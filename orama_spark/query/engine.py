@@ -431,28 +431,35 @@ def _value_counts(col: pa.ChunkedArray, is_array: bool) -> pa.Table:
     )
 
 
-def _range_counts(col: pa.ChunkedArray, is_array: bool, ranges: list) -> list:
-    """Docs of a held number column inside each inclusive range (an
-    array: some element inside), in range order; None for every range
-    over no docs, as the Spark plan's empty sum gives."""
-    if not len(col):
-        return [None] * len(ranges)
+def _range_key(r: dict) -> str:
+    return f"{r['from']}-{r['to']}"
+
+
+def _range_counts(col: pa.ChunkedArray, is_array: bool, ranges: list) -> pa.Table:
+    """(facet_value, facet_count) of a held number column over the
+    matched docs, as the Spark range plan counts: docs inside each
+    inclusive range (an array: some element inside), in range order,
+    a ``number[]`` range only once a doc falls in it."""
     vals = col.combine_chunks()
     if is_array:
         parents = pc.list_parent_indices(vals).to_numpy()
         vals = pc.list_flatten(vals)
-    out = []
+    keys, counts = [], []
     for r in ranges:
         inr = pc.and_(pc.greater_equal(vals, r["from"]), pc.less_equal(vals, r["to"]))
         inr = pc.fill_null(inr, False).to_numpy(zero_copy_only=False)
-        out.append(len(np.unique(parents[inr])) if is_array else int(np.count_nonzero(inr)))
-    return out
+        n = len(np.unique(parents[inr])) if is_array else int(np.count_nonzero(inr))
+        if n or not is_array:
+            keys.append(_range_key(r))
+            counts.append(n)
+    return pa.table({"facet_value": pa.array(keys, pa.string()),
+                     "facet_count": pa.array(counts, pa.int64())})
 
 
-def _facet_schema(value_type, count_nullable: bool) -> StructType:
+def _facet_schema(value_type, value_nullable: bool = True) -> StructType:
     return StructType([
-        StructField("facet_value", value_type),
-        StructField("facet_count", LongType(), count_nullable),
+        StructField("facet_value", value_type, value_nullable),
+        StructField("facet_count", LongType(), False),
     ])
 
 
@@ -501,8 +508,7 @@ class SearchIndex:
         # its passing docids (_held_passing); (tokens, props, tolerance)
         # -> the fuzzy expansion | None (_fuzzy_expansion)
         self._flights = _Flights()
-        # props -> the (dictionary, postings) scans of the expansion
-        # probe and the bounded path
+        # props -> the (dictionary, postings) scans (_scans)
         self._bases: dict[tuple, tuple] = {}
         self._where = WhereCompiler(
             config,
@@ -535,10 +541,9 @@ class SearchIndex:
         """Expansion plan: (field, qtoken, term, df) per matched word.
         Exact/prefix/fuzzy semantics per trees/radix.ts:240-303 and
         find_words in the oracle. Pure plan — no driver action."""
-        d = self.dictionary
+        base = self._scans(props)[0]
         parts = []
         for tok in tokens:
-            base = d.where(F.col("field").isin(props))
             if tok == "" and not exact:
                 cond = F.lit(True)  # empty token matches the whole trie
             elif exact:
@@ -579,16 +584,6 @@ class SearchIndex:
         for p in parts[1:]:
             exp = exp.unionByName(p)
         return exp
-
-    def _postings_pushdown(
-        self, tokens: list[str], props: list[str], exact: bool
-    ) -> DataFrame:
-        """Postings scan pre-filtered with LITERAL predicates so parquet
-        min/max prunes row-groups on the sorted term column — the reason
-        exact/prefix queries never shuffle or fully scan postings."""
-        p = self.postings.where(F.col("field").isin(props))
-        pred = _term_predicate(tokens, exact)
-        return p if pred is None else p.where(pred)
 
     def _held_dictionary(self) -> Optional[pa.Table]:
         """The live dictionary's (field, term, df) rows on the driver,
@@ -734,19 +729,15 @@ class SearchIndex:
                 tokens, exp, pred, props, boost, threshold, passing, where_ids
             )
             if exact and term and len(ranked):
-                ok = (
-                    self._matched_docs(ranked["docid"].to_numpy())
-                    .where(self._exact_predicate(term, props))
-                    .select(F.col(self.config.docid_col).cast("long"))
-                    .toArrow().column(0).to_numpy()
-                )
-                ranked = ranked[np.isin(ranked["docid"].to_numpy(), ok)].reset_index(drop=True)
+                ids = ranked["docid"].to_numpy()
+                ok = self._exact_ids(term, props, self._id_frame(ids)).toArrow().column(0)
+                ranked = ranked[np.isin(ids, ok.to_numpy())].reset_index(drop=True)
             return {"ranked": ranked, "fetch": fetch}
         if passing is not None:
             where_ids = self._id_frame(passing)
         scored = self._scored(tokens, exp, pred, props, exact, tolerance, boost, threshold, where_ids)
         if exact and term:
-            scored = self._exact_post_filter(scored, term, props)
+            scored = scored.join(self._exact_ids(term, props, scored), "docid", "left_semi")
         return {"scored": scored}
 
     # ----------------------------------------------------- bounded path
@@ -760,12 +751,13 @@ class SearchIndex:
         return self.spark.createDataFrame(data, schema)
 
     def _scans(self, props: list[str]) -> tuple:
-        """The (dictionary, postings) scans of the expansion probe and
-        the bounded path over ``props``, projected to the columns they
-        read; built on first use and shared by reader threads (a
-        DataFrame is immutable; two threads missing at once build equal
-        frames and the first stored wins). Reusing them keeps a query's
-        plan-building py4j calls to its own predicates."""
+        """The (dictionary, postings) scans over ``props``, projected to
+        the columns a search reads: the only builder of them, for the
+        expansion probe and plan, the bounded fetch, the distributed
+        plan and ``search_many``. Built on first use and shared by
+        reader threads (a DataFrame is immutable; two threads missing at
+        once build equal frames and the first stored wins). Reusing them
+        keeps a query's plan-building py4j calls to its own predicates."""
         key = tuple(props)
         got = self._bases.get(key)
         if got is None:
@@ -777,18 +769,13 @@ class SearchIndex:
             ))
         return got
 
-    def _id_frame(self, ids: np.ndarray, name: str = "docid") -> DataFrame:
-        """A driver-side docid set as a local DataFrame of one column."""
+    def _id_frame(self, ids: np.ndarray) -> DataFrame:
+        """A driver-side docid set as a local DataFrame of one column
+        ``docid`` (joined as a set, no literal IN-list)."""
         return self._local(
-            pa.table({name: pa.array(ids, pa.int64())}),
-            StructType([StructField(name, LongType())]),
+            pa.table({"docid": pa.array(ids, pa.int64())}),
+            StructType([StructField("docid", LongType())]),
         )
-
-    def _matched_docs(self, ids: np.ndarray) -> DataFrame:
-        """The docs rows of a driver-side docid set (a semi-join with
-        the set as a local DataFrame, no literal IN-list)."""
-        docid = self.config.docid_col
-        return self.docs.join(self._id_frame(ids, docid), docid, "left_semi")
 
     def _bounded(
         self,
@@ -894,13 +881,7 @@ class SearchIndex:
             tolerance, boost, threshold = params["tolerance"], params["boost"], params["threshold"]
             where, limit, offset = params["where"], params["limit"], params["offset"]
         docid = cfg.docid_col
-        searchable = cfg.searchable_fields
-        props = searchable
-        if properties is not None:
-            for p in properties:
-                if p not in searchable:
-                    raise ValueError(f"UNKNOWN_INDEX: {p}")
-            props = [p for p in searchable if p in properties]
+        props = self._props(properties)
         boost = boost or {}
         for b in boost.values():
             if b <= 0:
@@ -964,11 +945,7 @@ class SearchIndex:
 
         Returns (qid, docid, score, rank), rank 1..k per qid.
         """
-        cfg = self.config
-        searchable = cfg.searchable_fields
-        props = searchable
-        if properties is not None:
-            props = [p for p in searchable if p in properties]
+        props = self._props(properties)
         qtok_rows = []
         for qid, term in enumerate(terms):
             for t in self.tokenizer.tokenize(term):
@@ -981,16 +958,17 @@ class SearchIndex:
         qdf = F.broadcast(
             self.spark.createDataFrame(qtok_rows, "qid int, qtoken string")
         )
-        d = self.dictionary.where(F.col("field").isin(props))
+        d, p = self._scans(props)
         cond = (
             (F.col("term") == F.col("qtoken"))
             if exact
             else F.col("term").startswith(F.col("qtoken"))
         )
         exp = d.join(qdf, cond).select("field", "term", "df", "qid")
-        all_toks = sorted({t for _, t in qtok_rows})
-        p = self._postings_pushdown(all_toks, props, exact)
-        joined = p.join(exp, ["field", "term"])
+        # the literal predicate of all the batch's tokens: parquet
+        # min/max still prunes row-groups on the sorted term column
+        pred = _term_predicate(sorted({t for _, t in qtok_rows}), exact)
+        joined = (p if pred is None else p.where(pred)).join(exp, ["field", "term"])
         score_row = self._bm25_col(props, {})
         per_field = (
             joined.select("qid", "docid", "field", score_row.alias("s"))
@@ -1004,6 +982,18 @@ class SearchIndex:
         return scored.withColumn("rank", F.row_number().over(w)).where(
             F.col("rank") <= k
         )
+
+    def _props(self, properties: Optional[list[str]]) -> list[str]:
+        """The searchable properties a search runs over, in schema order:
+        all of them, or those named in ``properties``; a name that is not
+        searchable raises UNKNOWN_INDEX."""
+        searchable = self.config.searchable_fields
+        if properties is None:
+            return searchable
+        for p in properties:
+            if p not in searchable:
+                raise ValueError(f"UNKNOWN_INDEX: {p}")
+        return [p for p in searchable if p in properties]
 
     def _geo_only(self, where: dict) -> Optional[DataFrame]:
         """Geosearch-only query -> distance-ranked scores
@@ -1060,7 +1050,7 @@ class SearchIndex:
                 }
                 if any(t not in found for t in tokens):
                     return self._empty_scored()
-        p = self.postings.where(F.col("field").isin(props))
+        p = self._scans(props)[1]
         joined = (p if pred is None else p.where(pred)).join(exp_df, ["field", "term"])
 
         score_row = self._bm25_col(props, boost)
@@ -1147,93 +1137,90 @@ class SearchIndex:
     def exact_filter_ids(self, term: str, props: Optional[list[str]] = None) -> DataFrame:
         """Docids passing the exact-mode post-filter (``_exact_predicate``).
         Reusable as a WAND keep_ids mask."""
-        docid = self.config.docid_col
-        return self.docs.where(self._exact_predicate(term, props)).select(
-            F.col(docid).alias("docid")
-        )
+        return self._exact_ids(term, props)
 
-    def _exact_post_filter(
-        self, scored: DataFrame, term: str, props: list[str]
+    def _exact_ids(
+        self, term: str, props: Optional[list[str]], among: Optional[DataFrame] = None
     ) -> DataFrame:
-        # The reference post-filters the MATCHED hits
-        # (search-fulltext.ts:88-115), so restrict the \b-regex scan to
-        # the BM25-matched docids before evaluating it — at 2M docs the
-        # whole-corpus regex scan was 6-9 s while the matched set is
-        # orders of magnitude smaller (SCALE_r04 wand_crossover notes).
+        """The docids (column ``docid``) among those of ``among`` (a
+        frame with a ``docid`` column; None: every doc) whose docs pass
+        ``_exact_predicate``. The reference post-filters the MATCHED
+        hits (search-fulltext.ts:88-115), so a search restricts the
+        \\b-regex scan to its matched docids: at 2M docs the
+        whole-corpus regex scan was 6-9 s while the matched set is
+        orders of magnitude smaller (SCALE_r04 wand_crossover notes)."""
         docid = self.config.docid_col
-        matched = self.docs.join(
-            scored.select(F.col("docid").alias(docid)).distinct(),
-            docid,
-            "left_semi",
-        )
-        ok = matched.where(self._exact_predicate(term, props)).select(
-            F.col(docid).alias("docid")
-        )
-        return scored.join(ok, "docid", "left_semi")
+        docs = self.docs
+        if among is not None:
+            docs = docs.join(among.select(F.col("docid").alias(docid)), docid, "left_semi")
+        return docs.where(self._exact_predicate(term, props)).select(F.col(docid).alias("docid"))
 
     # ------------------------------------------------------------ facets
-    def _held_facet(self, result: SearchResult, prop: str, typ: str, ranges: list):
-        """The held rows' ``prop`` column of a bounded result's matched
-        docs and the element type of ``prop``, or None when the facet
-        runs as a Spark plan: an unbounded result, a property that is
-        not held, a number facet with no ranges, or no held columns."""
-        if (result.ranked is None or prop not in held_columns(self.config)
-                or (typ.startswith("number") and not ranges)):
-            return None
-        held = self._held_columns()
-        if held is None:
-            return None
-        value_type = held.schema[prop].dataType
-        if isinstance(value_type, ArrayType):
-            value_type = value_type.elementType
-        return held.rows(result.ranked["docid"].to_numpy()).column(prop), value_type
-
-    def facets_df(self, result: SearchResult, prop: str, config: Optional[dict] = None) -> DataFrame:
-        """String/enum/bool facet counts over the FULL match set
-        (components/facets.ts:28-174). Returns (facet_value, facet_count)
-        ordered per the reference (count desc default, limit 10), with
-        value ASC as the deterministic tie-break. A bounded result's
-        facet over a held property is counted on the driver from the
-        held columns (a local frame: collecting it starts no job)."""
-        cfg = config or {}
+    def _facet_counts(self, result: SearchResult, prop: str, ranges: list) -> tuple:
+        """(counts, rows): the unpaged (facet_value, facet_count) of
+        ``prop`` over the full match set, the one facet rule
+        (components/facets.ts:28-174), and their row count when it is
+        known on the driver (else None). A value is counted once per doc
+        that has it (an array's values once per doc, nulls never). A
+        number facet counts the docs inside each inclusive range (an
+        array: some element inside): a ``number`` range is listed from
+        0, as the reference pre-seeds it (facets.ts:139-141), a
+        ``number[]`` range only once a doc falls in it, and no ranges
+        give no rows. A bounded result's facet over a held property is
+        counted on the driver from the held columns (a local frame:
+        collecting it starts no job); any other is a Spark plan."""
         typ = self.config.schema[prop]
-        ranges = cfg.get("ranges", [])
-        held = self._held_facet(result, prop, typ, ranges)
+        is_array, is_range = typ.endswith("[]"), typ.startswith("number")
+        range_schema = _facet_schema(StringType(), False)
+        if is_range and not ranges:
+            empty = pa.table({"facet_value": pa.array([], pa.string()),
+                              "facet_count": pa.array([], pa.int64())})
+            return self._local(empty, range_schema), 0
+        held = None
+        if result.ranked is not None and prop in held_columns(self.config):
+            held = self._held_columns()
         if held is not None:
-            col, value_type = held
-            is_array = typ.endswith("[]")
-            if typ.startswith("number"):
-                counts = pa.table({
-                    "facet_value": [f"{r['from']}-{r['to']}" for r in ranges],
-                    "facet_count": pa.array(_range_counts(col, is_array, ranges), pa.int64()),
-                })
-                return self._local(counts, _facet_schema(StringType(), True))
-            return self._local(_value_counts(col, is_array), _facet_schema(value_type, False))
+            col = held.rows(result.ranked["docid"].to_numpy()).column(prop)
+            if is_range:
+                counts, schema = _range_counts(col, is_array, ranges), range_schema
+            else:
+                value_type = held.schema[prop].dataType
+                if isinstance(value_type, ArrayType):
+                    value_type = value_type.elementType
+                counts, schema = _value_counts(col, is_array), _facet_schema(value_type)
+            return self._local(counts, schema), counts.num_rows
         m = result.scored.join(self.docs_by_docid, "docid")
-        if typ in ("number", "number[]"):
-            aggs = []
-            for r in cfg.get("ranges", []):
-                key = f"{r['from']}-{r['to']}"
+        if is_range:
+            cells = []
+            for r in ranges:
                 val = F.col(prop)
-                if typ == "number[]":
+                if is_array:
                     inr = F.exists(val, lambda x: (x >= r["from"]) & (x <= r["to"]))
                 else:
                     inr = (val >= r["from"]) & (val <= r["to"])
-                aggs.append(
-                    F.sum(F.when(inr, 1).otherwise(0)).cast("long").alias(key)
-                )
-            wide = m.agg(*aggs)
-            stack = ", ".join(f"'{c}', `{c}`" for c in wide.columns)
-            return wide.selectExpr(
-                f"stack({len(wide.columns)}, {stack}) as (facet_value, facet_count)"
-            )
+                cells.append(F.struct(
+                    F.lit(_range_key(r)).alias("facet_value"),
+                    F.count(F.when(inr, True)).alias("facet_count"),
+                ))
+            counts = m.agg(F.array(*cells).alias("r")).select(F.inline("r"))
+            if is_array:
+                return counts.where(F.col("facet_count") > 0), None
+            return counts, len(ranges)
         vals = m.select(
             F.explode(F.array_distinct(F.col(prop))).alias("facet_value")
-            if typ.endswith("[]")
+            if is_array
             else F.col(prop).alias("facet_value")
         ).where(F.col("facet_value").isNotNull())
-        counts = vals.groupBy("facet_value").agg(F.count("*").alias("facet_count"))
-        if typ == "string":
+        return vals.groupBy("facet_value").agg(F.count("*").alias("facet_count")), None
+
+    def facets_df(self, result: SearchResult, prop: str, config: Optional[dict] = None) -> DataFrame:
+        """Facet counts over the FULL match set (``_facet_counts``) as
+        (facet_value, facet_count). A string facet is paged per the
+        reference (count desc default, limit 10), with value ASC as the
+        deterministic tie-break."""
+        cfg = config or {}
+        counts, _ = self._facet_counts(result, prop, cfg.get("ranges", []))
+        if self.config.schema[prop] == "string":
             order = str(cfg.get("sort", "desc")).lower()
             direction = F.asc("facet_count") if order == "asc" else F.desc("facet_count")
             lo = cfg.get("offset", 0)
@@ -1246,45 +1233,17 @@ class SearchIndex:
         return counts
 
     def facet_count_df(self, result: SearchResult, prop: str, config: Optional[dict] = None) -> DataFrame:
-        """Facet ``count`` = number of distinct facet values
-        (components/facets.ts:115-117). Scalar-number facets pre-seed
-        every range key at 0 (facets.ts:139-141 via 522-524), so their
-        count is len(ranges); number[] facets only create keys on first
-        increment; string/enum/bool count distinct present values."""
-        cfg = config or {}
-        typ = self.config.schema[prop]
-        ranges = cfg.get("ranges", [])
-        schema = StructType([StructField("facet_count", LongType(), False)])
-        if typ == "number":
-            return self._local(pa.table({"facet_count": pa.array([len(ranges)], pa.int64())}), schema)
-        held = self._held_facet(result, prop, typ, ranges)
-        if held is not None:
-            col, _ = held
-            if typ == "number[]":
-                per_range = _range_counts(col, True, ranges)
-                n = None if len(col) == 0 else sum(c > 0 for c in per_range)
-                schema = StructType([StructField("facet_count", LongType(), True)])
-            else:
-                n = _value_counts(col, typ.endswith("[]")).num_rows
-            return self._local(pa.table({"facet_count": pa.array([n], pa.int64())}), schema)
-        m = result.scored.join(self.docs_by_docid, "docid")
-        if typ == "number[]":
-            hits = []
-            for r in cfg.get("ranges", []):
-                inr = F.exists(F.col(prop), lambda x: (x >= r["from"]) & (x <= r["to"]))
-                hits.append(F.max(F.when(inr, 1).otherwise(0)))
-            if not hits:
-                return m.agg(F.lit(0).cast("long").alias("facet_count"))
-            total = hits[0]
-            for h in hits[1:]:
-                total = total + h
-            return m.agg(total.cast("long").alias("facet_count"))
-        vals = m.select(
-            F.explode(F.array_distinct(F.col(prop))).alias("v")
-            if typ.endswith("[]")
-            else F.col(prop).alias("v")
-        ).where(F.col("v").isNotNull())
-        return vals.agg(F.countDistinct("v").alias("facet_count"))
+        """Facet ``count`` = number of facet values
+        (components/facets.ts:115-117): the rows of the unpaged
+        ``_facet_counts``, a local constant when they are known on the
+        driver."""
+        counts, rows = self._facet_counts(result, prop, (config or {}).get("ranges", []))
+        if rows is not None:
+            return self._local(
+                pa.table({"facet_count": pa.array([rows], pa.int64())}),
+                StructType([StructField("facet_count", LongType(), False)]),
+            )
+        return counts.agg(F.count("*").alias("facet_count"))
 
     # ------------------------------------------------------------ groups
     def groups_df(

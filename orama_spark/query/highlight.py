@@ -59,14 +59,7 @@ def match_positions_df(
     props = properties or cfg.searchable_fields
     qtokens = index.tokenizer.tokenize(term)
     tokenizer = index.tokenizer
-    tok_cfg = (
-        cfg.tokenizer.language,
-        cfg.tokenizer.stemming,
-        tuple(sorted(cfg.tokenizer.stopwords)),
-        cfg.tokenizer.allow_duplicates,
-        tuple(sorted(cfg.tokenizer.tokenize_skip_properties)),
-        tuple(sorted(cfg.tokenizer.stemmer_skip_properties)),
-    )
+    tok_cfg = cfg.tokenizer
 
     def make_kernel():
         from ..build.tokenize import _get_tokenizer

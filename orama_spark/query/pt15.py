@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import layout
+from ..build.manifest import read_table
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
 
@@ -42,13 +43,13 @@ def get_position(n: int, total_length: int) -> int:
 
 
 def _entries_kernel(cfg: IndexConfig, prop: str, is_array: bool):
-    from ..build.tokenize import _cfg_tuple, _get_tokenizer
+    from ..build.tokenize import _get_tokenizer
 
-    cfg_tuple = _cfg_tuple(cfg.tokenizer)
+    tok_cfg = cfg.tokenizer
 
     @F.pandas_udf(_PT15_SCHEMA)
     def _entries(col: pd.Series) -> pd.Series:
-        tok = _get_tokenizer(cfg_tuple)
+        tok = _get_tokenizer(tok_cfg)
 
         def one_value(value: str, out: list) -> None:
             tokens = tok.tokenize(value, prop)
@@ -122,7 +123,7 @@ class PT15Index:
 
     @classmethod
     def load(cls, spark: SparkSession, out_dir: str, config: IndexConfig) -> "PT15Index":
-        return cls(spark, config, spark.read.parquet(os.path.join(out_dir, "pt15")))
+        return cls(spark, config, read_table(spark, os.path.join(out_dir, "pt15")))
 
     def search(
         self,

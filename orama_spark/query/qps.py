@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import layout
+from ..build.manifest import read_table
 from ..config import IndexConfig
 from ..kernel.levenshtein import is_bounded
 from ..kernel.tokenizer import Tokenizer
@@ -75,11 +76,11 @@ class QPSIndex:
 
     @classmethod
     def build(cls, df: DataFrame, out_dir: str, config: IndexConfig) -> "QPSIndex":
-        from ..build.tokenize import _cfg_tuple, _get_tokenizer
+        from ..build.tokenize import _get_tokenizer
 
         config.validate()
         docid = config.docid_col
-        cfg_tuple = _cfg_tuple(config.tokenizer)
+        tok_cfg = config.tokenizer
         parts = []
         for f_ in config.searchable_fields:
             if config.schema[f_] != "string":
@@ -88,7 +89,7 @@ class QPSIndex:
             def make_kernel(prop):
                 @F.pandas_udf(_QPS_SCHEMA)
                 def _quanta(col: pd.Series) -> pd.Series:
-                    tok = _get_tokenizer(cfg_tuple)
+                    tok = _get_tokenizer(tok_cfg)
 
                     def one(text):
                         if not isinstance(text, str):
@@ -129,7 +130,7 @@ class QPSIndex:
 
     @classmethod
     def load(cls, spark: SparkSession, out_dir: str, config: IndexConfig) -> "QPSIndex":
-        return cls(spark, config, spark.read.parquet(os.path.join(out_dir, "qps")))
+        return cls(spark, config, read_table(spark, os.path.join(out_dir, "qps")))
 
     def search(
         self,

@@ -114,12 +114,11 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..build.blocks import (
-    BLOCKS_SCHEMA, DICTIONARY_READ_SCHEMA, DOCMETA_READ_SCHEMA, POSTINGS_READ_SCHEMA,
     avgfl_per_row, bm25_scores, build_blocks, decode_blocks, idf_per_row,
 )
 from ..build.indexer import BUILD_STAGES
 from ..build.maintenance import pending_tables
-from ..build.manifest import BuildManifest
+from ..build.manifest import BuildManifest, read_table
 from ..config import IndexConfig
 from ..kernel.tokenizer import Tokenizer
 
@@ -386,7 +385,8 @@ class BlockIndex:
         checkpointed once for the docmap; the range exchange by
         (field, term, internal) that feeds the block encoder — hot
         terms split by internal range. The docmap and dictionary joins
-        are broadcasts. Every table is read with its known schema.
+        are broadcasts. Every table is read with its stored schema
+        (``read_table``: no schema-inference job).
 
         The blocks/ overwrite is not atomic: a failure part-way would
         leave blocks from two builds (bounds and θ seeds of mixed
@@ -412,14 +412,8 @@ class BlockIndex:
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
         manifest.forget("blocks")
-        postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
-            os.path.join(index_dir, "postings")
-        )
-        dictionary = spark.read.schema(DICTIONARY_READ_SCHEMA).parquet(
-            os.path.join(index_dir, "dictionary")
-        )
-        docmeta = spark.read.schema(DOCMETA_READ_SCHEMA).parquet(
-            os.path.join(index_dir, "docmeta")
+        postings, dictionary, docmeta = (
+            read_table(spark, os.path.join(index_dir, t)) for t in ("postings", "dictionary", "docmeta")
         )
         blocks = build_blocks(postings, docmeta, dictionary, stats, config.bm25)
         manifest.write_table("blocks", stats_fp, blocks)
@@ -457,9 +451,7 @@ class BlockIndex:
             )
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
-        blocks = spark.read.schema(BLOCKS_SCHEMA).parquet(
-            os.path.join(index_dir, "blocks")
-        )
+        blocks = read_table(spark, os.path.join(index_dir, "blocks"))
         return cls(spark, config, blocks=blocks, stats=stats)
 
     # ----------------------------------------------------------- search

@@ -815,3 +815,32 @@ class TestWandAllowDuplicates:
         _, blocks, _ = dup_indexes
         n_nontrivial = blocks.blocks.where(F.length("tfns") > 0).count()
         assert n_nontrivial > 0
+
+
+def test_int_docid_builds_blocks(spark, tmp_path):
+    """An index whose docid column is an int reads back with that stored
+    type, builds blocks, and WAND over them ranks as the plain path
+    (the exact-mode filter as its keep_ids mask)."""
+    out = str(tmp_path / "intdocid")
+    g = CorpusGenerator(seed=5)
+    cols = g.batch(np.arange(300, dtype=np.int64))
+    df = spark.createDataFrame(
+        [(i, cols["text"][i], cols["lang"][i]) for i in range(300)],
+        "docid int, text string, lang string",
+    )
+    IndexBuilder(CFG, postings_partitions=2).build(df, out, input_id="intdocid")
+    blocks = BlockIndex.build(spark, out, CFG)
+    plain = SearchIndex.load(spark, out, CFG)
+    assert dict(plain.docs.dtypes)["docid"] == "int"
+    for term in ("fox", "search engine"):
+        want = [
+            (r["docid"], r["score"])
+            for r in plain.search(term=term, exact=True, limit=10).top_df().collect()
+        ]
+        got = [
+            (r["docid"], r["score"])
+            for r in blocks.wand_topk(term, k=10, keep_ids=plain.exact_filter_ids(term)).collect()
+        ]
+        assert want and [g[0] for g in got] == [w[0] for w in want], term
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, rel=1e-9)

@@ -647,6 +647,56 @@ def test_held_facets_equal_distributed(held_corpora, monkeypatch, spark, name):
                 dist = _distributed(monkeypatch, lambda: fn(idx.search(term=term), prop, cfg))
                 assert got == rows(dist), (term, prop, fn.__name__)
                 assert drv.schema == dist.schema, (term, prop, fn.__name__)
+            n = idx.facet_count_df(sr, prop, cfg).collect()[0]["facet_count"]
+            assert n == len(idx.facets_df(sr, prop, cfg).collect()), (term, prop)
+
+
+RANGE_ROWS = [
+    {"docid": 1, "t": "red apple", "n": 2.0, "ns": [1.0, 5.0]},
+    {"docid": 2, "t": "red pear", "n": 7.0, "ns": [5.5]},
+    {"docid": 3, "t": "blue plum"},
+]
+
+
+def test_range_facets_match_oracle(spark, tmp_path, monkeypatch):
+    """Range facets follow the reference's getFacets on both paths: a
+    ``number`` range is listed from 0, a ``number[]`` range only once a
+    matched doc falls in it, no ranges give no rows, and the facet's
+    count is the number of its values — with a term that matches, one
+    that matches nothing, and no ranges."""
+    from orama_spark.oracle.engine import OramaOracle
+
+    schema = {"t": "string", "n": "number", "ns": "number[]"}
+    cfg = IndexConfig(schema=schema)
+    d = str(tmp_path / "ranges")
+    rows = [{"ns": None, "n": None, **r} for r in RANGE_ROWS]
+    IndexBuilder(cfg, postings_partitions=2).build(
+        spark.createDataFrame(rows, "docid long, t string, n double, ns array<double>"),
+        d, input_id="ranges",
+    )
+    idx = SearchIndex.load(spark, d, cfg)
+    orc = OramaOracle(schema)
+    for r in RANGE_ROWS:
+        orc.insert({k: v for k, v in r.items() if k != "docid"}, docid=r["docid"])
+    ranges = [{"from": 0, "to": 3}, {"from": 3, "to": 6}, {"from": 8, "to": 10}]
+
+    def facet(prop, facet_cfg):
+        sr = idx.search(term=term)
+        values = {r["facet_value"]: r["facet_count"]
+                  for r in idx.facets_df(sr, prop, facet_cfg).collect()}
+        return {"count": idx.facet_count_df(sr, prop, facet_cfg).collect()[0]["facet_count"],
+                "values": values}
+
+    for term in ("red", "zzzz"):
+        scored = [(h["id"], h["score"]) for h in orc.search(term=term, limit=10)["hits"]]
+        for prop in ("n", "ns"):
+            for facet_cfg in ({"ranges": ranges}, {}):
+                want = orc.get_facets(scored, {prop: facet_cfg})[prop]
+                assert facet(prop, facet_cfg) == want, (term, prop, facet_cfg, "held")
+                with monkeypatch.context() as m:
+                    m.setattr(engine, "DRIVER_POSTINGS_CAP", -1)
+                    got = facet(prop, facet_cfg)
+                assert got == want, (term, prop, facet_cfg, "distributed")
 
 
 def test_bounded_filter_and_facet_jobs(corpora, spark):

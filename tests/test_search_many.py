@@ -59,3 +59,11 @@ def test_single_postings_scan(idx):
     plan = idx.search_many(TERMS, k=5)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("postings") <= plan.count("Scan parquet") and \
         sum("postings" in l for l in plan.splitlines() if "Scan parquet" in l) == 1, plan
+
+
+def test_unknown_property_raises(idx):
+    """search_many checks ``properties`` as search() does."""
+    for run in (lambda: idx.search(term="index", properties=["nope"]),
+                lambda: idx.search_many(["index"], properties=["text", "nope"])):
+        with pytest.raises(ValueError, match="UNKNOWN_INDEX: nope"):
+            run()
